@@ -127,6 +127,13 @@ def valid_http_url(url: Column) -> Column:
     return url.isNotNull() & url.rlike(_HTTP_URL_RE)
 
 
+def optional_http_url(url: Column) -> Column:
+    """Boolean: null or a valid http(s) URL (the reference's
+    ``Optional[AnyHttpUrl]`` source_url). False routes a document to the
+    report's ValueError row instead of the parser input."""
+    return url.isNull() | valid_http_url(url)
+
+
 def watermark_text_col(url: Column, date: Column) -> Column:
     """The provenance watermark text added to converted PDFs.
 

@@ -9,6 +9,11 @@ this plans everything as DataFrames and writes three datasets:
     {out}/archive_plan/     (src_path, dst_path) rename plan parquet
     {out}/report/           the per-(type, error) batch summary JSON
 
+Each output is planned and run exactly once. The row counts the batch
+returns are observed on the writes themselves (``df.observe``), so no
+count job re-reads the input. The archive plan is a rename set and is
+written unsorted: its row order is unspecified.
+
 Run:
     python -m navigator_data_ingest_spark.main \
         --updates-file new_and_updated_documents.json --output-dir /tmp/out
@@ -19,10 +24,10 @@ from __future__ import annotations
 import argparse
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from navigator_data_ingest_spark.functions.text import valid_http_url
+from navigator_data_ingest_spark.functions.text import optional_http_url
 from navigator_data_ingest_spark.operators.ingest import (
     expand_archive_paths,
     map_update_actions,
@@ -41,8 +46,7 @@ def build_parser_input(new_docs: DataFrame) -> DataFrame:
     an invalid non-null source_url are excluded here and surface as
     ValueError rows in the report instead of raising per-document.
     """
-    ok = F.col("source_url").isNull() | valid_http_url(F.col("source_url"))
-    return new_docs.where(ok).select(
+    return new_docs.where(optional_http_url(F.col("source_url"))).select(
         F.col("import_id").alias("document_id"),
         F.col("slug").alias("document_slug"),
         F.col("name").alias("document_name"),
@@ -58,10 +62,9 @@ def build_parser_input(new_docs: DataFrame) -> DataFrame:
 
 def build_report(new_docs: DataFrame, updates: DataFrame) -> DataFrame:
     """IngestResult rollup (main.py:186-232): counts per (type, error)."""
-    url_ok = F.col("source_url").isNull() | valid_http_url(F.col("source_url"))
     new_side = new_docs.select(
         F.lit("new").alias("ingest_type"),
-        F.when(~url_ok, F.lit("ValueError")).alias("error"),
+        F.when(~optional_http_url(F.col("source_url")), F.lit("ValueError")).alias("error"),
     )
     upd_side = (
         updates.select("document_id")
@@ -79,24 +82,36 @@ def build_report(new_docs: DataFrame, updates: DataFrame) -> DataFrame:
 
 
 def run_batch(spark: SparkSession, updates_file: str, output_dir: str) -> dict:
-    """Execute one ingest batch; returns row counts per output."""
+    """Execute one ingest batch; returns the row count of each output.
+
+    The counts are the observed row counts of the three writes, so each
+    output runs once. The archive plan skips the ordered operators'
+    presentation sorts: its row order is unspecified.
+    """
     new_docs, updates = read_pipeline_updates(spark, updates_file)
-    parser_input = build_parser_input(new_docs)
-    archive_plan = expand_archive_paths(
-        order_update_actions(map_update_actions(updates))
+    observed: dict[str, Observation] = {}
+
+    def counted(key: str, df: DataFrame) -> DataFrame:
+        # an Observation can only be used once: fresh ones for every batch
+        observed[key] = Observation()
+        return df.observe(observed[key], F.count(F.lit(1)).alias("rows"))
+
+    parser_input = counted("parser_input", build_parser_input(new_docs))
+    archive_plan = counted(
+        "archive_plan",
+        expand_archive_paths(
+            order_update_actions(map_update_actions(updates), ordered=False),
+            sort_output=False,
+        ),
     )
-    report = build_report(new_docs, updates)
+    report = counted("report", build_report(new_docs, updates))
 
     write_parser_input(parser_input, os.path.join(output_dir, "parser_input"))
     archive_plan.write.mode("overwrite").parquet(
         os.path.join(output_dir, "archive_plan")
     )
     write_report(report, os.path.join(output_dir, "report"))
-    return {
-        "parser_input": parser_input.count(),
-        "archive_plan": archive_plan.count(),
-        "report": report.count(),
-    }
+    return {k: obs.get["rows"] for k, obs in observed.items()}
 
 
 def main() -> None:

@@ -29,8 +29,8 @@ from navigator_data_ingest_spark.functions.content import (
     upload_file_name,
 )
 from navigator_data_ingest_spark.functions.text import (
+    optional_http_url,
     slugify_col,
-    valid_http_url,
     watermark_text_col,
 )
 from navigator_data_ingest_spark.sources.tables import load_table, scatter
@@ -251,9 +251,7 @@ def ingest_validate_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nd.select(
         "import_id",
         "source_url",
-        F.when(F.col("source_url").isNull(), F.lit(True))
-        .otherwise(valid_http_url(F.col("source_url")))
-        .alias("url_ok"),
+        optional_http_url(F.col("source_url")).alias("url_ok"),
     ).orderBy("import_id")
 
 
@@ -389,13 +387,12 @@ def ingest_parser_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     report instead). A null source_url is allowed and stays null.
     """
     nd = synthetic_new_documents(spark, sf_dir)
-    ok = F.col("source_url").isNull() | valid_http_url(F.col("source_url"))
     doc_type = None
     for c, t in CATEGORY_DOC_TYPE.items():
         cond = F.col("category") == c
         doc_type = F.when(cond, F.lit(t)) if doc_type is None else doc_type.when(cond, F.lit(t))
     return (
-        nd.where(ok)
+        nd.where(optional_http_url(F.col("source_url")))
         .select(
             F.col("import_id").alias("document_id"),
             F.col("slug").alias("document_slug"),
@@ -606,7 +603,7 @@ def ingest_results_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     supported = ct.isin(
         CONTENT_TYPE_PDF, CONTENT_TYPE_HTML, CONTENT_TYPE_DOCX, CONTENT_TYPE_DOC
     )
-    url_ok = F.col("source_url").isNull() | valid_http_url(F.col("source_url"))
+    url_ok = optional_http_url(F.col("source_url"))
     new_results = nd.select(
         F.lit("new").alias("ingest_type"),
         F.when(~url_ok, F.lit("ValueError"))
@@ -644,7 +641,7 @@ def ingest_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = synthetic_new_documents(spark, sf_dir)
     chosen = F.coalesce(F.col("download_url"), F.col("source_url"))
     ct = detect_content_type(F.col("head_hex"), F.col("source_url"), F.col("header"))
-    url_ok = F.col("source_url").isNull() | valid_http_url(F.col("source_url"))
+    url_ok = optional_http_url(F.col("source_url"))
     supported = ct.isin(
         CONTENT_TYPE_PDF, CONTENT_TYPE_HTML, CONTENT_TYPE_DOCX, CONTENT_TYPE_DOC
     )
