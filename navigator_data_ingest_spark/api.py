@@ -59,18 +59,6 @@ def minhash_dedup_pairs(
     )
 
 
-def simhash_dedup_pairs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Near-duplicate pairs (id_a, id_b, hamming) by simhash distance."""
-    out = _dedup.simhash_pairs(_as_docs(df, id_col, text_col))
-    return out.select(
-        F.col("doc_a").alias(f"{id_col}_a"),
-        F.col("doc_b").alias(f"{id_col}_b"),
-        "hamming",
-    )
-
-
 def dedup_clusters(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

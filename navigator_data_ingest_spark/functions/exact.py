@@ -71,10 +71,6 @@ the same naive value (verified under America/New_York).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
-
 _M6 = 1_000_000
 
 
@@ -123,13 +119,6 @@ def dk_rat6(p: str, q: str) -> str:
     return dk_rat(p, q, 6)
 
 
-def rat6_col(p: str, q: str) -> Column:
-    """Column form of :func:`sp_rat6` — p/q are SQL expression strings
-    naming columns already present on the DataFrame (DataFrame-API call
-    sites use this inside ``select``/``withColumn``)."""
-    return F.expr(sp_rat6(p, q))
-
-
 # --- timezone-free epoch --------------------------------------------------
 
 _NTZ_EPOCH = "timestamp_ntz'1970-01-01 00:00:00'"
@@ -144,6 +133,3 @@ def sp_epoch_us(ts: str = "ts") -> str:
     """
     return f"timestampdiff(MICROSECOND, {_NTZ_EPOCH}, cast(({ts}) as timestamp_ntz))"
 
-
-def epoch_us_col(ts: str = "ts") -> Column:
-    return F.expr(sp_epoch_us(ts))

@@ -85,8 +85,7 @@ def run_batch(spark: SparkSession, updates_file: str, output_dir: str) -> dict:
     """Execute one ingest batch; returns the row count of each output.
 
     The counts are the observed row counts of the three writes, so each
-    output runs once. The archive plan skips the ordered operators'
-    presentation sorts: its row order is unspecified.
+    output runs once. The archive plan's row order is unspecified.
     """
     new_docs, updates = read_pipeline_updates(spark, updates_file)
     observed: dict[str, Observation] = {}
@@ -99,10 +98,7 @@ def run_batch(spark: SparkSession, updates_file: str, output_dir: str) -> dict:
     parser_input = counted("parser_input", build_parser_input(new_docs))
     archive_plan = counted(
         "archive_plan",
-        expand_archive_paths(
-            order_update_actions(map_update_actions(updates), ordered=False),
-            sort_output=False,
-        ),
+        expand_archive_paths(order_update_actions(map_update_actions(updates))),
     )
     report = counted("report", build_report(new_docs, updates))
 

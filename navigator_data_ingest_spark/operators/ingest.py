@@ -94,14 +94,6 @@ CATEGORY_DOC_TYPE = {
 ARCHIVE_TS = "2026-01-01-00-00-00"  # fixed for determinism (ref uses now())
 
 
-def _pick(options: list[str], idx: Column) -> Column:
-    """options[idx % len] with 1-based element_at; idx is a bigint col."""
-    return F.element_at(
-        F.array(*[F.lit(o) for o in options]),
-        (idx % len(options)).cast("int") + 1,
-    )
-
-
 def _spark_pick(options: list[str], idx: str) -> str:
     lits = ", ".join("'" + o.replace("'", "\\'") + "'" for o in options)
     return f"element_at(array({lits}), cast({idx} % {len(options)} as int) + 1)"
@@ -424,19 +416,20 @@ def ingest_update_actions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def order_update_actions(acts: DataFrame, ordered: bool = True) -> DataFrame:
+def order_update_actions(acts: DataFrame) -> DataFrame:
     """Per-document action ordering (updated_document_actions.py:65).
 
     If any action is `parse`, only the FIRST parse action runs. Else all
     actions run, stable-ordered with `update_dont_parse` last. Expressed
     with window functions over (document_id) — no driver loop.
 
-    ``ordered=False`` skips the presentation sort for compositions whose
-    next operator (an aggregation or join) destroys row order anyway: an
-    inherited ``orderBy`` is a full range exchange + global sort + the
-    range partitioner's sampling job, all wasted (guide §2.4 — remove
-    shuffles outright; Catalyst's EliminateSorts does not fire through
-    the Window/Generate operators stacked above it here).
+    Row order is unspecified: the window logic imposes its own
+    per-partition sort, and the consumers (an aggregation, a join, a
+    write) do not need one. An inherited ``orderBy`` would be a full
+    range exchange + global sort + the range partitioner's sampling
+    job, and Catalyst's EliminateSorts does not fire through the
+    Window/Generate operators stacked above it. The registry wrapper
+    ``ingest_order_actions`` applies the presentation sort.
     """
     from pyspark.sql import Window
 
@@ -447,7 +440,7 @@ def order_update_actions(acts: DataFrame, ordered: bool = True) -> DataFrame:
     ).over(w)
     priority = F.when(F.col("action") == "update_dont_parse", 1).otherwise(0)
     w_order = Window.partitionBy("document_id").orderBy(priority.asc(), F.col("seq").asc())
-    out = (
+    return (
         acts.withColumn("has_parse", has_parse)
         .withColumn("first_parse_seq", first_parse_seq)
         .withColumn("rn", F.row_number().over(w_order))
@@ -461,26 +454,13 @@ def order_update_actions(acts: DataFrame, ordered: bool = True) -> DataFrame:
         )
         .select("document_id", "exec_order", "update_type", "action")
     )
-    return out.orderBy("document_id", "exec_order") if ordered else out
-
-
-def _order_actions_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unordered action ordering over the raw (unsorted) update actions.
-
-    Row-identical to ingest_order_actions — the window logic imposes its
-    own per-partition sort, so neither the input's nor the output's
-    presentation orderBy affects the rows — but the plan carries two
-    fewer range exchanges. Compositions consume this; the registry key
-    keeps the declared ordered output.
-    """
-    return order_update_actions(
-        map_update_actions(synthetic_updates(spark, sf_dir)), ordered=False
-    )
 
 
 def ingest_order_actions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry wrapper: ordering over the synthetic updates."""
-    return _order_actions_raw(spark, sf_dir).orderBy("document_id", "exec_order")
+    return order_update_actions(
+        map_update_actions(synthetic_updates(spark, sf_dir))
+    ).orderBy("document_id", "exec_order")
 
 
 # archive-path expansion rules per action (updated_document_actions.py):
@@ -494,7 +474,7 @@ SUFFIXES = ["json", "npy"]
 VARIANTS = ["", "_translated_en"]
 
 
-def expand_archive_paths(ordered: DataFrame, sort_output: bool = True) -> DataFrame:
+def expand_archive_paths(ordered: DataFrame) -> DataFrame:
     """Archive/rename plans for ordered actions (updated_document_actions.py).
 
     The reference performs one S3 rename at a time; here the (action ×
@@ -502,7 +482,7 @@ def expand_archive_paths(ordered: DataFrame, sort_output: bool = True) -> DataFr
     rename-plan table a distributed mover can execute in bulk. The plan
     is a superset of actual renames: the reference only renames objects
     that EXIST (e.g. parser_input never has an .npy) — existence is the
-    mover's concern, not the planner's.
+    mover's concern, not the planner's. Row order is unspecified.
     """
     acts = ordered.where(
         F.col("action").isin("parse", "reparse", "update_dont_parse")
@@ -529,23 +509,20 @@ def expand_archive_paths(ordered: DataFrame, sort_output: bool = True) -> DataFr
         F.lit("archive/"), F.col("prefix"), F.lit("/"), F.col("document_id"),
         F.lit("/"), F.lit(ARCHIVE_TS), F.lit("."), F.col("suffix"),
     )
-    out = expanded.select(
+    return expanded.select(
         "document_id", "action", "prefix", "suffix", "variant",
         src.alias("src_path"), dst.alias("dst_path"),
     )
-    if sort_output:
-        out = out.orderBy("document_id", "action", "prefix", "suffix", "variant")
-    return out
 
 
 def ingest_archive_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry wrapper: archive plans over the synthetic updates."""
-    return expand_archive_paths(_order_actions_raw(spark, sf_dir))
+    return expand_archive_paths(
+        order_update_actions(map_update_actions(synthetic_updates(spark, sf_dir)))
+    ).orderBy("document_id", "action", "prefix", "suffix", "variant")
 
 
-def ingest_field_update(
-    spark: SparkSession, sf_dir: str, sort_output: bool = True
-) -> DataFrame:
+def _field_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """update_file_field as a join (updated_document_actions.py:342).
 
     The reference reads each JSON object, compares the current value to
@@ -553,9 +530,12 @@ def ingest_field_update(
     a table op: cache-state ⋈ updates on (document_id, field), emitting
     the new value plus a mismatch flag. Only update types that carry a
     field mapping (name/description/metadata/slug via update_dont_parse /
-    update_field_in_all_occurences paths) participate.
+    update_field_in_all_occurences paths) participate. Row order is
+    unspecified.
     """
-    upd = _order_actions_raw(spark, sf_dir).where(
+    upd = order_update_actions(
+        map_update_actions(synthetic_updates(spark, sf_dir))
+    ).where(
         F.col("action").isin("update_dont_parse", "update_field_in_all_occurences")
     )
     field = None
@@ -578,15 +558,17 @@ def ingest_field_update(
     current = F.concat(F.lit("cur-"), F.col("update_type"), F.lit("-"), doc_num_s)
     s3_value = F.when(doc_num % 5 == 0, F.concat(F.lit("stale-"), F.col("update_type"))).otherwise(current)
     new_value = F.concat(F.lit("new-"), F.col("update_type"), F.lit("-"), doc_num_s)
-    out = upd.select(
+    return upd.select(
         "document_id", "prefix", "pipeline_field",
         current.alias("old_value"),
         new_value.alias("new_value"),
         (current != s3_value).alias("value_mismatch"),
     )
-    if sort_output:
-        out = out.orderBy("document_id", "prefix", "pipeline_field")
-    return out
+
+
+def ingest_field_update(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Registry wrapper: the field updates in presentation order."""
+    return _field_updates(spark, sf_dir).orderBy("document_id", "prefix", "pipeline_field")
 
 
 def ingest_results_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -661,11 +643,10 @@ def ingest_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ct.alias("content_type"),
         F.lit(0).cast("bigint").alias("n_renames"),
     )
-    # unordered expansion: the groupBy destroys row order, so the
-    # declared operator's presentation sorts (two range exchanges + the
-    # range partitioner's sampling jobs) would be pure waste here
     renames = (
-        expand_archive_paths(_order_actions_raw(spark, sf_dir), sort_output=False)
+        expand_archive_paths(
+            order_update_actions(map_update_actions(synthetic_updates(spark, sf_dir)))
+        )
         .groupBy("document_id")
         .agg(F.count(F.lit(1)).alias("n_renames"))
     )
@@ -735,7 +716,7 @@ def ingest_cache_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value"),
         )
     )
-    changes = ingest_field_update(spark, sf_dir, sort_output=False).select(
+    changes = _field_updates(spark, sf_dir).select(
         "document_id", "prefix", "pipeline_field", "new_value"
     )
     return (

@@ -139,18 +139,10 @@ def sim_search_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk(e, q, TOP_K, dim=EMB_DIM)
 
 
-def _plane_component(p: str, i: str) -> str:
-    """Spark SQL for hyperplane p's component at 1-based index i.
-
-    Pseudo-random in [-1, 1] from the shared 32-bit hash; the matching
-    DuckDB text is built in registry (dk_plane_component).
-    """
-    key = f"'p' || cast({p} as string) || 'd' || cast({i} - 1 as string)"
-    return f"(({X.sp_hash32(key, PLANE_SEED)} % 2001) - 1000) / 1000.0"
-
-
 def _plane_const(p: int, i: int) -> float:
-    """The SAME md5-derived plane component, evaluated in Python: the
+    """Hyperplane p's component at 1-based index i: pseudo-random in
+    [-1, 1] from the shared md5-derived 32-bit hash that the DuckDB
+    oracle evaluates in SQL, evaluated here in Python. The
     hash input is fully determined by (p, i), so the double can be
     embedded as a literal — Catalyst would constant-fold the md5
     expression to this exact value anyway, but 384 folded md5 nodes

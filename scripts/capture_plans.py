@@ -1,11 +1,12 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") for named queries to plans/r13/.
+"""Capture .explain("formatted") for named queries into a directory.
 
-Usage: python scripts/capture_plans.py <suffix> [query,query,...]
+Usage: python scripts/capture_plans.py <out_dir> <suffix> [query,query,...]
 
-Writes plans/r13/<query>_<suffix>.txt for each query (default: the
-bench.py HEADLINE list). The judge checks plan claims against these
-files, so they are generated from the live registry at sf0.1.
+Writes <out_dir>/<query>_<suffix>.txt for each query (default: the
+bench.py HEADLINE list), e.g. ``plans/r14 before`` then ``plans/r14
+after`` around a change. The plans are generated from the live
+registry at sf0.1 (``SPARK_GRAFT_SF_DIR`` overrides).
 """
 
 from __future__ import annotations
@@ -21,17 +22,14 @@ from navigator_data_ingest_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1]
+    out_dir, suffix = sys.argv[1], sys.argv[2]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if len(sys.argv) > 2:
-        names = sys.argv[2].split(",")
+    if len(sys.argv) > 3:
+        names = sys.argv[3].split(",")
     else:
         import bench
 
         names = bench.HEADLINE
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13"
-    )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name=f"capture-plans-{suffix}")
     qs = registry.queries()

@@ -250,8 +250,9 @@ def _expected_report(raw) -> dict:
 
 def _check_batch_outputs(spark, path: str, raw, out: str, counts: dict) -> None:
     """The written outputs match the counts run_batch returned, the
-    unsorted archive plan is the same (src, dst) multiset as the ordered
-    operators' plan, and the report is the exact expected rollup."""
+    written archive plan is the same (src, dst) multiset as the archive
+    operators recompute from the updates file, and the report is the
+    exact expected rollup."""
     from navigator_data_ingest_spark.operators.ingest import (
         expand_archive_paths,
         map_update_actions,
@@ -270,9 +271,9 @@ def _check_batch_outputs(spark, path: str, raw, out: str, counts: dict) -> None:
         (r.src_path, r.dst_path) for r in plan.select("src_path", "dst_path").collect()
     )
     _, updates = read_pipeline_updates(spark, path)
-    ordered = expand_archive_paths(order_update_actions(map_update_actions(updates)))
+    expected = expand_archive_paths(order_update_actions(map_update_actions(updates)))
     assert written == Counter(
-        (r.src_path, r.dst_path) for r in ordered.select("src_path", "dst_path").collect()
+        (r.src_path, r.dst_path) for r in expected.select("src_path", "dst_path").collect()
     )
     assert sum(written.values()) == counts["archive_plan"]
     assert {r.document_id for r in plan.select("document_id").distinct().collect()} \

@@ -6,7 +6,9 @@ documented somewhere in SURVEY.md.
 
 from __future__ import annotations
 
+import json
 import re
+from pathlib import Path
 
 from navigator_data_ingest_spark import registry
 
@@ -83,21 +85,74 @@ def test_every_registered_query_is_documented():
 
 
 def test_registry_rotation_puts_uncertified_queries_first():
-    """The external driver hash-certifies the FIRST ~50 names in
-    queries() order; emission must lead with round-new (front) names,
-    then never-driver-certified ones, with already-certified names
-    last — so the hard gate walks the whole surface across rounds."""
+    """The external driver hash-certifies the FIRST 50 names in
+    queries() order; emission must lead with pending re-certifications,
+    then never-sampled names, with certified names last (oldest
+    certification first) — so the hard gate walks the whole surface
+    across rounds."""
     order = list(registry.queries())
-    # certification wins over a stale front flag (a certified name must
-    # rotate to the back even if its register() call says front=True)
-    ranks = [
-        2 if n in registry._DRIVER_CERTIFIED
-        else (0 if n in registry._FRONT else 1)
-        for n in order
-    ]
+    ranks = [registry._rank(n) for n in order]
     assert ranks == sorted(ranks), "emission order broke the rotation"
-    assert ranks[-1] == 2
-    # the driver's 50-name window must contain ONLY never-certified names
-    assert all(r < 2 for r in ranks[:50]), (
-        "already-certified names inside the driver sample window"
+    assert ranks[-1][0] == 2
+    if sum(r[0] < 2 for r in ranks) >= 50:
+        assert all(r[0] < 2 for r in ranks[:50]), (
+            "already-certified names inside the driver sample window"
+        )
+
+
+def _driver_classes(order: list[str]) -> tuple[dict, dict[str, int], list[int]]:
+    """From the committed CORRECTNESS_r*.json files alone: (the newest
+    round's results, key -> newest hash-green round, the class of each
+    key in ``order``: 0 pending re-certification, 1 never sampled,
+    2 certified)."""
+    root = Path(__file__).resolve().parent.parent
+    rounds = sorted(
+        (int(re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name).group(1)),
+         json.loads(p.read_text()))
+        for p in root.glob("CORRECTNESS_r*.json")
     )
+    assert rounds, "no CORRECTNESS_r*.json files committed"
+    certified: dict[str, int] = {}
+    newest_ok: dict[str, bool] = {}
+    for rnd, results in rounds:
+        for key, res in results.items():
+            newest_ok[key] = res["hash_match"] is True
+            if newest_ok[key]:
+                certified[key] = rnd
+
+    def cls(key: str) -> int:
+        if key not in newest_ok:
+            return 1
+        if not newest_ok[key] or certified[key] < registry._CHANGED.get(key, 0):
+            return 0
+        return 2
+
+    return rounds[-1][1], certified, [cls(k) for k in order]
+
+
+def test_driver_window_skips_keys_green_in_newest_round():
+    """While at least 50 registered keys are pending re-certification
+    or were never sampled, no key hash-green in the newest driver round
+    may take a head-50 slot."""
+    order = list(registry.queries())
+    newest, _, classes = _driver_classes(order)
+    if sum(c < 2 for c in classes) >= 50:
+        green = [k for k in order[:50] if newest.get(k, {}).get("hash_match") is True]
+        assert not green, f"re-certifying keys green in the newest round: {green}"
+
+
+def test_emission_order_follows_driver_history():
+    """Pending keys, then never-sampled keys, then certified keys with
+    the oldest certification first — computed from the result files
+    without the registry's own ranking."""
+    order = list(registry.queries())
+    _, certified, classes = _driver_classes(order)
+    assert classes == sorted(classes)
+    certified_rounds = [certified[k] for k, c in zip(order, classes) if c == 2]
+    assert certified_rounds == sorted(certified_rounds)
+
+
+def test_changed_keys_are_registered():
+    """A typo in _CHANGED would silently never re-queue its key."""
+    unknown = sorted(set(registry._CHANGED) - set(registry.queries()))
+    assert not unknown, f"_CHANGED names no registered query: {unknown}"
