@@ -40,15 +40,8 @@ MAGIC_PDF = "25504446"          # '%PDF'
 MAGIC_OLE2 = "D0CF11E0A1B11AE1"  # legacy MS Office compound file (.doc)
 MAGIC_ZIP = "504B0304"          # ZIP local-file header (.docx container)
 
-
-def head_hex_col(content_binary: Column, n: int = 16) -> Column:
-    """Hex-encode the first ``n`` bytes of a binary content column.
-
-    This is the canonical 'file head' representation the detector works
-    on — portable between engines (Spark hex()/DuckDB hex()) and safe
-    for non-UTF8 bytes that a string column would mangle.
-    """
-    return F.upper(F.hex(F.substring(content_binary, 1, n)))
+# upload names are trimmed to this many UTF-8 bytes (api_client.py:127)
+NAME_MAX_BYTES = 200
 
 
 def _magic_content_type(head_hex: Column) -> Column:
@@ -96,7 +89,8 @@ def detect_content_type(
 ) -> Column:
     """3-stage content-type fallback (utils.py:64). '' when all fail.
 
-    ``head_hex`` is the hex-encoded file head (see ``head_hex_col``).
+    ``head_hex`` is the upper-case hex of the file's leading bytes:
+    portable between engines and safe for non-UTF8 bytes.
     """
     return F.coalesce(
         _magic_content_type(head_hex),
@@ -122,7 +116,7 @@ def let_col(value: Column, body) -> Column:
     return F.element_at(F.transform(F.array(value), body), 1)
 
 
-def trimmed_name_col(name: Column, max_bytes: int = 200) -> Column:
+def trimmed_name_col(name: Column) -> Column:
     """``name[:200]`` then chop 5 chars while UTF-8 length > 200 bytes.
 
     The reference loop (api_client.py:127-129) repeatedly removes 5
@@ -137,11 +131,11 @@ def trimmed_name_col(name: Column, max_bytes: int = 200) -> Column:
     """
 
     def _inner(nm: Column) -> Column:
-        start = F.least(F.length(nm), F.lit(max_bytes))
+        start = F.least(F.length(nm), F.lit(NAME_MAX_BYTES))
         lengths = F.sequence(start, F.lit(0), F.lit(-5))
         fit = F.filter(
             lengths,
-            lambda k: F.octet_length(F.substring(nm, 1, k)) <= F.lit(max_bytes),
+            lambda k: F.octet_length(F.substring(nm, 1, k)) <= F.lit(NAME_MAX_BYTES),
         )
         return F.substring(nm, 1, F.element_at(fit, 1))
 

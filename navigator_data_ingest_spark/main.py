@@ -27,11 +27,13 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from navigator_data_ingest_spark.functions.text import optional_http_url
 from navigator_data_ingest_spark.operators.ingest import (
     expand_archive_paths,
     map_update_actions,
     order_update_actions,
+    parser_input_records,
+    results_report,
+    url_error_col,
 )
 from navigator_data_ingest_spark.sources.pipeline_updates import (
     read_pipeline_updates,
@@ -40,44 +42,20 @@ from navigator_data_ingest_spark.sources.sinks import write_parser_input, write_
 
 
 def build_parser_input(new_docs: DataFrame) -> DataFrame:
-    """BackendDocument rows -> initial ParserInput records.
-
-    Direct field translations (new_document_actions.py:88-95); rows with
-    an invalid non-null source_url are excluded here and surface as
-    ValueError rows in the report instead of raising per-document.
-    """
-    return new_docs.where(optional_http_url(F.col("source_url"))).select(
-        F.col("import_id").alias("document_id"),
-        F.col("slug").alias("document_slug"),
-        F.col("name").alias("document_name"),
-        F.col("description").alias("document_description"),
-        F.col("source_url").alias("document_source_url"),
-        F.col("type").alias("document_type"),
-        F.col("geography").alias("document_geography"),
-        F.lit(None).cast("string").alias("document_cdn_object"),
-        F.lit(None).cast("string").alias("document_content_type"),
-        F.lit(None).cast("string").alias("document_md5_sum"),
-    )
+    """BackendDocument rows -> initial ParserInput records, the document
+    type taken as given (new_document_actions.py:88-95)."""
+    return parser_input_records(new_docs, F.col("type"))
 
 
 def build_report(new_docs: DataFrame, updates: DataFrame) -> DataFrame:
-    """IngestResult rollup (main.py:186-232): counts per (type, error)."""
-    new_side = new_docs.select(
-        F.lit("new").alias("ingest_type"),
-        F.when(~optional_http_url(F.col("source_url")), F.lit("ValueError")).alias("error"),
-    )
-    upd_side = (
-        updates.select("document_id")
-        .distinct()
-        .select(
-            F.lit("updated").alias("ingest_type"),
-            F.lit(None).cast("string").alias("error"),
-        )
-    )
-    return (
-        new_side.unionAll(upd_side)
-        .groupBy("ingest_type", "error")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
+    """IngestResult rollup (main.py:186-232): counts per (type, error).
+
+    A batch carries no fetched bytes, so a new document's only error is
+    the ValueError of an invalid source_url.
+    """
+    return results_report(
+        new_docs.select(url_error_col().alias("error")),
+        updates.select("document_id").distinct(),
     )
 
 

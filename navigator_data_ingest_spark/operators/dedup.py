@@ -817,18 +817,18 @@ def dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale this is one hash-shuffle on the canonical key.
     """
     from navigator_data_ingest_spark.operators.ingest import (
+        any_url_col,
         synthetic_new_documents,
     )
 
     nd = synthetic_new_documents(spark, sf_dir)
-    fetch_url = F.coalesce(F.col("download_url"), F.col("source_url"))
     canon = F.expr(
         "regexp_replace(regexp_replace(regexp_replace(lower(fetch_url), "
         "'^[a-z]+://(www\\\\.)?', ''), '[?#].*$', ''), '/$', '')"
     )
     w = Window.partitionBy("canonical_url")
     return (
-        nd.withColumn("fetch_url", fetch_url)
+        nd.withColumn("fetch_url", any_url_col())
         .where(F.col("fetch_url").isNotNull())
         .withColumn("canonical_url", canon)
         .withColumn("canonical_id", F.min("doc_id").over(w))
@@ -1173,8 +1173,8 @@ def dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_bloom_sql() -> str:
-    def dk_pos(j: int, h: str = "h") -> str:
-        return f"((('0x' || substr({h}, {1 + 4 * j}, 4))::uinteger) % {BLOOM_BITS})::int"
+    def dk_pos(j: int) -> str:
+        return f"((('0x' || substr(h, {1 + 4 * j}, 4))::uinteger) % {BLOOM_BITS})::int"
 
     probe_rows = " UNION ALL ".join(
         f"SELECT doc_id, h, {dk_pos(j)} AS pos FROM new" for j in range(BLOOM_K)

@@ -34,11 +34,14 @@ from navigator_data_ingest_spark.functions.content import (
     CONTENT_TYPE_DOCX,
     CONTENT_TYPE_HTML,
     CONTENT_TYPE_PDF,
-    upload_file_name,
 )
 from navigator_data_ingest_spark.functions import minipdf
-from navigator_data_ingest_spark.functions.text import slugify_col
-from navigator_data_ingest_spark.operators.ingest import synthetic_new_documents
+from navigator_data_ingest_spark.operators.ingest import (
+    SUPPORTED_CONTENT_TYPES,
+    fetch_url_col,
+    synthetic_new_documents,
+    upload_name_col,
+)
 
 FETCH_RESULT_SCHEMA = (
     "import_id string, fetch_url string, domain string, name string, "
@@ -238,9 +241,8 @@ def _fetch_and_convert(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
             pdf["fetch_url"], pdf["head_hex"], pdf["header"],
             pdf["publication_ts"],
         ):
-            # (name/geography/publication_ts ride through untouched —
-            # r12: echoing them here removes the join-back that
-            # re-derived the whole synthetic work list a second time)
+            # name/geography/publication_ts ride through untouched, so
+            # no join-back re-derives the work list after the stage
             status, content, ms, attempts, backoff, hops, err = _fetch_with_retry(
                 url, head_hex
             )
@@ -255,11 +257,9 @@ def _fetch_and_convert(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
                     content = _convert_to_pdf(content, ct, url, pub_ts)
                 # PDF passes through; unsupported stays raw (error later)
             statuses.append(status)
-            # r12 (guide §4.1 — ship only what crosses the boundary is
-            # needed): the converted bytes were Arrow-shipped to the JVM
-            # solely for length()/md5(); both reduce HERE, so the heavy
-            # content column never leaves the Python worker. hashlib's
-            # lowercase hex digest equals Spark's md5(binary) exactly.
+            # size and md5 reduce here, so the content bytes never
+            # cross the Arrow boundary. hashlib's lowercase hex digest
+            # equals Spark's md5(binary) exactly.
             n_bytes_l.append(len(content))
             md5s.append(
                 hashlib.md5(content).hexdigest() if status == 200 else None
@@ -299,12 +299,8 @@ def ingest_download_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdn upload name — the UploadResult of api_client.py:44 as a table.
     """
     nd = synthetic_new_documents(spark, sf_dir)
-    fetch_url = F.coalesce(
-        F.nullif(F.col("download_url"), F.lit("")),
-        F.nullif(F.col("source_url"), F.lit("")),
-    )
     work = (
-        nd.withColumn("fetch_url", fetch_url)
+        nd.withColumn("fetch_url", fetch_url_col())
         .where(F.col("fetch_url").isNotNull())
         .withColumn("domain", F.parse_url("fetch_url", F.lit("HOST")))
         .select(
@@ -319,44 +315,25 @@ def ingest_download_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sees a single domain, so a per-task rate limiter enforcing
     # domain_budget / FETCH_SALT_N keeps aggregate politeness while the
     # stage parallelizes.
-    # r12 (guide §2.4 — remove the join outright): name/geography/
-    # publication_ts pass THROUGH the Python stage as echoed columns, so
-    # no join-back re-derives the synthetic work list a second time
-    # (that join re-ran the whole md5/regex projection and added a
-    # broadcast build + join stage; the echoed columns cost only their
-    # Arrow bytes).
-    fetched = work.select(
-        "import_id", "fetch_url", "domain", "head_hex", "header",
-        "name", "geography", "publication_ts",
-    ).withColumn(
+    # name/geography/publication_ts pass through the Python stage as
+    # echoed columns, so no join-back re-derives the work list for the
+    # upload name; n_bytes/md5_sum arrive reduced from the stage.
+    fetched = work.withColumn(
         "fetch_salt", F.pmod(F.xxhash64("fetch_url"), F.lit(FETCH_SALT_N))
     ).repartition(n_parts, "domain", "fetch_salt").drop("fetch_salt").mapInPandas(
         _fetch_and_convert, schema=FETCH_RESULT_SCHEMA
     )
-    # n_bytes/md5_sum arrive pre-reduced from the Python stage (the
-    # content bytes never cross the Arrow boundary)
-    enriched = fetched
-    supported = F.col("content_type").isin(
-        CONTENT_TYPE_PDF, CONTENT_TYPE_HTML, CONTENT_TYPE_DOCX, CONTENT_TYPE_DOC
-    )
-    prefix = F.concat(
-        F.col("geography"), F.lit("/"), F.year("publication_ts").cast("string")
-    )
     return (
-        enriched.withColumn(
+        fetched.withColumn(
             "error",
             F.when(F.col("status") != 200, F.lit("DownloadError")).when(
-                ~supported, F.lit("UnsupportedContentTypeError")
+                ~F.col("content_type").isin(*SUPPORTED_CONTENT_TYPES),
+                F.lit("UnsupportedContentTypeError"),
             ),
         )
         .withColumn(
             "cdn_object",
-            F.when(
-                F.col("error").isNull(),
-                upload_file_name(
-                    prefix, slugify_col(F.col("name")), F.col("md5_sum"), F.lit(".pdf")
-                ),
-            ),
+            F.when(F.col("error").isNull(), upload_name_col(F.col("md5_sum"))),
         )
         .select(
             "import_id", "domain", "status", "attempts", "backoff_ms",
@@ -414,12 +391,8 @@ def ingest_frontier_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     wave) URL counts + the wave span per host.
     """
     nd = synthetic_new_documents(spark, sf_dir)
-    fetch_url = F.coalesce(
-        F.nullif(F.col("download_url"), F.lit("")),
-        F.nullif(F.col("source_url"), F.lit("")),
-    )
     work = (
-        nd.withColumn("fetch_url", fetch_url)
+        nd.withColumn("fetch_url", fetch_url_col())
         .where(F.col("fetch_url").isNotNull())
         .select(
             "import_id",
@@ -429,14 +402,13 @@ def ingest_frontier_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ord", F.expr("cast(regexp_extract(import_id, '([0-9]+)$', 1) as bigint)")
         )
     )
-    # r12 (guide §2.4): inb is consumed by offs AND ranked, and each
-    # copy re-derived the 1-row max — 4 documents scans unpinned.
-    # Pinning the 1-row quantizer removes the duplicated max passes;
-    # the block-count branch below aggregates blk directly (count per
-    # (host, blk) == max in-block row_number) so no second window runs.
-    # The two fact passes that remain (window + block counts) are the
-    # floor without a doc-grain pin, which at 100 TB would cost more
-    # than the narrow rescan.
+    # The 1-row quantizer is pinned: inb feeds both offs and ranked,
+    # and unpinned each copy re-derives the max in its own scan. The
+    # block counts aggregate blk directly (count per (host, blk) == max
+    # in-block row_number), so no second window runs. The two fact
+    # passes left (window + block counts) are the floor without a
+    # doc-grain pin, which at 100 TB would cost more than the narrow
+    # rescan.
     mx = F.broadcast(work.agg(F.max("ord").alias("mx")).localCheckpoint(eager=False))
     blk = work.crossJoin(mx).select(
         "host",

@@ -25,7 +25,6 @@ from navigator_data_ingest_spark.functions.content import (
     CONTENT_TYPE_HTML,
     CONTENT_TYPE_PDF,
     detect_content_type,
-    trimmed_name_col,
     upload_file_name,
 )
 from navigator_data_ingest_spark.functions.text import (
@@ -90,6 +89,10 @@ CATEGORY_DOC_TYPE = {
     "legislative": "Law",
     "litigation": "Litigation",
 }
+# content types the pipeline can turn into a PDF (api_client.py:74-97)
+SUPPORTED_CONTENT_TYPES = (
+    CONTENT_TYPE_PDF, CONTENT_TYPE_HTML, CONTENT_TYPE_DOCX, CONTENT_TYPE_DOC
+)
 
 ARCHIVE_TS = "2026-01-01-00-00-00"  # fixed for determinism (ref uses now())
 
@@ -180,11 +183,9 @@ def synthetic_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic (document_id, seq, update_type) rows: 1-3 per doc.
     One selectExpr pass (see synthetic_new_documents on py4j depth).
 
-    r12 (guide §2.4): no scatter here — every consumer re-distributes
-    almost immediately (the action window's document_id exchange or a
-    presentation orderBy), so a repartition "for parallelism" of the
-    cheap CASE+explode map work was a pure extra exchange in all of
-    them."""
+    Not scattered: every consumer re-distributes almost immediately (the
+    action window's document_id exchange or a presentation orderBy), so
+    a repartition here would be an extra exchange in all of them."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     ds = "cast(doc_id as string)"
     return docs.selectExpr(
@@ -212,19 +213,130 @@ updates AS (
 )
 """
 
-
-def _action_of_type(update_type: Column) -> Column:
-    """update type -> action name (updated_document_actions.py:453)."""
-    out = None
-    for t, a in ACTION_OF_TYPE.items():
-        cond = update_type == t
-        out = F.when(cond, F.lit(a)) if out is None else out.when(cond, F.lit(a))
-    return out
-
-
 ACTION_CASE_SQL = "CASE " + " ".join(
     f"WHEN update_type = '{t}' THEN '{a}'" for t, a in ACTION_OF_TYPE.items()
 ) + " END"
+
+
+def _updated_doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct document_ids of ``synthetic_updates``, at doc grain.
+
+    synthetic_updates emits 1..3 rows for every non-null doc_id and none
+    for a null one (a null sequence bound explodes to nothing), so its
+    distinct document_id set is the documents table's distinct non-null
+    doc_ids, derived without the explode.
+    """
+    return (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id")
+        .where(F.col("doc_id").isNotNull())
+        .distinct()
+        .selectExpr(
+            "'TEST.executive.' || cast(doc_id as string) || '.'"
+            " || cast(doc_id as string) AS document_id"
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# ingest rules, each defined once
+# ---------------------------------------------------------------------------
+
+
+def _case_of(key: Column, mapping: dict[str, str]) -> Column:
+    """``CASE WHEN key = k THEN v ... END`` over ``mapping``, in its order."""
+    out = None
+    for k, v in mapping.items():
+        out = F.when(key == k, F.lit(v)) if out is None else out.when(key == k, F.lit(v))
+    return out
+
+
+def fetch_url_col() -> Column:
+    """The URL a new document is fetched from (new_document_actions.py:35-48):
+    download_url when non-empty, else source_url when non-empty, else null."""
+    return F.coalesce(
+        F.nullif(F.col("download_url"), F.lit("")),
+        F.nullif(F.col("source_url"), F.lit("")),
+    )
+
+
+def any_url_col() -> Column:
+    """download_url, else source_url. Unlike ``fetch_url_col`` an empty
+    string counts as set; the watermark, report, e2e and URL-dedup
+    oracles encode this looser rule as it is."""
+    return F.coalesce(F.col("download_url"), F.col("source_url"))
+
+
+def upload_prefix_col() -> Column:
+    """Upload prefix ``{geography}/{publication year}`` (new_document_actions.py:31)."""
+    return F.concat(
+        F.col("geography"), F.lit("/"), F.year("publication_ts").cast("string")
+    )
+
+
+def upload_name_col(md5_sum: Column) -> Column:
+    """``{prefix}/{trimmed slug}_{md5}.pdf`` (api_client.py:120)."""
+    return upload_file_name(
+        upload_prefix_col(), slugify_col(F.col("name")), md5_sum, F.lit(".pdf")
+    )
+
+
+def url_error_col() -> Column:
+    """An invalid non-null source_url is a ValueError (new_document_actions.py:79)."""
+    return F.when(~optional_http_url(F.col("source_url")), F.lit("ValueError"))
+
+
+def _new_doc_error() -> Column:
+    """A new document's error: ValueError for an invalid source_url, else
+    UnsupportedContentTypeError when a fetch would happen and the
+    detected content type is not supported, else null."""
+    ct = detect_content_type(F.col("head_hex"), F.col("source_url"), F.col("header"))
+    return (
+        url_error_col()
+        .when(
+            any_url_col().isNotNull() & ~ct.isin(*SUPPORTED_CONTENT_TYPES),
+            F.lit("UnsupportedContentTypeError"),
+        )
+        .otherwise(F.lit(None).cast("string"))
+    )
+
+
+def parser_input_records(new_docs: DataFrame, document_type: Column) -> DataFrame:
+    """BackendDocument rows -> initial ParserInput records
+    (new_document_actions.py:88-95).
+
+    Rows with an invalid non-null source_url error out in the reference;
+    here they are excluded and surface as ValueError rows in the report.
+    A null source_url is allowed and stays null.
+    """
+    return new_docs.where(optional_http_url(F.col("source_url"))).select(
+        F.col("import_id").alias("document_id"),
+        F.col("slug").alias("document_slug"),
+        F.col("name").alias("document_name"),
+        F.col("description").alias("document_description"),
+        F.col("source_url").alias("document_source_url"),
+        document_type.alias("document_type"),
+        F.col("geography").alias("document_geography"),
+        F.lit(None).cast("string").alias("document_cdn_object"),
+        F.lit(None).cast("string").alias("document_content_type"),
+        F.lit(None).cast("string").alias("document_md5_sum"),
+    )
+
+
+def results_report(new_errors: DataFrame, updated_ids: DataFrame) -> DataFrame:
+    """IngestResult rollup (main.py:186-232): one row per (ingest type,
+    error) with its document count. ``new_errors`` has one ``error`` row
+    per new document; ``updated_ids`` one row per updated document."""
+    new_side = new_errors.select(F.lit("new").alias("ingest_type"), "error")
+    upd_side = updated_ids.select(
+        F.lit("updated").alias("ingest_type"),
+        F.lit(None).cast("string").alias("error"),
+    )
+    return (
+        new_side.unionAll(upd_side)
+        .groupBy("ingest_type", "error")
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -262,8 +374,7 @@ def ingest_s3_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "import_id",
         "geography",
         F.year("publication_ts").cast("int").alias("pub_year"),
-        F.concat("geography", F.lit("/"), F.year("publication_ts").cast("string"))
-        .alias("s3_prefix"),
+        upload_prefix_col().alias("s3_prefix"),
     ).orderBy("import_id")
 
 
@@ -311,10 +422,7 @@ def ingest_upload_skips(spark: SparkSession, sf_dir: str) -> DataFrame:
     UploadResult in the reference).
     """
     nd = synthetic_new_documents(spark, sf_dir)
-    chosen = F.coalesce(
-        F.nullif(F.col("download_url"), F.lit("")),
-        F.nullif(F.col("source_url"), F.lit("")),
-    )
+    chosen = fetch_url_col()
     return nd.select(
         "import_id",
         "source_url",
@@ -339,17 +447,8 @@ def ingest_file_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     1024-byte S3 path budget.
     """
     nd = synthetic_new_documents(spark, sf_dir)
-    prefix = F.concat(
-        F.col("geography"), F.lit("/"), F.year("publication_ts").cast("string")
-    )
     return nd.select(
-        "import_id",
-        upload_file_name(
-            prefix,
-            slugify_col(F.col("name")),
-            F.md5(F.col("text")),
-            F.lit(".pdf"),
-        ).alias("upload_name"),
+        "import_id", upload_name_col(F.md5(F.col("text"))).alias("upload_name")
     ).orderBy("import_id")
 
 
@@ -360,7 +459,7 @@ def ingest_watermark_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     takes the document's publication_ts as the stamp date.
     """
     nd = synthetic_new_documents(spark, sf_dir)
-    chosen = F.coalesce(F.col("download_url"), F.col("source_url"))
+    chosen = any_url_col()
     return (
         nd.where(chosen.isNotNull())
         .select(
@@ -372,40 +471,19 @@ def ingest_watermark_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ingest_parser_input(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Initial ParserInput projection (new_document_actions.py:88-95).
-
-    Rows with an invalid (non-http) source_url error out in the
-    reference; here they are excluded (they surface in the results
-    report instead). A null source_url is allowed and stays null.
-    """
-    nd = synthetic_new_documents(spark, sf_dir)
-    doc_type = None
-    for c, t in CATEGORY_DOC_TYPE.items():
-        cond = F.col("category") == c
-        doc_type = F.when(cond, F.lit(t)) if doc_type is None else doc_type.when(cond, F.lit(t))
-    return (
-        nd.where(optional_http_url(F.col("source_url")))
-        .select(
-            F.col("import_id").alias("document_id"),
-            F.col("slug").alias("document_slug"),
-            F.col("name").alias("document_name"),
-            F.col("description").alias("document_description"),
-            F.col("source_url").alias("document_source_url"),
-            doc_type.alias("document_type"),
-            F.col("geography").alias("document_geography"),
-            F.lit(None).cast("string").alias("document_cdn_object"),
-            F.lit(None).cast("string").alias("document_content_type"),
-            F.lit(None).cast("string").alias("document_md5_sum"),
-        )
-        .orderBy("document_id")
-    )
+    """ParserInput records of the synthetic new documents, the document
+    type mapped from the category (types.py:40)."""
+    return parser_input_records(
+        synthetic_new_documents(spark, sf_dir),
+        _case_of(F.col("category"), CATEGORY_DOC_TYPE),
+    ).orderBy("document_id")
 
 
 def map_update_actions(upd: DataFrame) -> DataFrame:
     """(document_id, seq, update_type) -> + action column."""
     return upd.select(
         "document_id", "seq", "update_type",
-        _action_of_type(F.col("update_type")).alias("action"),
+        _case_of(F.col("update_type"), ACTION_OF_TYPE).alias("action"),
     )
 
 
@@ -538,11 +616,9 @@ def _field_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(
         F.col("action").isin("update_dont_parse", "update_field_in_all_occurences")
     )
-    field = None
-    for t, f_name in PIPELINE_FIELD.items():
-        cond = F.col("update_type") == t
-        field = F.when(cond, F.lit(f_name)) if field is None else field.when(cond, F.lit(f_name))
-    upd = upd.withColumn("pipeline_field", field)
+    upd = upd.withColumn(
+        "pipeline_field", _case_of(F.col("update_type"), PIPELINE_FIELD)
+    )
     # update_dont_parse touches parser_input+embeddings_input;
     # update_field_in_all_occurences touches all three prefixes.
     upd = upd.withColumn(
@@ -579,36 +655,11 @@ def ingest_results_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     New-document errors: invalid source_url -> ValueError; unsupported
     content type (when a fetch would happen) -> UnsupportedContentTypeError.
     """
-    nd = synthetic_new_documents(spark, sf_dir)
-    chosen = F.coalesce(F.col("download_url"), F.col("source_url"))
-    ct = detect_content_type(F.col("head_hex"), F.col("source_url"), F.col("header"))
-    supported = ct.isin(
-        CONTENT_TYPE_PDF, CONTENT_TYPE_HTML, CONTENT_TYPE_DOCX, CONTENT_TYPE_DOC
+    new_errors = synthetic_new_documents(spark, sf_dir).select(
+        _new_doc_error().alias("error")
     )
-    url_ok = optional_http_url(F.col("source_url"))
-    new_results = nd.select(
-        F.lit("new").alias("ingest_type"),
-        F.when(~url_ok, F.lit("ValueError"))
-        .when(chosen.isNotNull() & ~supported, F.lit("UnsupportedContentTypeError"))
-        .otherwise(F.lit(None).cast("string"))
-        .alias("error"),
-    )
-    # same doc-grain-distinct argument as ingest_pipeline_e2e's upd_ids
-    upd_results = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull())
-        .distinct()
-        .select(
-            F.lit("updated").alias("ingest_type"),
-            F.lit(None).cast("string").alias("error"),
-        )
-    )
-    return (
-        new_results.unionAll(upd_results)
-        .groupBy("ingest_type", "error")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("ingest_type", "error")
+    return results_report(new_errors, _updated_doc_ids(spark, sf_dir)).orderBy(
+        "ingest_type", "error"
     )
 
 
@@ -621,26 +672,18 @@ def ingest_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercised piecewise by the per-operator oracles).
     """
     nd = synthetic_new_documents(spark, sf_dir)
-    chosen = F.coalesce(F.col("download_url"), F.col("source_url"))
-    ct = detect_content_type(F.col("head_hex"), F.col("source_url"), F.col("header"))
-    url_ok = optional_http_url(F.col("source_url"))
-    supported = ct.isin(
-        CONTENT_TYPE_PDF, CONTENT_TYPE_HTML, CONTENT_TYPE_DOCX, CONTENT_TYPE_DOC
-    )
-    prefix = F.concat(F.col("geography"), F.lit("/"), F.year("publication_ts").cast("string"))
+    unfetched = any_url_col().isNull()
     new_side = nd.select(
         F.col("import_id").alias("document_id"),
         F.lit("new").alias("ingest_type"),
-        F.when(~url_ok, F.lit("ValueError"))
-        .when(chosen.isNotNull() & ~supported, F.lit("UnsupportedContentTypeError"))
-        .otherwise(F.lit(None).cast("string")).alias("error"),
-        F.when(chosen.isNull(), F.lit(None).cast("string"))
-        .otherwise(
-            upload_file_name(prefix, slugify_col(F.col("name")), F.md5(F.col("text")), F.lit(".pdf"))
-        ).alias("cdn_object"),
-        F.when(chosen.isNull(), F.lit(None).cast("string"))
+        _new_doc_error().alias("error"),
+        F.when(unfetched, F.lit(None).cast("string"))
+        .otherwise(upload_name_col(F.md5(F.col("text")))).alias("cdn_object"),
+        F.when(unfetched, F.lit(None).cast("string"))
         .otherwise(F.md5(F.col("text"))).alias("md5_sum"),
-        ct.alias("content_type"),
+        detect_content_type(
+            F.col("head_hex"), F.col("source_url"), F.col("header")
+        ).alias("content_type"),
         F.lit(0).cast("bigint").alias("n_renames"),
     )
     renames = (
@@ -650,27 +693,8 @@ def ingest_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("document_id")
         .agg(F.count(F.lit(1)).alias("n_renames"))
     )
-    # r12 (guide §2.4 — a distinct on data already unique is a wasted
-    # shuffle): synthetic_updates emits seq 1..(doc_id % 3 + 1) ≥ 1 rows
-    # per document with one document_id per doc_id, so its distinct
-    # document_id set IS the documents table projected — derived here
-    # without the explode + two-level distinct aggregation.
-    # NULL doc_id generates no update rows in synthetic_updates (NULL
-    # sequence bound → explode drops), and duplicate doc_ids must still
-    # collapse — so distinct at DOC grain (narrow bigint, half the rows
-    # of the exploded stream, no Generate).
-    upd_ids = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull())
-        .distinct()
-        .selectExpr(
-            "'TEST.executive.' || cast(doc_id as string) || '.'"
-            " || cast(doc_id as string) AS document_id"
-        )
-    )
     upd_side = (
-        upd_ids
+        _updated_doc_ids(spark, sf_dir)
         .join(renames, "document_id", "left")
         .select(
             "document_id",

@@ -1,7 +1,5 @@
 from navigator_data_ingest_spark.plans.audit import (  # noqa: F401
-    broadcast_join_count,
     codegen_stage_count,
-    exchange_count,
     formatted_plan,
     plan_audit,
     pushed_filters,

@@ -59,10 +59,6 @@ def read_schemas(df: DataFrame) -> list[str]:
     return re.findall(r"ReadSchema: (\S+)", formatted_plan(df))
 
 
-def broadcast_join_count(df: DataFrame) -> int:
-    return _node_counts(df).get("BroadcastHashJoin", 0)
-
-
 _WINDOW_ARGS = re.compile(
     r"^\(\d+\) Window(GroupLimit)?\s*$(?:\n(?!\(\d+\)).*?)*?"
     r"^Arguments: (.*)$",
@@ -99,11 +95,6 @@ def unpartitioned_window_count(df: DataFrame) -> int:
         elif len(groups) == 2 and re.search(r"\b(ASC|DESC)\b", groups[1]):
             n += 1  # second group is the ORDER spec: partition absent
     return n
-
-
-def exchange_count(df: DataFrame) -> int:
-    """Shuffle exchanges in the plan (broadcast exchanges excluded)."""
-    return _node_counts(df).get("Exchange", 0)
 
 
 def codegen_stage_count(df: DataFrame) -> int:

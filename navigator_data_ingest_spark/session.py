@@ -16,14 +16,11 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "navigator-data-ingest-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults applied."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
-    )
+    shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", max(cpus, 8)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

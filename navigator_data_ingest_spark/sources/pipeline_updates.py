@@ -38,6 +38,7 @@ from pyspark.sql.types import (
 )
 
 from navigator_data_ingest_spark.operators import ingest
+from navigator_data_ingest_spark.sources.sinks import sink_path
 
 # BackendDocument (reference types.py): explicit closed schema.
 METADATA_SCHEMA = StructType(
@@ -125,6 +126,11 @@ def _synthesize_updates_file(spark: SparkSession, sf_dir: str) -> str:
     TEST INPUT FILE (the reference's batch input is one JSON object and
     is inherently driver-sized); the engine-side parsing it feeds is
     fully distributed.
+
+    The payload is a pure function of sf_dir, so every call for one
+    sf_dir rewrites the same per-process path: repeated calls leave one
+    directory behind, not one each. The file is written under a temporary
+    name and renamed into place, so a reader never sees it half written.
     """
     nd_rows = (
         ingest.synthetic_new_documents(spark, sf_dir)
@@ -173,10 +179,13 @@ def _synthesize_updates_file(spark: SparkSession, sf_dir: str) -> str:
             }
         )
     payload = {"new_documents": new_documents, "updated_documents": updated_documents}
-    out_dir = tempfile.mkdtemp(prefix="nav_spark_updates_")
+    out_dir = sink_path("updates", sf_dir)
+    os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, "new_and_updated_documents.json")
-    with open(path, "w") as f:
+    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".tmp")
+    with os.fdopen(fd, "w") as f:
         json.dump(payload, f)
+    os.replace(tmp, path)
     return path
 
 

@@ -152,8 +152,3 @@ def raw_relation(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         cache.clear()
     cache[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every engine table as a dict of DataFrames."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}

@@ -358,3 +358,39 @@ def test_run_batch_invalid_url_and_empty_updates(spark, tmp_path):
     })
     counts = run_batch(spark, path, str(tmp_path / "batch_out"))
     assert counts == {"parser_input": 0, "archive_plan": 0, "report": 1}
+
+
+def test_run_batch_matches_oracled_ingest_keys(spark, tmp_path):
+    """run_batch on the synthesized updates file writes the parser-input
+    rows and report counts of the DuckDB-checked ingest keys. The batch
+    keeps the file's own document type and detects no content type, so
+    document_type and the new-document rows without a ValueError are
+    left out of the comparison."""
+    from navigator_data_ingest_spark.main import run_batch
+    from navigator_data_ingest_spark.operators.ingest import (
+        ingest_parser_input,
+        ingest_results_report,
+    )
+    from navigator_data_ingest_spark.sources.pipeline_updates import (
+        _synthesize_updates_file,
+    )
+    from navigator_data_ingest_spark.sources.sinks import REPORT_SCHEMA
+    from tests.conftest import SF_SMOKE
+
+    out = str(tmp_path / "batch_out")
+    run_batch(spark, _synthesize_updates_file(spark, SF_SMOKE), out)
+
+    expected = ingest_parser_input(spark, SF_SMOKE)
+    cols = [c for c in expected.columns if c != "document_type"]
+    written = spark.read.schema(expected.schema).json(f"{out}/parser_input")
+    want = sorted(tuple(r) for r in expected.select(*cols).collect())
+    assert want
+    assert sorted(tuple(r) for r in written.select(*cols).collect()) == want
+
+    def report(df):
+        return {(r.ingest_type, r.error): r.n_docs for r in df.collect()}
+
+    got = report(spark.read.schema(REPORT_SCHEMA).json(f"{out}/report"))
+    oracled = report(ingest_results_report(spark, SF_SMOKE))
+    for key in (("new", "ValueError"), ("updated", None)):
+        assert got.get(key) == oracled.get(key) > 0, key

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import tempfile
@@ -31,6 +32,19 @@ def test_pipeline_updates_new_documents_roundtrip(spark):
         for r in synthetic_new_documents(spark, SF_SMOKE).select(*fields).collect()
     )
     assert got == want
+
+
+def test_synthesized_updates_file_reuses_one_path(spark):
+    """Repeated calls for one sf_dir rewrite one file in one directory
+    instead of leaving a new temporary directory behind each time."""
+    pattern = os.path.join(
+        tempfile.gettempdir(), f"nav_spark_updates_*_{os.getpid()}"
+    )
+    first = _synthesize_updates_file(spark, SF_SMOKE)
+    dirs = set(glob.glob(pattern))
+    assert _synthesize_updates_file(spark, SF_SMOKE) == first
+    assert set(glob.glob(pattern)) == dirs
+    assert os.listdir(os.path.dirname(first)) == [os.path.basename(first)]
 
 
 def test_pipeline_updates_schema_is_closed(spark):
