@@ -14,6 +14,13 @@ returns are observed on the writes themselves (``df.observe``), so no
 count job re-reads the input. The archive plan is a rename set and is
 written unsorted: its row order is unspecified.
 
+The three writes are independent: none reads another's output. A
+batch's executor work is small next to Spark's fixed per-job driver
+cost, so writes run one after another would leave most cores idle while
+the driver plans, schedules and commits each job. They run concurrently
+on one thread pool instead, as the reference runs its per-document work
+on a driver-side pool. A write added later goes through the same pool.
+
 Run:
     python -m navigator_data_ingest_spark.main \
         --updates-file new_and_updated_documents.json --output-dir /tmp/out
@@ -23,9 +30,11 @@ from __future__ import annotations
 
 import argparse
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from navigator_data_ingest_spark.operators.ingest import (
     expand_archive_paths,
@@ -62,8 +71,13 @@ def build_report(new_docs: DataFrame, updates: DataFrame) -> DataFrame:
 def run_batch(spark: SparkSession, updates_file: str, output_dir: str) -> dict:
     """Execute one ingest batch; returns the row count of each output.
 
-    The counts are the observed row counts of the three writes, so each
-    output runs once. The archive plan's row order is unspecified.
+    The outputs are built in order on the calling thread, then the three
+    writes run concurrently, each on a pool thread that inherits the
+    caller's job group, scheduler pool and job description. The batch
+    returns, or raises the first failure in submission order, only once
+    every write has finished. The counts are the observed row counts of
+    the writes, so each output runs once. The archive plan's row order
+    is unspecified.
     """
     new_docs, updates = read_pipeline_updates(spark, updates_file)
     observed: dict[str, Observation] = {}
@@ -80,11 +94,24 @@ def run_batch(spark: SparkSession, updates_file: str, output_dir: str) -> dict:
     )
     report = counted("report", build_report(new_docs, updates))
 
-    write_parser_input(parser_input, os.path.join(output_dir, "parser_input"))
-    archive_plan.write.mode("overwrite").parquet(
-        os.path.join(output_dir, "archive_plan")
-    )
-    write_report(report, os.path.join(output_dir, "report"))
+    def write_archive_plan(df: DataFrame, path: str) -> None:
+        df.write.mode("overwrite").parquet(path)
+
+    writes = [
+        (write_parser_input, parser_input, "parser_input"),
+        (write_archive_plan, archive_plan, "archive_plan"),
+        (write_report, report, "report"),
+    ]
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futures = [
+            pool.submit(inherit(write), df, os.path.join(output_dir, name))
+            for write, df, name in writes
+        ]
+    # the pool's exit waited for every write, so none is still running
+    # when the first failure is raised here
+    for future in futures:
+        future.result()
     return {k: obs.get["rows"] for k, obs in observed.items()}
 
 

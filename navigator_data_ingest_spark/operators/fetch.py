@@ -318,10 +318,19 @@ def ingest_download_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # name/geography/publication_ts pass through the Python stage as
     # echoed columns, so no join-back re-derives the work list for the
     # upload name; n_bytes/md5_sum arrive reduced from the stage.
-    fetched = work.withColumn(
-        "fetch_salt", F.pmod(F.xxhash64("fetch_url"), F.lit(FETCH_SALT_N))
-    ).repartition(n_parts, "domain", "fetch_salt").drop("fetch_salt").mapInPandas(
-        _fetch_and_convert, schema=FETCH_RESULT_SCHEMA
+    fetched = (
+        work.withColumn(
+            "fetch_salt", F.pmod(F.xxhash64("fetch_url"), F.lit(FETCH_SALT_N))
+        )
+        .repartition(n_parts, "domain", "fetch_salt")
+        .drop("fetch_salt")
+        .mapInPandas(_fetch_and_convert, schema=FETCH_RESULT_SCHEMA)
+        # The final orderBy's range partitioner samples its input in a
+        # job of its own. Without a shuffle boundary here that job reruns
+        # the Python stage, and every document is fetched, converted and
+        # uploaded twice; with it, the stage runs once and both the
+        # sampler and the sort read its shuffle files.
+        .repartition(n_parts, "import_id")
     )
     return (
         fetched.withColumn(

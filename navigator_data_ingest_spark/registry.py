@@ -56,7 +56,7 @@ _CHANGED: dict[str, int] = {
         "emb_ivf_cell_census", "emb_label_purity", "emb_lsh_tuning",
         "emb_matryoshka", "emb_pq", "emb_triplet_mining",
         "graph_bipartite_projection", "ingest_archive_paths",
-        "ingest_cache_rewrite", "ingest_download_fetch", "ingest_field_update",
+        "ingest_cache_rewrite", "ingest_field_update",
         "ingest_frontier_schedule", "ingest_order_actions",
         "ingest_pipeline_e2e", "ingest_results_report", "ingest_update_actions",
         "mm_aspect_buckets", "mm_audio_vad_segments", "mm_shard_manifest",
@@ -87,6 +87,8 @@ _CHANGED: dict[str, int] = {
         "text_jsd_drift", "text_rake_keywords", "text_tfidf",
     ), 12),
     "dedup_semantic": 13,
+    "ingest_download_fetch": 14,
+    "ingest_fetch_retry": 14,
     "ingest_validate_url": 14,
 }
 

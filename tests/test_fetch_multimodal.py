@@ -49,6 +49,35 @@ def test_fetch_results_routing(spark):
     df.unpersist()
 
 
+def _plan_nodes(node):
+    """The physical plan under ``node``, query stages included."""
+    yield node
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        children = [node.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        children = [node.plan()]
+    else:
+        seq = node.children()
+        children = [seq.apply(i) for i in range(seq.size())]
+    for child in children:
+        yield from _plan_nodes(child)
+
+
+def test_fetch_runs_each_document_once(spark):
+    """The Python stage sees each document once: the final sort's range
+    sampler must not rerun the fetch, or every GET, conversion and
+    upload would happen twice."""
+    df = ingest_download_fetch(spark, SF_SMOKE)
+    rows = df.collect()
+    assert rows
+    (stage,) = [
+        n for n in _plan_nodes(df._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName() == "MapInPandasExec"
+    ]
+    assert stage.metrics().apply("pythonNumRowsReceived").value() == len(rows)
+
+
 def test_fetch_converted_content_types(spark):
     """html captures re-label to PDF; doc/docx keep their detected type
     (api_client.py:74-97); nothing supported stays text/html."""

@@ -332,6 +332,26 @@ def test_run_batch_job_count(spark, tmp_path):
     assert 0 < len(jobs) <= RUN_BATCH_JOBS, sorted(jobs)
 
 
+def test_run_batch_failed_write_raises_after_all_writes(spark, tmp_path, monkeypatch):
+    """A failing write is raised to the caller, and only once the other
+    writes, which run alongside it, have finished."""
+    from navigator_data_ingest_spark import main
+
+    class WriteFailed(Exception):
+        pass
+
+    def fail(df, path):
+        raise WriteFailed(path)
+
+    monkeypatch.setattr(main, "write_report", fail)
+    out = tmp_path / "batch_out"
+    with pytest.raises(WriteFailed):
+        main.run_batch(spark, _write_batch(tmp_path, SMALL_BATCH), str(out))
+    assert (out / "parser_input" / "_SUCCESS").exists()
+    assert (out / "archive_plan" / "_SUCCESS").exists()
+    assert not (out / "report").exists()
+
+
 def test_run_batch_empty_batch(spark, tmp_path):
     from navigator_data_ingest_spark.main import run_batch
     from navigator_data_ingest_spark.sources.sinks import REPORT_SCHEMA
