@@ -31,6 +31,7 @@ from navigator_data_ingest_spark.functions.exact import (
     sp_rat6,
     sp_units,
 )
+from navigator_data_ingest_spark.functions.prefix import below_sums
 from navigator_data_ingest_spark.sources.tables import load_table, scatter
 
 
@@ -4792,24 +4793,15 @@ def _normal_upper_tail(z: str) -> str:
     return f"(0.3989422804014327 * exp(-({z}) * ({z}) / 2.0) * {poly})"
 
 
-def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Mann-Whitney U (rank-sum) test: do click and purchase event
-    values come from the same distribution? No global sort: the corpus
-    collapses to DISTINCT-VALUE counts in one shuffle, and the
-    cumulative "how many B values lie below v" term is the repo's
-    two-level prefix-sum discipline — a range-bucketed block id (from a
-    1-row min/max broadcast resolved inside the plan), a within-block
-    running sum, and a <=1024-row block-offset window. 2*U stays an
-    exact integer (ties contribute cb/2 each, hence the doubling); the
-    tie-corrected normal z and rank-biserial effect size are the only
-    float steps. Scale: every window is either block-partitioned or
-    bounded by the 1024-block table; nothing driver-side.
+def _click_purchase_values(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row per distinct non-NULL click/purchase event value: the
+    value, its click count ca and its purchase count cb.
 
-    NULL rule (r4 driver fix): the rank-sum test is undefined for NULL
-    observations — a NULL value would get ``blk = NULL`` and be
-    silently dropped by the inner block join while the oracle still
-    counted it, so NULL-value rows are filtered explicitly in BOTH
-    engines.
+    The table feeds the min/max range, the block pass and the block
+    table of ``below_sums``, so unpinned the events scan re-ran once per
+    consumer. One row per DISTINCT value (the corpus quantizes value
+    columns, so this is bounded at any scale): it is pinned, and the
+    events fact is scanned once.
     """
     ev = (
         load_table(spark, sf_dir, "events")
@@ -4819,47 +4811,38 @@ def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select((F.col("event_type") == F.lit("click")).alias("is_a"), "value")
     )
-    vc = (
+    return (
         ev.groupBy("value")
         .agg(
             F.sum(F.col("is_a").cast("bigint")).alias("ca"),
             F.sum((~F.col("is_a")).cast("bigint")).alias("cb"),
         )
-        # r12 (guide §2.4 duplicated subtrees): vc feeds rng, b and (via
-        # b's block totals) the offset side — unpinned, the events scan
-        # + value groupBy re-ran once per consumer. One row per DISTINCT
-        # value (the corpus quantizes value columns, so this is bounded
-        # at any scale) — pin it; the events fact is scanned ONCE.
         .localCheckpoint(eager=False)
     )
-    rng = vc.agg(F.min("value").alias("mn"), F.max("value").alias("mx"))
-    b = vc.crossJoin(F.broadcast(rng)).withColumn(
-        "blk",
-        F.least(
-            F.lit(1023),
-            F.floor(
-                (F.col("value") - F.col("mn"))
-                / (F.col("mx") - F.col("mn") + F.lit(1e-9))
-                * 1024
-            ),
-        ),
-    )
-    w_in = (
-        Window.partitionBy("blk")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    b = b.withColumn("cum_in", F.coalesce(F.sum("cb").over(w_in), F.lit(0)))
-    bt = b.groupBy("blk").agg(F.sum("cb").alias("blk_cb"))
-    w_blk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-    bt = bt.withColumn("off", F.coalesce(F.sum("blk_cb").over(w_blk), F.lit(0)))
-    j = b.join(F.broadcast(bt.select("blk", "off")), "blk")
+
+
+def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact Mann-Whitney U (rank-sum) test: do click and purchase event
+    values come from the same distribution? No global sort: the corpus
+    collapses to DISTINCT-VALUE counts in one shuffle, and the
+    cumulative "how many B values lie below v" term comes from
+    ``below_sums`` (the two-level block prefix sum). 2*U stays an
+    exact integer (ties contribute cb/2 each, hence the doubling); the
+    tie-corrected normal z and rank-biserial effect size are the only
+    float steps. Scale: every window is either block-partitioned or
+    bounded by the 1024-block table; nothing driver-side.
+
+    NULL rule: the rank-sum test is undefined for NULL observations —
+    a NULL value has no block and would be silently dropped by the
+    block join while the oracle still counted it, so NULL-value rows
+    are filtered explicitly in BOTH engines.
+    """
+    vc = _click_purchase_values(spark, sf_dir)
+    j = below_sums(vc, "value", below_b=F.col("cb"))
     agg = j.agg(
         F.sum("ca").alias("n_a"),
         F.sum("cb").alias("n_b"),
-        F.sum(
-            F.col("ca") * (2 * (F.col("off") + F.col("cum_in")) + F.col("cb"))
-        ).alias("u2_a"),
+        F.sum(F.col("ca") * (2 * F.col("below_b") + F.col("cb"))).alias("u2_a"),
         F.sum(
             (F.col("ca") + F.col("cb"))
             * (F.col("ca") + F.col("cb"))
@@ -4873,23 +4856,21 @@ def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r_rank_biserial = u2_a/(n_a·n_b) − 1 = (u2_a − n_a·n_b)/(n_a·n_b)
     # is a PURE integer rational — integer-exact HALF_UP (repo
-    # round-boundary rule; the r5 driver flipped this column). u_a is an
-    # exact .0/.5 half-integer and z is +,−,×,÷,sqrt over bit-identical
-    # integer operands — both are IEEE-deterministic doubles, so they
-    # are emitted RAW: round() is the only step where the two engines'
-    # algorithms differ, and the r6 driver flipped round(z, 6) even
-    # though z is sqrt-protected (functions/exact.py raw-emission
-    # policy).
+    # round-boundary rule). u_a is an exact .0/.5 half-integer and z is
+    # +,−,×,÷,sqrt over bit-identical integer operands — both are
+    # IEEE-deterministic doubles, so they are emitted RAW: round() is
+    # the only step where the two engines' algorithms differ, so it is
+    # left out (functions/exact.py raw-emission policy).
     rp = "(cast(u2_a as decimal(38,0)) - cast(n_a as decimal(38,0)) * n_b)"
     rq = "(cast(n_a as decimal(38,0)) * n_b)"
     # u_a must be emitted as DOUBLE on both engines: under the driver's
     # ANSI Spark 4 session a bare `u2_a / 2.0` types as decimal(27,6)
     # while DuckDB's BIGINT / 2.0 is DOUBLE — equal values, different
-    # hash surface (r7 driver flip; VERDICT r7 "What's wrong" #2).
+    # hash surface.
     # z needs BOTH groups populated and not-all-tied (σ² > 0 iff
     # tie_term < N³−N — EXACT integer discriminant in decimal(38,0)/
-    # HUGEINT); the effect size needs both groups (round-10 n=2/n=3
-    # probe): NULL, not an ANSI crash; identical guards both engines.
+    # HUGEINT); the effect size needs both groups: NULL, not an ANSI
+    # crash; identical guards both engines.
     zdef = (
         "(n_a > 0 AND n_b > 0 AND tie_term"
         " < cast(n_a + n_b as decimal(38,0)) * (n_a + n_b) * (n_a + n_b)"
@@ -7273,11 +7254,10 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     The K-group generalization of stats_mann_whitney, sharing its scale
     discipline exactly: the corpus collapses to DISTINCT-VALUE counts in
     one shuffle (duplicate explosion invisible), the cumulative
-    below-count comes from the two-level range-bucketed prefix sum
-    (1024 blocks off a 1-row min/max broadcast), and the per-group rank
-    sums R_j are exact multiples of 0.5 (avg tie rank = below + (c+1)/2),
-    so H's inputs are bit-identical in both engines; tie correction from
-    exact integer Σ(c³−c).
+    below-count comes from ``below_sums`` (the two-level block prefix
+    sum), and the per-group rank sums R_j are exact multiples of 0.5
+    (avg tie rank = below + (c+1)/2), so H's inputs are bit-identical
+    in both engines; tie correction from exact integer Σ(c³−c).
 
     NULL rule: rank tests are undefined for NULL observations — NULL
     value or NULL type rows are dropped in BOTH engines.
@@ -7287,50 +7267,28 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull() & F.col("event_type").isNotNull())
         .select("event_type", "value")
     )
-    # r12 (guide §2.4 duplicated subtrees): tv feeds vc AND the
-    # per-group rank pass, and vc fans out to rng/b/ties — unpinned,
-    # the events scan ran up to 6x in one plan. tv is (event_type,
-    # value) grain — bounded by K types x the quantized value lattice
-    # at any corpus size — so pin it; the events fact is scanned ONCE
-    # and every downstream pass re-reads the pin.
+    # tv feeds vc AND the per-group rank pass, and vc fans out to the
+    # rank pass and the tie sum, so unpinned the events scan ran up to
+    # 6x in one plan. tv is (event_type, value) grain — bounded by K
+    # types x the quantized value lattice at any corpus size — so pin
+    # it; the events fact is scanned ONCE and every downstream pass
+    # re-reads the pin.
     tv = (
         ev.groupBy("event_type", "value")
         .agg(F.count(F.lit(1)).alias("cg"))
         .localCheckpoint(eager=False)
     )
     vc = tv.groupBy("value").agg(F.sum("cg").alias("c"))
-    rng = vc.agg(F.min("value").alias("mn"), F.max("value").alias("mx"))
-    b = vc.crossJoin(F.broadcast(rng)).withColumn(
-        "blk",
-        F.least(
-            F.lit(1023),
-            F.floor(
-                (F.col("value") - F.col("mn"))
-                / (F.col("mx") - F.col("mn") + F.lit(1e-9))
-                * 1024
-            ),
-        ),
-    )
-    w_in = (
-        Window.partitionBy("blk")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    b = b.withColumn("cum_in", F.coalesce(F.sum("c").over(w_in), F.lit(0)))
-    bt = b.groupBy("blk").agg(F.sum("c").alias("blk_c"))
-    w_blk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-    bt = bt.withColumn("off", F.coalesce(F.sum("blk_c").over(w_blk), F.lit(0)))
-    ranked = b.join(F.broadcast(bt.select("blk", "off")), "blk").select(
+    ranked = below_sums(vc, "value", below=F.col("c")).select(
         "value",
-        "c",
         # avg tie rank: exact multiple of 0.5
         (
-            (F.col("off") + F.col("cum_in")).cast("double")
+            F.col("below").cast("double")
             + (F.col("c").cast("double") + 1.0) / 2.0
         ).alias("avg_rank"),
     )
     grp = (
-        tv.join(ranked.select("value", "avg_rank"), "value")
+        tv.join(ranked, "value")
         .groupBy("event_type")
         .agg(
             F.sum("cg").alias("n_j"),
@@ -7348,9 +7306,9 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     h_raw = "(12.0 / (n * (n + 1.0)) * s_rr - 3.0 * (n + 1.0))"
     corr = "(1.0 - tie3 / cast(n * n * n - n as double))"
     # the tie correction divides by n^3 - n (zero at n = 1) and is
-    # itself zero when EVERY observation ties (round-9 degenerate-input
-    # probe): H emits NULL there, not an ANSI crash; the corr > 0 check
-    # nests inside the n-guard so n^3 - n never evaluates at n = 1
+    # itself zero when EVERY observation ties: H emits NULL there, not
+    # an ANSI crash; the corr > 0 check nests inside the n-guard so
+    # n^3 - n never evaluates at n = 1
     h_guard = f"CASE WHEN n >= 2 THEN CASE WHEN {corr} > 0 THEN"
     return agg.selectExpr(
         "cast(n as bigint) AS n_obs",
@@ -8440,7 +8398,7 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents; a user must observe BOTH periods, zero differences
     drop — the standard Wilcoxon discipline). |d| is an exact integer,
     so ranking uses the stats_auc_classifier idiom: DISTINCT-|d|
-    (pos, neg) counts, two-level 1024-block prefix sum for below-counts
+    (pos, neg) counts, ``below_sums`` block prefix sum for below-counts
     (never a global sort over users), tie-averaged rank sum kept
     DOUBLED-integer; tie-corrected variance and continuity-corrected z
     are the only float steps. NULL rule: NULL value is not an
@@ -8478,40 +8436,13 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("d") > 0).cast("bigint")).alias("p"),
             F.sum((F.col("d") < 0).cast("bigint")).alias("q"),
         )
-        # r12 (guide §2.4 duplicated subtrees): vc feeds rng and the
-        # block pass (which fans out again to the block-offset side) —
-        # unpinned, the events scan + user pairing + |d| groupBy ran 4x
-        # in one plan. Distinct-|d| grain is far below event grain: pin
-        # it; the fact is scanned ONCE.
+        # vc feeds the min/max range and the block pass (which fans out
+        # again to the block table), so unpinned the events scan + user
+        # pairing + |d| groupBy ran 4x in one plan. Distinct-|d| grain is
+        # far below event grain: pin it; the fact is scanned ONCE.
         .localCheckpoint(eager=False)
     )
-    rng = vc.agg(F.min("ad").alias("mn"), F.max("ad").alias("mx"))
-    b = vc.crossJoin(F.broadcast(rng)).withColumn(
-        "blk",
-        F.least(
-            F.lit(1023),
-            F.floor(
-                (F.col("ad") - F.col("mn")).cast("double")
-                / (F.col("mx") - F.col("mn") + F.lit(1)).cast("double")
-                * 1024
-            ),
-        ).cast("int"),
-    )
-    w_in = (
-        Window.partitionBy("blk")
-        .orderBy("ad")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    b = b.withColumn(
-        "cum_in",
-        F.coalesce(F.sum(F.col("p") + F.col("q")).over(w_in), F.lit(0)),
-    )
-    bt = b.groupBy("blk").agg(F.sum(F.col("p") + F.col("q")).alias("blk_n"))
-    w_blk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-    bt = bt.withColumn("off", F.coalesce(F.sum("blk_n").over(w_blk), F.lit(0)))
-    r = b.join(F.broadcast(bt.select("blk", "off")), "blk").withColumn(
-        "below", F.col("off") + F.col("cum_in")
-    )
+    r = below_sums(vc, "ad", below=F.col("p") + F.col("q"))
     agg = r.agg(
         F.sum(F.col("p") + F.col("q")).alias("n"),
         F.sum(
@@ -8526,12 +8457,12 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # var_w = n(n+1)(2n+1)/24 − tie/48 = (2n(n+1)(2n+1) − tie)/48 is a
     # PURE integer rational at ~1e9 magnitude (the 7th decimal sits at
-    # double-ulp scale) — the r6 driver flipped it through the f-string
-    # lint blind spot. Integer-exact HALF_UP via sp_rat (repo
-    # round-boundary rule); the raw double fed into z is ONE IEEE divide
-    # of identical integer operands, so z (÷, −, ×, sqrt over
-    # bit-identical operands) is emitted RAW — rounding is the only step
-    # where the engines' algorithms differ (functions/exact.py policy).
+    # double-ulp scale), so a double round can flip it. Integer-exact
+    # HALF_UP via sp_rat (repo round-boundary rule); the raw double fed
+    # into z is ONE IEEE divide of identical integer operands, so z (÷,
+    # −, ×, sqrt over bit-identical operands) is emitted RAW — rounding
+    # is the only step where the engines' algorithms differ
+    # (functions/exact.py policy).
     var_p = (
         "(2 * cast(n as decimal(38,0)) * (n + 1) * (2 * n + 1) - tie_term)"
     )
@@ -14380,8 +14311,8 @@ def stats_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     single worst gap; CvM keeps power when the difference is spread
     thin across the distribution instead of spiking once.
 
-    Distinct-value collapse first (duplicate explosion invisible), the
-    Mann-Whitney two-level block prefix sums give each group's
+    Distinct-value collapse first (duplicate explosion invisible),
+    ``below_sums`` (the two-level block prefix sum) gives each group's
     cumulative-before counts with NO global sort, and Anderson's
     rank form folds to exact integers: for group-1 members at value v,
     pooled−within midrank = cum_b_before + c_b/2, so
@@ -14404,9 +14335,9 @@ def stats_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("g1"),
         )
     )
-    # r12 (guide §2.4): vc fans out to rng and b, and b to bt and j —
-    # 4 orders scans unpinned. Distinct-cents grain is bounded, so pin;
-    # the fact is scanned once.
+    # vc fans out to the min/max range, the block pass and the block
+    # table: 4 orders scans unpinned. Distinct-cents grain is bounded,
+    # so pin; the fact is scanned once.
     vc = (
         o.groupBy("v")
         .agg(
@@ -14415,49 +14346,15 @@ def stats_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    rng = vc.agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-    b = vc.crossJoin(F.broadcast(rng)).withColumn(
-        "blk",
-        F.least(
-            F.lit(1023),
-            F.floor(
-                (F.col("v") - F.col("mn"))
-                / (F.col("mx") - F.col("mn") + F.lit(1e-9))
-                * 1024
-            ),
-        ),
-    )
-    w_in = (
-        Window.partitionBy("blk")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    b = (
-        b.withColumn("cab_in", F.coalesce(F.sum("ca").over(w_in), F.lit(0)))
-        .withColumn("cbb_in", F.coalesce(F.sum("cb").over(w_in), F.lit(0)))
-    )
-    bt = b.groupBy("blk").agg(
-        F.sum("ca").alias("blk_a"), F.sum("cb").alias("blk_b")
-    )
-    w_blk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-    bt = bt.withColumn(
-        "offa", F.coalesce(F.sum("blk_a").over(w_blk), F.lit(0))
-    ).withColumn("offb", F.coalesce(F.sum("blk_b").over(w_blk), F.lit(0)))
-    j = b.join(F.broadcast(bt.select("blk", "offa", "offb")), "blk")
+    j = below_sums(vc, "v", cab=F.col("ca"), cbb=F.col("cb"))
     agg = j.agg(
         F.sum("ca").alias("n_a"),
         F.sum("cb").alias("n_b"),
         F.sum(
-            F.expr(
-                "cast(ca as decimal(38,0))"
-                " * (2 * (offb + cbb_in) + cb) * (2 * (offb + cbb_in) + cb)"
-            )
+            F.expr("cast(ca as decimal(38,0)) * (2 * cbb + cb) * (2 * cbb + cb)")
         ).alias("sa"),
         F.sum(
-            F.expr(
-                "cast(cb as decimal(38,0))"
-                " * (2 * (offa + cab_in) + ca) * (2 * (offa + cab_in) + ca)"
-            )
+            F.expr("cast(cb as decimal(38,0)) * (2 * cab + ca) * (2 * cab + ca)")
         ).alias("sb"),
     )
     u4 = (
@@ -17543,7 +17440,7 @@ def stats_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a Bonferroni verdict at the K(K−1)/2 family size.
 
     Shares stats_kruskal_wallis's scale discipline verbatim: ONE
-    distinct-value collapse, two-level 1024-block prefix-sum ranks
+    distinct-value collapse, ``below_sums`` block prefix-sum ranks
     (exact 0.5-lattice), per-group sums on the K-row grid, and a
     K²-bounded pair self-join. Every operand is exact, so z is
     IEEE-deterministic and emitted RAW (functions/exact.py policy).
@@ -17554,43 +17451,22 @@ def stats_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull() & F.col("event_type").isNotNull())
         .select("event_type", "value")
     )
-    # r12 (guide §2.4 duplicated subtrees): tv feeds vc AND the
-    # per-group rank pass, and vc fans out to rng/b/ties — unpinned,
-    # the events scan ran up to 6x in one plan. tv is (event_type,
-    # value) grain — bounded by K types x the quantized value lattice
-    # at any corpus size — so pin it; the events fact is scanned ONCE
-    # and every downstream pass re-reads the pin.
+    # tv feeds vc AND the per-group rank pass, and vc fans out to the
+    # rank pass and the tie sum, so unpinned the events scan ran up to
+    # 6x in one plan. tv is (event_type, value) grain — bounded by K
+    # types x the quantized value lattice at any corpus size — so pin
+    # it; the events fact is scanned ONCE and every downstream pass
+    # re-reads the pin.
     tv = (
         ev.groupBy("event_type", "value")
         .agg(F.count(F.lit(1)).alias("cg"))
         .localCheckpoint(eager=False)
     )
     vc = tv.groupBy("value").agg(F.sum("cg").alias("c"))
-    rng = vc.agg(F.min("value").alias("mn"), F.max("value").alias("mx"))
-    b = vc.crossJoin(F.broadcast(rng)).withColumn(
-        "blk",
-        F.least(
-            F.lit(1023),
-            F.floor(
-                (F.col("value") - F.col("mn"))
-                / (F.col("mx") - F.col("mn") + F.lit(1e-9))
-                * 1024
-            ),
-        ),
-    )
-    w_in = (
-        Window.partitionBy("blk")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    b = b.withColumn("cum_in", F.coalesce(F.sum("c").over(w_in), F.lit(0)))
-    bt = b.groupBy("blk").agg(F.sum("c").alias("blk_c"))
-    w_blk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-    bt = bt.withColumn("off", F.coalesce(F.sum("blk_c").over(w_blk), F.lit(0)))
-    ranked = b.join(F.broadcast(bt.select("blk", "off")), "blk").select(
+    ranked = below_sums(vc, "value", below=F.col("c")).select(
         "value",
         (
-            (F.col("off") + F.col("cum_in")).cast("double")
+            F.col("below").cast("double")
             + (F.col("c").cast("double") + 1.0) / 2.0
         ).alias("avg_rank"),
     )
@@ -17628,7 +17504,7 @@ def stats_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = a.join(bb, F.col("type_a") < F.col("type_b")).crossJoin(glob)
     s2 = "(n * (n + 1.0) / 12.0 - tie3 / (12.0 * (n - 1.0)))"
     # S2 = 0 exactly when EVERY observation ties (tie3 == N3-N, the
-    # round-11 all-ties axis): z is undefined (NULL both engines, never
+    # all-ties sweep axis): z is undefined (NULL both engines, never
     # an ANSI crash) -- exact integer discriminant in decimal(38,0),
     # the stats_mann_whitney pattern
     zdef = "(tie3 < cast(n as decimal(38,0)) * n * n - n)"
@@ -17648,7 +17524,7 @@ def stats_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
         # k is data-dependent, so the threshold is a CASE over Python-
         # precomputed literals (in-engine ln() re-exposes JVM-vs-libm
         # last-ulp differences in crossing decisions — the SPRT-constant
-        # rationale; r7 ADVICE); in-engine ln only past k=16, documented.
+        # rationale); in-engine ln only past k=16, documented.
         f"abs({z}) > {_dunn_threshold_case()} AS notable",
     ).orderBy("type_a", "type_b")
 
@@ -18096,7 +17972,7 @@ def stats_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT integer (ties contribute c_i·c_j/2 each — hence the doubling,
     the stats_mann_whitney discipline applied to all K(K-1)/2 group
     pairs at once). One distinct-value collapse carrying K=5 per-group
-    counts, two-level 1024-block prefix sums per group (block windows
+    counts, ``below_sums`` block prefix sums per group (block windows
     partitioned, the offset window bounded at 1024 rows), a single
     aggregate. The normal z uses the tie-uncorrected moments (exact
     integer operands, sqrt the only float step — emitted RAW per the
@@ -18114,9 +17990,9 @@ def stats_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cast(round(o_totalprice * 100) as bigint) AS cents",
         )
     )
-    # r12 (guide §2.4): vc fans out to rng and b, and b to bt and j —
-    # 4 orders scans unpinned. Distinct-cents grain is bounded, so pin;
-    # the fact is scanned once.
+    # vc fans out to the min/max range, the block pass and the block
+    # table: 4 orders scans unpinned. Distinct-cents grain is bounded,
+    # so pin; the fact is scanned once.
     vc = (
         o.groupBy("cents")
         .agg(
@@ -18127,41 +18003,9 @@ def stats_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    rng = vc.agg(F.min("cents").alias("mn"), F.max("cents").alias("mx"))
-    b = vc.crossJoin(F.broadcast(rng)).withColumn(
-        "blk",
-        F.least(
-            F.lit(1023),
-            F.floor(
-                (F.col("cents") - F.col("mn"))
-                / (F.col("mx") - F.col("mn") + F.lit(1e-9))
-                * 1024
-            ),
-        ),
+    j = below_sums(
+        vc, "cents", **{f"below{k}": F.col(f"c{k}") for k in range(1, 6)}
     )
-    w_in = (
-        Window.partitionBy("blk")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    for k in range(1, 6):
-        b = b.withColumn(
-            f"cum_in{k}", F.coalesce(F.sum(f"c{k}").over(w_in), F.lit(0))
-        )
-    bt = b.groupBy("blk").agg(
-        *[F.sum(f"c{k}").alias(f"blk_c{k}") for k in range(1, 6)]
-    )
-    w_blk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-    for k in range(1, 6):
-        bt = bt.withColumn(
-            f"off{k}", F.coalesce(F.sum(f"blk_c{k}").over(w_blk), F.lit(0))
-        )
-    j = b.join(
-        F.broadcast(bt.select("blk", *[f"off{k}" for k in range(1, 6)])),
-        "blk",
-    )
-    for k in range(1, 6):
-        j = j.withColumn(f"below{k}", F.col(f"off{k}") + F.col(f"cum_in{k}"))
     pair_terms = " + ".join(
         f"(2 * c{jj} * below{ii} + c{ii} * c{jj})"
         for ii in range(1, 6)
@@ -18187,7 +18031,7 @@ def stats_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     # jt2 = 2·JT and mu2 = 4·μ (μ = (N²−Σn²)/4): JT−μ = (jt2 − mu2/2)/2
     # var72 = N²(2N+3) − Σnk²(2nk+3) is 0 exactly when ONE group holds
     # every observation — EXACT integer guard (greatest(nk) < N), never
-    # a float compare (round-10 single-row probe): NULL z, not a crash
+    # a float compare: NULL z, not a crash
     return agg.selectExpr(
         f"{n} AS n_total",
         "jt2",
@@ -19335,61 +19179,21 @@ def stats_ww_runs_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries (ca, cb) per value, so runs count = Σ within-value
     boundaries (+1 where both groups present) + Σ adjacent-value
     boundaries (last label of v ≠ first label of v′) + 1 — and
-    adjacency comes from a GLOBAL POSITION assembled from the
-    two-level 1024-block prefix machinery (block-partitioned
-    row_number + bounded block-offset table), then a pos = pos+1
-    self-equijoin. Exact integers into the raw-sqrt z. NULL values
-    are not observations (both engines).
+    adjacency comes from a GLOBAL POSITION (``below_sums`` of 1 over
+    the distinct values, plus 1), then a pos = pos+1 self-equijoin.
+    Exact integers into the raw-sqrt z. NULL values are not
+    observations (both engines).
     """
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(
-            F.col("event_type").isin("click", "purchase")
-            & F.col("value").isNotNull()
-        )
-        .select((F.col("event_type") == F.lit("click")).alias("is_a"), "value")
-    )
-    vc = (
-        ev.groupBy("value")
-        .agg(
-            F.sum(F.col("is_a").cast("bigint")).alias("ca"),
-            F.sum((~F.col("is_a")).cast("bigint")).alias("cb"),
-        )
-        # r12 (guide §2.4 duplicated subtrees): vc feeds rng, b and (via
-        # b's block totals) the offset side — unpinned, the events scan
-        # + value groupBy re-ran once per consumer. One row per DISTINCT
-        # value (the corpus quantizes value columns, so this is bounded
-        # at any scale) — pin it; the events fact is scanned ONCE.
-        .localCheckpoint(eager=False)
-    )
-    rng = vc.agg(F.min("value").alias("mn"), F.max("value").alias("mx"))
-    b = vc.crossJoin(F.broadcast(rng)).withColumn(
-        "blk",
-        F.least(
-            F.lit(1023),
-            F.floor(
-                (F.col("value") - F.col("mn"))
-                / (F.col("mx") - F.col("mn") + F.lit(1e-9))
-                * 1024
-            ),
-        ),
-    )
-    w_in = Window.partitionBy("blk").orderBy("value")
-    b = b.withColumn("rn_in", F.row_number().over(w_in))
-    bt = b.groupBy("blk").agg(F.count(F.lit(1)).alias("blk_n"))
-    w_blk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-    bt = bt.withColumn("off", F.coalesce(F.sum("blk_n").over(w_blk), F.lit(0)))
-    p = (
-        b.join(F.broadcast(bt.select("blk", "off")), "blk")
-        .selectExpr(
-            "off + rn_in AS pos",
-            "ca",
-            "cb",
-            # labels at the edges of this value's span (clicks first)
-            "CASE WHEN ca > 0 THEN 'a' ELSE 'b' END AS first_lbl",
-            "CASE WHEN cb > 0 THEN 'b' ELSE 'a' END AS last_lbl",
-            "CASE WHEN ca > 0 AND cb > 0 THEN 1 ELSE 0 END AS inner_bnd",
-        )
+    vc = _click_purchase_values(spark, sf_dir)
+    # position of each distinct value = values strictly below it + 1
+    p = below_sums(vc, "value", below=F.lit(1)).selectExpr(
+        "below + 1 AS pos",
+        "ca",
+        "cb",
+        # labels at the edges of this value's span (clicks first)
+        "CASE WHEN ca > 0 THEN 'a' ELSE 'b' END AS first_lbl",
+        "CASE WHEN cb > 0 THEN 'b' ELSE 'a' END AS last_lbl",
+        "CASE WHEN ca > 0 AND cb > 0 THEN 1 ELSE 0 END AS inner_bnd",
     )
     nxt = p.selectExpr("pos - 1 AS pos", "first_lbl AS nxt_first")
     j = p.join(nxt, "pos", "left")
@@ -19415,7 +19219,7 @@ def stats_ww_runs_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         " * (n_a + n_b - 1.0)))"
     )
     # z's variance is 0 with an empty group or n_a = n_b = 1 — exact
-    # integer guard (round-10 n=2 probe): NULL, not an ANSI crash
+    # integer guard: NULL, not an ANSI crash
     return agg.selectExpr(
         "n_a",
         "n_b",
@@ -19463,97 +19267,33 @@ def stats_ww_runs_two_sample_sql() -> str:
     """
 
 
-def _pooled_score_groups(
-    spark: SparkSession, sf_dir: str, pin: bool = True
-) -> DataFrame:
+def _pooled_score_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared base for the two-sample SCALE tests (stats_ansari_bradley,
-    stats_mood_scale): click vs purchase event values collapsed to
-    DISTINCT-VALUE group counts with the pooled strictly-below count —
-    the stats_mann_whitney two-level prefix-sum discipline (range-
-    bucketed block id from a 1-row min/max broadcast, within-block
-    running sum, <=1024-row block-offset window; no global sort, no
-    unpartitioned corpus window). Returns one row per distinct value:
-    ca, cb, c, below (pooled observations strictly below the value),
-    plus the per-sample cumulatives below_a / below_b
+    stats_mood_scale, stats_brunner_munzel, stats_anderson_darling_2s):
+    click vs purchase event values collapsed to DISTINCT-VALUE group
+    counts with the pooled strictly-below count from ``below_sums`` (no
+    global sort, no unpartitioned corpus window). Returns one row per
+    distinct value: ca, cb, c, below (pooled observations strictly
+    below the value), plus the per-sample cumulatives below_a / below_b
     (stats_brunner_munzel needs own-sample midranks; the extra two
     running sums ride the SAME block windows — no additional shuffle).
     NULL values are filtered in BOTH engines (rank scores are undefined
-    for NULL; the r4 mann-whitney lesson).
+    for NULL, and a NULL value has no block).
     """
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(
-            F.col("event_type").isin("click", "purchase")
-            & F.col("value").isNotNull()
-        )
-        .select((F.col("event_type") == F.lit("click")).alias("is_a"), "value")
-    )
-    vc = (
-        ev.groupBy("value")
-        .agg(
-            F.sum(F.col("is_a").cast("bigint")).alias("ca"),
-            F.sum((~F.col("is_a")).cast("bigint")).alias("cb"),
-        )
-        # r12 (guide §2.4 duplicated subtrees): vc feeds rng, b and (via
-        # b's block totals) the offset side — unpinned, the events scan
-        # + value groupBy re-ran once per consumer. One row per DISTINCT
-        # value (the corpus quantizes value columns, so this is bounded
-        # at any scale) — pin it; the events fact is scanned ONCE.
-        .localCheckpoint(eager=False)
-    )
-    rng = vc.agg(F.min("value").alias("mn"), F.max("value").alias("mx"))
-    b = vc.crossJoin(F.broadcast(rng)).withColumn(
-        "blk",
-        F.least(
-            F.lit(1023),
-            F.floor(
-                (F.col("value") - F.col("mn"))
-                / (F.col("mx") - F.col("mn") + F.lit(1e-9))
-                * 1024
-            ),
-        ),
-    )
-    w_in = (
-        Window.partitionBy("blk")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    b = (
-        b.withColumn("c", F.col("ca") + F.col("cb"))
-        .withColumn("cum_in", F.coalesce(F.sum("c").over(w_in), F.lit(0)))
-        .withColumn("cum_a", F.coalesce(F.sum("ca").over(w_in), F.lit(0)))
-        .withColumn("cum_b", F.coalesce(F.sum("cb").over(w_in), F.lit(0)))
-    )
-    bt = b.groupBy("blk").agg(
-        F.sum("c").alias("blk_c"),
-        F.sum("ca").alias("blk_a"),
-        F.sum("cb").alias("blk_b"),
-    )
-    w_blk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-    bt = (
-        bt.withColumn("off", F.coalesce(F.sum("blk_c").over(w_blk), F.lit(0)))
-        .withColumn("off_a", F.coalesce(F.sum("blk_a").over(w_blk), F.lit(0)))
-        .withColumn("off_b", F.coalesce(F.sum("blk_b").over(w_blk), F.lit(0)))
-    )
-    out = (
-        b.join(F.broadcast(bt.select("blk", "off", "off_a", "off_b")), "blk")
-        .select(
-            "ca",
-            "cb",
-            "c",
-            (F.col("off") + F.col("cum_in")).alias("below"),
-            (F.col("off_a") + F.col("cum_a")).alias("below_a"),
-            (F.col("off_b") + F.col("cum_b")).alias("below_b"),
-        )
-    )
-    # r12 (guide §2.4): every caller (ansari_bradley, mood_scale,
-    # brunner_munzel) consumes this table twice (a 1-row totals
-    # broadcast + the scored pass) — unpinned, the whole prefix-sum
+    vc = _click_purchase_values(spark, sf_dir)
+    out = below_sums(
+        vc.withColumn("c", F.col("ca") + F.col("cb")),
+        "value",
+        below=F.col("c"),
+        below_a=F.col("ca"),
+        below_b=F.col("cb"),
+    ).select("ca", "cb", "c", "below", "below_a", "below_b")
+    # every caller (ansari_bradley, mood_scale, brunner_munzel,
+    # anderson_darling_2s) consumes this table twice (a 1-row totals
+    # broadcast + the scored pass), so unpinned the whole prefix-sum
     # pipeline ran twice per query. Distinct-value grain, bounded by
-    # the quantized lattice: pin it. pin=False exposes the unpinned
-    # body so the plan-shape test can assert the block-window
-    # discipline that runs INSIDE the pin.
-    return out.localCheckpoint(eager=False) if pin else out
+    # the quantized lattice: pin it.
+    return out.localCheckpoint(eager=False)
 
 
 _POOLED_SCORE_GROUPS_SQL = """

@@ -25,6 +25,7 @@ from navigator_data_ingest_spark.functions.exact import (
     sp_rat6,
     sp_units,
 )
+from navigator_data_ingest_spark.functions.prefix import below_sums
 from navigator_data_ingest_spark.sources.tables import load_table, scatter
 
 PASSAGE_TOKENS = 16       # non-overlapping passage window (tokens)
@@ -2898,8 +2899,8 @@ def stats_auc_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: scores are exact integers, so the corpus collapses to
     DISTINCT-SCORE (pos_count, neg_count) rows in one shuffle
-    (duplicate explosion invisible); tie-averaged rank sums come from a
-    single ordered pass over the bounded distinct-score table; the
+    (duplicate explosion invisible); tie-averaged rank sums take their
+    below-counts from ``below_sums`` over the distinct-score table; the
     AUC ratio is the only float step. NULL rule: NULL lang is a
     negative in both engines (coalesce), empty-token docs carry no
     score (both engines drop them).
@@ -2915,43 +2916,17 @@ def stats_auc_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("is_pos").cast("bigint")).alias("p"),
             F.sum((~F.col("is_pos")).cast("bigint")).alias("q"),
         )
-        # r12 (guide §2.4 duplicated subtrees): vc feeds rng and the
-        # block pass (fanning out again to the block-offset side) —
-        # unpinned, the documents scan + tokenize + classifier scoring
-        # (the operator's whole per-row cost) ran 4x in one plan. Pin
-        # the distinct-score table; the heavy scoring runs ONCE.
+        # vc feeds the min/max range and the block pass (fanning out
+        # again to the block table), so unpinned the documents scan +
+        # tokenize + classifier scoring (the operator's whole per-row
+        # cost) ran 4x in one plan. Pin the distinct-score table; the
+        # heavy scoring runs ONCE.
         .localCheckpoint(eager=False)
     )
-    # two-level 1024-block prefix sum for the below-count (the
-    # Mann-Whitney discipline — the distinct-score table is NOT bounded,
-    # so no global window runs over it)
-    rng = vc.agg(F.min("score_sum").alias("mn"), F.max("score_sum").alias("mx"))
-    b = vc.crossJoin(F.broadcast(rng)).withColumn(
-        "blk",
-        F.least(
-            F.lit(1023),
-            F.floor(
-                (F.col("score_sum") - F.col("mn")).cast("double")
-                / (F.col("mx") - F.col("mn") + F.lit(1)).cast("double")
-                * 1024
-            ),
-        ).cast("int"),
-    )
-    w_in = (
-        Window.partitionBy("blk")
-        .orderBy("score_sum")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    b = b.withColumn(
-        "cum_in",
-        F.coalesce(F.sum(F.col("p") + F.col("q")).over(w_in), F.lit(0)),
-    )
-    bt = b.groupBy("blk").agg(F.sum(F.col("p") + F.col("q")).alias("blk_n"))
-    w_blk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-    bt = bt.withColumn("off", F.coalesce(F.sum("blk_n").over(w_blk), F.lit(0)))
-    r = b.join(F.broadcast(bt.select("blk", "off")), "blk").withColumn(
-        "below", F.col("off") + F.col("cum_in")
-    )
+    # below-count from the two-level block prefix sum: the
+    # distinct-score table is NOT bounded, so no global window runs
+    # over it
+    r = below_sums(vc, "score_sum", below=F.col("p") + F.col("q"))
     # tie-averaged rank sum over positives: Σ p * (below + (p+q+1)/2),
     # doubled to stay integer
     agg = r.agg(
@@ -2963,8 +2938,8 @@ def stats_auc_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # auc = (rr2 − n_pos(n_pos+1)) / (2·n_pos·n_neg) and
     # gini = 2·auc − 1 = (rr2 − n_pos(n_pos+1) − n_pos·n_neg)/(n_pos·n_neg)
-    # are PURE integer rationals — integer-exact HALF_UP (rendered-SQL
-    # lint, round 7).
+    # are PURE integer rationals — integer-exact HALF_UP (repo
+    # round-boundary rule).
     auc_p = "(rr2 - cast(n_pos as decimal(38,0)) * (n_pos + 1))"
     auc_q = "(2 * cast(n_pos as decimal(38,0)) * n_neg)"
     gini_p = (
@@ -3218,7 +3193,7 @@ def stats_youden_j(spark: SparkSession, sf_dir: str) -> DataFrame:
     step after stats_auc_classifier says the ranking is good at all.
 
     Same scale shape as the AUC op: DISTINCT-score collapse (duplicate
-    explosion invisible), two-level 1024-block prefix sums give the
+    explosion invisible), ``below_sums`` block prefix sums give the
     ≥-threshold counts WITHOUT a global sort, J becomes an exact
     integer in parts-per-million (q_above·P and p_above·Q are exact
     BIGINTs over a common denominator — no float compare), and the
@@ -3232,10 +3207,10 @@ def stats_youden_j(spark: SparkSession, sf_dir: str) -> DataFrame:
         "score_sum",
         (F.coalesce(F.col("lang"), F.lit("")) == "en").alias("is_pos"),
     )
-    # r12 (guide §2.4 duplicated subtrees): vc feeds rng, the block pass
-    # AND the totals broadcast — unpinned, the documents scan + tokenize
-    # + classifier scoring ran per copy (10 fact scans in the plan). Pin
-    # the distinct-score table; the heavy scoring runs ONCE.
+    # vc feeds the min/max range, the block pass AND the totals
+    # broadcast, so unpinned the documents scan + tokenize + classifier
+    # scoring ran per copy (10 fact scans in the plan). Pin the
+    # distinct-score table; the heavy scoring runs ONCE.
     vc = (
         sc.groupBy("score_sum")
         .agg(
@@ -3244,52 +3219,23 @@ def stats_youden_j(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    rng = vc.agg(F.min("score_sum").alias("mn"), F.max("score_sum").alias("mx"))
-    b = vc.crossJoin(F.broadcast(rng)).withColumn(
-        "blk",
-        F.least(
-            F.lit(1023),
-            F.floor(
-                (F.col("score_sum") - F.col("mn")).cast("double")
-                / (F.col("mx") - F.col("mn") + F.lit(1)).cast("double")
-                * 1024
-            ),
-        ).cast("int"),
-    )
-    w_in = (
-        Window.partitionBy("blk")
-        .orderBy("score_sum")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    b = (
-        b.withColumn("cp_in", F.coalesce(F.sum("p").over(w_in), F.lit(0)))
-        .withColumn("cq_in", F.coalesce(F.sum("q").over(w_in), F.lit(0)))
-    )
-    bt = b.groupBy("blk").agg(
-        F.sum("p").alias("bp"), F.sum("q").alias("bq")
-    )
-    w_blk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-    bt = (
-        bt.withColumn("op", F.coalesce(F.sum("bp").over(w_blk), F.lit(0)))
-        .withColumn("oq", F.coalesce(F.sum("bq").over(w_blk), F.lit(0)))
-    )
     tot = F.broadcast(vc.agg(F.sum("p").alias("tp"), F.sum("q").alias("tq")))
     r = (
-        b.join(F.broadcast(bt.select("blk", "op", "oq")), "blk")
+        below_sums(vc, "score_sum", p_below=F.col("p"), q_below=F.col("q"))
         .crossJoin(tot)
         .selectExpr(
             "score_sum",
             "tp",
             "tq",
             # >= threshold counts: everything not strictly below
-            "(tp - (op + cp_in)) AS p_above",
-            "(tq - (oq + cq_in)) AS q_above",
+            "(tp - p_below) AS p_above",
+            "(tq - q_below) AS q_above",
         )
         # J over the common denominator tp*tq stays an exact BIGINT
         .withColumn(
             "j_num", F.expr("p_above * tq - q_above * tp")
         )
-        # r feeds the argmax broadcast AND the witness re-filter (§2.4);
+        # r feeds the argmax broadcast AND the witness re-filter;
         # distinct-score grain — pin it so the block pipeline runs once
         .localCheckpoint(eager=False)
     )
@@ -3522,9 +3468,9 @@ def stats_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats_auc_classifier's single number.
 
     SCALE SHAPE (no global per-row sort): the corpus collapses to
-    DISTINCT-SCORE counts, the cumulative-below term uses the
-    Mann-Whitney 1024-block two-level prefix, and each score group maps
-    to decile ceil(10·(N−below)/N) — cutoff semantics (ties stay
+    DISTINCT-SCORE counts, the cumulative-below term comes from
+    ``below_sums`` (the two-level block prefix), and each score group
+    maps to decile ceil(10·(N−below)/N) — cutoff semantics (ties stay
     together; a per-row ntile would single-task the corpus, measured
     3.5x at the 100x probe before this rewrite). Every output is a
     PURE integer rational — integer-exact HALF_UP (round-boundary
@@ -3545,34 +3491,12 @@ def stats_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("k"))
         .localCheckpoint(eager=False)
     )
-    rng = vc.agg(F.min("score_sum").alias("mn"), F.max("score_sum").alias("mx"))
-    b = vc.crossJoin(F.broadcast(rng)).withColumn(
-        "blk",
-        F.least(
-            F.lit(1023),
-            F.floor(
-                (F.col("score_sum") - F.col("mn"))
-                / (F.col("mx") - F.col("mn") + F.lit(1e-9))
-                * 1024
-            ),
-        ),
-    )
-    w_in = (
-        Window.partitionBy("blk")
-        .orderBy("score_sum")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    b = b.withColumn("below_in", F.coalesce(F.sum("n").over(w_in), F.lit(0)))
-    bt = b.groupBy("blk").agg(F.sum("n").alias("blk_n"))
-    w_blk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-    bt = bt.withColumn("off", F.coalesce(F.sum("blk_n").over(w_blk), F.lit(0)))
     tot = F.broadcast(
         vc.agg(F.sum("n").alias("tot_n"), F.sum("k").alias("tot_k"))
     )
     j = (
-        b.join(F.broadcast(bt.select("blk", "off")), "blk")
+        below_sums(vc, "score_sum", below=F.col("n"))
         .crossJoin(tot)
-        .withColumn("below", F.col("off") + F.col("below_in"))
         .withColumn(
             "decile",
             F.expr(

@@ -1080,113 +1080,6 @@ HARMONIC_SEED_TARGET = 8
 HARMONIC_SEED_MOD_MIN = 100
 
 
-def graph_harmonic_centrality_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-seed harmonic centrality within 3 hops on the part–supplier
-    bipartite graph: Σ 1/d(seed, v) over nodes reached at hop 1..3 —
-    the distance-weighted reach score (robust to disconnection, unlike
-    closeness) beside graph_pagerank's flow centrality and
-    graph_shortest_paths' aggregate hop census.
-
-    FRONTIER form — superseded as the registered implementation by the
-    hop-bitmap rewrite (``graph_harmonic_centrality``, VERDICT r8 #4:
-    5.3 s vs 8.9 s median at sf0.1 on the round-9 host) and kept as its
-    independent parity twin (tests/test_api.py::
-    test_harmonic_bitmap_matches_frontier).
-
-    Per-seed frontier expansion keyed by (seed, node) — 3 UNROLLED
-    rounds of frontier⋈edges equijoin + anti-join against the visited
-    set, fully pipelined (no per-round checkpoint — the unrolled plan
-    stays shallow); the seed stripe modulus is DERIVED from the
-    supplier count in-plan (max(100, n_supp // 8)), so the seed set —
-    and with it (seed × reach) state — stays bounded at any corpus
-    size instead of growing with the supplier dimension. The harmonic
-    sum over the 1..3 hop grid is (6·n₁ + 3·n₂ + 2·n₃)/6 — a PURE
-    integer rational, integer-exact HALF_UP (repo round-boundary
-    rule). NULL rule: lines missing either key form no edge (both
-    engines).
-    """
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_partkey").isNotNull() & F.col("l_suppkey").isNotNull()
-    )
-    edges = (
-        li.select(
-            F.concat(F.lit("p:"), F.col("l_partkey").cast("string")).alias("p"),
-            F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    und = edges.select(F.col("p").alias("src"), F.col("s").alias("dst")).unionAll(
-        edges.select(F.col("s").alias("src"), F.col("p").alias("dst"))
-    )
-    supp = li.select(F.col("l_suppkey").alias("k")).distinct()
-    smod = F.broadcast(
-        supp.groupBy()
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .select(
-            F.greatest(
-                F.lit(HARMONIC_SEED_MOD_MIN).cast("bigint"),
-                (F.col("_n") / F.lit(HARMONIC_SEED_TARGET)).cast("bigint"),
-            ).alias("_smod")
-        )
-    )
-    # the seed subtree (distinct-supplier scan + 1-row modulus agg) is
-    # referenced by every unrolled BFS round — checkpoint the ≤TARGET-row
-    # result so re-evaluations don't rescan lineitem
-    seeds = (
-        supp.crossJoin(smod)
-        .where(F.col("k") % F.col("_smod") == 1)
-        .select(F.concat(F.lit("s:"), F.col("k").cast("string")).alias("seed"))
-        .localCheckpoint(eager=False)
-    )
-    dist = seeds.select(
-        "seed", F.col("seed").alias("node"), F.lit(0).alias("hop")
-    )
-    frontier = dist
-    # NO per-round localCheckpoint: with 3 UNROLLED rounds the lineage
-    # is shallow and Catalyst pipelines the whole expansion — measured
-    # 9.5-11.5 s -> 7.9 s at sf0.1 vs checkpointed rounds (the
-    # checkpoint discipline pays off only for the iterative/pagerank
-    # shapes whose plans would otherwise grow per iteration)
-    for h in range(1, HARMONIC_HOPS + 1):
-        nbr = (
-            frontier.join(und, frontier.node == und.src)
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-        )
-        new = (
-            nbr.join(
-                dist.select(
-                    F.col("seed").alias("_s"), F.col("node").alias("_v")
-                ),
-                (nbr.seed == F.col("_s")) & (nbr.node == F.col("_v")),
-                "left_anti",
-            )
-            .select("seed", "node", F.lit(h).alias("hop"))
-        )
-        dist = dist.unionAll(new)
-        frontier = new
-    grid = (
-        dist.where(F.col("hop") > 0)
-        .groupBy("seed")
-        .agg(
-            F.sum((F.col("hop") == 1).cast("bigint")).alias("n1"),
-            F.sum((F.col("hop") == 2).cast("bigint")).alias("n2"),
-            F.sum((F.col("hop") == 3).cast("bigint")).alias("n3"),
-        )
-    )
-    return (
-        grid.selectExpr(
-            "seed",
-            "n1 AS n_hop1",
-            "n2 AS n_hop2",
-            "n3 AS n_hop3",
-            f"{sp_rat6('6 * n1 + 3 * n2 + 2 * n3', '6')} AS harmonic_3hop",
-        )
-        .orderBy("seed")
-    )
-
-
 def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hop-bitmap rewrite of the per-seed BFS (VERDICT r8 #4): instead
     of (seed, node) frontier rows — whose expansion join carries a

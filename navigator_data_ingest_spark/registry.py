@@ -70,18 +70,16 @@ _CHANGED: dict[str, int] = {
         "q_orders_abc_class", "q_orders_skyline", "q_sql_exists_in",
         "sample_temperature", "sim_search_bruteforce", "sim_search_ivf",
         "sim_search_lsh", "split_dedup_aware", "split_temporal",
-        "src_stream_events", "stats_ansari_bradley", "stats_auc_classifier",
+        "src_stream_events", "stats_ansari_bradley",
         "stats_brunner_munzel", "stats_chi_square", "stats_cochran_q",
         "stats_cox_stuart", "stats_cramers_v", "stats_friedman", "stats_g_test",
         "stats_gini_exact", "stats_grubbs", "stats_hodges_lehmann",
-        "stats_jonckheere_terpstra", "stats_kendall_w", "stats_kruskal_wallis",
+        "stats_kendall_w",
         "stats_levene", "stats_lognormal_fit", "stats_mann_kendall",
-        "stats_mann_whitney", "stats_mann_whitney_u", "stats_mann_whitney_z",
         "stats_mood_scale", "stats_mutual_information", "stats_nelson_aalen",
         "stats_page_trend", "stats_pettitt_changepoint", "stats_price_index",
         "stats_quade", "stats_seasonal_mann_kendall", "stats_somers_d",
         "stats_survival_km", "stats_theil_sen", "stats_weighted_kappa",
-        "stats_wilcoxon_signed_rank", "stats_ww_runs_two_sample",
         "stream_dedup_wm", "stream_ingest", "stream_unique_users_windowed",
         "text_bm25", "text_conditional_entropy", "text_heaps_law",
         "text_jsd_drift", "text_rake_keywords", "text_tfidf",
@@ -90,6 +88,14 @@ _CHANGED: dict[str, int] = {
     "ingest_download_fetch": 14,
     "ingest_fetch_retry": 14,
     "ingest_validate_url": 14,
+    # rank and ECDF statistics moved onto functions.prefix.below_sums
+    **dict.fromkeys((
+        "stats_auc_classifier", "stats_cramer_von_mises", "stats_dunn_posthoc",
+        "stats_gains_table", "stats_jonckheere_terpstra",
+        "stats_kruskal_wallis", "stats_mann_whitney", "stats_mann_whitney_u",
+        "stats_mann_whitney_z", "stats_wilcoxon_signed_rank",
+        "stats_ww_runs_two_sample",
+    ), 14),
 }
 
 

@@ -210,35 +210,17 @@ def test_compression_ratio_matches_zlib(spark):
         assert r["is_low_entropy"] == (ratio < T.LOW_ENTROPY_RATIO)
 
 
-def test_harmonic_bitmap_matches_frontier(spark):
-    """The registered hop-bitmap harmonic centrality (VERDICT r8 #4
-    rewrite: cumulative per-node seed masks, rounds as bit_or
-    aggregations) must reproduce the superseded frontier/anti-join form
-    exactly — same seeds, hop census and harmonic score."""
-    from navigator_data_ingest_spark.operators.graph import (
-        graph_harmonic_centrality,
-        graph_harmonic_centrality_frontier,
-    )
-    from tests.conftest import SF_CORRECT
-
-    key = lambda rows: [  # noqa: E731
-        (r.seed, r.n_hop1, r.n_hop2, r.n_hop3, r.harmonic_3hop) for r in rows
-    ]
-    new = key(graph_harmonic_centrality(spark, SF_CORRECT).collect())
-    old = key(graph_harmonic_centrality_frontier(spark, SF_CORRECT).collect())
-    assert new == old and len(new) >= 1
-
-
 def test_harmonic_bitmap_sparse_seed_keys(spark, tmp_path):
     """Seed bit indices derive from a RANK over the bounded seed
-    stripe, not from the raw key value (r9 ADVICE): with SPARSE
-    supplier keys the old (k-1)/smod quotient exceeded 63, where
-    shiftleft silently wraps mod 64 (seed aliasing) and bit_get
-    raises. Keys 1 / 101 / 6401 are all seeds under smod=100; the
-    raw-key quotients 0 / 1 / 64 would alias seed 6401 onto seed 1."""
+    stripe, not from the raw key value: with SPARSE supplier keys a
+    (k-1)/smod quotient exceeds 63, where shiftleft silently wraps mod
+    64 (seed aliasing) and bit_get raises. Keys 1 / 101 / 6401 are all
+    seeds under smod=100; the raw-key quotients 0 / 1 / 64 would alias
+    seed 6401 onto seed 1. The graph is the chain p10 - s1 - p11 -
+    s101 - p12 - s6401 - p13 - s7, so each seed's hop census can be
+    read off by hand."""
     from navigator_data_ingest_spark.operators.graph import (
         graph_harmonic_centrality,
-        graph_harmonic_centrality_frontier,
     )
 
     rows = [
@@ -253,7 +235,10 @@ def test_harmonic_bitmap_sparse_seed_keys(spark, tmp_path):
     key = lambda rows: [  # noqa: E731
         (r.seed, r.n_hop1, r.n_hop2, r.n_hop3, r.harmonic_3hop) for r in rows
     ]
-    new = key(graph_harmonic_centrality(spark, str(tmp_path)).collect())
-    old = key(graph_harmonic_centrality_frontier(spark, str(tmp_path)).collect())
-    assert new == old
-    assert [r[0] for r in new] == ["s:1", "s:101", "s:6401"]
+    got = key(graph_harmonic_centrality(spark, str(tmp_path)).collect())
+    assert got == [
+        ("s:1", 2, 1, 1, 2.833333),
+        ("s:101", 2, 2, 2, 3.666667),
+        ("s:6401", 2, 2, 1, 3.333333),
+    ]
+    assert [r[0] for r in got] == ["s:1", "s:101", "s:6401"]

@@ -996,47 +996,83 @@ def test_mm_shard_manifest_depth3_matches_global_scan(spark, monkeypatch):
     assert base == small
 
 
-@pytest.mark.parametrize(
-    "name",
-    ["stats_ansari_bradley", "stats_mood_scale", "stats_brunner_munzel"],
-)
-def test_scale_tests_use_block_partitioned_prefix_sums(spark, name):
-    """The pooled-rank scale tests must keep every corpus-derived window
-    partitioned by the range-bucket block id (the mann-whitney two-level
-    discipline): the only unpartitioned window allowed is the <=1024-row
-    block-offset table.
+def test_below_sums_windows_are_block_partitioned(spark):
+    """``below_sums`` over the pooled distinct-value table keeps every
+    corpus-derived window partitioned by the range-bucket block id: the
+    only unpartitioned window is the exclusive running sum over the
+    <=1024-row block table, and the block offsets are broadcast back.
+    Callers that pin the result (_pooled_score_groups) show only the
+    checkpoint scan in their own plans, so the shape is asserted here
+    on the helper's plan."""
+    import re
 
-    Since round 12 the shared _pooled_score_groups table is PINNED (its
-    two consumers re-ran the whole pipeline otherwise), so the final
-    query plan shows only the checkpoint scan; the discipline is
-    asserted on the unpinned helper body — the exact computation that
-    executes inside the pin — plus a structural check that every caller
-    still routes through the helper."""
+    from pyspark.sql import functions as F
+
+    from navigator_data_ingest_spark.functions.prefix import below_sums
+    from navigator_data_ingest_spark.operators.analytics import (
+        _click_purchase_values,
+    )
+    from navigator_data_ingest_spark.plans.audit import (
+        unpartitioned_window_count,
+    )
+
+    df = below_sums(
+        _click_purchase_values(spark, SF_CORRECT),
+        "value",
+        below=F.col("ca") + F.col("cb"),
+        below_a=F.col("ca"),
+    )
+    plan = formatted_plan(df)
+    assert "windowspecdefinition(blk" in plan, (
+        "distinct-value cumsum lost its block partition"
+    )
+    assert plan_audit(df).broadcast_joins >= 1, "block offsets not broadcast"
+    assert unpartitioned_window_count(df) == 1
+    # the one global window orders by blk alone: it runs on the block table
+    block_table_windows = re.findall(
+        r"^Arguments: .*\], \[blk#\d+L? ASC NULLS FIRST\]$", plan, re.M
+    )
+    assert len(block_table_windows) == 1, plan
+
+
+# key -> the function that must call below_sums for it
+_BELOW_SUMS_KEYS = {
+    "stats_mann_whitney": "stats_mann_whitney",
+    "stats_mann_whitney_u": "stats_mann_whitney",
+    "stats_mann_whitney_z": "stats_mann_whitney",
+    "stats_kruskal_wallis": "stats_kruskal_wallis",
+    "stats_dunn_posthoc": "stats_dunn_posthoc",
+    "stats_wilcoxon_signed_rank": "stats_wilcoxon_signed_rank",
+    "stats_cramer_von_mises": "stats_cramer_von_mises",
+    "stats_jonckheere_terpstra": "stats_jonckheere_terpstra",
+    "stats_ww_runs_two_sample": "stats_ww_runs_two_sample",
+    "stats_ansari_bradley": "_pooled_score_groups",
+    "stats_mood_scale": "_pooled_score_groups",
+    "stats_brunner_munzel": "_pooled_score_groups",
+    "stats_anderson_darling_2s": "_pooled_score_groups",
+    "stats_auc_classifier": "stats_auc_classifier",
+    "stats_youden_j": "stats_youden_j",
+    "stats_gains_table": "stats_gains_table",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BELOW_SUMS_KEYS))
+def test_scale_tests_use_block_partitioned_prefix_sums(name):
+    """Every rank and ECDF key that needs an exclusive running sum over
+    distinct values routes through ``below_sums`` (whose plan shape
+    test_below_sums_windows_are_block_partitioned pins), directly or
+    through the helper that builds its table."""
     import inspect
 
-    from navigator_data_ingest_spark.operators.analytics import (
-        _pooled_score_groups,
-    )
-
-    inner = _pooled_score_groups(spark, SF_CORRECT, pin=False)
-    plan = formatted_plan(inner)
-    assert "windowspecdefinition(blk" in plan, (
-        f"{name}: distinct-value cumsum lost its block partition"
-    )
-    # the block-offset table must broadcast inside the helper body; the
-    # per-test totals broadcast now sits ABOVE the pin in each caller
-    # (it aggregates the pinned table, so it no longer appears here)
-    assert plan_audit(inner).broadcast_joins >= 1, (
-        f"{name}: block offsets not broadcast"
-    )
-    src = inspect.getsource(
-        __import__(
-            "navigator_data_ingest_spark.operators.analytics",
-            fromlist=[name],
-        ).__dict__[name]
-    )
-    assert "_pooled_score_groups(" in src, (
-        f"{name}: no longer built on the shared prefix-sum helper"
+    fn = _Q[name]
+    via = _BELOW_SUMS_KEYS[name]
+    if fn.__name__ != via:
+        assert f"{via}(" in inspect.getsource(fn), (
+            f"{name}: no longer built on {via}"
+        )
+    via_src = inspect.getsource(getattr(inspect.getmodule(fn), via))
+    assert "below_sums(" in via_src, (
+        f"{name}: {via} no longer uses the shared prefix-sum helper"
     )
 
 
