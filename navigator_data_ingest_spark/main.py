@@ -14,12 +14,19 @@ returns are observed on the writes themselves (``df.observe``), so no
 count job re-reads the input. The archive plan is a rename set and is
 written unsorted: its row order is unspecified.
 
-The three writes are independent: none reads another's output. A
+The three outputs are independent: none reads another's output. A
 batch's executor work is small next to Spark's fixed per-job driver
-cost, so writes run one after another would leave most cores idle while
-the driver plans, schedules and commits each job. They run concurrently
-on one thread pool instead, as the reference runs its per-document work
-on a driver-side pool. A write added later goes through the same pool.
+cost: building a DataFrame is py4j round trips and analysis, and each
+write is driver-side planning, scheduling and commit. Done one after
+another, this leaves most cores idle. So the three outputs are built
+concurrently on one thread pool, and once every build has finished the
+three writes run concurrently on the same pool, as the reference runs
+its per-document work on a driver-side pool. An output added later goes
+through the same pool.
+
+Each updated document's actions are ordered inside its own update
+array (``operators.ingest.order_update_actions``), so the archive plan
+is one narrow stage: scan, generate, write, with no shuffle.
 
 Run:
     python -m navigator_data_ingest_spark.main \
@@ -30,6 +37,7 @@ from __future__ import annotations
 
 import argparse
 import os
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -44,8 +52,12 @@ from navigator_data_ingest_spark.operators.ingest import (
     results_report,
     url_error_col,
 )
+# run_batch reads each updated document's Update array whole. The
+# reader keeps the name ``read_pipeline_updates`` here because
+# perfbench/driver.py traces run_batch's callees by their names in this
+# module.
 from navigator_data_ingest_spark.sources.pipeline_updates import (
-    read_pipeline_updates,
+    read_pipeline_batch as read_pipeline_updates,
 )
 from navigator_data_ingest_spark.sources.sinks import write_parser_input, write_report
 
@@ -56,61 +68,69 @@ def build_parser_input(new_docs: DataFrame) -> DataFrame:
     return parser_input_records(new_docs, F.col("type"))
 
 
-def build_report(new_docs: DataFrame, updates: DataFrame) -> DataFrame:
+def build_archive_plan(updated: DataFrame) -> DataFrame:
+    """(document_id, updates) rows -> the archive rename plan of the
+    actions that run (updated_document_actions.py)."""
+    return expand_archive_paths(order_update_actions(map_update_actions(updated)))
+
+
+def build_report(new_docs: DataFrame, updated: DataFrame) -> DataFrame:
     """IngestResult rollup (main.py:186-232): counts per (type, error).
 
     A batch carries no fetched bytes, so a new document's only error is
-    the ValueError of an invalid source_url.
+    the ValueError of an invalid source_url. An updated document counts
+    once if it has at least one update, in however many files of a glob.
     """
     return results_report(
         new_docs.select(url_error_col().alias("error")),
-        updates.select("document_id").distinct(),
+        updated.where(F.size("updates") > 0).select("document_id").distinct(),
     )
 
 
 def run_batch(spark: SparkSession, updates_file: str, output_dir: str) -> dict:
     """Execute one ingest batch; returns the row count of each output.
 
-    The outputs are built in order on the calling thread, then the three
-    writes run concurrently, each on a pool thread that inherits the
-    caller's job group, scheduler pool and job description. The batch
-    returns, or raises the first failure in submission order, only once
-    every write has finished. The counts are the observed row counts of
-    the writes, so each output runs once. The archive plan's row order
-    is unspecified.
+    The three outputs are built concurrently on a thread pool. Once
+    every build has finished, the three writes run concurrently on the
+    same pool. Each pool thread inherits the caller's job group,
+    scheduler pool and job description. The batch returns, or raises
+    the first failure in submission order, only once every task it
+    started has finished; a failed build starts no write. The counts are
+    the observed row counts of the writes, so each output runs once. The
+    archive plan's row order is unspecified.
     """
-    new_docs, updates = read_pipeline_updates(spark, updates_file)
-    observed: dict[str, Observation] = {}
-
-    def counted(key: str, df: DataFrame) -> DataFrame:
-        # an Observation can only be used once: fresh ones for every batch
-        observed[key] = Observation()
-        return df.observe(observed[key], F.count(F.lit(1)).alias("rows"))
-
-    parser_input = counted("parser_input", build_parser_input(new_docs))
-    archive_plan = counted(
-        "archive_plan",
-        expand_archive_paths(order_update_actions(map_update_actions(updates))),
-    )
-    report = counted("report", build_report(new_docs, updates))
+    new_docs, updated = read_pipeline_updates(spark, updates_file)
 
     def write_archive_plan(df: DataFrame, path: str) -> None:
         df.write.mode("overwrite").parquet(path)
 
-    writes = [
-        (write_parser_input, parser_input, "parser_input"),
-        (write_archive_plan, archive_plan, "archive_plan"),
-        (write_report, report, "report"),
+    # name, build, its inputs, write
+    outputs = [
+        ("parser_input", build_parser_input, (new_docs,), write_parser_input),
+        ("archive_plan", build_archive_plan, (updated,), write_archive_plan),
+        ("report", build_report, (new_docs, updated), write_report),
     ]
+    # an Observation can only be used once: fresh ones for every batch
+    observed = {name: Observation() for name, *_ in outputs}
+
+    def counted(name: str, build: Callable[..., DataFrame], *inputs: DataFrame) -> DataFrame:
+        return build(*inputs).observe(observed[name], F.count(F.lit(1)).alias("rows"))
+
     inherit = inheritable_thread_target(spark)
-    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        futures = [
+    with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
+        builds = [
+            pool.submit(inherit(counted), name, build, *inputs)
+            for name, build, inputs, _ in outputs
+        ]
+        # a failed build raises here; the pool's exit waits for the others
+        dfs = [future.result() for future in builds]
+        writes = [
             pool.submit(inherit(write), df, os.path.join(output_dir, name))
-            for write, df, name in writes
+            for (name, _, _, write), df in zip(outputs, dfs)
         ]
     # the pool's exit waited for every write, so none is still running
     # when the first failure is raised here
-    for future in futures:
+    for future in writes:
         future.result()
     return {k: obs.get["rows"] for k, obs in observed.items()}
 

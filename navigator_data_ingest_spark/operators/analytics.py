@@ -7249,15 +7249,17 @@ def q_sql_identifier_sql() -> str:
 # size / inter-arrival profile / error-safe arithmetic surface
 # --------------------------------------------------------------------------
 
-def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kruskal-Wallis H: do event values differ across ALL event types?
-    The K-group generalization of stats_mann_whitney, sharing its scale
-    discipline exactly: the corpus collapses to DISTINCT-VALUE counts in
-    one shuffle (duplicate explosion invisible), the cumulative
-    below-count comes from ``below_sums`` (the two-level block prefix
-    sum), and the per-group rank sums R_j are exact multiples of 0.5
-    (avg tie rank = below + (c+1)/2), so H's inputs are bit-identical
-    in both engines; tie correction from exact integer Σ(c³−c).
+def _event_type_rank_sums(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Per-event-type rank sums of the event values, for the K-group
+    rank tests: (event_type, n_j, r_j) with r_j the sum of the group's
+    average tie ranks, and a 1-row ``tie3`` = Σ(c³−c) over the
+    distinct-value counts c.
+
+    The corpus collapses to DISTINCT-VALUE counts in one shuffle
+    (duplicate explosion invisible) and the cumulative below-count comes
+    from ``below_sums`` (the two-level block prefix sum). Each r_j is an
+    exact multiple of 0.5 (avg tie rank = below + (c+1)/2), so the
+    tests' inputs are bit-identical in both engines.
 
     NULL rule: rank tests are undefined for NULL observations — NULL
     value or NULL type rows are dropped in BOTH engines.
@@ -7298,6 +7300,17 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties = vc.agg(
         F.sum(F.col("c") * F.col("c") * F.col("c") - F.col("c")).alias("tie3")
     )
+    return grp, ties
+
+
+def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kruskal-Wallis H: do event values differ across ALL event types?
+    The K-group generalization of stats_mann_whitney, sharing its scale
+    discipline: the per-group rank sums R_j and the exact integer tie
+    sum Σ(c³−c) come from ``_event_type_rank_sums``, so H's inputs are
+    bit-identical in both engines.
+    """
+    grp, ties = _event_type_rank_sums(spark, sf_dir)
     agg = grp.agg(
         F.sum("n_j").alias("n"),
         F.count(F.lit(1)).alias("k"),
@@ -17439,57 +17452,17 @@ def stats_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-corrected rank variance S² = N(N+1)/12 − Σ(c³−c)/(12(N−1)),
     with a Bonferroni verdict at the K(K−1)/2 family size.
 
-    Shares stats_kruskal_wallis's scale discipline verbatim: ONE
-    distinct-value collapse, ``below_sums`` block prefix-sum ranks
-    (exact 0.5-lattice), per-group sums on the K-row grid, and a
-    K²-bounded pair self-join. Every operand is exact, so z is
-    IEEE-deterministic and emitted RAW (functions/exact.py policy).
-    NULL value/type rows are not observations (both engines).
+    Shares stats_kruskal_wallis's per-group rank sums
+    (``_event_type_rank_sums``: exact 0.5-lattice ranks on the K-row
+    grid) and adds a K²-bounded pair self-join. Every operand is exact,
+    so z is IEEE-deterministic and emitted RAW (functions/exact.py
+    policy). NULL value/type rows are not observations (both engines).
     """
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull() & F.col("event_type").isNotNull())
-        .select("event_type", "value")
-    )
-    # tv feeds vc AND the per-group rank pass, and vc fans out to the
-    # rank pass and the tie sum, so unpinned the events scan ran up to
-    # 6x in one plan. tv is (event_type, value) grain — bounded by K
-    # types x the quantized value lattice at any corpus size — so pin
-    # it; the events fact is scanned ONCE and every downstream pass
-    # re-reads the pin.
-    tv = (
-        ev.groupBy("event_type", "value")
-        .agg(F.count(F.lit(1)).alias("cg"))
-        .localCheckpoint(eager=False)
-    )
-    vc = tv.groupBy("value").agg(F.sum("cg").alias("c"))
-    ranked = below_sums(vc, "value", below=F.col("c")).select(
-        "value",
-        (
-            F.col("below").cast("double")
-            + (F.col("c").cast("double") + 1.0) / 2.0
-        ).alias("avg_rank"),
-    )
-    grp = (
-        tv.join(ranked, "value")
-        .groupBy("event_type")
-        .agg(
-            F.sum("cg").alias("n_j"),
-            F.sum(F.col("cg").cast("double") * F.col("avg_rank")).alias("r_j"),
-        )
-    )
+    grp, ties = _event_type_rank_sums(spark, sf_dir)
     glob = F.broadcast(
         grp.agg(
             F.sum("n_j").alias("n"), F.count(F.lit(1)).alias("k")
-        ).crossJoin(
-            F.broadcast(
-                vc.agg(
-                    F.sum(
-                        F.col("c") * F.col("c") * F.col("c") - F.col("c")
-                    ).alias("tie3")
-                )
-            )
-        )
+        ).crossJoin(F.broadcast(ties))
     )
     a = grp.select(
         F.col("event_type").alias("type_a"),

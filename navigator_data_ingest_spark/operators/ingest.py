@@ -180,23 +180,23 @@ new_docs AS (
 
 
 def synthetic_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic (document_id, seq, update_type) rows: 1-3 per doc.
-    One selectExpr pass (see synthetic_new_documents on py4j depth).
+    """Deterministic (doc_id, document_id, updates) rows, one per document:
+    ``updates`` holds 1-3 ``struct(type)`` Updates, the one at 1-based
+    position ``seq`` of type ``UPDATE_TYPES[(doc_id + seq) % 7]``. A null
+    doc_id has a null ``updates``. One selectExpr pass (see
+    synthetic_new_documents on py4j depth).
 
-    Not scattered: every consumer re-distributes almost immediately (the
-    action window's document_id exchange or a presentation orderBy), so
-    a repartition here would be an extra exchange in all of them."""
+    Not scattered: every consumer re-distributes almost immediately (a
+    presentation orderBy or a per-document aggregation), so a repartition
+    here would be an extra exchange in all of them."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     ds = "cast(doc_id as string)"
     return docs.selectExpr(
         "doc_id",
         f"'TEST.executive.' || {ds} || '.' || {ds} AS document_id",
-        "explode(sequence(1, cast(doc_id % 3 as int) + 1)) AS seq",
-    ).selectExpr(
-        "doc_id",
-        "document_id",
-        "seq",
-        f"{_spark_pick(UPDATE_TYPES, '(doc_id + seq)')} AS update_type",
+        "transform(sequence(1, cast(doc_id % 3 as int) + 1), seq ->"
+        f" named_struct('type', {_spark_pick(UPDATE_TYPES, '(doc_id + seq)')}))"
+        " AS updates",
     )
 
 
@@ -219,12 +219,12 @@ ACTION_CASE_SQL = "CASE " + " ".join(
 
 
 def _updated_doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The distinct document_ids of ``synthetic_updates``, at doc grain.
+    """The distinct document_ids of ``synthetic_updates`` that carry at
+    least one update.
 
-    synthetic_updates emits 1..3 rows for every non-null doc_id and none
-    for a null one (a null sequence bound explodes to nothing), so its
-    distinct document_id set is the documents table's distinct non-null
-    doc_ids, derived without the explode.
+    synthetic_updates gives every non-null doc_id 1..3 updates and a null
+    one none (a null sequence bound is a null array), so this is the
+    documents table's distinct non-null doc_ids.
     """
     return (
         load_table(spark, sf_dir, "documents")
@@ -479,59 +479,71 @@ def ingest_parser_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("document_id")
 
 
-def map_update_actions(upd: DataFrame) -> DataFrame:
-    """(document_id, seq, update_type) -> + action column."""
-    return upd.select(
-        "document_id", "seq", "update_type",
-        _case_of(F.col("update_type"), ACTION_OF_TYPE).alias("action"),
+def explode_numbered(df: DataFrame, array: Column | str, position: str) -> DataFrame:
+    """One (document_id, ``position``, element fields...) row per element
+    of each row's struct ``array``, ``position`` its 1-based place in the
+    array: an Update's ``seq`` or a running action's ``exec_order``."""
+    return df.select("document_id", F.posexplode(array).alias("pos", "e")).select(
+        "document_id", (F.col("pos") + 1).alias(position), "e.*"
+    )
+
+
+def map_update_actions(updated: DataFrame) -> DataFrame:
+    """(document_id, updates) -> (document_id, actions): each Update's
+    type and its action (updated_document_actions.py:453), in update
+    order. An unmapped type has a null action."""
+    return updated.select(
+        "document_id",
+        F.transform(
+            "updates",
+            lambda u: F.struct(
+                u["type"].alias("update_type"),
+                _case_of(u["type"], ACTION_OF_TYPE).alias("action"),
+            ),
+        ).alias("actions"),
     )
 
 
 def ingest_update_actions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Update type -> action mapping (updated_document_actions.py:453)."""
-    return map_update_actions(synthetic_updates(spark, sf_dir)).orderBy(
-        "document_id", "seq"
-    )
+    return explode_numbered(
+        map_update_actions(synthetic_updates(spark, sf_dir)), "actions", "seq"
+    ).orderBy("document_id", "seq")
 
 
 def order_update_actions(acts: DataFrame) -> DataFrame:
-    """Per-document action ordering (updated_document_actions.py:65).
+    """Per-document action ordering (updated_document_actions.py:65):
+    (document_id, actions) -> one (document_id, exec_order, update_type,
+    action) row per action that runs.
 
-    If any action is `parse`, only the FIRST parse action runs. Else all
-    actions run, stable-ordered with `update_dont_parse` last. Expressed
-    with window functions over (document_id) — no driver loop.
+    If any action is `parse`, only the FIRST parse runs, with exec_order
+    1. Else, when at least one action is mapped, every action runs,
+    stable-ordered with `update_dont_parse` last; an unmapped (null)
+    action keeps its place among the others. A document whose actions
+    are all unmapped, or that has none, runs nothing.
 
-    Row order is unspecified: the window logic imposes its own
-    per-partition sort, and the consumers (an aggregation, a join, a
-    write) do not need one. An inherited ``orderBy`` would be a full
-    range exchange + global sort + the range partitioner's sampling
-    job, and Catalyst's EliminateSorts does not fire through the
-    Window/Generate operators stacked above it. The registry wrapper
+    Each row's own ``actions`` array is ordered with higher-order
+    functions and ``explode_numbered`` numbers the result, so the rule is a
+    narrow projection: no exchange, sort or window. A document that
+    appears on two rows (two files of one glob) is ordered once per row.
+    Row order is unspecified; the registry wrapper
     ``ingest_order_actions`` applies the presentation sort.
     """
-    from pyspark.sql import Window
+    actions = F.col("actions")
 
-    w = Window.partitionBy("document_id")
-    has_parse = F.max((F.col("action") == "parse").cast("int")).over(w)
-    first_parse_seq = F.min(
-        F.when(F.col("action") == "parse", F.col("seq"))
-    ).over(w)
-    priority = F.when(F.col("action") == "update_dont_parse", 1).otherwise(0)
-    w_order = Window.partitionBy("document_id").orderBy(priority.asc(), F.col("seq").asc())
-    return (
-        acts.withColumn("has_parse", has_parse)
-        .withColumn("first_parse_seq", first_parse_seq)
-        .withColumn("rn", F.row_number().over(w_order))
-        .where(
-            ((F.col("has_parse") == 1) & (F.col("seq") == F.col("first_parse_seq")))
-            | (F.col("has_parse") == 0)
-        )
-        .withColumn(
-            "exec_order",
-            F.when(F.col("has_parse") == 1, F.lit(1)).otherwise(F.col("rn")),
-        )
-        .select("document_id", "exec_order", "update_type", "action")
+    def is_(action: str):
+        return lambda a: a["action"] == action
+
+    ordered = F.when(
+        F.exists(actions, is_("parse")), F.slice(F.filter(actions, is_("parse")), 1, 1)
+    ).when(
+        F.exists(actions, lambda a: a["action"].isNotNull()),
+        F.concat(
+            F.filter(actions, lambda a: ~a["action"].eqNullSafe("update_dont_parse")),
+            F.filter(actions, is_("update_dont_parse")),
+        ),
     )
+    return explode_numbered(acts, ordered, "exec_order")
 
 
 def ingest_order_actions(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -55,10 +55,8 @@ _CHANGED: dict[str, int] = {
         "emb_distance_histogram", "emb_hubness", "emb_intrinsic_dim",
         "emb_ivf_cell_census", "emb_label_purity", "emb_lsh_tuning",
         "emb_matryoshka", "emb_pq", "emb_triplet_mining",
-        "graph_bipartite_projection", "ingest_archive_paths",
-        "ingest_cache_rewrite", "ingest_field_update",
-        "ingest_frontier_schedule", "ingest_order_actions",
-        "ingest_pipeline_e2e", "ingest_results_report", "ingest_update_actions",
+        "graph_bipartite_projection", "ingest_frontier_schedule",
+        "ingest_results_report",
         "mm_aspect_buckets", "mm_audio_vad_segments", "mm_shard_manifest",
         "pack_boundary_stats", "pack_sequences", "q_basket_lift",
         "q_customer_churn", "q_customer_retention", "q_events_attribution",
@@ -88,6 +86,12 @@ _CHANGED: dict[str, int] = {
     "ingest_download_fetch": 14,
     "ingest_fetch_retry": 14,
     "ingest_validate_url": 14,
+    # per-document action ordering inside each document's update array
+    **dict.fromkeys((
+        "ingest_archive_paths", "ingest_cache_rewrite", "ingest_field_update",
+        "ingest_order_actions", "ingest_pipeline_e2e", "ingest_update_actions",
+        "src_pipeline_updates",
+    ), 14),
     # rank and ECDF statistics moved onto functions.prefix.below_sums
     **dict.fromkeys((
         "stats_auc_classifier", "stats_cramer_von_mises", "stats_dunn_posthoc",

@@ -9,9 +9,11 @@ EXPLICIT nested schema (no sampling-based inference — at 100 TB schema
 inference means an extra full pass) and exploded into two DataFrames:
 
 * ``new_documents``  — one row per BackendDocument
-* ``updates``        — one row per (document_id, seq, Update), i.e. the
-  ``updated_documents`` map-of-arrays flattened with ``explode`` +
-  ``posexplode`` so downstream action mapping is a plain column op.
+* ``updated``        — one row per updated document: its ``document_id``
+  and its ``updates`` array, i.e. the ``updated_documents`` map exploded
+  once, so the per-document action rules work on each document's own
+  array (``read_pipeline_batch``); ``read_pipeline_updates`` flattens it
+  with ``update_rows`` to one (document_id, seq, Update) row per Update.
 
 ``s3_value`` / ``db_value`` are polymorphic in the reference (string or
 whole-document object, see types.py `Update`); they are captured as raw
@@ -86,12 +88,16 @@ PIPELINE_UPDATES_SCHEMA = StructType(
 )
 
 
-def read_pipeline_updates(
+def read_pipeline_batch(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Read one-or-many PipelineUpdates JSON files -> (new_docs, updates).
+    """Read one-or-many PipelineUpdates JSON files -> (new_docs, updated).
 
-    ``path`` may be a glob; each file is one batch object (multiLine).
+    ``path`` may be a glob; each file is one batch object (multiLine),
+    and each file's batch stays separate: ``updated`` has one
+    (document_id, updates) row per ``updated_documents`` entry of each
+    file, so a document updated in two files is two rows, each with that
+    file's own Update array in file order.
     """
     raw = (
         spark.read.schema(PIPELINE_UPDATES_SCHEMA)
@@ -99,18 +105,25 @@ def read_pipeline_updates(
         .json(path)
     )
     new_docs = raw.select(F.explode("new_documents").alias("d")).select("d.*")
-    updates = (
-        raw.select(F.explode("updated_documents").alias("document_id", "upds"))
-        .select("document_id", F.posexplode("upds").alias("pos", "u"))
-        .select(
-            "document_id",
-            (F.col("pos") + 1).cast("int").alias("seq"),
-            F.col("u.type").alias("update_type"),
-            F.col("u.s3_value").alias("s3_value"),
-            F.col("u.db_value").alias("db_value"),
-        )
+    updated = raw.select(F.explode("updated_documents").alias("document_id", "updates"))
+    return new_docs, updated
+
+
+def read_pipeline_updates(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, DataFrame]:
+    """``read_pipeline_batch`` with its updates flattened ->
+    (new_docs, updates), one ``update_rows`` row per Update."""
+    new_docs, updated = read_pipeline_batch(spark, path)
+    return new_docs, update_rows(updated)
+
+
+def update_rows(updated: DataFrame) -> DataFrame:
+    """(document_id, updates) -> one (document_id, seq, update_type,
+    s3_value, db_value) row per Update, ``seq`` its 1-based position."""
+    return ingest.explode_numbered(updated, "updates", "seq").withColumnRenamed(
+        "type", "update_type"
     )
-    return new_docs, updates
 
 
 # ---------------------------------------------------------------------------
@@ -142,11 +155,7 @@ def _synthesize_updates_file(spark: SparkSession, sf_dir: str) -> str:
         .orderBy("doc_id")
         .collect()
     )
-    upd_rows = (
-        ingest.synthetic_updates(spark, sf_dir)
-        .orderBy("doc_id", "seq")
-        .collect()
-    )
+    upd_rows = ingest.synthetic_updates(spark, sf_dir).orderBy("doc_id").collect()
     new_documents = [
         {
             "publication_ts": r.publication_ts.isoformat(),
@@ -171,12 +180,15 @@ def _synthesize_updates_file(spark: SparkSession, sf_dir: str) -> str:
     ]
     updated_documents: dict[str, list[dict]] = {}
     for r in upd_rows:
-        updated_documents.setdefault(r.document_id, []).append(
+        if not r.updates:
+            continue  # a null doc_id has no updates
+        updated_documents.setdefault(r.document_id, []).extend(
             {
-                "type": r.update_type,
-                "s3_value": f"cur-{r.update_type}-{r.doc_id}",
-                "db_value": f"new-{r.update_type}-{r.doc_id}",
+                "type": u.type,
+                "s3_value": f"cur-{u.type}-{r.doc_id}",
+                "db_value": f"new-{u.type}-{r.doc_id}",
             }
+            for u in r.updates
         )
     payload = {"new_documents": new_documents, "updated_documents": updated_documents}
     out_dir = sink_path("updates", sf_dir)
@@ -198,6 +210,4 @@ def src_pipeline_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     path = _synthesize_updates_file(spark, sf_dir)
     _, updates = read_pipeline_updates(spark, path)
-    return updates.select(
-        "document_id", "seq", "update_type", "s3_value", "db_value"
-    ).orderBy("document_id", "seq")
+    return updates.orderBy("document_id", "seq")

@@ -1040,8 +1040,8 @@ _BELOW_SUMS_KEYS = {
     "stats_mann_whitney": "stats_mann_whitney",
     "stats_mann_whitney_u": "stats_mann_whitney",
     "stats_mann_whitney_z": "stats_mann_whitney",
-    "stats_kruskal_wallis": "stats_kruskal_wallis",
-    "stats_dunn_posthoc": "stats_dunn_posthoc",
+    "stats_kruskal_wallis": "_event_type_rank_sums",
+    "stats_dunn_posthoc": "_event_type_rank_sums",
     "stats_wilcoxon_signed_rank": "stats_wilcoxon_signed_rank",
     "stats_cramer_von_mises": "stats_cramer_von_mises",
     "stats_jonckheere_terpstra": "stats_jonckheere_terpstra",

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from navigator_data_ingest_spark.operators.ingest import ACTION_OF_TYPE
 from navigator_data_ingest_spark.sources.pipeline_updates import (
+    read_pipeline_batch,
     read_pipeline_updates,
 )
 
@@ -154,16 +155,10 @@ def test_archive_plan_covers_pipeline_out_tree(spark, raw):
         order_update_actions,
     )
 
-    inp = json.load(
-        open(f"{PIPELINE_OUT}/input/2022-11-01T21.53.26.945831/new_and_updated_documents.json")
+    _, updated = read_pipeline_batch(
+        spark, f"{PIPELINE_OUT}/input/2022-11-01T21.53.26.945831/new_and_updated_documents.json"
     )
-    rows = [
-        (doc_id, i + 1, u["type"])
-        for doc_id, upds in inp["updated_documents"].items()
-        for i, u in enumerate(upds)
-    ]
-    upd = spark.createDataFrame(rows, "document_id string, seq int, update_type string")
-    plan = expand_archive_paths(order_update_actions(map_update_actions(upd)))
+    plan = expand_archive_paths(order_update_actions(map_update_actions(updated)))
     predicted = {
         (r.prefix, r.document_id, r.suffix, r.variant) for r in plan.collect()
     }
@@ -270,8 +265,8 @@ def _check_batch_outputs(spark, path: str, raw, out: str, counts: dict) -> None:
     written = Counter(
         (r.src_path, r.dst_path) for r in plan.select("src_path", "dst_path").collect()
     )
-    _, updates = read_pipeline_updates(spark, path)
-    expected = expand_archive_paths(order_update_actions(map_update_actions(updates)))
+    _, updated = read_pipeline_batch(spark, path)
+    expected = expand_archive_paths(order_update_actions(map_update_actions(updated)))
     assert written == Counter(
         (r.src_path, r.dst_path) for r in expected.select("src_path", "dst_path").collect()
     )
@@ -311,10 +306,11 @@ def test_run_batch_on_small_batch(spark, tmp_path):
 
 
 # Jobs run_batch launches with the test session: one per write, plus
-# one per shuffle stage AQE runs ahead of a write. The row counts are
-# observed on the writes, so a recount or a presentation sort added
-# back shows up here as extra jobs.
-RUN_BATCH_JOBS = 6
+# one per shuffle stage AQE runs ahead of a write (the report's two
+# aggregations). The row counts are observed on the writes and the
+# archive plan has no shuffle, so a recount, a presentation sort or a
+# per-document exchange added back shows up here as extra jobs.
+RUN_BATCH_JOBS = 5
 
 
 def test_run_batch_job_count(spark, tmp_path):
@@ -330,6 +326,28 @@ def test_run_batch_job_count(spark, tmp_path):
         sc._jsc.clearJobGroup()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= RUN_BATCH_JOBS, sorted(jobs)
+
+
+def test_run_batch_archive_plan_is_one_narrow_stage(spark, tmp_path, monkeypatch):
+    """The archive plan run_batch writes orders each document's actions
+    inside its own update array: scan, generate, write, with no
+    exchange, window or sort."""
+    from navigator_data_ingest_spark import main
+    from navigator_data_ingest_spark.plans.audit import formatted_plan
+
+    build, built = main.build_archive_plan, []
+
+    def capture(updated):
+        built.append(build(updated))
+        return built[-1]
+
+    monkeypatch.setattr(main, "build_archive_plan", capture)
+    counts = main.run_batch(spark, _write_batch(tmp_path, SMALL_BATCH), str(tmp_path / "out"))
+    assert counts["archive_plan"] == 22
+    (df,) = built
+    nodes = re.findall(r"^\(\d+\) (\w+)", formatted_plan(df), re.MULTILINE)
+    assert "Generate" in nodes, nodes
+    assert not [n for n in nodes if n.startswith(("Exchange", "Window", "Sort"))], nodes
 
 
 def test_run_batch_failed_write_raises_after_all_writes(spark, tmp_path, monkeypatch):
@@ -350,6 +368,23 @@ def test_run_batch_failed_write_raises_after_all_writes(spark, tmp_path, monkeyp
     assert (out / "parser_input" / "_SUCCESS").exists()
     assert (out / "archive_plan" / "_SUCCESS").exists()
     assert not (out / "report").exists()
+
+
+def test_run_batch_failed_build_starts_no_write(spark, tmp_path, monkeypatch):
+    """A failing build is raised to the caller, and no write starts."""
+    from navigator_data_ingest_spark import main
+
+    class BuildFailed(Exception):
+        pass
+
+    def fail(new_docs, updated):
+        raise BuildFailed()
+
+    monkeypatch.setattr(main, "build_report", fail)
+    out = tmp_path / "batch_out"
+    with pytest.raises(BuildFailed):
+        main.run_batch(spark, _write_batch(tmp_path, SMALL_BATCH), str(out))
+    assert not out.exists()
 
 
 def test_run_batch_empty_batch(spark, tmp_path):
@@ -414,3 +449,98 @@ def test_run_batch_matches_oracled_ingest_keys(spark, tmp_path):
     oracled = report(ingest_results_report(spark, SF_SMOKE))
     for key in (("new", "ValueError"), ("updated", None)):
         assert got.get(key) == oracled.get(key) > 0, key
+
+
+# Per-document action ordering edge cases, each checked against a
+# plain-Python replay of updated_document_actions.py:65.
+_RENAMES = {"parse": 12, "reparse": 8, "update_dont_parse": 2}
+
+
+def _replayed_actions(updated_documents: dict) -> list[tuple]:
+    """(document_id, exec_order, update_type, action) of one batch file:
+    the first parse alone if any update parses; else, when any type is
+    mapped, every update with update_dont_parse last (an unmapped type
+    keeps its place); else nothing."""
+    rows = []
+    for doc_id, updates in updated_documents.items():
+        acts = [(u["type"], ACTION_OF_TYPE.get(u["type"])) for u in updates or []]
+        parses = [a for a in acts if a[1] == "parse"]
+        if parses:
+            ordered = parses[:1]
+        elif any(action is not None for _, action in acts):
+            ordered = sorted(acts, key=lambda a: a[1] == "update_dont_parse")
+        else:
+            ordered = []
+        rows += [(doc_id, i, t, a) for i, (t, a) in enumerate(ordered, start=1)]
+    return rows
+
+
+def _updates(*types):
+    return [{"type": t, "s3_value": "", "db_value": ""} for t in types]
+
+
+ORDERING_CASES = {
+    "several_parses": {"D.1": _updates("name", "source_url", "reprocess", "source_url")},
+    "reparse_with_update_dont_parse": {
+        "D.2": _updates("description", "reparse", "name", "slug"),
+    },
+    "all_unmapped": {"D.3": _updates("bogus", "other")},
+    "unmapped_with_non_parse": {
+        "D.4": _updates("bogus", "reparse", "slug", "other"),
+        "D.5": _updates("name", "bogus", "reparse"),
+    },
+    "empty_and_null_lists": {"D.6": [], "D.7": None, "D.8": _updates("slug")},
+}
+
+
+def _actions(spark, path: str) -> list[tuple]:
+    from navigator_data_ingest_spark.operators.ingest import (
+        map_update_actions,
+        order_update_actions,
+    )
+
+    _, updated = read_pipeline_batch(spark, path)
+    acts = order_update_actions(map_update_actions(updated))
+    return sorted(tuple(r) for r in acts.collect())
+
+
+@pytest.mark.parametrize("case", sorted(ORDERING_CASES))
+def test_action_ordering_edge_cases(spark, tmp_path, case):
+    from navigator_data_ingest_spark.main import run_batch
+
+    batch = {
+        "new_documents": SMALL_BATCH["new_documents"],
+        "updated_documents": ORDERING_CASES[case],
+    }
+    path = _write_batch(tmp_path, batch)
+    expected = _replayed_actions(batch["updated_documents"])
+    assert _actions(spark, path) == sorted(expected)
+
+    counts = run_batch(spark, path, str(tmp_path / "batch_out"))
+    assert counts["archive_plan"] == sum(_RENAMES.get(a, 0) for *_, a in expected)
+    assert counts["report"] == len(_expected_report(batch))
+    _check_batch_outputs(spark, path, batch, str(tmp_path / "batch_out"), counts)
+
+
+def test_action_ordering_per_file_of_a_glob(spark, tmp_path):
+    """Each file of a glob is one batch: a document updated in both files
+    is ordered within each file, and the report counts it once."""
+    from navigator_data_ingest_spark.main import run_batch
+    from navigator_data_ingest_spark.sources.sinks import REPORT_SCHEMA
+
+    files = [
+        {"D.1": _updates("name", "reparse"), "D.2": _updates("slug")},
+        {"D.1": _updates("slug", "source_url"), "D.3": _updates("reparse")},
+    ]
+    for i, updated_documents in enumerate(files):
+        batch = {"new_documents": [], "updated_documents": updated_documents}
+        (tmp_path / f"batch_{i}.json").write_text(json.dumps(batch))
+    path = str(tmp_path / "batch_*.json")
+    expected = [row for f in files for row in _replayed_actions(f)]
+    assert _actions(spark, path) == sorted(expected)
+
+    out = str(tmp_path / "batch_out")
+    counts = run_batch(spark, path, out)
+    assert counts["archive_plan"] == sum(_RENAMES.get(a, 0) for *_, a in expected)
+    rep = spark.read.schema(REPORT_SCHEMA).json(f"{out}/report")
+    assert {(r.ingest_type, r.error): r.n_docs for r in rep.collect()} == {("updated", None): 3}

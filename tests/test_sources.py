@@ -11,6 +11,7 @@ from navigator_data_ingest_spark.operators.ingest import synthetic_new_documents
 from navigator_data_ingest_spark.sources.json_cache import read_json_cache
 from navigator_data_ingest_spark.sources.pipeline_updates import (
     _synthesize_updates_file,
+    read_pipeline_batch,
     read_pipeline_updates,
 )
 from tests.conftest import SF_SMOKE
@@ -56,6 +57,42 @@ def test_pipeline_updates_schema_is_closed(spark):
     assert [f.name for f in updates.schema] == [
         "document_id", "seq", "update_type", "s3_value", "db_value",
     ]
+    _, updated = read_pipeline_batch(spark, path)
+    assert updated.schema.simpleString() == (
+        "struct<document_id:string,"
+        "updates:array<struct<type:string,s3_value:string,db_value:string>>>"
+    )
+
+
+def test_pipeline_updates_polymorphic_values(spark, tmp_path):
+    """An Update's s3_value/db_value is a string or a whole-document
+    object (types.py Update): one row per Update, numbered by its place
+    in the document's list, strings kept as they are and objects kept as
+    their JSON text."""
+    doc = {"name": "Energy Act", "languages": ["en"], "metadata": {"topics": []}}
+    updated_documents = {
+        "D.1": [
+            {"type": "name", "s3_value": "old", "db_value": "new"},
+            {"type": "slug", "s3_value": doc, "db_value": "s"},
+        ],
+        "D.2": [{"type": "reparse", "s3_value": "x", "db_value": doc}],
+    }
+    path = str(tmp_path / "new_and_updated_documents.json")
+    with open(path, "w") as f:
+        json.dump({"new_documents": [], "updated_documents": updated_documents}, f)
+    _, updates = read_pipeline_updates(spark, path)
+    got = {(r.document_id, r.seq): r for r in updates.collect()}
+    want = {
+        (doc_id, seq): u
+        for doc_id, us in updated_documents.items()
+        for seq, u in enumerate(us, start=1)
+    }
+    assert got.keys() == want.keys()
+    for key, u in want.items():
+        assert got[key].update_type == u["type"]
+        for side in ("s3_value", "db_value"):
+            value = getattr(got[key], side)
+            assert (json.loads(value) if isinstance(u[side], dict) else value) == u[side]
 
 
 def test_json_cache_translated_flag(spark):
