@@ -127,11 +127,12 @@ def valid_http_url(url: Column) -> Column:
     return url.isNotNull() & url.rlike(_HTTP_URL_RE)
 
 
-def optional_http_url(url: Column) -> Column:
-    """Boolean: null or a valid http(s) URL (the reference's
-    ``Optional[AnyHttpUrl]`` source_url). False routes a document to the
-    report's ValueError row instead of the parser input."""
-    return url.isNull() | valid_http_url(url)
+def optional_http_url(url: str) -> str:
+    """SQL text of a boolean: the column ``url`` is null or a valid
+    http(s) URL (the reference's ``Optional[AnyHttpUrl]`` source_url).
+    False routes a document to the report's ValueError row instead of
+    the parser input."""
+    return f"({url} IS NULL OR {url} RLIKE r'{_HTTP_URL_RE}')"
 
 
 def watermark_text_col(url: Column, date: Column) -> Column:

@@ -26,7 +26,14 @@ through the same pool.
 
 Each updated document's actions are ordered inside its own update
 array (``operators.ingest.order_update_actions``), so the archive plan
-is one narrow stage: scan, generate, write, with no shuffle.
+is one narrow stage: scan, generate, write, with no shuffle. The report
+rolls its one-partition inputs up without a shuffle too, so a batch is
+three Spark jobs, one per write.
+
+The shared ingest rules build their plans from Spark SQL text
+(``selectExpr`` / ``where``), a few py4j round trips each, where a
+Column expression costs one per node. A warmed batch is mostly driver
+fixed cost, so this is a large share of its wall time.
 
 Run:
     python -m navigator_data_ingest_spark.main \
@@ -45,12 +52,12 @@ from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from navigator_data_ingest_spark.operators.ingest import (
+    URL_ERROR_SQL,
     expand_archive_paths,
     map_update_actions,
     order_update_actions,
     parser_input_records,
     results_report,
-    url_error_col,
 )
 # run_batch reads each updated document's Update array whole. The
 # reader keeps the name ``read_pipeline_updates`` here because
@@ -65,7 +72,7 @@ from navigator_data_ingest_spark.sources.sinks import write_parser_input, write_
 def build_parser_input(new_docs: DataFrame) -> DataFrame:
     """BackendDocument rows -> initial ParserInput records, the document
     type taken as given (new_document_actions.py:88-95)."""
-    return parser_input_records(new_docs, F.col("type"))
+    return parser_input_records(new_docs, "type")
 
 
 def build_archive_plan(updated: DataFrame) -> DataFrame:
@@ -80,10 +87,16 @@ def build_report(new_docs: DataFrame, updated: DataFrame) -> DataFrame:
     A batch carries no fetched bytes, so a new document's only error is
     the ValueError of an invalid source_url. An updated document counts
     once if it has at least one update, in however many files of a glob.
+
+    Both inputs are coalesced to one partition before the distinct and
+    the rollup (Spark unions two one-partition inputs into one
+    partition), so neither aggregation needs an exchange and the report
+    is one job: a handful of rows from a batch file, which is one
+    unsplittable scan, and ``write_report`` writes them from one task.
     """
     return results_report(
-        new_docs.select(url_error_col().alias("error")),
-        updated.where(F.size("updates") > 0).select("document_id").distinct(),
+        new_docs.coalesce(1).selectExpr(f"{URL_ERROR_SQL} AS error"),
+        updated.coalesce(1).where("size(updates) > 0").select("document_id").distinct(),
     )
 
 
@@ -96,8 +109,9 @@ def run_batch(spark: SparkSession, updates_file: str, output_dir: str) -> dict:
     scheduler pool and job description. The batch returns, or raises
     the first failure in submission order, only once every task it
     started has finished; a failed build starts no write. The counts are
-    the observed row counts of the writes, so each output runs once. The
-    archive plan's row order is unspecified.
+    the observed row counts of the writes, so each output runs once, and
+    no output has a shuffle: the batch is three jobs. The archive plan's
+    row order is unspecified.
     """
     new_docs, updated = read_pipeline_updates(spark, updates_file)
 

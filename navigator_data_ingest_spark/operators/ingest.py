@@ -213,9 +213,16 @@ updates AS (
 )
 """
 
-ACTION_CASE_SQL = "CASE " + " ".join(
-    f"WHEN update_type = '{t}' THEN '{a}'" for t, a in ACTION_OF_TYPE.items()
-) + " END"
+
+def _case_sql(key: str, mapping: dict[str, str]) -> str:
+    """SQL text ``CASE WHEN key = 'k' THEN 'v' ... END`` over ``mapping``,
+    in its order; Spark SQL and DuckDB both read it."""
+    return "CASE " + " ".join(
+        f"WHEN {key} = '{k}' THEN '{v}'" for k, v in mapping.items()
+    ) + " END"
+
+
+ACTION_CASE_SQL = _case_sql("update_type", ACTION_OF_TYPE)
 
 
 def _updated_doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,15 +247,11 @@ def _updated_doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # ingest rules, each defined once
+#
+# The rules main.run_batch shares with the registry keys are Spark SQL
+# text in selectExpr / where: a Column expression costs a py4j round trip
+# per node, and these rules are rebuilt for every batch.
 # ---------------------------------------------------------------------------
-
-
-def _case_of(key: Column, mapping: dict[str, str]) -> Column:
-    """``CASE WHEN key = k THEN v ... END`` over ``mapping``, in its order."""
-    out = None
-    for k, v in mapping.items():
-        out = F.when(key == k, F.lit(v)) if out is None else out.when(key == k, F.lit(v))
-    return out
 
 
 def fetch_url_col() -> Column:
@@ -281,9 +284,9 @@ def upload_name_col(md5_sum: Column) -> Column:
     )
 
 
-def url_error_col() -> Column:
-    """An invalid non-null source_url is a ValueError (new_document_actions.py:79)."""
-    return F.when(~optional_http_url(F.col("source_url")), F.lit("ValueError"))
+# SQL text: an invalid non-null source_url is a ValueError
+# (new_document_actions.py:79), else null
+URL_ERROR_SQL = f"CASE WHEN NOT {optional_http_url('source_url')} THEN 'ValueError' END"
 
 
 def _new_doc_error() -> Column:
@@ -291,35 +294,34 @@ def _new_doc_error() -> Column:
     UnsupportedContentTypeError when a fetch would happen and the
     detected content type is not supported, else null."""
     ct = detect_content_type(F.col("head_hex"), F.col("source_url"), F.col("header"))
-    return (
-        url_error_col()
-        .when(
+    return F.coalesce(
+        F.expr(URL_ERROR_SQL),
+        F.when(
             any_url_col().isNotNull() & ~ct.isin(*SUPPORTED_CONTENT_TYPES),
             F.lit("UnsupportedContentTypeError"),
-        )
-        .otherwise(F.lit(None).cast("string"))
+        ),
     )
 
 
-def parser_input_records(new_docs: DataFrame, document_type: Column) -> DataFrame:
+def parser_input_records(new_docs: DataFrame, document_type: str) -> DataFrame:
     """BackendDocument rows -> initial ParserInput records
-    (new_document_actions.py:88-95).
+    (new_document_actions.py:88-95); ``document_type`` is SQL text.
 
     Rows with an invalid non-null source_url error out in the reference;
     here they are excluded and surface as ValueError rows in the report.
     A null source_url is allowed and stays null.
     """
-    return new_docs.where(optional_http_url(F.col("source_url"))).select(
-        F.col("import_id").alias("document_id"),
-        F.col("slug").alias("document_slug"),
-        F.col("name").alias("document_name"),
-        F.col("description").alias("document_description"),
-        F.col("source_url").alias("document_source_url"),
-        document_type.alias("document_type"),
-        F.col("geography").alias("document_geography"),
-        F.lit(None).cast("string").alias("document_cdn_object"),
-        F.lit(None).cast("string").alias("document_content_type"),
-        F.lit(None).cast("string").alias("document_md5_sum"),
+    return new_docs.where(optional_http_url("source_url")).selectExpr(
+        "import_id AS document_id",
+        "slug AS document_slug",
+        "name AS document_name",
+        "description AS document_description",
+        "source_url AS document_source_url",
+        f"{document_type} AS document_type",
+        "geography AS document_geography",
+        "CAST(NULL AS string) AS document_cdn_object",
+        "CAST(NULL AS string) AS document_content_type",
+        "CAST(NULL AS string) AS document_md5_sum",
     )
 
 
@@ -327,15 +329,14 @@ def results_report(new_errors: DataFrame, updated_ids: DataFrame) -> DataFrame:
     """IngestResult rollup (main.py:186-232): one row per (ingest type,
     error) with its document count. ``new_errors`` has one ``error`` row
     per new document; ``updated_ids`` one row per updated document."""
-    new_side = new_errors.select(F.lit("new").alias("ingest_type"), "error")
-    upd_side = updated_ids.select(
-        F.lit("updated").alias("ingest_type"),
-        F.lit(None).cast("string").alias("error"),
+    new_side = new_errors.selectExpr("'new' AS ingest_type", "error")
+    upd_side = updated_ids.selectExpr(
+        "'updated' AS ingest_type", "CAST(NULL AS string) AS error"
     )
     return (
         new_side.unionAll(upd_side)
         .groupBy("ingest_type", "error")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .agg(F.expr("count(1) AS n_docs"))
     )
 
 
@@ -352,10 +353,8 @@ def ingest_validate_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     or error side without breaking the batch.
     """
     nd = synthetic_new_documents(spark, sf_dir)
-    return nd.select(
-        "import_id",
-        "source_url",
-        optional_http_url(F.col("source_url")).alias("url_ok"),
+    return nd.selectExpr(
+        "import_id", "source_url", f"{optional_http_url('source_url')} AS url_ok"
     ).orderBy("import_id")
 
 
@@ -475,16 +474,17 @@ def ingest_parser_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     type mapped from the category (types.py:40)."""
     return parser_input_records(
         synthetic_new_documents(spark, sf_dir),
-        _case_of(F.col("category"), CATEGORY_DOC_TYPE),
+        _case_sql("category", CATEGORY_DOC_TYPE),
     ).orderBy("document_id")
 
 
-def explode_numbered(df: DataFrame, array: Column | str, position: str) -> DataFrame:
+def explode_numbered(df: DataFrame, array: str, position: str) -> DataFrame:
     """One (document_id, ``position``, element fields...) row per element
-    of each row's struct ``array``, ``position`` its 1-based place in the
-    array: an Update's ``seq`` or a running action's ``exec_order``."""
-    return df.select("document_id", F.posexplode(array).alias("pos", "e")).select(
-        "document_id", (F.col("pos") + 1).alias(position), "e.*"
+    of each row's struct ``array`` (SQL text), ``position`` its 1-based
+    place in the array: an Update's ``seq`` or a running action's
+    ``exec_order``."""
+    return df.selectExpr("document_id", f"posexplode({array}) AS (pos, e)").selectExpr(
+        "document_id", f"pos + 1 AS {position}", "e.*"
     )
 
 
@@ -492,15 +492,10 @@ def map_update_actions(updated: DataFrame) -> DataFrame:
     """(document_id, updates) -> (document_id, actions): each Update's
     type and its action (updated_document_actions.py:453), in update
     order. An unmapped type has a null action."""
-    return updated.select(
+    return updated.selectExpr(
         "document_id",
-        F.transform(
-            "updates",
-            lambda u: F.struct(
-                u["type"].alias("update_type"),
-                _case_of(u["type"], ACTION_OF_TYPE).alias("action"),
-            ),
-        ).alias("actions"),
+        "transform(updates, u -> named_struct('update_type', u.type,"
+        f" 'action', {_case_sql('u.type', ACTION_OF_TYPE)})) AS actions",
     )
 
 
@@ -529,19 +524,12 @@ def order_update_actions(acts: DataFrame) -> DataFrame:
     Row order is unspecified; the registry wrapper
     ``ingest_order_actions`` applies the presentation sort.
     """
-    actions = F.col("actions")
-
-    def is_(action: str):
-        return lambda a: a["action"] == action
-
-    ordered = F.when(
-        F.exists(actions, is_("parse")), F.slice(F.filter(actions, is_("parse")), 1, 1)
-    ).when(
-        F.exists(actions, lambda a: a["action"].isNotNull()),
-        F.concat(
-            F.filter(actions, lambda a: ~a["action"].eqNullSafe("update_dont_parse")),
-            F.filter(actions, is_("update_dont_parse")),
-        ),
+    ordered = (
+        "CASE WHEN exists(actions, a -> a.action = 'parse')"
+        " THEN slice(filter(actions, a -> a.action = 'parse'), 1, 1)"
+        " WHEN exists(actions, a -> a.action IS NOT NULL)"
+        " THEN concat(filter(actions, a -> NOT (a.action <=> 'update_dont_parse')),"
+        " filter(actions, a -> a.action = 'update_dont_parse')) END"
     )
     return explode_numbered(acts, ordered, "exec_order")
 
@@ -562,6 +550,24 @@ def ingest_order_actions(spark: SparkSession, sf_dir: str) -> DataFrame:
 PREFIXES = ["parser_input", "embeddings_input", "indexer_input"]
 SUFFIXES = ["json", "npy"]
 VARIANTS = ["", "_translated_en"]
+# action -> the (prefix, suffix, variant) objects it archives
+_ARCHIVE_TARGETS = {
+    "parse": [(p, s, v) for p in PREFIXES for s in SUFFIXES for v in VARIANTS],
+    "reparse": [
+        (p, s, v) for p in PREFIXES if p != "parser_input" for s in SUFFIXES for v in VARIANTS
+    ],
+    "update_dont_parse": [("indexer_input", s, "") for s in SUFFIXES],
+}
+# _ARCHIVE_TARGETS as a Spark SQL map literal of struct arrays
+_ARCHIVE_TARGETS_SQL = "map(" + ", ".join(
+    f"'{action}', array("
+    + ", ".join(
+        f"named_struct('prefix', '{p}', 'suffix', '{s}', 'variant', '{v}')"
+        for p, s, v in targets
+    )
+    + ")"
+    for action, targets in _ARCHIVE_TARGETS.items()
+) + ")"
 
 
 def expand_archive_paths(ordered: DataFrame) -> DataFrame:
@@ -572,36 +578,19 @@ def expand_archive_paths(ordered: DataFrame) -> DataFrame:
     rename-plan table a distributed mover can execute in bulk. The plan
     is a superset of actual renames: the reference only renames objects
     that EXIST (e.g. parser_input never has an .npy) — existence is the
-    mover's concern, not the planner's. Row order is unspecified.
+    mover's concern, not the planner's. An action with no targets
+    (``update_field_in_all_occurences``, or null) looks up a null array
+    and explodes to no rows. Row order is unspecified.
     """
-    acts = ordered.where(
-        F.col("action").isin("parse", "reparse", "update_dont_parse")
-    )
-    expanded = (
-        acts.withColumn("prefix", F.explode(F.array(*[F.lit(p) for p in PREFIXES])))
-        .withColumn("suffix", F.explode(F.array(*[F.lit(s) for s in SUFFIXES])))
-        .withColumn("variant", F.explode(F.array(*[F.lit(v) for v in VARIANTS])))
-        .where(
-            ((F.col("action") == "parse"))
-            | ((F.col("action") == "reparse") & (F.col("prefix") != "parser_input"))
-            | (
-                (F.col("action") == "update_dont_parse")
-                & (F.col("prefix") == "indexer_input")
-                & (F.col("variant") == "")
-            )
-        )
-    )
-    src = F.concat(
-        F.col("prefix"), F.lit("/"), F.col("document_id"), F.col("variant"),
-        F.lit("."), F.col("suffix"),
-    )
-    dst = F.concat(
-        F.lit("archive/"), F.col("prefix"), F.lit("/"), F.col("document_id"),
-        F.lit("/"), F.lit(ARCHIVE_TS), F.lit("."), F.col("suffix"),
-    )
-    return expanded.select(
-        "document_id", "action", "prefix", "suffix", "variant",
-        src.alias("src_path"), dst.alias("dst_path"),
+    return ordered.selectExpr(
+        "document_id", "action", f"explode({_ARCHIVE_TARGETS_SQL}[action]) AS t"
+    ).selectExpr(
+        "document_id",
+        "action",
+        "t.*",
+        "concat(t.prefix, '/', document_id, t.variant, '.', t.suffix) AS src_path",
+        f"concat('archive/', t.prefix, '/', document_id, '/{ARCHIVE_TS}.', t.suffix)"
+        " AS dst_path",
     )
 
 
@@ -628,9 +617,7 @@ def _field_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(
         F.col("action").isin("update_dont_parse", "update_field_in_all_occurences")
     )
-    upd = upd.withColumn(
-        "pipeline_field", _case_of(F.col("update_type"), PIPELINE_FIELD)
-    )
+    upd = upd.withColumn("pipeline_field", F.expr(_case_sql("update_type", PIPELINE_FIELD)))
     # update_dont_parse touches parser_input+embeddings_input;
     # update_field_in_all_occurences touches all three prefixes.
     upd = upd.withColumn(

@@ -56,7 +56,6 @@ _CHANGED: dict[str, int] = {
         "emb_ivf_cell_census", "emb_label_purity", "emb_lsh_tuning",
         "emb_matryoshka", "emb_pq", "emb_triplet_mining",
         "graph_bipartite_projection", "ingest_frontier_schedule",
-        "ingest_results_report",
         "mm_aspect_buckets", "mm_audio_vad_segments", "mm_shard_manifest",
         "pack_boundary_stats", "pack_sequences", "q_basket_lift",
         "q_customer_churn", "q_customer_retention", "q_events_attribution",
@@ -85,13 +84,6 @@ _CHANGED: dict[str, int] = {
     "dedup_semantic": 13,
     "ingest_download_fetch": 14,
     "ingest_fetch_retry": 14,
-    "ingest_validate_url": 14,
-    # per-document action ordering inside each document's update array
-    **dict.fromkeys((
-        "ingest_archive_paths", "ingest_cache_rewrite", "ingest_field_update",
-        "ingest_order_actions", "ingest_pipeline_e2e", "ingest_update_actions",
-        "src_pipeline_updates",
-    ), 14),
     # rank and ECDF statistics moved onto functions.prefix.below_sums
     **dict.fromkeys((
         "stats_auc_classifier", "stats_cramer_von_mises", "stats_dunn_posthoc",
@@ -100,6 +92,14 @@ _CHANGED: dict[str, int] = {
         "stats_mann_whitney_z", "stats_wilcoxon_signed_rank",
         "stats_ww_runs_two_sample",
     ), 14),
+    # the shared ingest rules built from Spark SQL text; the round trips
+    # write what they read back through those rules
+    **dict.fromkeys((
+        "ingest_archive_paths", "ingest_cache_rewrite", "ingest_field_update",
+        "ingest_order_actions", "ingest_parser_input", "ingest_pipeline_e2e",
+        "ingest_results_report", "ingest_update_actions", "ingest_validate_url",
+        "sink_parser_input", "sink_report", "src_json_cache", "src_pipeline_updates",
+    ), 15),
 }
 
 

@@ -65,7 +65,10 @@ def write_report(df: DataFrame, path: str) -> None:
     coalesce(1) is correct here, not a smell: the report is a
     per-(type, error) rollup — a handful of rows regardless of input
     scale — and the reference writes exactly one report object per batch
-    (reports/ingest/batch_1.json).
+    (reports/ingest/batch_1.json). ``main.build_report`` already rolls
+    the batch up in one partition, so there the write adds no stage; a
+    report built from a partitioned input (``sink_report``) is merged
+    into one task after its aggregation's exchange.
     """
     df.coalesce(1).write.mode("overwrite").json(path)
 

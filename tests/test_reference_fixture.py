@@ -305,12 +305,12 @@ def test_run_batch_on_small_batch(spark, tmp_path):
     _check_batch_outputs(spark, path, SMALL_BATCH, out, counts)
 
 
-# Jobs run_batch launches with the test session: one per write, plus
-# one per shuffle stage AQE runs ahead of a write (the report's two
-# aggregations). The row counts are observed on the writes and the
-# archive plan has no shuffle, so a recount, a presentation sort or a
-# per-document exchange added back shows up here as extra jobs.
-RUN_BATCH_JOBS = 5
+# Jobs run_batch launches with the test session: one per write. The
+# row counts are observed on the writes, and neither the archive plan
+# nor the one-partition report has a shuffle, so a recount, a
+# presentation sort, a per-document exchange or a report exchange (each
+# would be a job AQE runs ahead of its write) shows up here.
+RUN_BATCH_JOBS = 3
 
 
 def test_run_batch_job_count(spark, tmp_path):
@@ -333,7 +333,6 @@ def test_run_batch_archive_plan_is_one_narrow_stage(spark, tmp_path, monkeypatch
     inside its own update array: scan, generate, write, with no
     exchange, window or sort."""
     from navigator_data_ingest_spark import main
-    from navigator_data_ingest_spark.plans.audit import formatted_plan
 
     build, built = main.build_archive_plan, []
 
@@ -345,9 +344,65 @@ def test_run_batch_archive_plan_is_one_narrow_stage(spark, tmp_path, monkeypatch
     counts = main.run_batch(spark, _write_batch(tmp_path, SMALL_BATCH), str(tmp_path / "out"))
     assert counts["archive_plan"] == 22
     (df,) = built
-    nodes = re.findall(r"^\(\d+\) (\w+)", formatted_plan(df), re.MULTILINE)
+    nodes = _plan_nodes(df)
     assert "Generate" in nodes, nodes
     assert not [n for n in nodes if n.startswith(("Exchange", "Window", "Sort"))], nodes
+
+
+def _plan_nodes(df) -> list[str]:
+    from navigator_data_ingest_spark.plans.audit import formatted_plan
+
+    return re.findall(r"^\(\d+\) (\w+)", formatted_plan(df), re.MULTILINE)
+
+
+def test_run_batch_report_is_one_stage(spark, tmp_path, monkeypatch):
+    """The report run_batch writes coalesces its inputs to one partition
+    before the distinct and the rollup: no exchange, so one job."""
+    from navigator_data_ingest_spark import main
+
+    build, built = main.build_report, []
+
+    def capture(new_docs, updated):
+        built.append(build(new_docs, updated))
+        return built[-1]
+
+    monkeypatch.setattr(main, "build_report", capture)
+    counts = main.run_batch(spark, _write_batch(tmp_path, SMALL_BATCH), str(tmp_path / "out"))
+    assert counts["report"] == 3
+    (df,) = built
+    nodes = _plan_nodes(df)
+    assert "HashAggregate" in nodes, nodes
+    assert not [n for n in nodes if n.startswith("Exchange")], nodes
+
+
+# py4j round trips one run_batch makes. The shared ingest rules are
+# Spark SQL text, a few round trips each; their Column-API form made
+# about 1,850 per batch, one per expression node. py4j's delete
+# commands are left out: they free Java objects whenever Python's
+# collector drops the last reference, so from 0 to about 120 of them
+# land in one batch depending on collection timing, not on the batch.
+RUN_BATCH_PY4J_CALLS = 400
+
+
+def test_run_batch_py4j_round_trips(spark, tmp_path, monkeypatch):
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    from navigator_data_ingest_spark.main import run_batch
+
+    path = _write_batch(tmp_path, SMALL_BATCH)
+    delete = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    send, calls = ClientServerConnection.send_command, []
+
+    def counting(self, command):
+        if not command.startswith(delete):
+            calls.append(1)  # list.append is atomic: the pool threads call too
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    run_batch(spark, path, str(tmp_path / "batch_out"))
+    monkeypatch.undo()
+    assert 0 < len(calls) <= RUN_BATCH_PY4J_CALLS, len(calls)
 
 
 def test_run_batch_failed_write_raises_after_all_writes(spark, tmp_path, monkeypatch):
