@@ -9980,14 +9980,14 @@ def stats_gini_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     G = (2·Σᵢ rᵢxᵢ/(n·Σx)) − (n+1)/n with tied values averaged.
 
     NO global sort of customers: spend collapses to DISTINCT integer
-    cent values with multiplicities, below-counts come from the
-    two-level (segment × 1024-block) prefix-sum idiom
-    (stats_mann_whitney's), and the rank-weighted sum folds each
-    distinct value's arithmetic rank series in closed form
-    (v·(c·B + c(c+1)/2)) — every term an order-free BIGINT. The final
-    Gini is one division of exact integers. NULL rule: orders without
-    a customer match drop (inner join); a NULL segment is its own
-    group (null-safe grouping both engines).
+    cent values with multiplicities, each value's below-count within
+    its segment comes from ``below_sums`` grouped by segment, and the
+    rank-weighted sum folds each distinct value's arithmetic rank
+    series in closed form (v·(c·B + c(c+1)/2)) — every term an
+    order-free BIGINT. The final Gini is one division of exact
+    integers. NULL rule: orders without a customer match drop (inner
+    join); a NULL segment is its own group (null-safe grouping both
+    engines).
     """
     o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -9996,54 +9996,15 @@ def stats_gini_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment", "c_custkey")
         .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("v"))
     )
-    # r12 (guide §2.4): vc feeds the range table AND the block pass —
-    # unpinned, the orders x customer join + two collapses ran per copy
-    # (4 fact scans). (segment, distinct-cents) grain: pin it; each
-    # fact is scanned ONCE.
+    # vc feeds below_sums' range table AND its block pass; unpinned, the
+    # orders x customer join and both collapses would run once per copy.
+    # (segment, distinct-cents) grain: pin it so each fact is scanned once.
     vc = (
         r.groupBy("c_mktsegment", "v")
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=False)
     )
-    rng = vc.groupBy("c_mktsegment").agg(
-        F.min("v").alias("mn"), F.max("v").alias("mx")
-    )
-    b = vc.join(
-        F.broadcast(rng.withColumnRenamed("c_mktsegment", "_seg")),
-        F.col("c_mktsegment").eqNullSafe(F.col("_seg")),
-    ).withColumn(
-        "blk",
-        F.least(
-            F.lit(1023),
-            F.floor(
-                (F.col("v") - F.col("mn")).cast("double")
-                / (F.col("mx") - F.col("mn") + F.lit(1)).cast("double")
-                * 1024
-            ),
-        ).cast("int"),
-    ).drop("_seg")
-    w_in = (
-        Window.partitionBy("c_mktsegment", "blk")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    b = b.withColumn("cum_in", F.coalesce(F.sum("c").over(w_in), F.lit(0)))
-    bt = b.groupBy("c_mktsegment", "blk").agg(F.sum("c").alias("blk_n"))
-    w_blk = (
-        Window.partitionBy("c_mktsegment")
-        .orderBy("blk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    bt = bt.withColumn("off", F.coalesce(F.sum("blk_n").over(w_blk), F.lit(0)))
-    j = b.join(
-        F.broadcast(
-            bt.select(
-                F.col("c_mktsegment").alias("_seg"), F.col("blk").alias("_blk"), "off"
-            )
-        ),
-        F.col("c_mktsegment").eqNullSafe(F.col("_seg"))
-        & (F.col("blk") == F.col("_blk")),
-    ).withColumn("bb", F.col("off") + F.col("cum_in"))
+    j = below_sums(vc, "v", by=["c_mktsegment"], bb=F.col("c"))
     agg = j.groupBy("c_mktsegment").agg(
         F.sum("c").alias("n"),
         F.sum(F.expr("v * c")).alias("sx"),
@@ -15418,12 +15379,13 @@ def q_orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a decile).
 
     Customer spend collapses once (exact cents), then DISTINCT-VALUE
-    counts + the 1024-block two-level prefix give each spend level's
-    at-or-above cohort (count, revenue) with NO global sort; the
-    crossing is the max spend level whose cohort revenue ≥ 80% of total
-    — an exact integer cross-multiple compare (5·cum_rev ≥ 4·total),
-    min-struct argmin fold, witness join-back. Shares integer-exact
-    HALF_UP. NULL custkeys drop (both engines).
+    counts and ``below_sums``' strictly-below sums, subtracted from the
+    totals, give each spend level's at-or-above cohort (count, revenue)
+    with NO global sort; the crossing is the max spend level whose
+    cohort revenue ≥ 80% of total — an exact integer cross-multiple
+    compare (5·cum_rev ≥ 4·total), min-struct argmin fold, witness
+    join-back. Shares integer-exact HALF_UP. NULL custkeys drop (both
+    engines).
     """
     r = (
         load_table(spark, sf_dir, "orders")
@@ -15435,55 +15397,14 @@ def q_orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("v")
         )
     )
-    # r12 (guide §2.4 duplicated subtrees): vc feeds rng, the block pass
-    # AND the totals broadcast — unpinned, the orders scan + customer
-    # collapse ran per copy (10 fact scans). Distinct-spend-level grain:
-    # pin it; the fact is scanned ONCE.
+    # vc feeds below_sums' range table and block pass AND the totals
+    # broadcast; unpinned, the orders scan and collapse would run once
+    # per copy. Distinct-spend-level grain: pin it so the fact is scanned
+    # once.
     vc = (
         r.groupBy("v")
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=False)
-    )
-    rng = vc.agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-    b = vc.crossJoin(F.broadcast(rng)).withColumn(
-        "blk",
-        F.least(
-            F.lit(1023),
-            F.floor(
-                (F.col("v") - F.col("mn"))
-                / (F.col("mx") - F.col("mn") + F.lit(1e-9))
-                * 1024
-            ),
-        ),
-    )
-    # at-or-above cohort via reverse-order RUNNING sums: Spark executes
-    # a CURRENT ROW -> UNBOUNDED FOLLOWING frame by recomputing the
-    # aggregate from scratch per row (O(block^2)); ordering DESC with an
-    # UNBOUNDED PRECEDING -> CURRENT ROW frame covers the identical
-    # "v at or above current" row set as one O(block) running sum
-    # (exact integer sums — association-free). Round-11 events-probe
-    # find on the asof-forward family, applied here too.
-    w_in = (
-        Window.partitionBy("blk")
-        .orderBy(F.desc("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    b = (
-        b.withColumn("cnt_in", F.sum("c").over(w_in))
-        .withColumn("rev_in", F.sum(F.expr("v * c")).over(w_in))
-    )
-    bt = b.groupBy("blk").agg(
-        F.sum("c").alias("blk_c"), F.sum(F.expr("v * c")).alias("blk_r")
-    )
-    w_blk = Window.orderBy("blk").rowsBetween(1, Window.unboundedFollowing)
-    bt = (
-        bt.withColumn("off_c", F.coalesce(F.sum("blk_c").over(w_blk), F.lit(0)))
-        .withColumn("off_r", F.coalesce(F.sum("blk_r").over(w_blk), F.lit(0)))
-    )
-    j = (
-        b.join(F.broadcast(bt.select("blk", "off_c", "off_r")), "blk")
-        .withColumn("cum_c", F.col("cnt_in") + F.col("off_c"))
-        .withColumn("cum_r", F.col("rev_in") + F.col("off_r"))
     )
     tot = F.broadcast(
         vc.agg(
@@ -15491,11 +15412,23 @@ def q_orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr("v * c")).alias("tot_r"),
         )
     )
-    qual = j.crossJoin(tot).where(
-        F.expr("5 * cast(cum_r as decimal(38,0)) >= 4 * tot_r")
-    # qual feeds the argmax AND the witness join-back (§2.4);
-    # distinct-level grain — pin it so the block pipeline runs once
-    ).localCheckpoint(eager=False)
+    # a level's at-or-above cohort is every customer not strictly below
+    # it: the exact bigint totals minus the exclusive running sums
+    qual = (
+        below_sums(vc, "v", below_c=F.col("c"), below_r=F.expr("v * c"))
+        .crossJoin(tot)
+        .select(
+            "v",
+            (F.col("tot_c") - F.col("below_c")).alias("cum_c"),
+            (F.col("tot_r") - F.col("below_r")).alias("cum_r"),
+            "tot_c",
+            "tot_r",
+        )
+        .where(F.expr("5 * cast(cum_r as decimal(38,0)) >= 4 * tot_r"))
+        # qual feeds the argmax AND the witness join-back; distinct-level
+        # grain — pin it so the block pass runs once
+        .localCheckpoint(eager=False)
+    )
     best = qual.agg(
         F.max("v").alias("v_star"),
         F.max("tot_c").alias("tot_c"),

@@ -26,7 +26,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from navigator_data_ingest_spark.functions.content import (
@@ -36,6 +36,7 @@ from navigator_data_ingest_spark.functions.content import (
     CONTENT_TYPE_PDF,
 )
 from navigator_data_ingest_spark.functions import minipdf
+from navigator_data_ingest_spark.functions.prefix import below_sums
 from navigator_data_ingest_spark.operators.ingest import (
     SUPPORTED_CONTENT_TYPES,
     fetch_url_col,
@@ -381,7 +382,6 @@ def ingest_fetch_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 FRONTIER_PER_HOST = 2   # max concurrent fetches per host per wave
-FRONTIER_BLOCKS = 64    # import-id range blocks for the two-level rank
 
 
 def ingest_frontier_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,55 +392,28 @@ def ingest_frontier_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference api_client.py:148's per-document politeness, planned
     corpus-wide).
 
-    The per-host enumeration never runs a host-grain global sort: the
-    rank is the two-level (host × import-id range-block) prefix-sum
-    discipline with the block quantizer derived from a 1-row max-count
-    broadcast resolved in-plan, order-aligned with import_id so the
-    oracle's plain per-host row_number replays it. Output: per (host,
-    wave) URL counts + the wave span per host.
+    The per-host enumeration never runs a host-grain global sort: a
+    URL's 0-based rank within its host is ``below_sums`` of 1 grouped
+    by host, in import-id order, so the oracle's plain per-host
+    row_number replays it. Output: per (host, wave) URL counts + the
+    wave span per host.
     """
     nd = synthetic_new_documents(spark, sf_dir)
     work = (
         nd.withColumn("fetch_url", fetch_url_col())
         .where(F.col("fetch_url").isNotNull())
         .select(
-            "import_id",
             F.parse_url("fetch_url", F.lit("HOST")).alias("host"),
-        )
-        .withColumn(
-            "ord", F.expr("cast(regexp_extract(import_id, '([0-9]+)$', 1) as bigint)")
+            F.expr(
+                "cast(regexp_extract(import_id, '([0-9]+)$', 1) as bigint)"
+            ).alias("ord"),
         )
     )
-    # The 1-row quantizer is pinned: inb feeds both offs and ranked,
-    # and unpinned each copy re-derives the max in its own scan. The
-    # block counts aggregate blk directly (count per (host, blk) == max
-    # in-block row_number), so no second window runs. The two fact
-    # passes left (window + block counts) are the floor without a
-    # doc-grain pin, which at 100 TB would cost more than the narrow
-    # rescan.
-    mx = F.broadcast(work.agg(F.max("ord").alias("mx")).localCheckpoint(eager=False))
-    blk = work.crossJoin(mx).select(
+    # ord, import_id's numeric suffix, is distinct within a host, so the
+    # count of the host's URLs strictly before a URL is its 0-based rank
+    ranked = below_sums(work, "ord", by=["host"], rank=F.lit(1)).select(
         "host",
-        "ord",
-        (F.col("ord") * FRONTIER_BLOCKS / (F.col("mx") + 1))
-        .cast("bigint")
-        .alias("blk"),
-    )
-    w_in = Window.partitionBy("host", "blk").orderBy("ord")
-    inb = blk.withColumn("rn_in", F.row_number().over(w_in))
-    offs = blk.groupBy("host", "blk").agg(F.count(F.lit(1)).alias("nb"))
-    w_off = (
-        Window.partitionBy("host")
-        .orderBy("blk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = offs.withColumn("off", F.coalesce(F.sum("nb").over(w_off), F.lit(0)))
-    ranked = inb.join(
-        F.broadcast(offs.select("host", "blk", "off")), ["host", "blk"]
-    ).select(
-        "host", ((F.col("off") + F.col("rn_in") - 1) / FRONTIER_PER_HOST)
-        .cast("bigint")
-        .alias("wave"),
+        (F.col("rank") / FRONTIER_PER_HOST).cast("bigint").alias("wave"),
     )
     return (
         ranked.groupBy("host", "wave")

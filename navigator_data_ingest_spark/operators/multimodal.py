@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from navigator_data_ingest_spark.functions.exact import dk_units, sp_units
+from navigator_data_ingest_spark.functions.prefix import below_sums
 from navigator_data_ingest_spark.sources.tables import load_table, scatter
 
 MODALITIES = ["image", "audio", "video"]
@@ -762,7 +763,6 @@ def mm_scene_segments_sql() -> str:
 ASPECT_LOG_SCALE = 4     # bucket = round(log2(w/h) * 4) -> quarter-octaves
 ASPECT_BUCKET_CLAMP = 8  # clamp to [-8, 8]: 17 buckets total
 ASPECT_BATCH = 16        # images per training batch
-ASPECT_BLOCKS = 64       # doc_id range-blocks for the two-level enumeration
 
 
 def mm_aspect_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -771,13 +771,11 @@ def mm_aspect_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     log2(w/h) buckets so each training batch holds same-shape tensors,
     then each bucket's images pack into fixed-size batches.
 
-    The per-bucket enumeration NEVER uses a global per-bucket sort:
-    block = doc_id range-quantized into 64 blocks via a 1-row max-id
-    broadcast resolved in-plan, row_number within (bucket, block), and
-    a (bucket x block)-bounded offset table — the repo's two-level
-    prefix-sum discipline, order-aligned with doc_id so the DuckDB
-    oracle's plain per-bucket row_number replays it exactly. Bucket ids
-    compare ROUNDED values only (repo float rule).
+    The per-bucket enumeration NEVER uses a global per-bucket sort: an
+    image's 0-based rank within its bucket is ``below_sums`` of 1
+    grouped by bucket, in doc_id order, so the DuckDB oracle's plain
+    per-bucket row_number replays it exactly. Bucket ids compare
+    ROUNDED values only (repo float rule).
     """
     img = multimodal_table(spark, sf_dir).where(
         F.col("meta.modality") == "image"
@@ -786,50 +784,23 @@ def mm_aspect_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("meta.width").cast("double").alias("w"),
         F.col("meta.height").cast("double").alias("h"),
     )
-    # r12 (guide §2.4): b feeds the max-id broadcast AND the block pass,
-    # inb feeds the offset table AND the enumeration join — unpinned,
-    # the media metadata scan ran 4x. Narrow image grain: pin both; the
-    # fact is scanned ONCE.
+    # b feeds below_sums' range table AND its block pass; unpinned, the
+    # media metadata scan would run once per copy. Narrow image grain:
+    # pin it so the fact is scanned once.
     b = img.selectExpr(
         "doc_id",
         f"cast(greatest(-{ASPECT_BUCKET_CLAMP}, least({ASPECT_BUCKET_CLAMP}, "
         f"round(ln(w / h) / ln(2.0) * {ASPECT_LOG_SCALE}, 0))) as int) "
         "AS bucket",
     ).localCheckpoint(eager=False)
-    mx = F.broadcast(b.agg(F.max("doc_id").alias("max_id")))
-    blk = b.crossJoin(mx).select(
-        "doc_id",
-        "bucket",
-        (F.col("doc_id") * ASPECT_BLOCKS / (F.col("max_id") + 1))
-        .cast("bigint")
-        .alias("blk"),
-    )
-    w_in = Window.partitionBy("bucket", "blk").orderBy("doc_id")
-    inb = blk.withColumn("rn_in", F.row_number().over(w_in)).localCheckpoint(
-        eager=False
-    )
-    off_tbl = inb.groupBy("bucket", "blk").agg(F.max("rn_in").alias("n_blk"))
-    w_off = (
-        Window.partitionBy("bucket")
-        .orderBy("blk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off_tbl = off_tbl.withColumn(
-        "off", F.coalesce(F.sum("n_blk").over(w_off), F.lit(0))
-    )
-    rn = (
-        inb.join(F.broadcast(off_tbl.select("bucket", "blk", "off")), ["bucket", "blk"])
-        .select(
-            "doc_id",
-            "bucket",
-            (F.col("off") + F.col("rn_in")).alias("rn"),
-        )
-    )
+    # doc_id is distinct, so the count of the bucket's images with a
+    # smaller doc_id is an image's 0-based rank within its bucket
+    rn = below_sums(b, "doc_id", by=["bucket"], rank=F.lit(1))
     return rn.select(
         "doc_id",
         "bucket",
-        ((F.col("rn") - 1) / ASPECT_BATCH).cast("bigint").alias("batch_id"),
-        ((F.col("rn") - 1) % ASPECT_BATCH).cast("int").alias("slot"),
+        (F.col("rank") / ASPECT_BATCH).cast("bigint").alias("batch_id"),
+        (F.col("rank") % ASPECT_BATCH).cast("int").alias("slot"),
     ).orderBy("doc_id")
 
 

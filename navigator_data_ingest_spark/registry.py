@@ -55,8 +55,8 @@ _CHANGED: dict[str, int] = {
         "emb_distance_histogram", "emb_hubness", "emb_intrinsic_dim",
         "emb_ivf_cell_census", "emb_label_purity", "emb_lsh_tuning",
         "emb_matryoshka", "emb_pq", "emb_triplet_mining",
-        "graph_bipartite_projection", "ingest_frontier_schedule",
-        "mm_aspect_buckets", "mm_audio_vad_segments", "mm_shard_manifest",
+        "graph_bipartite_projection", "mm_audio_vad_segments",
+        "mm_shard_manifest",
         "pack_boundary_stats", "pack_sequences", "q_basket_lift",
         "q_customer_churn", "q_customer_retention", "q_events_attribution",
         "q_events_concurrency", "q_events_concurrency_epoch",
@@ -70,7 +70,7 @@ _CHANGED: dict[str, int] = {
         "src_stream_events", "stats_ansari_bradley",
         "stats_brunner_munzel", "stats_chi_square", "stats_cochran_q",
         "stats_cox_stuart", "stats_cramers_v", "stats_friedman", "stats_g_test",
-        "stats_gini_exact", "stats_grubbs", "stats_hodges_lehmann",
+        "stats_grubbs", "stats_hodges_lehmann",
         "stats_kendall_w",
         "stats_levene", "stats_lognormal_fit", "stats_mann_kendall",
         "stats_mood_scale", "stats_mutual_information", "stats_nelson_aalen",
@@ -99,6 +99,11 @@ _CHANGED: dict[str, int] = {
         "ingest_order_actions", "ingest_parser_input", "ingest_pipeline_e2e",
         "ingest_results_report", "ingest_update_actions", "ingest_validate_url",
         "sink_parser_input", "sink_report", "src_json_cache", "src_pipeline_updates",
+    ), 15),
+    # per-group and at-or-above ranks moved onto functions.prefix.below_sums
+    **dict.fromkeys((
+        "ingest_frontier_schedule", "mm_aspect_buckets", "q_orders_pareto_8020",
+        "stats_gini_exact",
     ), 15),
 }
 

@@ -5,9 +5,11 @@ a range-bucketed block id ``blk``, an in-block running sum, and an
 exclusive running sum over the block table ordered by ``blk``. Any
 other window ordered by ``blk`` is a hand-copied block-offset pass. It
 fails here unless it is one of the variants ``below_sums`` does not
-compute, listed below with what it needs instead. A new rank or ECDF
-operator calls ``below_sums``; stale entries (allowlisted but no
-longer matching) also fail, so the list stays in sync with the code.
+compute, listed below with what it needs instead. Per-group sums use
+``below_sums(..., by=...)``, and an at-or-above sum is the total minus
+``below_sums``' strictly-below sum. A new rank or ECDF operator calls
+``below_sums``; stale entries (allowlisted but no longer matching) also
+fail, so the list stays in sync with the code.
 """
 
 from __future__ import annotations
@@ -27,25 +29,15 @@ ALLOWED: dict[tuple[str, str], str] = {
     ("functions/prefix.py", "below_sums"): "the primitive itself",
     ("operators/analytics.py", "q_orders_skyline"): "prefix MAX, not a sum",
     ("operators/analytics.py", "q_orders_abc_class"): (
-        "descending inclusive sum with a tie-break"
-    ),
-    ("operators/analytics.py", "q_orders_pareto_8020"): (
-        "at-or-above sum (blocks after this one)"
+        "inclusive sum in (cents desc, partkey) order: a tie-broken "
+        "composite order, not one distinct value column"
     ),
     ("operators/analytics.py", "stats_hodges_lehmann"): (
         "block offsets of pair counts, looked up by rank target"
     ),
-    ("operators/analytics.py", "stats_gini_exact"): (
-        "block offsets per market segment (partitioned)"
-    ),
     ("operators/corpus.py", "corpus_token_budget"): (
-        "hash-prefix blocks per quality class (partitioned)"
-    ),
-    ("operators/fetch.py", "ingest_frontier_schedule"): (
-        "row_number blocks per host (partitioned)"
-    ),
-    ("operators/multimodal.py", "mm_aspect_buckets"): (
-        "row_number blocks per aspect bucket (partitioned)"
+        "inclusive sum in (md5 string, doc_id) order within hash-prefix "
+        "blocks: a string-hash composite order"
     ),
 }
 

@@ -212,7 +212,7 @@ _DELIBERATE_NESTED_LOOP = {
     "q_events_bot_screen",
     # three 1-row stage-count broadcasts crossed into the funnel report
     "q_events_funnel_steps",
-    # 1-row max-id broadcast feeding the range-block quantization
+    # below_sums' 1-row min/max range broadcast (per-bucket rank)
     "mm_aspect_buckets",
     # 1-row median / per-dim stats broadcasts: deliberate
     "stats_runs_test",
@@ -226,8 +226,10 @@ _DELIBERATE_NESTED_LOOP = {
     "stats_var_cvar",
     # 1-row bigram-type total broadcast: deliberate
     "corpus_kn_smoothing",
-    # 1-row max-ord broadcast feeding the range-block quantization
+    # below_sums' 1-row min/max range broadcast (per-host rank)
     "ingest_frontier_schedule",
+    # below_sums' 1-row min/max range broadcast (per-segment below-counts)
+    "stats_gini_exact",
     # 1-row median broadcast: deliberate
     "stats_mcnemar",
     # 1-row min/max range broadcast feeding the block bucketing
@@ -402,13 +404,15 @@ def test_no_accidental_cartesian_products(spark, name):
 # window single-tasks its input, so each entry here must sit on a
 # BOUNDED intermediate — block tables (<=1024 rows by construction),
 # day/calendar grains, nation/label dimensions, top-N-limited results,
-# or the bounded query stripe — never the raw corpus. Audited via
-# scripts/window_audit.py (r5); a NEW query that plans a global window
-# fails test_global_windows_are_allowlisted until it is justified here.
+# or the bounded query stripe — never the raw corpus. scripts/plan_census.py
+# lists every key that plans one (its global_windows column and summary);
+# a NEW query that plans a global window fails
+# test_global_windows_are_allowlisted until it is justified here.
 _BOUNDED_GLOBAL_WINDOW_OK = {
-    # 1024-block prefix-sum block tables
+    # 1024-block prefix-sum block tables (q_orders_pareto_8020's sits
+    # behind its qual pin)
     "stats_mann_whitney", "stats_cramer_von_mises", "stats_gains_table",
-    "stats_dunn_posthoc",
+    "stats_dunn_posthoc", "q_orders_pareto_8020",
     # round 8: _pooled_score_groups' <=1024-row block-offset window
     # (ansari/mood 1; brunner 2 — the same bounded block table feeds
     # both the pooled and the per-sample offset columns)
@@ -422,9 +426,8 @@ _BOUNDED_GLOBAL_WINDOW_OK = {
     "graph_harmonic_centrality",
     # column-bisect diagnostic projections (same plan, projected)
     "stats_mann_whitney_u", "stats_mann_whitney_z",
-    "q_orders_pareto_8020",
     "pack_sequences", "corpus_token_budget",
-    "sample_cap_per_source", "corpus_sample_exact_k", "mm_aspect_buckets",
+    "sample_cap_per_source", "corpus_sample_exact_k",
     "q_orders_skyline", "stats_wilcoxon_signed_rank",
     # day/period calendar grain (bounded by the time dimension)
     "stats_page_hinkley", "q_orders_trailing_range", "stats_sprt_ab",
@@ -1035,6 +1038,37 @@ def test_below_sums_windows_are_block_partitioned(spark):
     assert len(block_table_windows) == 1, plan
 
 
+def test_grouped_below_sums_has_no_global_window(spark):
+    """With ``by=``, the block table's running sum is partitioned by the
+    group and ordered by ``blk``, so no window is unpartitioned; the
+    block offsets are still broadcast back."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from navigator_data_ingest_spark.functions.prefix import below_sums
+    from navigator_data_ingest_spark.plans.audit import (
+        unpartitioned_window_count,
+    )
+
+    df = below_sums(
+        spark.range(5000).selectExpr("id % 7 AS g", "id * 3 AS v"),
+        "v",
+        by=["g"],
+        rank=F.lit(1),
+    )
+    plan = formatted_plan(df)
+    assert unpartitioned_window_count(df) == 0, plan
+    assert plan_audit(df).broadcast_joins >= 1, "block offsets not broadcast"
+    assert "windowspecdefinition(g#" in plan and "blk#" in plan
+    block_table_windows = re.findall(
+        r"^Arguments: .*\], \[g#\d+L?\], \[blk#\d+L? ASC NULLS FIRST\]$",
+        plan,
+        re.M,
+    )
+    assert len(block_table_windows) == 1, plan
+
+
 # key -> the function that must call below_sums for it
 _BELOW_SUMS_KEYS = {
     "stats_mann_whitney": "stats_mann_whitney",
@@ -1053,6 +1087,10 @@ _BELOW_SUMS_KEYS = {
     "stats_auc_classifier": "stats_auc_classifier",
     "stats_youden_j": "stats_youden_j",
     "stats_gains_table": "stats_gains_table",
+    "stats_gini_exact": "stats_gini_exact",
+    "q_orders_pareto_8020": "q_orders_pareto_8020",
+    "ingest_frontier_schedule": "ingest_frontier_schedule",
+    "mm_aspect_buckets": "mm_aspect_buckets",
 }
 
 

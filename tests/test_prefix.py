@@ -80,3 +80,52 @@ def test_zero_rows(spark):
     out = below_sums(df, "v", below=F.col("c"))
     assert out.columns == ["v", "c", "below"]
     assert out.collect() == []
+
+
+def _expected_by(rows: list[tuple]) -> dict:
+    """(group, value) -> sum of the count over the group's rows with a
+    smaller value; NULL is a group of its own."""
+    groups: dict = {}
+    for g, v, c in rows:
+        groups.setdefault(g, []).append((v, c))
+    return {
+        (g, v): sums
+        for g, vcs in groups.items()
+        for v, sums in _expected(vcs).items()
+    }
+
+
+def _got_by(spark, rows) -> dict:
+    df = spark.createDataFrame(rows, "g string, v bigint, c bigint")
+    out = below_sums(df, "v", by=["g"], below=F.col("c"))
+    assert out.columns == ["g", "v", "c", "below"]
+    got = {(r["g"], r["v"]): (r["below"],) for r in out.collect()}
+    assert len(got) == len(rows)
+    return got
+
+
+def test_by_null_group_and_one_row_group(spark):
+    """Interleaved values in three groups: the NULL group sums on its
+    own, and a one-row group has nothing below it."""
+    rows = [("a", v, v % 5 + 1) for v in range(0, 3000, 3)]
+    rows += [(None, v, 2) for v in range(1, 3000, 7)]
+    rows += [("solo", 1500, 9)]
+    assert _got_by(spark, rows) == _expected_by(rows)
+
+
+def test_by_disjoint_value_ranges(spark):
+    """Each group spans a narrow slice of the global range, so the
+    global block map puts each group in a few blocks."""
+    rows = [("low", v, 1 + v % 3) for v in range(0, 200)]
+    rows += [("high", 10**9 + v, 1 + v % 4) for v in range(0, 200)]
+    assert _got_by(spark, rows) == _expected_by(rows)
+
+
+def test_by_group_with_more_values_than_blocks(spark):
+    """One group alone fills every block several times over, next to a
+    small group sharing its range."""
+    rng = random.Random(11)
+    vs = rng.sample(range(-100_000, 100_000), 3 * BLOCKS)
+    rows = [("big", v, rng.randint(0, 9)) for v in vs]
+    rows += [("small", v, 1) for v in rng.sample(vs, 10)]
+    assert _got_by(spark, rows) == _expected_by(rows)
