@@ -3,8 +3,8 @@
 Five strategies, each shaped for 100 TB:
 
   exact          — md5 groupBy; one shuffle on the content hash.
-  minhash_lsh    — shingle → k-minhash signature computed MAP-SIDE with
-                   array expressions (no explode, no shuffle), then an
+  minhash_lsh    — shingle → k-minhash signature computed MAP-SIDE in
+                   Arrow batches (no explode, no shuffle), then an
                    LSH band-bucket self-join. The only shuffle is on
                    (band_id, band_hash), and candidate pairs are
                    generated inside buckets — never O(n²).
@@ -77,58 +77,13 @@ def minhash_coeffs(i: int) -> tuple[int, int]:
     return 2 * i + 1, 97 * i + 13
 
 
-def _band_hashes_expr() -> str:
-    """text -> array of N_BANDS band-hash strings, ONE pass per stage.
-
-    The whole shingle -> md5 -> 16 affine minhashes -> 4 band hashes
-    chain is a single let-bound expression (X.sp_let), so tokens,
-    shingles and the per-shingle md5 are each computed exactly once per
-    row. Without the let-bindings projection collapse re-inlines the
-    token regex into every shingle reference and the md5 transform into
-    every min — measured 30x slower at sf0.1.
-
-    Signature index i = band*ROWS_PER_BAND + r, affine coeffs
-    (2i+1, 97i+13) mod the 32-bit prime — one md5 per shingle, the rest
-    integer math (the standard universal-hash family trick).
-    """
-    i = f"(b * {ROWS_PER_BAND} + r)"
-    affine_min = (
-        f"array_min(transform(hh, h -> ((2 * {i} + 1) * h + (97 * {i} + 13)) % {MINHASH_P}))"
-    )
-    per_band = (
-        f"md5(array_join(transform(sequence(0, {ROWS_PER_BAND - 1}), "
-        f"r -> cast({affine_min} as string)), ','))"
-    )
-    bands = f"transform(sequence(0, {N_BANDS - 1}), b -> {per_band})"
-    hh = f"transform(sh, s -> {X.sp_hash32('s', 0)})"
-    sh = f"array_distinct({X.sp_shingles('t')})"
-    return X.sp_let(
-        "t", X.sp_tokens("text"), X.sp_let("sh", sh, X.sp_let("hh", hh, bands))
-    )
-
-
-def _with_band_hashes_expr(docs: DataFrame) -> DataFrame:
-    """(doc_id, band_hashes array<string>) — the LSH signature table,
-    computed as pure Spark SQL expressions.
-
-    ``scatter`` comes FIRST: a single-file scan arrives as one
-    partition, and the band-hash expression is the expensive map work —
-    repartitioning after it would run it all on one core.
-    """
-    spark = docs.sparkSession
-    return (
-        scatter(spark, docs.select("doc_id", "text"))
-        # size(t) >= SHINGLE_K <=> at least one shingle; cheap predicate
-        # kept OUT of the let-chain so the filter needs no band hashing
-        .where(F.expr(f"size({X.sp_tokens('text')}) >= {SHINGLE_K}"))
-        .select("doc_id", F.expr(_band_hashes_expr()).alias("band_hashes"))
-    )
-
-
 def _band_hashes_batch(batches):
     """Arrow batch in -> (doc_id, band_hashes) out, bit-identical to the
-    expression path: same tokens regex, same seeded md5, same affine
-    minhash family, same band md5 over decimal-joined signatures."""
+    DuckDB oracle's minhash CTEs (``registry._MINHASH_CTES``): the token
+    regex and seeded 32-bit md5 of functions/exprs.py, the
+    ``minhash_coeffs`` affine family, and one md5 per band over its
+    comma-joined decimal signatures. A text with fewer than SHINGLE_K
+    tokens has no shingle and emits no row."""
     import re
 
     import hashlib
@@ -177,14 +132,17 @@ def _band_hashes_batch(batches):
 def _with_band_hashes(docs: DataFrame) -> DataFrame:
     """(doc_id, band_hashes array<string>) — Arrow-batched signature path.
 
-    The PRODUCTION signature computation: the expression path
-    (``_with_band_hashes_expr``) is exactly equivalent but pays the
-    interpreted-lambda tax — let-bound lambda chains are exempt from
-    codegen, ~3.5x slower at sf0.1. Every operation here is integer or
-    md5 arithmetic, so the Python batch output is BIT-IDENTICAL to both
-    the expression path and the DuckDB oracle (pinned by pytest); this
-    is a rare case where the Python edge wins because the JVM side
-    cannot codegen the chain.
+    The one signature computation. A pure Spark SQL expression chain
+    computes the same bits but pays the interpreted-lambda tax —
+    let-bound lambda chains are exempt from codegen, ~3.5x slower at
+    sf0.1. Every operation here is integer or md5 arithmetic, so the
+    Python batch output is BIT-IDENTICAL to the DuckDB oracle (the
+    oracle parity of every minhash_pairs key checks it); this is a rare
+    case where the Python edge wins because the JVM side cannot codegen
+    the chain.
+
+    ``scatter`` comes FIRST: a single-file scan arrives as one
+    partition, and the signature is the expensive map work.
     """
     spark = docs.sparkSession
     return scatter(spark, docs.select("doc_id", "text")).mapInPandas(
@@ -192,14 +150,11 @@ def _with_band_hashes(docs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_pairs(
-    docs: DataFrame, signatures: str = "python", include_self: bool = False
-) -> DataFrame:
+def minhash_pairs(docs: DataFrame, include_self: bool = False) -> DataFrame:
     """MinHash-LSH candidate pairs over any (doc_id, text) DataFrame.
 
-    Signature is a per-row computation (zero shuffle; ``signatures``
-    picks the Arrow-batched production path or the pure-SQL expression
-    twin); the band self-join shuffles only (band_id, band_hash) — the
+    Signature is a per-row Arrow-batched computation (zero shuffle);
+    the band self-join shuffles only (band_id, band_hash) — the
     classic shingle→minhash→band→bucket-join layout.
 
     ``include_self=True`` additionally emits each doc's (id, id)
@@ -209,12 +164,7 @@ def minhash_pairs(
     a payload with no bands (NULL text) never pairs, mirroring the
     naive per-document join precisely.
     """
-    sig = (
-        _with_band_hashes(docs)
-        if signatures == "python"
-        else _with_band_hashes_expr(docs)
-    )
-    bands = sig.select(
+    bands = _with_band_hashes(docs).select(
         "doc_id", F.posexplode("band_hashes").alias("band_id", "band_hash")
     )
     # r12 (guide §2.4 duplicated subtrees): the band bucket join is a
@@ -2094,9 +2044,10 @@ def dedup_band_config_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     point, this shows the alternatives).
 
     Scale shape: the 16-minhash signature is ONE let-bound map-side
-    pass per doc (the _band_hashes_expr chain, stopping at the raw
-    signature); each config's banding is a map-side explode and the
-    ONLY shuffle is the (config, band, hash) bucket aggregation — no
+    expression pass per doc (tokens, shingles, one seeded md5 per
+    shingle, the minhash_coeffs affine family, stopping at the raw
+    signature before banding); each config's banding is a map-side
+    explode and the ONLY shuffle is the (config, band, hash) bucket aggregation — no
     pair join EXISTS in the plan, the load is computed from bucket
     sizes, so 100× duplicate explosion costs ~1× (pure input growth).
     All exact integers; the same short-doc gate as minhash_pairs.

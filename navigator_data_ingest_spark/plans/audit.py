@@ -37,13 +37,6 @@ def formatted_plan(df: DataFrame) -> str:
     return _explain(df, "formatted")
 
 
-def _node_counts(df: DataFrame) -> dict[str, int]:
-    counts: dict[str, int] = {}
-    for _, name in _NODE.findall(formatted_plan(df)):
-        counts[name] = counts.get(name, 0) + 1
-    return counts
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """All PushedFilters entries across the plan's parquet scans."""
     out: list[str] = []
@@ -102,6 +95,75 @@ def codegen_stage_count(df: DataFrame) -> int:
     return len(set(re.findall(r"\*\((\d+)\)", _explain(df, "simple"))))
 
 
+# A tree line of the formatted plan: ``:  +- Name args (n)``. Each child
+# sits three columns right of its parent; ``:-`` is a left child, ``+-``
+# the last one.
+_TREE_NODE = re.compile(r"^((?:[ :]  )*(?:[+:]- )?)([A-Z]\w*)(.*) \((\d+)\)$", re.M)
+_NO_KEYS = re.compile(r"^Keys: \[\]$", re.M)
+_REUSES = re.compile(r"Reuses operator id: (\d+)")
+_NESTED_LOOPS = ("BroadcastNestedLoopJoin", "CartesianProduct")
+_AGGREGATES = ("HashAggregate", "ObjectHashAggregate", "SortAggregate")
+# one child, and never more rows out than in
+_NARROWING = _AGGREGATES + (
+    "AQEShuffleRead",
+    "BroadcastExchange",
+    "Coalesce",
+    "CollectLimit",
+    "Exchange",
+    "Filter",
+    "GlobalLimit",
+    "LocalLimit",
+    "Project",
+    "Sort",
+    "TakeOrderedAndProject",
+    "Window",
+    "WindowGroupLimit",
+)
+
+
+def _unbounded_nested_loops(text: str) -> int:
+    heads = list(_NODE.finditer(text))
+    details = {
+        int(m.group(1)): (m.group(2), text[m.end() : end])
+        for m, end in zip(heads, [h.start() for h in heads[1:]] + [len(text)])
+    }
+    children: dict[int, list[int]] = {}
+    args: dict[int, str] = {}
+    stack: list[tuple[int, int]] = []  # (column, id) of the open ancestors
+    for m in _TREE_NODE.finditer(text):
+        col, name, nid = len(m.group(1)), m.group(2), int(m.group(4))
+        if details.get(nid, ("",))[0] != name:
+            continue  # a detail line that happens to end in "(n)"
+        while stack and stack[-1][0] >= col:
+            stack.pop()
+        if stack:
+            children[stack[-1][1]].append(nid)
+        stack.append((col, nid))
+        children[nid] = []
+        args[nid] = m.group(3)
+
+    def bounded(nid: int) -> bool:
+        name, detail = details[nid]
+        kids = children.get(nid, [])
+        if name == "ReusedExchange":
+            m = _REUSES.search(detail)
+            return m is not None and bounded(int(m.group(1)))
+        if name == "LocalTableScan":
+            return True
+        if name in _AGGREGATES and _NO_KEYS.search(detail):
+            return True
+        if name in _NESTED_LOOPS:
+            return len(kids) == 2 and all(bounded(k) for k in kids)
+        return name in _NARROWING and len(kids) == 1 and bounded(kids[0])
+
+    n = 0
+    for nid, kids in children.items():
+        if details[nid][0] in _NESTED_LOOPS:
+            build = kids[0] if "BuildLeft" in args[nid] else kids[-1]
+            n += not bounded(build)
+    return n
+
+
 @dataclass
 class PlanAudit:
     broadcast_joins: int
@@ -109,11 +171,19 @@ class PlanAudit:
     shuffle_exchanges: int
     codegen_stages: int
     cartesian_products: int
+    # nested-loop and cartesian joins whose build side (a cartesian
+    # product's right side) is not bounded by construction: bounded
+    # means a global aggregate, a LocalTableScan or a nested-loop join
+    # of two bounded sides, under operators that never add rows
+    unbounded_nested_loops: int
     parquet_scans: int
 
 
 def plan_audit(df: DataFrame) -> PlanAudit:
-    counts = _node_counts(df)
+    text = formatted_plan(df)
+    counts: dict[str, int] = {}
+    for _, name in _NODE.findall(text):
+        counts[name] = counts.get(name, 0) + 1
     return PlanAudit(
         broadcast_joins=counts.get("BroadcastHashJoin", 0),
         sortmerge_joins=counts.get("SortMergeJoin", 0),
@@ -121,5 +191,6 @@ def plan_audit(df: DataFrame) -> PlanAudit:
         codegen_stages=codegen_stage_count(df),
         cartesian_products=counts.get("CartesianProduct", 0)
         + counts.get("BroadcastNestedLoopJoin", 0),
+        unbounded_nested_loops=_unbounded_nested_loops(text),
         parquet_scans=counts.get("Scan", 0),
     )

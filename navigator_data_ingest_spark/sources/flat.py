@@ -27,6 +27,7 @@ from pyspark.sql.types import (
 
 from navigator_data_ingest_spark.sources.sinks import sink_path
 from navigator_data_ingest_spark.sources.tables import load_table
+from navigator_data_ingest_spark.streaming.streams import scoped_conf
 
 ORDERS_CSV_SCHEMA = StructType(
     [
@@ -449,12 +450,13 @@ def build_pushdown_plan(spark: SparkSession, sf_dir: str) -> str:
     """Build the same aggregate with the DSv2 reader + aggregate
     pushdown enabled and return its formatted physical plan (configs
     restored afterwards); the caller asserts on ``PushedAggregation``."""
-    prev_push = spark.conf.get("spark.sql.parquet.aggregatePushdown", "false")
     prev_v1 = spark.conf.get("spark.sql.sources.useV1SourceList", None)
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
     v1 = [s for s in (prev_v1 or "").split(",") if s and s != "parquet"]
-    spark.conf.set("spark.sql.sources.useV1SourceList", ",".join(v1))
-    try:
+    confs = {
+        "spark.sql.parquet.aggregatePushdown": "true",
+        "spark.sql.sources.useV1SourceList": ",".join(v1),
+    }
+    with scoped_conf(spark, confs):
         df = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.min("o_orderkey").alias("min_orderkey"),
@@ -469,12 +471,6 @@ def build_pushdown_plan(spark: SparkSession, sf_dir: str) -> str:
         if rows[0]["n_rows"] <= 0:
             raise RuntimeError("pushdown aggregate returned no rows")
         return plan
-    finally:
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", prev_push)
-        if prev_v1 is None:
-            spark.conf.unset("spark.sql.sources.useV1SourceList")
-        else:
-            spark.conf.set("spark.sql.sources.useV1SourceList", prev_v1)
 
 
 def src_agg_pushdown_sql() -> str:

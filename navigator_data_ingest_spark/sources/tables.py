@@ -70,49 +70,51 @@ def _path_stamp(path: str) -> tuple:
     return (st.st_mtime_ns, st.st_size)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table from a scale-factor directory.
-
-    ``events.ts`` is stored as parquet TIMESTAMP(NANOS), which Spark only
-    reads as a long (``spark.sql.legacy.parquet.nanosAsLong``); convert it
-    to a microsecond timestamp here so downstream operators see a real
-    timestamp column.
-    """
-    path = os.path.join(sf_dir, f"{name}.parquet")
+def _cached(spark: SparkSession, path: str, tag: str, build) -> DataFrame:
+    """The session's DataFrame for ``tag`` + ``path``, built on a miss."""
     cache = _session_relations(spark)
-    key = (os.path.abspath(path), _path_stamp(path))
+    key = (tag + os.path.abspath(path), _path_stamp(path))
     cached = cache.get(key)
     if cached is not None:
         return cached
-    if name == "events":
-        # runtime-settable; needed even when the caller built the session
-        # (e.g. the verify driver) without our defaults.
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
-    df = spark.read.parquet(path)
-    if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
-        # integer division — a double divide loses precision at ~1e18 ns.
-        # Build the timestamp in the NTZ domain (timestampadd on an NTZ
-        # literal) so the wall clock equals the stored value regardless
-        # of spark.sql.session.timeZone — timestamp_micros() would give
-        # an LTZ instant whose extracted components shift per session TZ.
-        df = df.withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, ts div 1000,"
-                " timestamp_ntz'1970-01-01 00:00:00')"
-            ),
-        )
+    df = build()
     if len(cache) >= _RELATION_CACHE_MAX:
         cache.clear()
     cache[key] = df
     return df
 
 
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one table from a scale-factor directory.
+
+    ``events.ts`` is stored as parquet TIMESTAMP(NANOS), which Spark only
+    reads as a long (``spark.sql.legacy.parquet.nanosAsLong``); convert it
+    to a microsecond timestamp here so downstream operators see a real
+    timestamp column. The scan is ``raw_relation``'s.
+    """
+
+    def build() -> DataFrame:
+        df = raw_relation(spark, sf_dir, name)
+        if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
+            # integer division — a double divide loses precision at ~1e18 ns.
+            # Build the timestamp in the NTZ domain (timestampadd on an NTZ
+            # literal) so the wall clock equals the stored value regardless
+            # of spark.sql.session.timeZone — timestamp_micros() would give
+            # an LTZ instant whose extracted components shift per session TZ.
+            df = df.withColumn(
+                "ts",
+                F.expr(
+                    "timestampadd(MICROSECOND, ts div 1000,"
+                    " timestamp_ntz'1970-01-01 00:00:00')"
+                ),
+            )
+        return df
+
+    return _cached(spark, os.path.join(sf_dir, f"{name}.parquet"), "", build)
+
+
 def scatter(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Repartition a small-file scan up to the session's parallelism.
+    """Round-robin ``df`` over the session's default parallelism.
 
     Two jobs at once for compute-heavy map stages: (1) a single-file
     parquet scan arrives as one partition, which would serialize all
@@ -121,34 +123,33 @@ def scatter(spark: SparkSession, df: DataFrame) -> DataFrame:
     NOT re-inlined (Spark excludes lambda-bearing expressions from
     subexpression elimination) into every consumer afterwards.
 
-    On a real cluster with a well-partitioned source this is a no-op
-    (we only repartition upward).
+    The repartition is unconditional. Asking ``df.rdd`` for its
+    partition count first would build the RDD, which under AQE runs
+    every upstream shuffle while the query is still being built, and it
+    would make the plan's shape (the barrier included) depend on the
+    input's file layout. The check never skipped a repartition here:
+    the tables fed to it are single files under 4 MB even at sf0.1,
+    which Spark reads as one split at any core count.
     """
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
+    return df.repartition(spark.sparkContext.defaultParallelism)
 
 
 def raw_relation(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The UNCONVERTED parquet relation for one table (stored schema,
-    no events-ts adaptation), resolved once per application via the
-    same relation cache. Streaming readers use it to see the storage
+    no events-ts adaptation), resolved once per session via the
+    relation cache. Streaming readers use it to see the storage
     representation (e.g. TIMESTAMP(NANOS) arriving as long) and apply
     their own in-stream conversion."""
+
+    def build() -> DataFrame:
+        if name == "events":
+            # runtime-settable; needed even when the caller built the
+            # session (e.g. the verify driver) without our defaults.
+            try:
+                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            except Exception:
+                pass
+        return spark.read.parquet(path)
+
     path = os.path.join(sf_dir, f"{name}.parquet")
-    cache = _session_relations(spark)
-    key = ("raw:" + os.path.abspath(path), _path_stamp(path))
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
-    if name == "events":
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
-    df = spark.read.parquet(path)
-    if len(cache) >= _RELATION_CACHE_MAX:
-        cache.clear()
-    cache[key] = df
-    return df
+    return _cached(spark, path, "raw:", build)

@@ -23,6 +23,7 @@ exactly once and the result is value-equal to the batch oracle.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
 import shutil
@@ -127,6 +128,27 @@ def windowed_dedup_agg(ev: DataFrame) -> DataFrame:
 STREAM_SHUFFLE_PARTITIONS = 4
 
 
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set each runtime conf in ``confs`` for the block, then restore
+    its earlier value, or unset it if the session had none."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+# every drain runs under this clamp
+_STREAM_CONFS = {"spark.sql.shuffle.partitions": str(STREAM_SHUFFLE_PARTITIONS)}
+
+
 def _checkpoint_dir(name: str) -> str:
     """Deterministic checkpoint dir per query name, recycled per run.
 
@@ -150,9 +172,7 @@ def _checkpoint_dir(name: str) -> str:
 def _run_to_memory(stream_df: DataFrame, name: str, output_mode: str) -> DataFrame:
     """Drain a stream into a memory sink with availableNow; return table."""
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
+    with scoped_conf(spark, _STREAM_CONFS):
         query = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -162,8 +182,6 @@ def _run_to_memory(stream_df: DataFrame, name: str, output_mode: str) -> DataFra
             .start()
         )
         query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -647,9 +665,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     ev = read_stream_events(spark, feed, glob="*.parquet", max_files_per_trigger=1)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
+    with scoped_conf(spark, _STREAM_CONFS):
         query = (
             ev.writeStream.foreachBatch(_merge)
             .option("checkpointLocation", _checkpoint_dir("fbupsert"))
@@ -657,8 +673,6 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     versions = sorted(
         int(d[1:]) for d in os.listdir(state_root) if d.startswith("v")
@@ -724,8 +738,6 @@ def stream_incremental_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     for c in chunks[:2]:
         shutil.copy2(os.path.join(feed, c), os.path.join(data, c))
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
 
     def _drain() -> None:
         # a DURABLE sink (parquet), not memory: resuming from a
@@ -749,14 +761,12 @@ def stream_incremental_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             f for f in os.listdir(sink) if f.endswith(".parquet")
         } if os.path.isdir(sink) else set()
 
-    try:
+    with scoped_conf(spark, _STREAM_CONFS):
         _drain()
         before = _sink_files()
         shutil.copy2(os.path.join(feed, chunks[2]), os.path.join(data, chunks[2]))
         _drain()
         fresh = sorted(_sink_files() - before)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     if not fresh:
         # second drain emitted nothing new (e.g. a partial prior run's
         # checkpoint already covered the late chunk): surface an empty
@@ -1033,13 +1043,12 @@ def stream_tws_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     proc_cls = type(
         "RunningTotals", (StatefulProcessor,), dict(_RunningTotalsProcessor.__dict__)
     )
-    key_conf = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key_conf, None)
-    spark.conf.set(
-        key_conf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+        )
+    }
+    with scoped_conf(spark, rocksdb):
         out = ev.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=proc_cls(),
             outputStructType=TWS_OUTPUT_SCHEMA,
@@ -1047,11 +1056,6 @@ def stream_tws_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
         res = _run_to_memory(out, _qname("stream_tws", sf_dir), "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(key_conf)
-        else:
-            spark.conf.set(key_conf, prev)
     return res.orderBy("user_id")
 
 
@@ -1111,9 +1115,7 @@ def stream_multiplex_router(spark: SparkSession, sf_dir: str) -> DataFrame:
             b.unpersist()
 
     ev = read_stream_events(spark, feed, glob="*.parquet", max_files_per_trigger=1)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
+    with scoped_conf(spark, _STREAM_CONFS):
         query = (
             ev.writeStream.foreachBatch(_route)
             .option("checkpointLocation", _checkpoint_dir("router"))
@@ -1121,8 +1123,6 @@ def stream_multiplex_router(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     parts = []
     for d in sorted(os.listdir(root)):
@@ -1412,9 +1412,7 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = _qname("stream_statereader", sf_dir)
     ck = _checkpoint_dir(name)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
+    with scoped_conf(spark, _STREAM_CONFS):
         query = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -1424,8 +1422,6 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     state = spark.read.format("statestore").load(ck)
     # the state rows expose the RAW aggregation buffers (count / sum),
     # not the query's output aliases — the round is applied at read time
@@ -1569,9 +1565,7 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = _scatter_time_ordered_feed(spark, sf_dir, 3)
     ev = read_stream_events(spark, feed, glob="*.parquet", max_files_per_trigger=1)
     name = _qname("stream_progress", feed)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
+    with scoped_conf(spark, _STREAM_CONFS):
         query = (
             ev.withWatermark("ts", "1 hour")
             .select("event_id", "ts")
@@ -1584,8 +1578,6 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         query.awaitTermination()
         progress = list(query.recentProgress)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     rows = []
     # batch_id is the MICRO-BATCH index, not the position among
     # non-empty batches: with maxFilesPerTrigger=1 a zero-row chunk
@@ -1785,9 +1777,7 @@ def stream_foreachbatch_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
         seen_batches.append(batch_id)
 
     ev = read_stream_events(spark, feed, glob="*.parquet", max_files_per_trigger=1)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
+    with scoped_conf(spark, _STREAM_CONFS):
         query = (
             ev.writeStream.foreachBatch(_apply)
             .option("checkpointLocation", _checkpoint_dir("fbretry"))
@@ -1804,8 +1794,6 @@ def stream_foreachbatch_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(root, f"in_b{replay_id}")
         ).localCheckpoint(eager=True)
         _apply(replay_df, replay_id)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     outs = [
         os.path.join(root, d)

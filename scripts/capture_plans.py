@@ -10,9 +10,12 @@ registry at sf0.1 (``SPARK_GRAFT_SF_DIR`` overrides).
 
 Next to each plan, <out_dir>/<query>_<suffix>.pins.txt holds the
 formatted plan of every DataFrame that reaches ``localCheckpoint``
-while the query is built, in call order. A pin shows as a bare
-``Scan ExistingRDD`` in the query's own plan, so a change to the code
-behind a pin is visible only in this file.
+(``=== pin i ===``) or a ``DataFrameWriter`` save method
+(``=== write i ===``) while the query is built, in call order. A pin
+shows as a bare ``Scan ExistingRDD`` in the query's own plan, and a
+round-trip key's plan shows only the scan that reads its output back,
+so a change to the code behind a pin or a write is visible only in
+this file.
 """
 
 from __future__ import annotations
@@ -22,21 +25,35 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame  # noqa: E402
-
 from navigator_data_ingest_spark import registry  # noqa: E402
 from navigator_data_ingest_spark.plans.audit import formatted_plan  # noqa: E402
 from navigator_data_ingest_spark.session import get_spark  # noqa: E402
 
-def _record_pins(cls: type, pinned: list[str]) -> None:
-    """Make ``cls.localCheckpoint`` append the plan it pins to ``pinned``."""
-    pin = cls.localCheckpoint
+# every DataFrameWriter method that writes (saves) the DataFrame
+_WRITES = (
+    "save",
+    "insertInto",
+    "saveAsTable",
+    "json",
+    "parquet",
+    "text",
+    "csv",
+    "xml",
+    "orc",
+    "jdbc",
+)
 
-    def recording(self: DataFrame, *args, **kwargs) -> DataFrame:
-        pinned.append(formatted_plan(self))
-        return pin(self, *args, **kwargs)
 
-    cls.localCheckpoint = recording
+def _record(cls: type, method: str, kind: str, captured: list, df_of) -> None:
+    """Make ``cls.method`` append (kind, the plan of ``df_of(self)``) to
+    ``captured`` before it runs."""
+    run = getattr(cls, method)
+
+    def recording(self, *args, **kwargs):
+        captured.append((kind, formatted_plan(df_of(self))))
+        return run(self, *args, **kwargs)
+
+    setattr(cls, method, recording)
 
 
 def main() -> None:
@@ -50,13 +67,16 @@ def main() -> None:
         names = bench.HEADLINE
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name=f"capture-plans-{suffix}")
-    pinned: list[str] = []
-    # the session's concrete DataFrame class, which overrides the
-    # abstract pyspark.sql.DataFrame method
-    _record_pins(type(spark.range(0)), pinned)
+    captured: list[tuple[str, str]] = []
+    # the session's concrete DataFrame and writer classes, which
+    # override the abstract pyspark.sql methods
+    df = spark.range(0)
+    _record(type(df), "localCheckpoint", "pin", captured, lambda d: d)
+    for method in _WRITES:
+        _record(type(df.write), method, "write", captured, lambda w: w._df)
     qs = registry.queries()
     for name in names:
-        pinned.clear()
+        captured.clear()
         try:
             plan = formatted_plan(qs[name](spark, sf_dir))
         except Exception as e:
@@ -64,10 +84,12 @@ def main() -> None:
         base = os.path.join(out_dir, f"{name}_{suffix}")
         with open(f"{base}.txt", "w") as fh:
             fh.write(plan)
+        seen = {"pin": 0, "write": 0}
         with open(f"{base}.pins.txt", "w") as fh:
-            for i, pin in enumerate(pinned):
-                fh.write(f"=== pin {i} ===\n{pin}\n")
-        print(name, "ok", len(pinned), "pins", flush=True)
+            for kind, sub in captured:
+                fh.write(f"=== {kind} {seen[kind]} ===\n{sub}\n")
+                seen[kind] += 1
+        print(name, "ok", seen["pin"], "pins", seen["write"], "writes", flush=True)
     spark.stop()
 
 

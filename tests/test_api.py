@@ -50,26 +50,6 @@ def test_dedup_clusters_custom_columns(spark):
     assert out[4].canonical_id == 4 and out[4].cluster_size == 1
 
 
-def test_minhash_python_signatures_bit_identical_to_expr(spark):
-    """The Arrow-batched signature path must produce the exact pair set
-    (and shared-band counts) of the pure-expression twin — same tokens,
-    same seeded md5, same affine family, same band hashes."""
-    from navigator_data_ingest_spark.operators.dedup import minhash_pairs
-    from navigator_data_ingest_spark.sources.tables import load_table
-    from tests.conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    fast = {
-        (r.doc_a, r.doc_b, r.n_shared_bands)
-        for r in minhash_pairs(docs, signatures="python").collect()
-    }
-    expr = {
-        (r.doc_a, r.doc_b, r.n_shared_bands)
-        for r in minhash_pairs(docs, signatures="expr").collect()
-    }
-    assert fast == expr and len(fast) > 0
-
-
 def test_connected_components_chain_converges_logarithmically(spark):
     """A 256-node path graph (worst case for min-label propagation,
     which needs diameter=255 rounds — past the 50-round safety cap) must

@@ -10,12 +10,14 @@ from __future__ import annotations
 
 import re
 import tempfile
+import uuid
 
 from pyspark.sql import functions as F
 
 from navigator_data_ingest_spark.operators.ingest import ingest_parser_input
 from navigator_data_ingest_spark.plans.audit import formatted_plan, plan_audit
 from navigator_data_ingest_spark.sources.sinks import write_parser_input
+from navigator_data_ingest_spark.sources.tables import scatter
 from tests.conftest import SF_SMOKE
 
 
@@ -30,6 +32,24 @@ def test_partition_pruning_on_geography(spark):
     n_all = spark.read.parquet(out).count()
     n_idn = df.count()
     assert 0 < n_idn < n_all
+
+
+def test_scatter_runs_nothing_and_round_robins(spark):
+    """``scatter`` over a DataFrame with an upstream shuffle plans one
+    round-robin exchange to the default parallelism and starts no job:
+    a partition-count probe through ``df.rdd`` would run the shuffle
+    under AQE while the query is still being built."""
+    sc = spark.sparkContext
+    counts = spark.range(0, 1000).groupBy((F.col("id") % 7).alias("k")).count()
+    group = f"scatter_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "scatter build")
+    try:
+        spread = scatter(spark, counts)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    exchanges = re.findall(r"RoundRobinPartitioning\((\d+)\)", formatted_plan(spread))
+    assert exchanges == [str(sc.defaultParallelism)]
 
 
 def test_bucketed_join_has_no_shuffle(spark):

@@ -64,340 +64,91 @@ def test_q5_dimensions_broadcast(spark):
     assert audit.cartesian_products == 0
 
 
-# excluded BY DESIGN: brute-force knn's all-pairs scoring, IVF's n x K
-# centroid scoring and the range join's non-equi interval probe are
-# deliberate broadcast nested-loops against tiny broadcast sides — the
-# LSH variant / equi-joins are the pure-equijoin scale paths
+# Nested-loop joins whose build side the plan cannot show to be bounded
+# (``PlanAudit.unbounded_nested_loops``): the side is a pin, a grouped
+# aggregate, a generated spine or a filtered stripe of the corpus, each
+# bounded by what it holds rather than by its operators. A listed key
+# whose plan has no such join fails the test, so the list cannot go
+# stale; a global aggregate, a LocalTableScan or a nested loop of two
+# such sides needs no entry.
 _DELIBERATE_NESTED_LOOP = {
+    # the broadcast query / anchor stripe (the corpus filtered by a
+    # derived modulus) scored against the corpus: the declared exact
+    # baselines that the LSH and IVF variants are measured against
     "sim_search_bruteforce",
-    "sim_search_ivf",
-    # 1-row derived query-stripe modulus broadcast (query_stripe):
-    # deliberate — it is what keeps the query set bounded at any scale
-    "sim_search_lsh",
-    # 1-row derived seed-stripe modulus broadcast (round 7): same
-    # discipline as query_stripe, keeps the BFS seed set bounded
-    "graph_harmonic_centrality",
+    "sim_search_recall_report",
     "emb_binary_hamming",
-    "emb_label_purity",
-    # 1-row corpus-count broadcast (idf's N) resolved inside the plan
-    "text_tfidf",
-    # 1-row direction-vector broadcast per power iteration: deliberate
-    "emb_pca_power",
-    # 1-row mu/sd stats broadcast: deliberate
-    "emb_outlier_zscore",
-    # 1-row corpus-totals broadcast feeding the 64-row ratio table
-    "corpus_dsir_weights",
-    "q_events_range_join",
-    # 1-row scalar-aggregate broadcast against customer (TPC-H Q22 shape)
-    "q22_idle_customers",
-    # 1-row percentile-cut broadcast back onto customer-grain spend
-    "q_ntile_spend",
-    # date-spine × type-dimension grid: both sides tiny by construction
-    "q_events_gapfill",
-    # K-row centroid table / per-source signature-and-size pair grid /
-    # 1-row node-count broadcast: metadata-sized sides, deliberate
-    "emb_kmeans",
-    "corpus_overlap",
-    "graph_pagerank",
-    # 16-row PQ codebook broadcast against the corpus: deliberate
+    "emb_intrinsic_dim",
+    "emb_matryoshka",
+    "emb_triplet_mining",
+    "dedup_recall_report",
+    # the pinned K-row centroid table scored against the corpus
+    "sim_search_ivf",
+    # the 16-row PQ codebook (a top-k over the corpus) broadcast
     "emb_pq",
     "sim_search_pq_adc",
-    # 1-row weight-sum broadcast / broadcast query set: deliberate
-    "sample_temperature",
-    # 1-row corpus-totals broadcast: deliberate
-    "corpus_mix_report",
-    # 1-row value-share threshold broadcast (TPC-H Q11 HAVING): deliberate
-    "q11_important_stock",
-    # 1-row max-order-date snapshot broadcast against the ≤5-row
-    # bucket grid source: deliberate (the standard 1-row crossJoin)
-    "q_orders_aging",
-    # 1-row (n, total) broadcast against the DAYS-bounded daily table
-    "stats_page_hinkley",
-    # 1-row time-midpoint broadcast: deliberate
-    "stats_ks_drift",
-    "stats_psi_drift",
-    # 1-row per-block spread-flags broadcast (the r11 exact variation
-    # discriminant) against the 1-row Frobenius-sums table: deliberate
-    "emb_cka_similarity",
-    # composes the declared exact brute-force baseline (cosine_topk
-    # broadcast-scores the bounded query set against every vector) to
-    # certify LSH recall — the nested loop IS the ground truth side
-    "sim_search_recall_report",
-    # n x K centroid scoring (the sim_search_ivf assignment pass) feeds
-    # the (cell, bucket) pair join: deliberate
-    "dedup_semantic",
-    # the same bounded centroid-stripe scoring + 1-row totals: deliberate
-    "emb_ivf_cell_census",
-    # 1-row session-count / totals / budget broadcasts: deliberate
-    "q_events_type_pmi",
-    "sample_neyman_allocation",
-    "q_events_session_depth",
-    "q_customer_order_cycle",
-    "q_customer_churn",
-    "q_orders_basket_size",
-    # 1-row broadcast of the constant-size bloom bitset: deliberate
-    "dedup_bloom",
-    # broadcast query set scored against the corpus twice (full-dim
-    # ground truth + truncated prefix): the declared exact-baseline shape
-    "emb_matryoshka",
-    # 1-row corpus-totals broadcast: deliberate
-    "corpus_upsample_plan",
-    # 1-row anchor + 1-row percentile-cut broadcasts: deliberate
-    "q_events_rfm",
-    # bounded-sample all-pairs ground truth (the affordable-exactness
-    # trick) + two 1-row report aggregates joined: deliberate
-    "dedup_recall_report",
-    # broadcast query codes against the corpus: the exact-hamming
-    # baseline (scale path bands code prefixes)
-    "emb_binary_hamming",
-    # 1-row decile-cut broadcast: deliberate
-    "stats_lorenz_deciles",
-    # broadcast probe codes against the corpus (hamming baseline)
-    "emb_label_purity",
-    # 1-row grand-total broadcast onto the bounded cell/margin grid
-    # (the contingency-table family): deliberate
-    "stats_chi_square",
-    "stats_crosstab_residuals",
-    "stats_mutual_information",
-    "stats_g_test",
-    # 1-row min/max + (n, k, ties) broadcasts onto the K-row group grid
-    # and its K²-bounded pair self-join (round-7 Dunn post-hoc)
-    "stats_dunn_posthoc",
-    # 1-row summed-variance broadcast onto the 1-row S aggregate
-    # (round-7 seasonal Mann-Kendall)
-    "stats_seasonal_mann_kendall",
-    # 1-row bigram-slot total broadcast onto the min-count pair table
-    "text_collocations",
-    # 1-row corpus-end broadcast (censoring cutoff) + 1-row total onto
-    # the DAYS-bounded lifetime table: deliberate
-    "stats_survival_km",
-    "stats_nelson_aalen",
-    # 1-row degree-cut / club-count / totals broadcasts on the
-    # BRANDS-bounded graph: deliberate
-    "graph_rich_club",
-    # 1-row totals broadcasts onto bounded grids: deliberate
-    "cdc_snapshot_diff",
-    "emb_duplicate_vectors",
-    # round-7: 1-row sample-invariant / totals / exact-median broadcasts
-    "q_tablesample",
-    "q_orders_seasonality_index",
-    "stats_median_test",
-    # round-7: 1-row quartile-cut + token-total broadcasts (the
-    # q_ntile_spend idiom)
-    "corpus_curriculum_order",
-    # round-7: 1-row fold-totals broadcast onto the K-row fold grid
-    "corpus_kfold_splits",
-    # round-7: 1-row vocabulary-size (V) broadcast feeding add-one
-    # smoothing on holdout bigrams
-    "corpus_lm_holdout_ppl",
-    # 1-row totals broadcast onto SOURCES/BRANDS/k-row bounded tables:
-    # deliberate
-    "corpus_upsample_apply",
-    "q_basket_lift",
-    "stats_anova",
-    # 1-row min/max range broadcast feeding the block bucketing /
-    # 1-row global-mean broadcast onto the NATION-grain table: deliberate
-    "stats_mann_whitney",
-    # column-bisect diagnostic projections of the two ops above — same
-    # plan, projected (round-7 driver hash-flip triage)
-    "stats_mann_whitney_u",
-    "stats_mann_whitney_z",
-    "stats_cramer_von_mises",
-    "stats_gains_table",
-    # min/max-range + totals + 1-row witness broadcasts over the
-    # distinct-spend block table: deliberate
-    "q_orders_pareto_8020",
-    "stats_fdr_bh",
-    # 1-row totals broadcast onto the 4-row flag grid: deliberate
-    "q_events_bot_screen",
-    # three 1-row stage-count broadcasts crossed into the funnel report
-    "q_events_funnel_steps",
-    # below_sums' 1-row min/max range broadcast (per-bucket rank)
-    "mm_aspect_buckets",
-    # 1-row median / per-dim stats broadcasts: deliberate
-    "stats_runs_test",
-    "emb_whitening",
-    # 1-row (N, avgdl) corpus-stats broadcast: deliberate
-    "text_bm25",
-    # 1-row corpus-total broadcast onto the vocab join: deliberate
-    "text_jsd_drift",
-    # 1-row normalizer / percentile-cut broadcasts: deliberate
-    "graph_hits",
-    "stats_var_cvar",
-    # 1-row bigram-type total broadcast: deliberate
-    "corpus_kn_smoothing",
-    # below_sums' 1-row min/max range broadcast (per-host rank)
-    "ingest_frontier_schedule",
-    # below_sums' 1-row min/max range broadcast (per-segment below-counts)
-    "stats_gini_exact",
-    # 1-row median broadcast: deliberate
-    "stats_mcnemar",
-    # 1-row min/max range broadcast feeding the block bucketing
-    "q_orders_skyline",
-    # 1-row detrend-mean / grand-center broadcasts: deliberate
-    "stats_spectral_peak",
-    "stats_control_chart",
-    # 1-row quantile-cuts broadcast: deliberate
-    "stats_winsorized_trimmed",
-    # 1-row totals/margin broadcasts onto the 35-cell grid: deliberate
-    "stats_two_way_anova",
-    # 1-row totals broadcast onto the K-row deviation table: deliberate
-    "stats_levene",
-    # 1-row rounded-mean centering broadcast: deliberate
-    "stats_deming_regression",
-    # (text_compression_ratio / sim_search_bruteforce_np left this list
-    # in round 9: their registered surfaces no longer carry the 1-row
-    # corpus-witness crossJoin — VERDICT r8 #2 oracle conversion)
-    # 1-row min/max range + tie-term broadcasts (Mann-Whitney family)
-    "stats_kruskal_wallis",
-    # O(D²) day-pair non-equi self-join on the DAYS-bounded calendar
-    # dimension (~3M pairs a decade — metadata-scale at any corpus size)
-    "stats_kendall_tau",
-    # dense bounded contingency grid + 1-row totals broadcast
-    "stats_cramers_v",
-    # 1-row graph-scalar (avg cc / transitivity) broadcast
-    "graph_clustering_coefficient",
-    # 1-row corpus-count broadcast (zeros-included Fano denominator)
-    "text_burstiness",
-    # composes the declared exact brute-force baseline + 1-row stripe
-    # size broadcast
-    "emb_hubness",
-    # O(D²) day-pair non-equi self-join on the DAYS-bounded calendar
-    # dimension + 1-row n/tie-term broadcasts (kendall/theil-sen family)
-    "stats_mann_kendall",
-    # 3-row block-size dimension against the DAYS-bounded day table
-    "stats_hurst_exponent",
-    # 1-row min/max revenue-range + grand-total broadcasts feeding the
-    # 1024-block cumulative-share prefix sum
-    "q_orders_abc_class",
-    # 1-row min/max score-range broadcast (Mann-Whitney AUC identity)
-    "stats_auc_classifier",
-    # 1-row min/max |d|-range broadcast feeding the 1024-block
-    # tie-averaged rank prefix sum (same idiom as stats_auc_classifier)
-    "stats_wilcoxon_signed_rank",
-    # 1-row K-count + 1-row rank-totals broadcasts: deliberate
-    "stats_friedman",
-    # 1-row OLS-sums broadcast back onto the DAYS-bounded day table
-    "stats_durbin_watson",
-    # broadcast bounded anchor stripe against the corpus (the declared
-    # sim_search_bruteforce shape) + 1-row-per-anchor extremum join-back
-    "emb_triplet_mining",
-    # 1-row contingency-totals broadcast onto the 5-row dose grid
-    "stats_cochran_armitage",
-    # 1-row normal-equation-moments broadcast back onto the DAYS-bounded
-    # day table (the stats_durbin_watson discipline)
-    "stats_granger_daily",
-    # L-row (≤ #labels) centroid-table broadcast against the corpus:
-    # the explosion-free silhouette shape, deliberate
-    "emb_silhouette",
-    # 1-row OLS/regression-moments broadcast back onto the bounded
-    # day / discount grids (the stats_durbin_watson discipline)
-    "stats_breusch_pagan",
-    "q_lineitem_discount_effect",
-    # 1-row shared pre/post exposure broadcast onto the type grid
-    "stats_poisson_rate_test",
-    # 1-row group-totals broadcast onto the bounded event-time grid
-    "stats_log_rank",
-    # L-row centroid-table broadcast self-join (bounded L² pair grid)
+    # L-row per-label centroid tables (grouped aggregates)
     "emb_centroid_distances",
-    # 1-row marginal-entropy broadcast onto the 1-row transition moments
-    "stats_entropy_rate_markov",
-    # 1-row uniform-expected broadcast onto the 7-row dow grid
-    "q_orders_dow_profile",
-    # L-row centroid broadcast against the corpus + 1-row MCC totals
-    "emb_confusion_metrics",
-    # 1-row min/max score-range + totals + best-J broadcasts (AUC idiom
-    # plus the witness join-back)
-    "stats_youden_j",
-    # 1-row moment broadcasts back onto the bounded day grid / diff set
-    "stats_bland_altman",
-    "stats_ljung_box",
-    "stats_grubbs",
-    # 1-row coefficient/SSE broadcasts onto the bounded day grid
-    "stats_cooks_distance",
-    "stats_pacf",
-    # T-row uniform seed + 1-row state-count/total broadcasts on the
-    # TYPES²-bounded transition grid
-    "q_events_markov_stationary",
-    # 1-row minority-size broadcast onto the ranked label partitions
-    "sample_class_balance",
-    # 1-row user-count / totals broadcasts onto bounded grids
-    "stats_cronbach_alpha",
-    "q_part_supply_risk",
-    "stats_retention_halflife",
-    # 1-row moment broadcast onto the bounded day grid
-    "stats_mahalanobis_outliers",
-    # 1-row total-mass broadcast onto the ≤K top rows
-    "text_topk_coverage",
-    # broadcast bounded anchor stripe against the corpus (two-NN)
-    "emb_intrinsic_dim",
-    # 1-row overall-mean / global-norm broadcasts onto bounded grids
-    "q_orders_month_index",
-    "emb_norm_by_label",
-    # 1-row pre × 1-row post period-moment cross join
-    "stats_fisher_z_corr_diff",
-    # 1-row kth-value broadcast onto the ≤k TakeOrdered rows
-    "stats_hill_tail",
-    # 1-row total broadcast onto the ≤k TakeOrdered rows
-    "q_events_heavy_hitters",
-    # 1-row group-totals / best-x broadcasts onto the bounded ECDF axis
-    "stats_ks_two_sample",
-    # 1-row global-totals broadcast onto the bounded segment grid
-    "stats_theil_index",
-    # 1-row total broadcast onto the 10-row digit grid
-    "stats_benford_second",
-    # broadcast bounded query stripe scored once + 1-row sweep stats
-    "emb_lsh_tuning",
-    # round 8: 1-row min/max range broadcast onto the block mapper
-    "stats_jonckheere_terpstra",
-    # 1-row day-count / max-|U| broadcasts onto the DAYS-bounded series
-    "stats_pettitt_changepoint",
-    "stats_bartels_rank",
-    # 5-row margin grids + 1-row totals (bounded 5x5 expectation)
-    "stats_weighted_kappa",
-    # 1-row month-count broadcast onto the 5-row treatment grid
-    "stats_kendall_w",
-    # distinct-types x 8-literal-segment spine
+    "emb_silhouette",
+    # per-source signature-and-size pair grid
+    "corpus_overlap",
+    # a pinned 1-row scalar: the seed-stripe modulus, the block-range
+    # min/max, the mu/sd stats
+    "graph_harmonic_centrality",
+    "q_orders_skyline",
+    "emb_outlier_zscore",
+    # the range join's non-equi interval probe against a pinned table
+    "q_events_range_join",
+    # generated spines: date spine x types, types x 8 literal segments
+    "q_events_gapfill",
     "q_events_sax_profile",
-    # 1-row plan-derived insert-shift broadcast (max orderkey)
-    "cdc_merge_into",
-    # bounded 10x10 cell self-join + 1-row tie-total broadcast
-    "stats_somers_d",
-    # 1-row A/B/m broadcasts over the bounded month x priority grid
-    "stats_quade",
-    # calendar-bounded day<=day Walsh pair join + 1-row range/total
+    # row / column margins of a bounded contingency grid broadcast onto
+    # its cells
+    "stats_chi_square",
+    "stats_cramers_v",
+    "stats_crosstab_residuals",
+    "stats_g_test",
+    "stats_weighted_kappa",
+    # the K-row group grid and its K^2 pair self-join (Dunn post-hoc)
+    "stats_dunn_posthoc",
+    # one moment row per period, pre x post
+    "stats_fisher_z_corr_diff",
+    # pair joins on the DAYS-bounded calendar or a bounded cell grid
     "stats_hodges_lehmann",
-    # 1-row min/max range broadcast onto the block mapper
-    "stats_ww_runs_two_sample",
-    # round 8: 1-row min/max range + totals broadcasts onto the
-    # distinct-value block mapper (_pooled_score_groups discipline)
-    "stats_ansari_bradley",
-    "stats_mood_scale",
-    "stats_brunner_munzel",
-    "stats_anderson_darling_2s",
-    # 1-row month-count broadcast onto the single L-sum row
-    "stats_page_trend",
-    # 1-row day-count broadcast resolving the half-offset in-plan
-    "stats_cox_stuart",
-    # 1-row total / cutoff-day broadcasts onto the day + user grains
-    "split_temporal",
-    # 1-row observed-statistic broadcast onto the 256-row replicate table
-    "stats_permutation_test",
-    # 1-row doc-grain audit broadcast onto the single family-audit row
-    "split_dedup_aware",
-    # 1-row totals/within-pairs broadcast onto the |TAUS|-row spine
-    "dedup_threshold_sweep",
-    # 1-row column/block-total broadcasts onto the single Q row
-    "stats_cochran_q",
+    "stats_kendall_tau",
+    "stats_mann_kendall",
+    "stats_somers_d",
+    "stats_hurst_exponent",
 }
 
 
-@pytest.mark.parametrize(
-    "name", [n for n in _PLAN_ONLY if n not in _DELIBERATE_NESTED_LOOP]
-)
+def test_unbounded_nested_loops_reads_the_build_side(spark):
+    from pyspark.sql import functions as F
+
+    df = spark.range(100)
+    top = F.broadcast(df.agg(F.max("id").alias("mx")))
+    lit = F.broadcast(spark.sql("SELECT * FROM VALUES (1) AS t(x)"))
+    grouped = F.broadcast(df.groupBy((F.col("id") % 3).alias("k")).count())
+
+    def n(joined):
+        return plan_audit(joined).unbounded_nested_loops
+
+    assert n(df.crossJoin(top)) == 0
+    assert n(df.crossJoin(lit)) == 0
+    assert n(df.crossJoin(F.broadcast(lit.crossJoin(top)))) == 0
+    # a Range is not bounded by construction, nor is a grouped aggregate
+    assert n(df.crossJoin(grouped)) == 1
+    assert n(df.crossJoin(F.broadcast(df.crossJoin(top)))) == 1
+    assert n(df.crossJoin(grouped).crossJoin(top)) == 1
+
+
+@pytest.mark.parametrize("name", _PLAN_ONLY)
 def test_no_accidental_cartesian_products(spark, name):
-    audit = plan_audit(_Q[name](spark, SF_CORRECT))
-    assert audit.cartesian_products == 0, f"{name} plans a cartesian product"
+    n = plan_audit(_Q[name](spark, SF_CORRECT)).unbounded_nested_loops
+    if name in _DELIBERATE_NESTED_LOOP:
+        assert n > 0, f"{name} plans no unbounded nested loop: unlist it"
+    else:
+        assert n == 0, f"{name} plans a nested loop on an unbounded side"
 
 
 # Every query allowed to plan an UNPARTITIONED (global) window. A global

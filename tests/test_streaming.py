@@ -13,10 +13,12 @@ import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from navigator_data_ingest_spark.streaming.streams import (
     _run_to_memory,
     read_stream_events,
+    scoped_conf,
     windowed_dedup_agg,
 )
 
@@ -392,3 +394,17 @@ def test_quota_enforcer_state_carries_across_batches(spark):
     assert [(r.event_id, r.allowed) for r in rows] == [
         (1, True), (2, True), (3, True), (4, False)
     ]
+
+
+def test_scoped_conf_restores_or_unsets(spark):
+    """A key the session had gets its value back and a key it lacked is
+    unset again, also when the block raises."""
+    had, lacked = "spark.sql.shuffle.partitions", "spark.nav.test.scoped"
+    before = spark.conf.get(had)
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, {had: "3", lacked: "x"}):
+            assert spark.conf.get(had) == "3"
+            assert spark.conf.get(lacked) == "x"
+            raise RuntimeError("drain failed")
+    assert spark.conf.get(had) == before
+    assert spark.conf.get(lacked, None) is None
