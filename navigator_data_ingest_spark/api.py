@@ -31,20 +31,8 @@ def _as_docs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, content_hash, canonical_id, is_duplicate) by exact md5 match."""
-    docs = _as_docs(df, id_col, text_col)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("content_hash")
-    return (
-        docs.withColumn("content_hash", F.md5("text"))
-        .withColumn("canonical_id", F.min("doc_id").over(w))
-        .select(
-            F.col("doc_id").alias(id_col),
-            "content_hash",
-            "canonical_id",
-            (F.col("doc_id") != F.col("canonical_id")).alias("is_duplicate"),
-        )
-    )
+    out = _dedup.exact_groups(_as_docs(df, id_col, text_col))
+    return out.withColumnRenamed("doc_id", id_col)
 
 
 def minhash_dedup_pairs(
@@ -111,27 +99,8 @@ def cosine_topk(
     return _sim.cosine_topk(c, q, k)
 
 
-def label_centroids(
-    df: DataFrame,
-    dim: int,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-label centroid of a vector column WITHOUT row explosion:
-    (label, centroid array<double>). ``dim`` is the vector length —
-    passed explicitly so no driver-side peek at the data is needed.
-
-    One shuffle on ~|labels| groups; each dimension is its own JVM-side
-    partial aggregate (the posexplode alternative shuffles dim× the
-    corpus — see operators/similarity.py:emb_centroids).
-    """
-    src = df.select(F.col(label_col).alias("label"), F.col(vec_col).alias("vec"))
-    per_dim = [F.avg(F.col("vec").getItem(i)).alias(f"d{i}") for i in range(dim)]
-    agg = src.groupBy("label").agg(*per_dim)
-    return agg.select(
-        F.col("label").alias(label_col),
-        F.array(*[F.col(f"d{i}") for i in range(dim)]).alias("centroid"),
-    )
+# (label_col, centroid) per label, without row explosion
+label_centroids = _sim.label_centroids
 
 
 def gopher_rules(

@@ -32,7 +32,7 @@ from navigator_data_ingest_spark.functions.exact import (
     sp_units,
 )
 from navigator_data_ingest_spark.functions.prefix import below_sums
-from navigator_data_ingest_spark.sources.tables import load_table, scatter
+from navigator_data_ingest_spark.sources.tables import load_table, pin, scatter
 
 
 def _r(col, alias):  # round-and-alias helper for oracle-comparable doubles
@@ -1005,13 +1005,13 @@ def q_customer_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins the customer dim for segment attribution.
     """
     orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
-    # r12 (guide §2.4 duplicated subtrees): intersect AND subtract each
-    # consume both year slices, so the unpinned shape scanned orders 4x.
-    # ONE customer-grain pass derives both membership flags (a custkey
-    # is in y96 iff it has >= 1 order in [96,97) — max(flag) over the
-    # group is exactly that), the custkey-bounded flag table pins, and
-    # the set operators consume filtered views of the pin: identical
-    # y96/y97 sets, orders scanned ONCE.
+    # intersect AND subtract each consume both year slices, so the
+    # unpinned shape scanned orders 4x. ONE customer-grain pass derives
+    # both membership flags (a custkey is in y96 iff it has >= 1 order
+    # in [96,97) — max(flag) over the group is exactly that), the
+    # custkey-bounded flag table pins, and the set operators consume
+    # filtered views of the pin: identical y96/y97 sets, orders scanned
+    # ONCE.
     in96 = (F.col("o_orderdate") >= F.lit("1996-01-01")) & (
         F.col("o_orderdate") < F.lit("1997-01-01")
     )
@@ -1025,7 +1025,7 @@ def q_customer_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(in96.cast("int")).alias("a96"),
             F.max(in97.cast("int")).alias("a97"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     y96 = yy.where(F.col("a96") == 1).select("o_custkey")
     y97 = yy.where(F.col("a97") == 1).select("o_custkey")
@@ -1302,14 +1302,14 @@ def q_events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"), "event_type"
     )
-    # r12 (guide §2.4): span and the type dimension re-scanned events
-    # (3 scans). Both derive EXACTLY from the (day x type)-bounded
-    # daily table (same distinct days/types, min/max skip NULLs the
-    # same way) — pin it; the fact is scanned once.
+    # span and the type dimension re-scanned events (3 scans). Both
+    # derive EXACTLY from the (day x type)-bounded daily table (same
+    # distinct days/types, min/max skip NULLs the same way) — pin it;
+    # the fact is scanned once.
     daily = (
         ev.groupBy("day", "event_type")
         .agg(F.count(F.lit(1)).alias("n_raw"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     span = daily.agg(
         F.min("day").alias("d0"), F.max("day").alias("d1")
@@ -1980,18 +1980,17 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (NULL = stage not reached) and the reached-stage depth.
     """
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    # r12 (guide §2.4 duplicated subtrees): v feeds BOTH the click stage
-    # and the final join (and rides inside p via c), c feeds the
-    # purchase stage and the final join — unpinned, the plan expanded to
-    # v x3 / c x2 = SIX events scans. Pinning the user-grain stage
-    # tables makes each stage scan events exactly once (three
-    # type-filtered scans total); the pins are user-grain aggregates,
-    # orders of magnitude below event grain.
+    # v feeds BOTH the click stage and the final join (and rides inside
+    # p via c), c feeds the purchase stage and the final join —
+    # unpinned, the plan expanded to v x3 / c x2 = SIX events scans.
+    # Pinning the user-grain stage tables makes each stage scan events
+    # exactly once (three type-filtered scans total); the pins are
+    # user-grain aggregates, orders of magnitude below event grain.
     v = (
         ev.where(F.col("event_type") == FUNNEL_STEPS[0])
         .groupBy("user_id")
         .agg(F.min("ts").alias("view_ts"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     c = (
         ev.where(F.col("event_type") == FUNNEL_STEPS[1])
@@ -1999,7 +1998,7 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("ts") > F.col("view_ts"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("click_ts"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     p = (
         ev.where(F.col("event_type") == FUNNEL_STEPS[2])
@@ -2393,15 +2392,15 @@ def q_events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequent / highest spend), matching RFM convention.
     """
     ev = load_table(spark, sf_dir, "events")
-    # r12 (guide §2.4): per_user feeds the anchor aggregate AND the
-    # recency join; anchored feeds the quartile cuts AND the scoring
-    # pass — unpinned, the events scan + user collapse ran 4x. User
-    # grain: pin both; the fact is scanned ONCE.
+    # per_user feeds the anchor aggregate AND the recency join;
+    # anchored feeds the quartile cuts AND the scoring pass —
+    # unpinned, the events scan + user collapse ran 4x. User grain:
+    # pin both; the fact is scanned ONCE.
     per_user = ev.groupBy("user_id").agg(
         F.max(F.col("ts").cast("date")).alias("last_day"),
         F.count(F.lit(1)).alias("frequency"),
         F.expr("sum(cast(floor(value * 100 + 0.5) as bigint))").alias("cents"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     anchored = per_user.join(
         F.broadcast(per_user.agg(F.max("last_day").alias("anchor")))
     ).select(
@@ -2409,7 +2408,7 @@ def q_events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff("anchor", "last_day").alias("recency_days"),
         "frequency",
         "cents",
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     cuts = anchored.agg(
         *[
             F.expr(f"percentile({m}, {q})").alias(f"{m}_{int(q * 100)}")
@@ -3241,10 +3240,10 @@ def q_events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dur_us"),
         )
     )
-    # r12 (guide §2.4): the start/end boundary union re-scanned events
-    # per side (3 scans with loads). inline() emits BOTH boundaries of
-    # a row in the SAME pass — an identical boundary multiset (the
-    # sweep window sorts it anyway) — so the union costs one scan.
+    # the start/end boundary union re-scanned events per side (3 scans
+    # with loads). inline() emits BOTH boundaries of a row in the SAME
+    # pass — an identical boundary multiset (the sweep window sorts it
+    # anyway) — so the union costs one scan.
     bounds = ev.select(
         "event_type",
         F.expr(
@@ -3539,10 +3538,10 @@ def stats_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .groupBy("lang", "source")
         .agg(F.count(F.lit(1)).alias("o"))
-        # r12 (guide §2.4): cells feeds the margins, the grand total AND
-        # the term pass — unpinned, the documents scan re-ran per copy.
-        # |langs| x |sources| grain: pin it; the fact is scanned ONCE.
-        .localCheckpoint(eager=False)
+        # cells feeds the margins, the grand total AND the term pass —
+        # unpinned, the documents scan re-ran per copy. |langs| x
+        # |sources| grain: pin it; the fact is scanned ONCE.
+        .transform(pin)
     )
     rowt = cells.groupBy("lang").agg(F.sum("o").alias("row_tot"))
     colt = cells.groupBy("source").agg(F.sum("o").alias("col_tot"))
@@ -3737,10 +3736,10 @@ def stats_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .groupBy("lang", "source")
         .agg(F.count(F.lit(1)).alias("o"))
-        # r12 (guide §2.4): cells feeds the margins, the grand total AND
-        # the term pass — unpinned, the documents scan re-ran per copy.
-        # |langs| x |sources| grain: pin it; the fact is scanned ONCE.
-        .localCheckpoint(eager=False)
+        # cells feeds the margins, the grand total AND the term pass —
+        # unpinned, the documents scan re-ran per copy. |langs| x
+        # |sources| grain: pin it; the fact is scanned ONCE.
+        .transform(pin)
     )
     rowt = cells.groupBy("lang").agg(F.sum("o").alias("row_tot"))
     colt = cells.groupBy("source").agg(F.sum("o").alias("col_tot"))
@@ -3910,14 +3909,14 @@ def stats_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.expr(sp_epoch_us("ts")).alias("us")
     )
-    # r12 (guide §2.4): users feeds the lifetime table and (via the
-    # max-of-last identity) the corpus end — unpinned, the events scan
-    # ran per copy. Pin the user-grain table and derive the corpus end
-    # FROM it (max(last_us) == max(us): every event belongs to some
-    # user_id group, the NULL group included): events is scanned ONCE.
+    # users feeds the lifetime table and (via the max-of-last
+    # identity) the corpus end — unpinned, the events scan ran per
+    # copy. Pin the user-grain table and derive the corpus end FROM it
+    # (max(last_us) == max(us): every event belongs to some user_id
+    # group, the NULL group included): events is scanned ONCE.
     users = ev.groupBy("user_id").agg(
         F.min("us").alias("first_us"), F.max("us").alias("last_us")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     end = users.agg(F.max("last_us").alias("end_us"))
     lives = (
         users.crossJoin(F.broadcast(end))
@@ -3935,8 +3934,8 @@ def stats_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_t = lives.groupBy("t_days").agg(
         F.sum(1 - F.col("censored")).alias("d_events"),
         F.sum("censored").alias("c_censored"),
-    # per_t feeds the total AND the KM pass (§2.4); ~31-day grain -- pin
-    ).localCheckpoint(eager=False)
+    # per_t feeds the total AND the KM pass; ~31-day grain -- pin
+    ).transform(pin)
     run = Window.orderBy("t_days").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -4117,10 +4116,10 @@ def stats_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        # r12 (guide §2.4): daily fans out to both pair sides AND the
-        # median-level agg — 3 events scans unpinned. (type x day) is
-        # bounded, so pin; the fact is scanned once.
-        .localCheckpoint(eager=False)
+        # daily fans out to both pair sides AND the median-level agg
+        # — 3 events scans unpinned. (type x day) is bounded, so pin;
+        # the fact is scanned once.
+        .transform(pin)
     )
     a = daily.select(
         "event_type", F.col("day").alias("d1"), F.col("cnt").alias("c1")
@@ -4566,15 +4565,15 @@ def q_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    # r12 (guide §2.4): baskets feeds the order total, the item counts
-    # AND the pair mining — unpinned, the lineitem scan + basket
-    # collapse ran 3x (4 fact scans). Order grain with a bounded brand
-    # array: pin it; the fact is scanned ONCE.
+    # baskets feeds the order total, the item counts AND the pair
+    # mining — unpinned, the lineitem scan + basket collapse ran 3x (4
+    # fact scans). Order grain with a bounded brand array: pin it; the
+    # fact is scanned ONCE.
     baskets = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("p_brand")).alias("brands"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     n_orders = baskets.agg(F.count(F.lit(1)).alias("n_total"))
     item = (
@@ -4817,7 +4816,7 @@ def _click_purchase_values(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("is_a").cast("bigint")).alias("ca"),
             F.sum((~F.col("is_a")).cast("bigint")).alias("cb"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
 
 
@@ -5134,13 +5133,13 @@ def q_events_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(value, 0.5)").alias("med"),
         F.count(F.lit(1)).alias("n"),
     )
-    # r12 (guide §2.4): dev feeds the MAD aggregate AND the flag pass —
-    # unpinned, the events scan + median join ran twice (4 fact scans
-    # with med's own copy). Pin the narrow deviation table; the fact is
-    # scanned twice total (median pass + deviation build).
+    # dev feeds the MAD aggregate AND the flag pass — unpinned, the
+    # events scan + median join ran twice (4 fact scans with med's own
+    # copy). Pin the narrow deviation table; the fact is scanned twice
+    # total (median pass + deviation build).
     dev = ev.join(F.broadcast(med), "event_type").withColumn(
         "dev", F.abs(F.col("value") - F.col("med"))
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     mad = dev.groupBy("event_type").agg(
         F.expr("percentile(dev, 0.5)").alias("mad")
     )
@@ -6355,14 +6354,14 @@ def q_events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "*", F.explode(F.expr(f"array(ps div {lb}, ps div {lb} - 1)")).alias("bkt")
     )
     cc = clicks.withColumn("bkt", F.expr(f"cs div {lb}"))
-    # r12 (guide §2.4): pairs feeds the touch counts AND the credit
-    # rollup — unpinned, the bucket equijoin (and both event passes
-    # under it) ran twice. Candidate-pair grain (bounded by the
-    # lookback window): pin it; events is scanned twice total
-    # (clicks + purchases).
+    # pairs feeds the touch counts AND the credit rollup —
+    # unpinned, the bucket equijoin (and both event passes under
+    # it) ran twice. Candidate-pair grain (bounded by the lookback
+    # window): pin it; events is scanned twice total (clicks +
+    # purchases).
     pairs = pp.join(cc, ["user_id", "bkt"]).where(
         (F.col("cs") < F.col("ps")) & (F.col("cs") >= F.col("ps") - lb)
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     touches = pairs.groupBy("purchase_id").agg(
         F.sum("cnt").alias("n_touch")
     )
@@ -6524,15 +6523,15 @@ def q_orders_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cast(round(o_totalprice * 100) as bigint) AS cents",
         "datediff(o_orderdate, date'1970-01-01') AS days",
     )
-    # r12 (guide §2.4): b is consumed by BOTH the in-block window and
-    # the 64-row block table, and each copy re-derived rng — 4 orders
-    # scans unpinned. Pinning the 1-row range removes the duplicated
-    # min/max passes; the two fact passes that remain (window + block
-    # max) are the shape's floor without a fact-grain pin, which at
-    # 100 TB would cost more than the narrow column-pruned rescan.
+    # b is consumed by BOTH the in-block window and the 64-row block
+    # table, and each copy re-derived rng — 4 orders scans unpinned.
+    # Pinning the 1-row range removes the duplicated min/max passes;
+    # the two fact passes that remain (window + block max) are the
+    # shape's floor without a fact-grain pin, which at 100 TB would
+    # cost more than the narrow column-pruned rescan.
     rng = o.agg(
         F.min("cents").alias("mn"), F.max("cents").alias("mx")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     b = o.crossJoin(F.broadcast(rng)).select(
         "o_orderkey",
         "cents",
@@ -6913,10 +6912,10 @@ def stats_two_way_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.expr("value * value")).alias("q"),
         F.sum(F.expr(cents)).alias("sc"),
         F.sum(F.expr(f"cast({cents} as decimal(38,0)) * {cents}")).alias("qc"),
-    # r12 (guide §2.4): cells fans out to both margins and the grand
-    # totals — 3 events scans unpinned. The 5x7 grid is bounded, so
-    # pin; the fact is scanned once.
-    ).localCheckpoint(eager=False)
+    # cells fans out to both margins and the grand totals — 3 events
+    # scans unpinned. The 5x7 grid is bounded, so pin; the fact is
+    # scanned once.
+    ).transform(pin)
     ca = cells.groupBy("event_type").agg(
         F.sum("n").alias("na"), F.sum("s").alias("sa")
     )
@@ -7064,10 +7063,10 @@ def stats_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = ev.join(F.broadcast(med), "event_type").select(
         "event_type", F.abs(F.col("value") - F.col("med")).alias("z")
     )
-    # r12 (guide §2.4): g fans out to tot and j — unpinned, the whole
-    # ev-join-med subtree (2 events scans) duplicated, 4 scans total.
-    # K-bounded, so pin; events is scanned twice (the exact-median
-    # two-pass floor), not 4x.
+    # g fans out to tot and j — unpinned, the whole ev-join-med
+    # subtree (2 events scans) duplicated, 4 scans total. K-bounded,
+    # so pin; events is scanned twice (the exact-median two-pass
+    # floor), not 4x.
     g = (
         z.groupBy("event_type")
         .agg(
@@ -7075,7 +7074,7 @@ def stats_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("z").alias("sz"),
             F.sum(F.expr("z * z")).alias("qz"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = g.agg(
         F.sum("n").alias("nt"),
@@ -7278,7 +7277,7 @@ def _event_type_rank_sums(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, 
     tv = (
         ev.groupBy("event_type", "value")
         .agg(F.count(F.lit(1)).alias("cg"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     vc = tv.groupBy("value").agg(F.sum("cg").alias("c"))
     ranked = below_sums(vc, "value", below=F.col("c")).select(
@@ -7484,10 +7483,10 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_orderpriority", "o_orderstatus")
         .agg(F.count(F.lit(1)).alias("o"))
-        # r12 (guide §2.4): cells fans out to rowt/colt/tot/dense — 4
-        # orders scans unpinned. The |priorities|x|statuses| grid is
-        # bounded, so pin; the fact is scanned once.
-        .localCheckpoint(eager=False)
+        # cells fans out to rowt/colt/tot/dense — 4 orders scans
+        # unpinned. The |priorities|x|statuses| grid is bounded, so
+        # pin; the fact is scanned once.
+        .transform(pin)
     )
     rowt = cells.groupBy("o_orderpriority").agg(F.sum("o").alias("rt"))
     colt = cells.groupBy("o_orderstatus").agg(F.sum("o").alias("ct"))
@@ -7736,17 +7735,17 @@ def stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberate non-equi self-join as stats_kendall_tau), and S / tie
     terms stay integers until the final ratio.
     """
-    # r12 (guide §2.4 duplicated subtrees): d fans out to BOTH pair
-    # sides, the n count and the tie table — unpinned, the orders fact
-    # scanned 4x in one plan. d is DAYS-bounded (calendar grain at any
-    # corpus size), so pin it; the fact is scanned once.
+    # d fans out to BOTH pair sides, the n count and the tie table —
+    # unpinned, the orders fact scanned 4x in one plan. d is
+    # DAYS-bounded (calendar grain at any corpus size), so pin it; the
+    # fact is scanned once.
     d = (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_orderdate")
         .agg(
             F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("y")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     a = d.select(F.col("o_orderdate").alias("da"), F.col("y").alias("ya"))
     b = d.select(F.col("o_orderdate").alias("db"), F.col("y").alias("yb"))
@@ -7952,11 +7951,11 @@ def q_orders_abc_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     Class boundaries compare EXACT integer products (cum*1000 vs
     total*cut) — no float share crosses an inequality.
     """
-    # r12 (guide §2.4 duplicated subtrees): pr feeds rng, tot AND the
-    # block pass (which itself fans out to the block-offset side) —
-    # unpinned, the lineitem scan + part-grain aggregation ran 5x in one
-    # plan. Pin the part-grain table: the fact is scanned ONCE and the
-    # range/total/block passes re-read the (|parts|-sized) pin.
+    # pr feeds rng, tot AND the block pass (which itself fans out to the
+    # block-offset side) — unpinned, the lineitem scan + part-grain
+    # aggregation ran 5x in one plan. Pin the part-grain table: the fact
+    # is scanned ONCE and the range/total/block passes re-read the
+    # (|parts|-sized) pin.
     pr = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_partkey")
@@ -7967,7 +7966,7 @@ def q_orders_abc_class(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("bigint")
             ).alias("cents")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     rng = pr.agg(F.min("cents").alias("mn"), F.max("cents").alias("mx"))
     b = pr.crossJoin(F.broadcast(rng)).withColumn(
@@ -8453,7 +8452,7 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # again to the block table), so unpinned the events scan + user
         # pairing + |d| groupBy ran 4x in one plan. Distinct-|d| grain is
         # far below event grain: pin it; the fact is scanned ONCE.
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     r = below_sums(vc, "ad", below=F.col("p") + F.col("q"))
     agg = r.agg(
@@ -8561,16 +8560,16 @@ def stats_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", "event_type", "value")
     )
-    # r12 (guide §2.4 duplicated subtrees): g feeds the completeness
-    # window AND (via per_type) two consumers, and kt re-scanned the
-    # fact — 4 events scans unpinned. g is (user x type) grain (far
-    # below fact), so pin it; k is read off the PIN (every event_type
-    # in ev survives the groupBy, so countDistinct over g is the
-    # identical value) — the events fact is scanned ONCE.
+    # g feeds the completeness window AND (via per_type) two
+    # consumers, and kt re-scanned the fact — 4 events scans
+    # unpinned. g is (user x type) grain (far below fact), so pin it;
+    # k is read off the PIN (every event_type in ev survives the
+    # groupBy, so countDistinct over g is the identical value) — the
+    # events fact is scanned ONCE.
     g = (
         ev.groupBy("user_id", "event_type")
         .agg(F.round(F.sum("value") * 100).cast("bigint").alias("v"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     kt = F.broadcast(
         g.agg(F.countDistinct("event_type").alias("k"))
@@ -8597,7 +8596,7 @@ def stats_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("k").alias("k"),
             F.sum(F.col("ct") * F.col("ct") - 1).alias("tie_part"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # mean_rank, χ² and the tie-adjusted χ² are PURE integer rationals
     # of the BIGINT rank moments (rr = Σr2² summed as DECIMAL(38,0)):
@@ -9466,12 +9465,12 @@ def stats_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
         )
         .withColumn("lnp", F.expr("ln(cast(cents as double) / 100.0)"))
-        # r12 (guide §2.4): o feeds the μ pass, the σ pass AND the
-        # below-median share — unpinned, the orders scan ran per pass
-        # (5 fact scans with the fit re-expansion). Pin the 3-column
-        # order-grain table; the fact is scanned ONCE and the two-pass
-        # moments run over the pin.
-        .localCheckpoint(eager=False)
+        # o feeds the μ pass, the σ pass AND the below-median share —
+        # unpinned, the orders scan ran per pass (5 fact scans with
+        # the fit re-expansion). Pin the 3-column order-grain table;
+        # the fact is scanned ONCE and the two-pass moments run over
+        # the pin.
+        .transform(pin)
     )
     mu = o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"), F.avg("lnp").alias("mu")
@@ -9485,13 +9484,13 @@ def stats_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         "n",
         "mu",
-        # sigma undefined for a single-order priority group (round-9
-        # degenerate-input probe): NULL, not an ANSI crash
+        # sigma undefined for a single-order priority group: NULL, not
+        # an ANSI crash
         "CASE WHEN n >= 2 THEN sqrt(css / (n - 1.0)) END AS sigma",
         "cast(round(exp(mu) * 100.0) as bigint) AS fit_median_cents",
-    # fit feeds the share join-back AND the final report (§2.4);
+    # fit feeds the share join-back AND the final report;
     # priority grain — pin it
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     back = o.join(
         F.broadcast(fit.select("o_orderpriority", "fit_median_cents")),
         "o_orderpriority",
@@ -9717,11 +9716,11 @@ def q_events_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("v_ts")
         )
         .where(F.col("v_ts").isNotNull())
-        # r12 (guide §2.4): u feeds the purchase probe AND the cohort
-        # rollup — unpinned, its events scan ran twice (3 total). User
-        # grain, so pin; events is scanned twice (first-view agg +
-        # purchase probe, the two-pass floor).
-        .localCheckpoint(eager=False)
+        # u feeds the purchase probe AND the cohort rollup — unpinned,
+        # its events scan ran twice (3 total). User grain, so pin;
+        # events is scanned twice (first-view agg + purchase probe,
+        # the two-pass floor).
+        .transform(pin)
     )
     p = ev.where(F.col("event_type") == "purchase").join(u, "user_id")
     first_p = (
@@ -10002,7 +10001,7 @@ def stats_gini_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     vc = (
         r.groupBy("c_mktsegment", "v")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     j = below_sums(vc, "v", by=["c_mktsegment"], bb=F.col("c"))
     agg = j.groupBy("c_mktsegment").agg(
@@ -10836,11 +10835,11 @@ def stats_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("yr", "l_partkey")
         .agg(F.sum("q").alias("sq"), F.sum("sp").alias("sp"))
         .where(F.col("sq") > 0)
-        # r12 (guide §2.4): yp fans out to the base-year scalar, the
-        # base basket and the index join — 3 fact joins unpinned.
-        # (year x part) grain is part-dimension-bounded, so pin; the
+        # yp fans out to the base-year scalar, the base basket and
+        # the index join — 3 fact joins unpinned. (year x part)
+        # grain is part-dimension-bounded, so pin; the
         # lineitem-orders join runs once.
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     base_yr = F.broadcast(yp.agg(F.min("yr").alias("byr")))
     base = (
@@ -11089,10 +11088,10 @@ def q_events_type_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
         .select("user_id", "event_type")
         .distinct()
-        # r12 (guide §2.4): ut feeds both self-join sides AND the
-        # per-type totals — unpinned, the events scan + distinct ran 3x.
-        # (user, type) grain: pin it; the fact is scanned ONCE.
-        .localCheckpoint(eager=False)
+        # ut feeds both self-join sides AND the per-type totals —
+        # unpinned, the events scan + distinct ran 3x. (user, type)
+        # grain: pin it; the fact is scanned ONCE.
+        .transform(pin)
     )
     a = ut.select("user_id", F.col("event_type").alias("t1"))
     b = ut.select(F.col("user_id").alias("_u"), F.col("event_type").alias("t2"))
@@ -11183,11 +11182,11 @@ def stats_entropy_rate_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    # r12 (guide §2.4): trans fans out to the row marginal (consumed
-    # twice) and the joint entropy join — 3 events scans AND 3 runs of
-    # the per-user lead window unpinned. TYPES²-bounded, so pin; the
-    # fact and its window run once.
-    trans = trans.localCheckpoint(eager=False)
+    # trans fans out to the row marginal (consumed twice) and the
+    # joint entropy join — 3 events scans AND 3 runs of the per-user
+    # lead window unpinned. TYPES²-bounded, so pin; the fact and its
+    # window run once.
+    trans = pin(trans)
     rows = trans.groupBy("a").agg(F.sum("c").alias("ca"))
     j = trans.join(
         F.broadcast(rows.withColumnRenamed("a", "_a")), F.col("a") == F.col("_a")
@@ -11575,10 +11574,10 @@ def stats_grubbs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("y")
         )
-        # r12 (guide §2.4): d feeds the moment agg AND scored, and the
-        # scored subtree is consumed twice (best + witness filter) — 4
-        # orders scans unpinned. DAYS-bounded, so pin; fact scanned once.
-        .localCheckpoint(eager=False)
+        # d feeds the moment agg AND scored, and the scored subtree is
+        # consumed twice (best + witness filter) — 4 orders scans
+        # unpinned. DAYS-bounded, so pin; fact scanned once.
+        .transform(pin)
     )
     m = F.broadcast(
         d.agg(
@@ -11676,11 +11675,11 @@ def stats_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("y")
         )
         .withColumn("t", F.row_number().over(Window.orderBy("day")))
-        # r12 (guide §2.4): d feeds the moment agg AND e, and e is
-        # consumed twice (sse + scored) — 4 orders scans and 4 runs of
-        # the global row_number window unpinned. DAYS-bounded, so pin;
-        # fact scanned once, window computed once.
-        .localCheckpoint(eager=False)
+        # d feeds the moment agg AND e, and e is consumed twice (sse +
+        # scored) — 4 orders scans and 4 runs of the global row_number
+        # window unpinned. DAYS-bounded, so pin; fact scanned once,
+        # window computed once.
+        .transform(pin)
     )
     s = F.broadcast(
         d.agg(
@@ -11922,16 +11921,16 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    # r12 (guide §2.4): rows is consumed by p AND twice by the
-    # empirical marginal — unpinned, the per-user lead window re-ran
-    # per copy. Pin the TYPES²-bounded transition grid; rows and p
-    # read the pin and the fact (and its window) runs once.
-    trans = trans.localCheckpoint(eager=False)
+    # rows is consumed by p AND twice by the empirical marginal —
+    # unpinned, the per-user lead window re-ran per copy. Pin the
+    # TYPES²-bounded transition grid; rows and p read the pin and
+    # the fact (and its window) runs once.
+    trans = pin(trans)
     rows = trans.groupBy("a").agg(F.sum("c").alias("ca"))
     p = (
         trans.join(F.broadcast(rows.withColumnRenamed("a", "_a")), F.col("a") == F.col("_a"))
         .selectExpr("a", "b", "(cast(c as double) / ca) AS pij")
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     states = p.select(F.col("a").alias("s")).distinct()
     n_states = F.broadcast(states.agg(F.count(F.lit(1)).alias("k")))
@@ -11942,7 +11941,7 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("b")
             .agg(F.round(F.sum(F.expr("pv * pij")), 9).alias("pv"))
             .withColumnRenamed("b", "s")
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
     emp = F.broadcast(
         rows.crossJoin(F.broadcast(rows.agg(F.sum("ca").alias("tot"))))
@@ -12039,11 +12038,11 @@ def stats_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id", "event_type")
         .agg(F.round(F.sum("value") * 100).cast("bigint").alias("x"))
-        # r12 (guide §2.4): the (user, type) grid feeds the user count,
-        # the item moments AND the user totals — unpinned, the events
-        # scan + grid collapse ran 3x (4 fact scans). Pin it; the fact
-        # is scanned ONCE.
-        .localCheckpoint(eager=False)
+        # the (user, type) grid feeds the user count, the item moments
+        # AND the user totals — unpinned, the events scan + grid
+        # collapse ran 3x (4 fact scans). Pin it; the fact is scanned
+        # ONCE.
+        .transform(pin)
     )
     u = F.broadcast(
         ev.agg(F.countDistinct("user_id").alias("uu"))
@@ -12235,8 +12234,8 @@ def q_part_supply_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_partkey").isNotNull() & F.col("l_suppkey").isNotNull()
     )
-    # r12 (guide §2.4/§2.3): rel and rev each re-scanned the fact, and
-    # the grid's tot fan-out doubled both — 4 lineitem scans unpinned.
+    # rel and rev each re-scanned the fact, and the grid's tot
+    # fan-out doubled both — 4 lineitem scans unpinned.
     # ONE (part, supplier)-grain aggregation carries the revenue
     # partials (rev per part = sum of its per-relationship sums, an
     # exact integer regroup), pins at relationship cardinality, and
@@ -12250,7 +12249,7 @@ def q_part_supply_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("bigint")
             ).alias("rel_cents")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     per_part = rel.groupBy("l_partkey").agg(
         F.count(F.lit(1)).alias("n_suppliers")
@@ -12262,7 +12261,7 @@ def q_part_supply_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = j.groupBy("n_suppliers").agg(
         F.count(F.lit(1)).alias("n_parts"),
         F.sum("rev_cents").alias("rev_cents"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     tot = F.broadcast(
         grid.agg(
             F.sum("n_parts").alias("tp"), F.sum("rev_cents").alias("tr")
@@ -12329,14 +12328,14 @@ def stats_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
         .select("user_id", F.col("ts").cast("date").alias("day"))
     )
-    # r12 (guide §2.4): first feeds the ages join AND the user count —
-    # unpinned, its events scan ran twice (3 scans total). User grain
-    # is far below fact, so pin; events is scanned twice (the
-    # first-day-then-ages two-pass floor), not 3x.
+    # first feeds the ages join AND the user count — unpinned, its
+    # events scan ran twice (3 scans total). User grain is far below
+    # fact, so pin; events is scanned twice (the first-day-then-ages
+    # two-pass floor), not 3x.
     first = (
         ev.groupBy("user_id")
         .agg(F.min("day").alias("d0"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     ages = (
         ev.join(first, "user_id")
@@ -13185,17 +13184,17 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.substring("o_orderpriority", 1, 1).cast("int") <= 2).alias("g1"),
         )
     )
-    # r12 (guide §2.4): vc feeds cum (itself consumed by best AND the
-    # final filter) plus the n1/n2 totals — 4 orders scans unpinned.
-    # Distinct-cents grain is value-lattice-bounded, so pin; the fact
-    # is scanned once.
+    # vc feeds cum (itself consumed by best AND the final filter)
+    # plus the n1/n2 totals — 4 orders scans unpinned. Distinct-cents
+    # grain is value-lattice-bounded, so pin; the fact is scanned
+    # once.
     vc = (
         o.groupBy("v")
         .agg(
             F.sum(F.col("g1").cast("bigint")).alias("d1"),
             F.sum((~F.col("g1")).cast("bigint")).alias("d2"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     cum = (
@@ -13286,20 +13285,19 @@ def stats_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    # r12 (guide §2.4): r feeds the segment totals AND the within pass,
-    # seg feeds the within broadcast, the global totals AND the between
-    # pass — unpinned, the orders x customer join ran twice (4 fact
-    # scans). Customer / segment grain: pin both; each fact is scanned
-    # ONCE.
+    # r feeds the segment totals AND the within pass, seg feeds the
+    # within broadcast, the global totals AND the between pass —
+    # unpinned, the orders x customer join ran twice (4 fact scans).
+    # Customer / segment grain: pin both; each fact is scanned ONCE.
     r = (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment", "c_custkey")
         .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("x"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     seg = r.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n"), F.sum("x").alias("s")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     j = r.join(
         F.broadcast(seg.withColumnRenamed("c_mktsegment", "_seg")),
         F.col("c_mktsegment").eqNullSafe(F.col("_seg")),
@@ -14318,7 +14316,7 @@ def stats_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("g1").cast("bigint")).alias("ca"),
             F.sum((~F.col("g1")).cast("bigint")).alias("cb"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     j = below_sums(vc, "v", cab=F.col("ca"), cbb=F.col("cb"))
     agg = j.agg(
@@ -14768,15 +14766,15 @@ def q_events_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
         .select("user_id", "event_type", F.expr(sp_epoch_us("ts")).alias("us"))
     )
-    # r12 (guide §2.4 duplicated subtrees): v feeds the click stage AND
-    # its own count (and rides inside p via c) — unpinned the plan
-    # expanded to v x3 / c x2 = SIX events scans. Pin the user-grain
-    # stage anchors; each stage scans events exactly once.
+    # v feeds the click stage AND its own count (and rides inside p via
+    # c) — unpinned the plan expanded to v x3 / c x2 = SIX events
+    # scans. Pin the user-grain stage anchors; each stage scans events
+    # exactly once.
     v = (
         ev.where(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("us").alias("v_us"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     c = (
         ev.where(F.col("event_type") == "click")
@@ -14787,7 +14785,7 @@ def q_events_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id")
         .agg(F.min("us").alias("c_us"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     p = (
         ev.where(F.col("event_type") == "purchase")
@@ -15131,11 +15129,11 @@ def q_events_type_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", "sid", "event_type")
         .distinct()
-        # r12 (guide §2.4): st feeds the session count, the type totals
-        # AND both self-join sides — unpinned, the full sessionization
-        # window over events ran 4x (5 fact scans). (session, type)
-        # grain: pin it; events is scanned and sessionized ONCE.
-        .localCheckpoint(eager=False)
+        # st feeds the session count, the type totals AND both
+        # self-join sides — unpinned, the full sessionization window
+        # over events ran 4x (5 fact scans). (session, type) grain: pin
+        # it; events is scanned and sessionized ONCE.
+        .transform(pin)
     )
     n_sess = F.broadcast(
         st.select("user_id", "sid").distinct().agg(
@@ -15404,7 +15402,7 @@ def q_orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     vc = (
         r.groupBy("v")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = F.broadcast(
         vc.agg(
@@ -15427,7 +15425,7 @@ def q_orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.expr("5 * cast(cum_r as decimal(38,0)) >= 4 * tot_r"))
         # qual feeds the argmax AND the witness join-back; distinct-level
         # grain — pin it so the block pass runs once
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     best = qual.agg(
         F.max("v").alias("v_star"),
@@ -15516,10 +15514,10 @@ def stats_crosstab_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("source"), F.lit("<null>")).alias("source"),
         )
         .agg(F.count(F.lit(1)).alias("o"))
-        # r12 (guide §2.4): cells feeds the margins, the grand total AND
-        # the dense join — unpinned, the documents scan ran 4x.
-        # |langs| x |sources| grain: pin it; the fact is scanned ONCE.
-        .localCheckpoint(eager=False)
+        # cells feeds the margins, the grand total AND the dense join —
+        # unpinned, the documents scan ran 4x. |langs| x |sources|
+        # grain: pin it; the fact is scanned ONCE.
+        .transform(pin)
     )
     rowt = cells.groupBy("lang").agg(F.sum("o").alias("row_tot"))
     colt = cells.groupBy("source").agg(F.sum("o").alias("col_tot"))
@@ -15847,14 +15845,14 @@ def stats_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
         .select("user_id", F.expr(sp_epoch_us("ts")).alias("us"))
     )
-    # r12 (guide §2.4): users feeds the lifetime table and (via the
-    # max-of-last identity) the corpus end — unpinned, the events scan
-    # ran per copy. Pin the user-grain table and derive the corpus end
-    # FROM it (max(last_us) == max(us): every event belongs to some
-    # user_id group, the NULL group included): events is scanned ONCE.
+    # users feeds the lifetime table and (via the max-of-last
+    # identity) the corpus end — unpinned, the events scan ran per
+    # copy. Pin the user-grain table and derive the corpus end FROM it
+    # (max(last_us) == max(us): every event belongs to some user_id
+    # group, the NULL group included): events is scanned ONCE.
     users = ev.groupBy("user_id").agg(
         F.min("us").alias("first_us"), F.max("us").alias("last_us")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     end = users.agg(F.max("last_us").alias("end_us"))
     lives = users.crossJoin(F.broadcast(end)).select(
         ((F.col("last_us") - F.col("first_us")) / F.lit(DAY_US))
@@ -15869,8 +15867,8 @@ def stats_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_t = lives.groupBy("t_days").agg(
         F.sum(1 - F.col("censored")).alias("d"),
         F.sum("censored").alias("c"),
-    # per_t feeds the total AND the NA pass (§2.4); ~31-day grain -- pin
-    ).localCheckpoint(eager=False)
+    # per_t feeds the total AND the NA pass; ~31-day grain -- pin
+    ).transform(pin)
     tot = per_t.agg(F.sum(F.col("d") + F.col("c")).alias("n_total"))
     w_prev = Window.orderBy("t_days").rowsBetween(
         Window.unboundedPreceding, -1
@@ -16043,11 +16041,11 @@ def q_customer_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_custkey").isNotNull() & F.col("o_orderdate").isNotNull())
         .select("o_custkey", F.year("o_orderdate").alias("yr"))
         .distinct()
-        # r12 (guide §2.4): cy feeds both self-join sides, the year max
-        # AND the new-customer anti-join — unpinned, the orders scan +
-        # distinct ran 5x. (customer, year) grain: pin it; the fact is
-        # scanned ONCE.
-        .localCheckpoint(eager=False)
+        # cy feeds both self-join sides, the year max AND the
+        # new-customer anti-join — unpinned, the orders scan + distinct
+        # ran 5x. (customer, year) grain: pin it; the fact is scanned
+        # ONCE.
+        .transform(pin)
     )
     nxt = cy.select(
         F.col("o_custkey").alias("_c"), (F.col("yr") - 1).alias("_y")
@@ -17028,22 +17026,20 @@ def q_sql_exists_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi/anti joins — the certification is that the SQL surface
     reaches those plans with standard semantics intact.
     """
-    # r12 (guide §2.4 duplicated subtrees): five scalar subqueries each
-    # re-scanned both views (5x customer + 5x orders unpinned). Every
-    # arm consumes the views MEMBERSHIP-ONLY — customer via c_custkey
-    # counts, orders via the o_custkey set (EXISTS / IN / NOT IN are
-    # set predicates; duplicate o_custkey rows cannot change any arm,
-    # and the distinct set keeps a NULL iff orders has one, so the
-    # NOT-IN three-valued trap is preserved bit-for-bit). Register the
-    # key projection (customer) and the distinct key set (orders),
-    # both pinned: each base table is scanned ONCE, the SQL text and
-    # its semi/anti-join plans are unchanged.
-    load_table(spark, sf_dir, "customer").select("c_custkey").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("v_qei_cust")
-    load_table(spark, sf_dir, "orders").select("o_custkey").distinct().localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("v_qei_orders")
+    # five scalar subqueries each re-scanned both views (5x customer +
+    # 5x orders unpinned). Every arm consumes the views MEMBERSHIP-ONLY
+    # — customer via c_custkey counts, orders via the o_custkey set
+    # (EXISTS / IN / NOT IN are set predicates; duplicate o_custkey
+    # rows cannot change any arm, and the distinct set keeps a NULL iff
+    # orders has one, so the NOT-IN three-valued trap is preserved
+    # bit-for-bit). Register the key projection (customer) and the
+    # distinct key set (orders), both pinned: each base table is
+    # scanned ONCE, the SQL text and its semi/anti-join plans are
+    # unchanged.
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
+    pin(cust).createOrReplaceTempView("v_qei_cust")
+    orders = load_table(spark, sf_dir, "orders").select("o_custkey").distinct()
+    pin(orders).createOrReplaceTempView("v_qei_orders")
     return spark.sql(
         """
         SELECT
@@ -17521,10 +17517,10 @@ def stats_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("source"), F.lit("<null>")).alias("source"),
         )
         .agg(F.count(F.lit(1)).alias("o"))
-        # r12 (guide §2.4): cells feeds the margins, the grand total AND
-        # the dense join — unpinned, the documents scan ran 4x.
-        # |langs| x |sources| grain: pin it; the fact is scanned ONCE.
-        .localCheckpoint(eager=False)
+        # cells feeds the margins, the grand total AND the dense join —
+        # unpinned, the documents scan ran 4x. |langs| x |sources|
+        # grain: pin it; the fact is scanned ONCE.
+        .transform(pin)
     )
     rowt = cells.groupBy("lang").agg(F.sum("o").alias("row_tot"))
     colt = cells.groupBy("source").agg(F.sum("o").alias("col_tot"))
@@ -17664,10 +17660,10 @@ def stats_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("y")
         )
         .select(F.month("day").alias("m"), "day", "y")
-        # r12 (guide §2.4): d fans out to both pair sides + per-season
-        # counts + tie grid (4 orders scans unpinned); DAYS-bounded, so
-        # pin — the fact is scanned once.
-        .localCheckpoint(eager=False)
+        # d fans out to both pair sides + per-season counts + tie grid
+        # (4 orders scans unpinned); DAYS-bounded, so pin — the fact is
+        # scanned once.
+        .transform(pin)
     )
     a = d.select(F.col("m").alias("ma"), F.col("day").alias("da"), F.col("y").alias("ya"))
     b = d.select(F.col("m").alias("mb"), F.col("day").alias("db"), F.col("y").alias("yb"))
@@ -17907,7 +17903,7 @@ def stats_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for k in range(1, 6)
             ]
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     j = below_sums(
         vc, "cents", **{f"below{k}": F.col(f"c{k}") for k in range(1, 6)}
@@ -18019,16 +18015,15 @@ def stats_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("cast(round(o_totalprice * 100) as bigint)")
             ).alias("cents")
         )
-        # r12 (guide §2.4 duplicated subtrees): d feeds the cents
-        # collapse AND the day-series join; vc feeds the totals and the
-        # rank pass — unpinned, the orders scan ran 8x. DAYS-calendar
-        # grain: pin both; the fact is scanned ONCE.
-        .localCheckpoint(eager=False)
+        # d feeds the cents collapse AND the day-series join; vc feeds
+        # the totals and the rank pass — unpinned, the orders scan ran
+        # 8x. DAYS-calendar grain: pin both; the fact is scanned ONCE.
+        .transform(pin)
     )
     vc = (
         d.groupBy("cents")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     w_v = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, -1)
     tot = F.broadcast(vc.agg(F.sum("c").alias("t_days")))
@@ -18047,9 +18042,9 @@ def stats_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.join(ranked, "cents")
         .withColumn("u_t", F.sum("w_s").over(w_day))
         .crossJoin(tot)
-        # u feeds the max broadcast AND the final aggregate (§2.4);
+        # u feeds the max broadcast AND the final aggregate;
         # DAYS grain — pin it
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     mx = F.broadcast(u.agg(F.max(F.abs(F.col("u_t"))).alias("k_max")))
     agg = u.crossJoin(mx).agg(
@@ -18323,14 +18318,14 @@ def stats_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
             "        WHEN o_orderkey % 11 = 0 THEN -1 ELSE 0 END)) AS q",
         )
     )
-    # r12 (guide §2.4): base/rows/cols each re-scanned orders (3x).
-    # All three are regroups of the bounded 5x5 (p, q) cell table —
-    # integer count sums regroup exactly — so collapse to cells once,
-    # pin, and aggregate the pin; the fact is scanned ONCE.
+    # base/rows/cols each re-scanned orders (3x). All three are
+    # regroups of the bounded 5x5 (p, q) cell table — integer count
+    # sums regroup exactly — so collapse to cells once, pin, and
+    # aggregate the pin; the fact is scanned ONCE.
     kcells = (
         o.groupBy("p", "q")
         .agg(F.count(F.lit(1)).alias("kn"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     base = kcells.agg(
         # coalesce: the pre-pin shape was count(*) (0 on EMPTY input);
@@ -18425,11 +18420,10 @@ def stats_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("cast(round(o_totalprice * 100) as bigint)")
             ).alias("cents")
         )
-        # r12 (guide §2.4 duplicated subtrees): cells feeds the
-        # complete-block filter AND the rank/score passes — unpinned,
-        # the orders scan re-ran per consumer copy. months x 5 grain:
-        # pin it; the fact is scanned ONCE.
-        .localCheckpoint(eager=False)
+        # cells feeds the complete-block filter AND the rank/score
+        # passes — unpinned, the orders scan re-ran per consumer
+        # copy. months x 5 grain: pin it; the fact is scanned ONCE.
+        .transform(pin)
     )
     full = (
         cells.groupBy("mth")
@@ -18649,13 +18643,13 @@ def stats_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cast(o_orderstatus = 'F' as int) AS y",
         )
     )
-    # r12 (guide §2.4): cells fans out to both pair sides and the
-    # x-tie margin — 3 orders scans unpinned. The 5x2 grid is bounded,
-    # so pin; the fact is scanned once.
+    # cells fans out to both pair sides and the x-tie margin — 3
+    # orders scans unpinned. The 5x2 grid is bounded, so pin; the fact
+    # is scanned once.
     cells = (
         o.groupBy("x", "y")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     a = cells.selectExpr("x AS xa", "y AS ya", "n AS na")
     b = cells.selectExpr("x AS xb", "y AS yb", "n AS nb")
@@ -18780,11 +18774,10 @@ def stats_quade(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("cast(round(o_totalprice * 100) as bigint)")
             ).alias("cents")
         )
-        # r12 (guide §2.4 duplicated subtrees): cells feeds the
-        # complete-block filter AND the rank/score passes — unpinned,
-        # the orders scan re-ran per consumer copy. months x 5 grain:
-        # pin it; the fact is scanned ONCE.
-        .localCheckpoint(eager=False)
+        # cells feeds the complete-block filter AND the rank/score
+        # passes — unpinned, the orders scan re-ran per consumer
+        # copy. months x 5 grain: pin it; the fact is scanned ONCE.
+        .transform(pin)
     )
     full = (
         cells.groupBy("mth")
@@ -18814,9 +18807,9 @@ def stats_quade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = r.join(q.select("mth", "q2"), "mth").select(
         "g", F.expr("q2 * (r2 - 6)").alias("s4")
-    # s feeds the A and per-treatment B aggregates (§2.4); cell grain —
+    # s feeds the A and per-treatment B aggregates; cell grain —
     # pin it so the two rank windows run once
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     a16 = s.agg(F.sum(F.expr("cast(s4 as decimal(38,0)) * s4")).alias("a16"))
     sj = s.groupBy("g").agg(F.sum("s4").alias("s4_j"))
     b16m = sj.agg(
@@ -18900,7 +18893,7 @@ def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     (groupBy(w2) at ~n_pairs distinct sums, an in-block prefix window
     over it, a rank-lookup join) and, because every lattice stage
     re-derived the day table, the physical plan re-scanned orders 11×.
-    Now: (1) the DAYS-grain table is localCheckpointed once (≤calendar
+    Now: (1) the DAYS-grain table is pinned once (≤calendar
     rows) and every stage reads it; (2) the median is found by TWO
     passes over the regenerated pair stream — pass 1 histograms pair
     COUNTS into 1024 fixed w2-range blocks (map-side partial agg ⇒ the
@@ -18924,7 +18917,7 @@ def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("cast(round(o_totalprice * 100) as bigint)")
             ).alias("cents")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # one pass over the ≤calendar-row day table gives every scalar the
     # lattice needs: the pair count, the w2 range (min/max Walsh sums
@@ -19199,7 +19192,7 @@ def _pooled_score_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast + the scored pass), so unpinned the whole prefix-sum
     # pipeline ran twice per query. Distinct-value grain, bounded by
     # the quantized lattice: pin it.
-    return out.localCheckpoint(eager=False)
+    return pin(out)
 
 
 _POOLED_SCORE_GROUPS_SQL = """
@@ -19478,11 +19471,10 @@ def stats_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("cast(round(o_totalprice * 100) as bigint)")
             ).alias("cents")
         )
-        # r12 (guide §2.4 duplicated subtrees): cells feeds the
-        # complete-block filter AND the rank/score passes — unpinned,
-        # the orders scan re-ran per consumer copy. months x 5 grain:
-        # pin it; the fact is scanned ONCE.
-        .localCheckpoint(eager=False)
+        # cells feeds the complete-block filter AND the rank/score
+        # passes — unpinned, the orders scan re-ran per consumer
+        # copy. months x 5 grain: pin it; the fact is scanned ONCE.
+        .transform(pin)
     )
     full = (
         cells.groupBy("mth")
@@ -19566,10 +19558,10 @@ def stats_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("cast(round(o_totalprice * 100) as bigint)")
             ).alias("cents")
         )
-        # r12 (guide §2.4): d fans out to pos (consumed by both pair
-        # sides) and the 1-row count — 3-4 orders scans unpinned.
-        # DAYS-bounded, so pin; the fact is scanned once.
-        .localCheckpoint(eager=False)
+        # d fans out to pos (consumed by both pair sides) and the
+        # 1-row count — 3-4 orders scans unpinned. DAYS-bounded, so
+        # pin; the fact is scanned once.
+        .transform(pin)
     )
     pos = d.select(
         F.row_number().over(Window.orderBy("day")).alias("pos"), "cents"
@@ -20098,13 +20090,13 @@ def stats_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     wr = Window.partitionBy("from_type")
     t = (
         trans.withColumn("n_i", F.sum("n_ij").over(wr))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     spine = (
         t.select(F.col("from_type").alias("event_type"))
         .union(t.select("to_type"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     n_types = F.broadcast(spine.agg(F.count(F.lit(1)).alias("k")))
     pi = spine.crossJoin(n_types).selectExpr(
@@ -20128,7 +20120,7 @@ def stats_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             .selectExpr(
                 "event_type", "cast(coalesce(u_new, 0) as bigint) AS u"
             )
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
     out_n = t.groupBy("from_type").agg(F.max("n_i").alias("n_out"))
     return (
@@ -20576,11 +20568,10 @@ def stats_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("cast(round(o_totalprice * 100) as bigint)")
             ).alias("cents")
         )
-        # r12 (guide §2.4): cells feeds the complete-block filter AND
-        # the indicator pass; x feeds both margin aggregates — unpinned,
-        # the orders scan ran 5x. months x 5 grain: pin both; the fact
-        # is scanned ONCE.
-        .localCheckpoint(eager=False)
+        # cells feeds the complete-block filter AND the indicator pass;
+        # x feeds both margin aggregates — unpinned, the orders scan ran
+        # 5x. months x 5 grain: pin both; the fact is scanned ONCE.
+        .transform(pin)
     )
     full = (
         cells.groupBy("mth")
@@ -20593,7 +20584,7 @@ def stats_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     x = cells.join(full, "mth").selectExpr(
         "mth", "g", "cast(5 * cents > mtotal as bigint) AS x"
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     cj = x.groupBy("g").agg(F.sum("x").alias("c_j"))
     ri = x.groupBy("mth").agg(F.sum("x").alias("r_i"))
     a1 = cj.agg(

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from navigator_data_ingest_spark.functions.exact import dk_rat6, sp_rat6
-from navigator_data_ingest_spark.sources.tables import load_table
+from navigator_data_ingest_spark.sources.tables import load_table, pin
 
 UPDATE_MOD = 7
 DELETE_MOD = 13
@@ -166,13 +166,13 @@ def cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     predecessor's interval without emitting a row of its own, so
     deleted keys have history but no current row.
     """
-    # r12 (guide §2.4): the base row plus the three changelog branches
-    # each re-scanned orders (the % filters are not parquet-pushable, so
-    # every branch read the full columns). Pin the 4-column snapshot;
-    # the fact is scanned ONCE and the branches read the pin.
+    # the base row plus the three changelog branches each re-scanned
+    # orders (the % filters are not parquet-pushable, so every branch
+    # read the full columns). Pin the 4-column snapshot; the fact is
+    # scanned ONCE and the branches read the pin.
     snapshot = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     base = snapshot.withColumn("op", F.lit("U")).withColumn("version", F.lit(1))
     hist = base.unionByName(scd2_changelog(snapshot))
     w = Window.partitionBy("o_orderkey").orderBy("version")
@@ -445,15 +445,15 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("changed"))
         .alias("status")
     )
-    # r12 (guide §2.4): grid feeds tot AND the output row — unpinned,
-    # the whole two-snapshot outer join (2 orders scans + the md5
-    # fingerprints) executed twice, 4 scans total. The status grid is
-    # <= 4 rows, so pin it; the join runs once and the two snapshot
-    # scans that remain are the two-snapshots shape's floor.
+    # grid feeds tot AND the output row — unpinned, the whole
+    # two-snapshot outer join (2 orders scans + the md5 fingerprints)
+    # executed twice, 4 scans total. The status grid is <= 4 rows, so
+    # pin it; the join runs once and the two snapshot scans that
+    # remain are the two-snapshots shape's floor.
     grid = (
         j.groupBy("status")
         .agg(F.count(F.lit(1)).alias("n_rows"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = F.broadcast(grid.agg(F.sum("n_rows").alias("t")))
     return (
@@ -537,14 +537,13 @@ def cdc_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
     )
     mx = target.agg(F.max("o_orderkey").alias("merge_shift"))
-    # r12 (guide §2.4 duplicated subtrees): the matched and insert arms
-    # each re-scanned orders (4 scans total with mx and the join's
-    # target side). ONE filtered pass emits both arms per qualifying
-    # row via inline(filter(array(...))) — a key on both the matched
-    # and the %17 ladder still yields exactly its two union rows, and
-    # the full-outer join is order-insensitive, so the source multiset
-    # is identical. Scans: join target + source derivation + max = 3,
-    # the three-pass floor of this shape.
+    # the matched and insert arms each re-scanned orders (4 scans total
+    # with mx and the join's target side). ONE filtered pass emits both
+    # arms per qualifying row via inline(filter(array(...))) — a key on
+    # both the matched and the %17 ladder still yields exactly its two
+    # union rows, and the full-outer join is order-insensitive, so the
+    # source multiset is identical. Scans: join target + source
+    # derivation + max = 3, the three-pass floor of this shape.
     source = (
         target.where(
             (F.col("o_orderkey") % MERGE_UPDATE_MOD == 0)

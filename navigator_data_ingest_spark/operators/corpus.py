@@ -26,7 +26,7 @@ from navigator_data_ingest_spark.functions.exact import (
     sp_units,
 )
 from navigator_data_ingest_spark.functions.prefix import below_sums
-from navigator_data_ingest_spark.sources.tables import load_table, scatter
+from navigator_data_ingest_spark.sources.tables import load_table, pin, scatter
 
 PASSAGE_TOKENS = 16       # non-overlapping passage window (tokens)
 CONTAM_K = 8              # contamination n-gram order
@@ -310,16 +310,16 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle is the plain global window — same numbers, serial
     plan.
     """
-    # r12 (guide §2.4): docs feeds the intra-block window AND blocks
-    # (itself consumed twice) — unpinned, the corpus tokenized 3x. Pin
-    # the 3-int doc-grain length table (tokenize ONCE) and the
-    # block-grain subtotal table (one groupBy, not two).
+    # docs feeds the intra-block window AND blocks (itself consumed
+    # twice) — unpinned, the corpus tokenized 3x. Pin the 3-int
+    # doc-grain length table (tokenize ONCE) and the block-grain
+    # subtotal table (one groupBy, not two).
     docs = (
         _tokens_df(spark, sf_dir)
         .select("doc_id", F.size("t").alias("n_tokens"))
         .where("n_tokens > 0")
         .withColumn("block", F.expr(f"doc_id div {PACK_BLOCK}"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     intra = docs.withColumn(
         "intra_cum",
@@ -333,7 +333,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.groupBy("block")
         .agg(F.sum("n_tokens").alias("block_total"))
         .withColumn("super", F.expr(f"block div {PACK_BLOCK}"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     intra_super = blocks.withColumn(
         "intra_super_cum",
@@ -533,11 +533,11 @@ def corpus_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.expr(X.sp_shingles("t"))).alias("shingle"),
         )
         .distinct()
-        # r12 (guide §2.4): sh feeds sizes, the sketch aggs AND both
-        # sides of the overlap self-join — unpinned, the tokenize +
-        # shingle explode + distinct ran 4x. Pin the distinct
-        # (source, shingle) table; the corpus tokenizes ONCE.
-        .localCheckpoint(eager=False)
+        # sh feeds sizes, the sketch aggs AND both sides of the
+        # overlap self-join — unpinned, the tokenize + shingle
+        # explode + distinct ran 4x. Pin the distinct (source,
+        # shingle) table; the corpus tokenizes ONCE.
+        .transform(pin)
     )
     sizes = sh.groupBy("source").agg(F.count("*").alias("n"))
     sigs = sh.groupBy("source").agg(
@@ -703,11 +703,11 @@ def _tokenized_flags_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # contamination flag (benchmark members themselves are dropped).
-    # r12 (guide §2.4): bench and the contamination probe each
-    # re-shingled the corpus (3 documents scans in the funnel plan);
-    # the gram sets depend only on (doc_id, t), so derive them from
-    # the token base and pin the narrow (doc_id, gram-hash) table —
-    # ONE shingle+md5 pass serves both sides.
+    # bench and the contamination probe each re-shingled the corpus
+    # (3 documents scans in the funnel plan); the gram sets depend
+    # only on (doc_id, t), so derive them from the token base and
+    # pin the narrow (doc_id, gram-hash) table — ONE shingle+md5
+    # pass serves both sides.
     grams = (
         _tokens_df(spark, sf_dir)
         .select(
@@ -717,7 +717,7 @@ def _tokenized_flags_base(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " s -> md5(s)))"
             ).alias("g"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     bench = (
         grams.where(F.col("doc_id") % CONTAM_MOD == 0)
@@ -968,15 +968,15 @@ def sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     document shuffle, and it is |sources|-grained.
     """
     docs = scatter(spark, load_table(spark, sf_dir, "documents"))
-    # r12 (guide §2.4 duplicated subtrees): srcs feeds the wsum total
-    # AND the rates join — unpinned, the documents scan + source groupBy
-    # ran twice for this |sources|-row table. Pin it; the corpus is
-    # scanned once here and once in the keep pass.
+    # srcs feeds the wsum total AND the rates join — unpinned, the
+    # documents scan + source groupBy ran twice for this |sources|-row
+    # table. Pin it; the corpus is scanned once here and once in the
+    # keep pass.
     srcs = (
         docs.groupBy("source")
         .agg(F.count("*").alias("n"))
         .withColumn("w", F.sqrt(F.col("n").cast("double")))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = srcs.agg(
         F.expr(
@@ -1312,11 +1312,10 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("h", F.expr(h))
         .withColumn("blk", F.expr("substr(h, 1, 2)"))
-        # r12 (guide §2.4 duplicated subtrees): docs feeds the intra
-        # window AND the block totals — unpinned, the documents scan +
-        # tokenize + priority-hash ran twice. Pin the narrow doc-grain
-        # table; tokenization runs ONCE.
-        .localCheckpoint(eager=False)
+        # docs feeds the intra window AND the block totals — unpinned,
+        # the documents scan + tokenize + priority-hash ran twice. Pin
+        # the narrow doc-grain table; tokenization runs ONCE.
+        .transform(pin)
     )
     intra = docs.withColumn(
         "intra_cum",
@@ -1327,11 +1326,11 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # (class, blk) grain — bounded at (BUDGET_CLASS_MAX+1) x 256 rows at
-    # any corpus size; feeds both offset tables, so pin it too (§2.4).
+    # any corpus size; feeds both offset tables, so pin it too.
     blocks = (
         docs.groupBy("quality_class", "blk")
         .agg(F.sum("n_tokens").alias("blk_total"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     blk_offsets = blocks.withColumn(
         "blk_offset",
@@ -1837,12 +1836,11 @@ def corpus_decontaminate_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     h = X.sp_hash32("cast(doc_id as string)", "split")
     lo = SPLIT_CUTS[0]
-    # r12 (guide §2.4): docs fans out to the holdout gram set, the
-    # train explode AND the final audit base — unpinned, the corpus
-    # was tokenized+shingled 3x. Pin the narrow (doc_id, lang, bucket,
-    # gram-hash) projection: one tokenize pass; the pin trades its
-    # (gram-stream-sized) materialization for two full regex+md5
-    # corpus passes.
+    # docs fans out to the holdout gram set, the train explode AND the
+    # final audit base — unpinned, the corpus was tokenized+shingled
+    # 3x. Pin the narrow (doc_id, lang, bucket, gram-hash) projection:
+    # one tokenize pass; the pin trades its (gram-stream-sized)
+    # materialization for two full regex+md5 corpus passes.
     docs = _tokens_df(spark, sf_dir).withColumn(
         "bucket", F.expr(f"({h}) % 1000")
     ).withColumn(
@@ -1850,7 +1848,7 @@ def corpus_decontaminate_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             f"array_distinct(transform({X.sp_shingles('t', CONTAM_K)}, s -> md5(s)))"
         ),
-    ).select("doc_id", "lang", "bucket", "g").localCheckpoint(eager=False)
+    ).select("doc_id", "lang", "bucket", "g").transform(pin)
     holdout_grams = (
         docs.where(F.col("bucket") >= lo)
         .select(F.explode("g").alias("gram"))
@@ -2067,7 +2065,7 @@ def corpus_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "p.w1", "p.w2")
         # doc bigrams feed BOTH the LM aggregation and the scoring join;
         # pin one tokenize/explode pass
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     big = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
     heads = big.groupBy("w1").agg(F.sum("c").alias("head_total"))
@@ -2155,7 +2153,7 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", "f")
         # consumed by the count pass AND the scoring join — pin so the
         # corpus is tokenized once, not twice (the 100x probe's lesson)
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # ONE aggregation pass builds both the source and target counts
     # (conditional count instead of a second corpus scan)
@@ -2507,12 +2505,12 @@ def corpus_upsample_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic (no payload duplication until the write), and the audit
     re-aggregates on the same source key.
     """
-    # r12 (guide §2.4): docs feeds the factor plan AND the fan-out —
-    # unpinned, the tokenize ran per copy (6 documents scans). Pin the
-    # 3-column doc-grain table; tokenization runs ONCE.
+    # docs feeds the factor plan AND the fan-out — unpinned, the
+    # tokenize ran per copy (6 documents scans). Pin the 3-column
+    # doc-grain table; tokenization runs ONCE.
     docs = _tokens_df(spark, sf_dir).select(
         "doc_id", "source", F.size("t").alias("n_tok")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     per_src = docs.groupBy("source").agg(F.sum("n_tok").alias("n_tokens"))
     totals = per_src.agg(
         F.sum("n_tokens").alias("tot"), F.count(F.lit(1)).alias("n_sources")
@@ -2544,9 +2542,9 @@ def corpus_upsample_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tok").alias("n_tokens_out"),
             F.max("epoch").alias("epochs"),
         )
-        # out feeds the grand total AND the final shares (§2.4);
+        # out feeds the grand total AND the final shares;
         # |sources| grain — pin it so the fan-out aggregate runs once
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     grand = out.agg(F.sum("n_tokens_out").alias("tot_out"))
     return (
@@ -2628,13 +2626,13 @@ def corpus_kn_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("p.w1", "p.w2")
     )
-    # r12 (guide §2.4): big feeds the head/continuation tables, the
-    # type total AND the top-k — unpinned, the tokenize + bigram explode
-    # ran 4x. Distinct-bigram grain: pin it; the corpus tokenizes ONCE.
+    # big feeds the head/continuation tables, the type total AND the
+    # top-k — unpinned, the tokenize + bigram explode ran 4x.
+    # Distinct-bigram grain: pin it; the corpus tokenizes ONCE.
     big = (
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     heads = big.groupBy("w1").agg(
         F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n_follow")
@@ -2921,7 +2919,7 @@ def stats_auc_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         # tokenize + classifier scoring (the operator's whole per-row
         # cost) ran 4x in one plan. Pin the distinct-score table; the
         # heavy scoring runs ONCE.
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # below-count from the two-level block prefix sum: the
     # distinct-score table is NOT bounded, so no global window runs
@@ -3217,7 +3215,7 @@ def stats_youden_j(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("is_pos").cast("bigint")).alias("p"),
             F.sum((~F.col("is_pos")).cast("bigint")).alias("q"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = F.broadcast(vc.agg(F.sum("p").alias("tp"), F.sum("q").alias("tq")))
     r = (
@@ -3237,7 +3235,7 @@ def stats_youden_j(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # r feeds the argmax broadcast AND the witness re-filter;
         # distinct-score grain — pin it so the block pipeline runs once
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     best = F.broadcast(
         r.agg(F.max(F.struct(F.col("j_num"), (-F.col("score_sum")).alias("ns"))).alias("b"))
@@ -3489,7 +3487,7 @@ def stats_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     vc = (
         s.groupBy("score_sum")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("k"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = F.broadcast(
         vc.agg(F.sum("n").alias("tot_n"), F.sum("k").alias("tot_k"))
@@ -3675,10 +3673,10 @@ def corpus_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         # BOTH engines (a NULL group would shift histogram ranks vs the
         # NULL-skipping quantile identity)
         F.col("n_tokens").isNotNull()
-    # r12 (guide §2.4): docs feeds the histogram AND the phase rollup —
-    # unpinned, the documents scan + difficulty tokenize ran per copy
-    # (6 scans). One bigint per doc: pin it; tokenize runs ONCE.
-    ).localCheckpoint(eager=False)
+    # docs feeds the histogram AND the phase rollup — unpinned, the
+    # documents scan + difficulty tokenize ran per copy (6 scans). One
+    # bigint per doc: pin it; tokenize runs ONCE.
+    ).transform(pin)
     # exact quartile cuts WITHOUT percentile() over the raw corpus (its
     # aggregation buffer grows with row count — a 100 TB hazard): the
     # distinct-length histogram is bounded by max document length, and
@@ -3691,11 +3689,11 @@ def corpus_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_cum = Window.orderBy("n_tokens").rowsBetween(
         Window.unboundedPreceding, -1
     )
-    # vc feeds the row total AND the rank lookup (§2.4); distinct-length
+    # vc feeds the row total AND the rank lookup; distinct-length
     # grain — pin it
     vc = vc.withColumn(
         "below", F.coalesce(F.sum("c").over(w_cum), F.lit(0))
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     nrow = vc.agg(F.sum("c").alias("n"))
     j = vc.crossJoin(F.broadcast(nrow))
     rank_aggs = []
@@ -3738,9 +3736,9 @@ def corpus_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("n_tokens").alias("min_tokens"),
             F.max("n_tokens").alias("max_tokens"),
         )
-        # g feeds the token total AND the final shares (§2.4);
+        # g feeds the token total AND the final shares;
         # PHASES-bounded — pin it
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = F.broadcast(g.agg(F.sum("n_tokens").alias("t_tok")))
     return (
@@ -3892,23 +3890,23 @@ def corpus_lm_holdout_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
         "transform(slice(t, 1, size(t) - 1),"
         " (x, i) -> struct(x AS w1, element_at(t, i + 2) AS w2))"
     )
-    # r12 (guide §2.4): pairs feeds the train LM AND the holdout probe
-    # (one tokenize/explode pass pinned — the corpus_perplexity_filter
+    # pairs feeds the train LM AND the holdout probe (one
+    # tokenize/explode pass pinned — the corpus_perplexity_filter
     # discipline); big and heads each feed two consumers. Pin all three;
     # the corpus tokenizes ONCE and the LM aggregates build once.
     pairs = docs.where("size(t) >= 2").select(
         "source", "is_train", F.explode(F.expr(pair_expr)).alias("p")
-    ).select("source", "is_train", "p.w1", "p.w2").localCheckpoint(eager=False)
+    ).select("source", "is_train", "p.w1", "p.w2").transform(pin)
     train = pairs.where("is_train")
     big = (
         train.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     heads = (
         big.groupBy("w1")
         .agg(F.sum("c").alias("head_total"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     v = F.broadcast(heads.agg(F.count(F.lit(1)).alias("v")))
     hold = (
@@ -4083,14 +4081,14 @@ def split_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
         )
     )
-    # r12 (guide §2.4): days feeds the cumulative rule AND the total —
-    # unpinned, its events scan ran twice (3 total with the user-side
-    # pass). DAYS-bounded, so pin; events is scanned twice (cutoff
-    # derivation + user audit, the two-pass floor).
+    # days feeds the cumulative rule AND the total — unpinned, its
+    # events scan ran twice (3 total with the user-side pass).
+    # DAYS-bounded, so pin; events is scanned twice (cutoff derivation
+    # + user audit, the two-pass floor).
     days = (
         ev.groupBy("day")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     cum = days.withColumn("cum", F.sum("cnt").over(w))
@@ -4191,12 +4189,11 @@ def split_dedup_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo = SPLIT_CUTS[0]
     h_doc = X.sp_hash32("cast(doc_id as string)", "split")
     h_fam = X.sp_hash32("cast(fam_key as string)", "split")
-    # r12 (guide §2.4 duplicated subtrees): docs feeds fams AND the
-    # join probe, and j feeds BOTH audit aggregates — unpinned, the
-    # documents scan + prefix-md5 ran 4x in one plan and the family
-    # join twice. Pin both doc-grain tables (two narrow columns / six
-    # integer-ish columns): the fact is scanned once, the hash and the
-    # join each computed once.
+    # docs feeds fams AND the join probe, and j feeds BOTH audit
+    # aggregates — unpinned, the documents scan + prefix-md5 ran 4x in
+    # one plan and the family join twice. Pin both doc-grain tables
+    # (two narrow columns / six integer-ish columns): the fact is
+    # scanned once, the hash and the join each computed once.
     docs = (
         scatter(spark, load_table(spark, sf_dir, "documents"))
         .select(
@@ -4205,7 +4202,7 @@ def split_dedup_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "pfx_hash"
             ),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     fams = docs.groupBy("pfx_hash").agg(
         F.min("doc_id").alias("fam_key"),
@@ -4218,7 +4215,7 @@ def split_dedup_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fam_size",
         f"cast(({h_doc}) % 1000 >= {lo} as int) AS naive_hold",
         f"cast(({h_fam}) % 1000 >= {lo} as int) AS fam_hold",
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     fam_audit = j.groupBy("pfx_hash").agg(
         F.max("fam_size").alias("fam_size"),
         F.countDistinct("naive_hold").alias("naive_sides"),

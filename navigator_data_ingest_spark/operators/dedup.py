@@ -35,7 +35,7 @@ from navigator_data_ingest_spark.functions.exact import (
     dk_rat6,
     sp_rat6,
 )
-from navigator_data_ingest_spark.sources.tables import load_table, scatter
+from navigator_data_ingest_spark.sources.tables import load_table, pin, scatter
 
 N_MINHASH = 16
 N_BANDS = 4
@@ -49,9 +49,10 @@ COSINE_THRESHOLD = 0.3
 EMB_DIM = 64
 
 
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: md5(text) groups; canonical = min doc_id per group."""
-    docs = load_table(spark, sf_dir, "documents")
+def exact_groups(docs: DataFrame) -> DataFrame:
+    """(doc_id, content_hash, canonical_id, is_duplicate) over a
+    (doc_id, text) frame: md5(text) groups; canonical = min doc_id per
+    group."""
     w = Window.partitionBy("content_hash")
     return (
         docs.withColumn("content_hash", F.md5("text"))
@@ -62,8 +63,12 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             "canonical_id",
             (F.col("doc_id") != F.col("canonical_id")).alias("is_duplicate"),
         )
-        .orderBy("doc_id")
     )
+
+
+def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact dedup of the documents table, ordered by doc_id."""
+    return exact_groups(load_table(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
 # one md5 per shingle, then N_MINHASH cheap affine derivations
@@ -167,13 +172,12 @@ def minhash_pairs(docs: DataFrame, include_self: bool = False) -> DataFrame:
     bands = _with_band_hashes(docs).select(
         "doc_id", F.posexplode("band_hashes").alias("band_id", "band_hash")
     )
-    # r12 (guide §2.4 duplicated subtrees): the band bucket join is a
-    # SELF-join, so without a pin the shingle + MinHash signature
-    # computation — the funnel's dominant map cost — ran TWICE per
-    # plan (and the input subtree, e.g. the payload-rep collapse, with
-    # it). Pin the narrow (doc_id, band_id, band_hash) table; signatures
-    # compute once and both join sides read the pin.
-    bands = bands.localCheckpoint(eager=False)
+    # the band bucket join is a SELF-join, so without a pin the shingle
+    # + MinHash signature computation — the funnel's dominant map cost —
+    # ran TWICE per plan (and the input subtree, e.g. the payload-rep
+    # collapse, with it). Pin the narrow (doc_id, band_id, band_hash)
+    # table; signatures compute once and both join sides read the pin.
+    bands = pin(bands)
     a, b = bands.alias("a"), bands.alias("b")
     cmp = (
         F.col("a.doc_id") <= F.col("b.doc_id")
@@ -209,16 +213,26 @@ def _payload_reps(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     Returns (members, reps): members maps doc_id -> pid (the payload's
     min doc_id), reps is one row per payload with (pid, m, text).
     """
+    d, reps = _distinct_payloads(docs)
+    # members is two integers per doc, read 2-4x (both sides of the id
+    # expansion joins): pinned, the documents scan runs once for it
+    members = (
+        d.join(reps.select("pk", "pid"), "pk")
+        .select("doc_id", "pid")
+        .transform(pin)
+    )
+    return members, reps
+
+
+def _distinct_payloads(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(d, reps): the (doc_id, text) rows keyed by payload md5 ``pk``,
+    and reps, one pinned row per distinct payload (pk, pid, m, text)."""
     d = docs.select("doc_id", "text").withColumn(
         "pk", F.md5(F.coalesce(F.col("text"), F.lit("\u0000<null-text>")))
     )
-    # r12 (guide §2.4 duplicated subtrees): every funnel consumer reads
-    # reps 2-3x (signature pass, shingle/verify pass) and members 2-4x
-    # (both sides of the id expansion joins) — unpinned, the documents
-    # scan + payload md5 re-ran per copy (16 fact scans in the
-    # containment plan). Pin both: reps is DISTINCT-payload grain (the
-    # collapse's own bound), members is two integers per doc; the fact
-    # is scanned once per pin build.
+    # every funnel consumer reads reps 2-3x (signature pass,
+    # shingle/verify pass); unpinned, the documents scan + payload md5
+    # re-ran per copy. DISTINCT-payload grain, the collapse's own bound.
     reps = (
         d.groupBy("pk")
         .agg(
@@ -226,14 +240,9 @@ def _payload_reps(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
             F.count(F.lit(1)).alias("m"),
             F.min_by("text", "doc_id").alias("text"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
-    members = (
-        d.join(reps.select("pk", "pid"), "pk")
-        .select("doc_id", "pid")
-        .localCheckpoint(eager=False)
-    )
-    return members, reps
+    return d, reps
 
 
 def _collapsed_lsh_edges(spark: SparkSession, docs: DataFrame) -> DataFrame:
@@ -307,7 +316,7 @@ def star_contraction(pairs: DataFrame) -> tuple[DataFrame, int]:
     Both preserve connectivity; the fixpoint is one star per component
     (every non-min node pointing at the component minimum). Rounds are
     fingerprint-checked (count + endpoint sums) with a set-difference
-    confirmation, each round localCheckpointed so the plan stays flat.
+    confirmation, each round pinned so the plan stays flat.
 
     Returns ((node, label) for every NON-ROOT pair-covered node, rounds).
     """
@@ -315,7 +324,7 @@ def star_contraction(pairs: DataFrame) -> tuple[DataFrame, int]:
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     prev_fp, prev_edges, rounds = None, edges, 0
     for rounds in range(1, MAX_CC_ITERATIONS + 1):
@@ -343,7 +352,7 @@ def star_contraction(pairs: DataFrame) -> tuple[DataFrame, int]:
             .union(smins.select("u", F.col("m").alias("v")))       # child  -> m
             .where(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
         fp = small.agg(
             F.count(F.lit(1)), F.sum("u"), F.sum("v")
@@ -473,7 +482,7 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
     members = (
         sig.withColumn("gid", F.min("doc_id").over(gw))
         # reused by the rep pipeline and both sides of the expansion
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     reps = members.where(F.col("doc_id") == F.col("gid")).select(
         "gid", "sim_hi", "sim_lo"
@@ -552,7 +561,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     alone is quadratic in the corpus). The shingle sets join onto the
     candidate list by doc_id — two hash joins at candidate cardinality.
     """
-    # distinct-payload collapse (round 11): exact set intersection runs
+    # distinct-payload collapse: exact set intersection runs
     # once per DISTINCT text pair, thresholded BEFORE the id expansion
     # (100x duplicate-explosion probe: 13.1x -> bounded); candidacy and
     # values replay the naive per-pair join exactly (Jaccard is
@@ -643,7 +652,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from navigator_data_ingest_spark.operators.similarity import _bucket_expr
 
     # e is consumed FOUR times (the collapse, the rep-pair join, both
-    # id expansions): localCheckpoint materializes (vec_id, embedding,
+    # id expansions): the pin materializes (vec_id, embedding,
     # bucket) once, so the 384-element-access hyperplane expression is
     # computed one time instead of being re-inlined into every
     # consumer's scan/filter stage — which re-tripped janino's 64 KB
@@ -666,7 +675,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sd"
             ),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # distinct-payload groups: one row per (bucket, embedding); the
     # norm and self-cos derive from the AGGREGATED sd column (min of
@@ -805,7 +814,7 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a single pathological multi-MB document can't stall a task at
     100 TB. JVM builtin (`F.levenshtein`), no Python.
     """
-    # distinct-payload collapse (round 11): the O(len^2) edit distance
+    # distinct-payload collapse: the O(len^2) edit distance
     # runs once per DISTINCT text pair — identical texts verify once
     # and their member pairs reuse the value (100x duplicate-explosion
     # probe: 58x -> bounded). Candidacy is exact: rep self-pairs from
@@ -925,17 +934,17 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{X.sp_hash32('s', FINGERPRINT_SEED)}), h -> h % {FINGERPRINT_MOD} = 0))"
     )
     sel = X.sp_let("t", t, hashes)
-    # r12 (guide §2.4): docs feeds the df stoplist AND the prune join,
-    # and pruned feeds BOTH self-join sides — unpinned, the tokenize +
-    # shingle + hash pipeline ran 4x. Pin both narrow (doc_id, fp)
-    # tables; the corpus tokenizes ONCE.
+    # docs feeds the df stoplist AND the prune join, and pruned feeds
+    # BOTH self-join sides — unpinned, the tokenize + shingle + hash
+    # pipeline ran 4x. Pin both narrow (doc_id, fp) tables; the corpus
+    # tokenizes ONCE.
     docs = scatter(spark, load_table(spark, sf_dir, "documents")).select(
         "doc_id", F.explode(F.expr(sel)).alias("fp")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     rare = docs.groupBy("fp").agg(F.count(F.lit(1)).alias("df")).where(
         F.col("df") <= FP_MAX_DF
     )
-    pruned = docs.join(rare.select("fp"), "fp").localCheckpoint(eager=False)
+    pruned = docs.join(rare.select("fp"), "fp").transform(pin)
     a, b = pruned.alias("a"), pruned.alias("b")
     return (
         a.join(
@@ -1058,12 +1067,9 @@ def dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" % {BLOOM_BITS} as int)"
         for j in range(BLOOM_K)
     ]
-    # r12 (guide §2.3 project-early + §2.4): every downstream stage —
-    # filter build, probe screen, exact verify — needs only (doc_id,
-    # md5), so hash behind the scatter and pin the 2-column result
-    # once. The old shape re-expanded this subtree under each branch:
-    # 5 parquet scans of documents and repeated repartitions of the
-    # full text payload; now ONE scan + ONE narrow exchange feed all
+    # every downstream stage — filter build, probe screen, exact verify
+    # — needs only (doc_id, md5), so hash behind the scatter and pin
+    # the 2-column result once: ONE scan + ONE narrow exchange feed all
     # three consumers, and no shuffle ever carries text.
     docs = (
         scatter(
@@ -1071,7 +1077,7 @@ def dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         )
         .select("doc_id", F.md5("text").alias("h"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     hist = docs.where(F.col("doc_id") % BLOOM_HIST_MOD == 0)
     # the filter: one agg row holding the sorted distinct set positions
@@ -1092,19 +1098,18 @@ def dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.lit(False),
     )
-    # r12 (guide §2.4 duplicated subtrees): the hit/miss branch split
-    # below reads screened TWICE, and Spark performs no cross-branch
-    # CSE — the md5 + 8-probe + array_contains pipeline (the operator's
-    # whole per-row cost) executed once per branch. Project to the three
-    # consumed columns (p0..p7 die here; §2.3) and pin the result so the
-    # screen runs ONCE; both branches read the narrow (doc_id, h,
-    # flagged) table — the same magnitude as the docs checkpoint the
-    # operator already materializes, and the verify join input stays the
-    # flagged sliver.
+    # the hit/miss branch split below reads screened TWICE, and Spark
+    # performs no cross-branch CSE — the md5 + 8-probe + array_contains
+    # pipeline (the operator's whole per-row cost) executed once per
+    # branch. Project to the three consumed columns (p0..p7 die here)
+    # and pin the result so the screen runs ONCE; both branches read the
+    # narrow (doc_id, h, flagged) table — the same magnitude as the docs
+    # checkpoint the operator already materializes, and the verify join
+    # input stays the flagged sliver.
     screened = (
         new.join(F.broadcast(bloom))
         .select("doc_id", "h", flagged_col.alias("flagged"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     hist_md5 = hist.select("h").distinct().withColumn("is_dup", F.lit(True))
     hit = (
@@ -1205,13 +1210,12 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh_expr = X.sp_let(
         "t", X.sp_tokens("text"), f"array_distinct({X.sp_shingles('t')})"
     )
-    # r12 (guide §2.4): sh feeds BOTH sides of the ground-truth
-    # self-join — unpinned, the full-corpus sample filter + tokenize +
-    # shingle ran twice. The sample is ~RECALL_SAMPLE_TARGET rows at any
-    # scale: pin it.
+    # sh feeds BOTH sides of the ground-truth self-join — unpinned, the
+    # full-corpus sample filter + tokenize + shingle ran twice. The
+    # sample is ~RECALL_SAMPLE_TARGET rows at any scale: pin it.
     sh = scatter(spark, sample.select("doc_id", "text")).select(
         "doc_id", F.expr(sh_expr).alias("sh")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
@@ -1232,7 +1236,7 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("_j") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b")
     )
-    # cand feeds the hit join AND its own count (§2.4): unpinned, the
+    # cand feeds the hit join AND its own count: unpinned, the
     # band bucket join ran twice. Sample-pair grain — pin it.
     cand = (
         minhash_pairs(docs)
@@ -1240,7 +1244,7 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((F.col("doc_a") % F.col("_rmod") == 0)
                & (F.col("doc_b") % F.col("_rmod") == 0))
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     hit = truth.join(cand.withColumn("_c", F.lit(1)), ["doc_a", "doc_b"], "left")
     return (
@@ -1314,7 +1318,7 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONLY on the MinHash-LSH survivors (two doc_id hash joins at
     candidate cardinality), never on block self-joins.
     """
-    # distinct-payload collapse (round 11): exact containment runs once
+    # distinct-payload collapse: exact containment runs once
     # per DISTINCT text pair, thresholded BEFORE the id expansion (100x
     # duplicate-explosion probe: 13.9x -> bounded). Containment is
     # ASYMMETRIC, so when the least/greatest relabeling of a member
@@ -1588,10 +1592,10 @@ def dedup_numeric_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
         # WIDENS coverage, never splits a within-tolerance pair more
         # than one bucket apart
         .withColumn("bkt", F.expr(f"bal div {NUM_TOL_CENTS}"))
-        # r12 (guide §2.4): s fans out to the probe side, the join
-        # side and the per-nation supplier count — 3 supplier scans
-        # unpinned. Pin the narrow bucketed projection; one scan.
-        .localCheckpoint(eager=False)
+        # s fans out to the probe side, the join side and the
+        # per-nation supplier count — 3 supplier scans unpinned.
+        # Pin the narrow bucketed projection; one scan.
+        .transform(pin)
     )
     probes = s.select(
         F.col("s_suppkey").alias("ka"),
@@ -1803,11 +1807,10 @@ def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5("text").alias("h"),
         )
         .distinct()
-        # r12 (guide §2.4): d feeds the size table AND both self-join
-        # sides — unpinned, the documents scan + md5 + distinct ran 3x.
-        # Distinct (source, hash) grain: pin it; the fact is scanned
-        # ONCE.
-        .localCheckpoint(eager=False)
+        # d feeds the size table AND both self-join sides — unpinned,
+        # the documents scan + md5 + distinct ran 3x. Distinct (source,
+        # hash) grain: pin it; the fact is scanned ONCE.
+        .transform(pin)
     )
     sizes = d.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     a = d.select(F.col("source").alias("sa"), "h")
@@ -1898,7 +1901,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         scatter(spark, docs.select("doc_id", "text"))
         .groupBy("text")
         .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     eligible = F.expr(f"size({X.sp_tokens('text')}) >= {SHINGLE_K}")
     cand = minhash_pairs(groups.select("doc_id", "text")).select(
@@ -2067,15 +2070,13 @@ def dedup_band_config_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             X.sp_let("hh", f"transform(sh, s -> {X.sp_hash32('s', 0)})", sig16),
         ),
     )
-    # distinct-payload collapse (round 11): the 16-minhash signature is
+    # distinct-payload collapse: the 16-minhash signature is
     # the op's dominant cost and identical texts produce identical
     # signatures, so it computes once per DISTINCT payload and the
     # bucket census weights each payload by its multiplicity m —
     # s = Σm is exactly the per-document count (100x probe: 3.6x
     # input-growth -> ~1x, content-bounded).
-    members, reps = _payload_reps(
-        load_table(spark, sf_dir, "documents")
-    )
+    _, reps = _distinct_payloads(load_table(spark, sf_dir, "documents"))
     docs = scatter(
         spark, reps.select(F.col("pid").alias("doc_id"), "text", "m")
     ).where(F.expr(f"size({X.sp_tokens('text')}) >= {SHINGLE_K}"))

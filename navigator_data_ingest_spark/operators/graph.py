@@ -12,9 +12,8 @@ co-partitioned after the first shuffle), one aggregation shuffle on
 ``dst``. Degrees and the node count are computed once; the node count
 reaches the expression via a broadcast one-row crossJoin, NOT a
 driver-side collect, so the whole operator remains one lazy plan.
-Iterations are unrolled (KMEANS-style determinism) with a
-localCheckpoint per round to keep the shared edge subtree from
-re-evaluating.
+Iterations are unrolled (KMEANS-style determinism) with a pin per
+round to keep the shared edge subtree from re-evaluating.
 """
 
 from __future__ import annotations
@@ -29,7 +28,7 @@ from navigator_data_ingest_spark.functions.exact import (
     sp_rat6,
     sp_units,
 )
-from navigator_data_ingest_spark.sources.tables import load_table
+from navigator_data_ingest_spark.sources.tables import load_table, pin
 
 DAMPING = 0.85
 PR_ITERS = 2
@@ -43,7 +42,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # undirected: each edge contributes both directions
     ed = edges.select(F.col("p").alias("src"), F.col("s").alias("dst")).union(
@@ -71,7 +70,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("dst").alias("node"),
                 (F.lit(1.0 - DAMPING) / F.col("n") + F.lit(DAMPING) * F.col("m")).alias("r"),
             )
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
     return (
         ranks.crossJoin(F.broadcast(ntot))
@@ -181,7 +180,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("e.a", "e.b")
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     w1 = edges.select(F.col("a").alias("wa"), F.col("b").alias("wb"))
     w2 = edges.select(F.col("a").alias("xa"), F.col("b").alias("xc"))
@@ -283,7 +282,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("e.a", "e.b")
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # symmetric adjacency: (node, neighbor) both directions
     adj = und.select(F.col("a").alias("n"), F.col("b").alias("nb")).unionByName(
@@ -388,8 +387,8 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's recursive CTE over the same edge derivation.
 
     Scale shape: the corpus-scale work (lineitem ⋈ part -> distinct
-    brand pairs) is materialized ONCE behind a localCheckpoint before
-    the recursion — without it Spark's recursive execution re-evaluates
+    brand pairs) is materialized ONCE behind a pin before the
+    recursion — without it Spark's recursive execution re-evaluates
     the anchor's entire subtree every iteration (measured 7.8 s -> the
     corpus chain three times); the recursive member also DISTINCTs its
     frontier so each hop carries at most |brands| rows instead of
@@ -410,7 +409,7 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT a, b FROM und UNION ALL SELECT b, a FROM und
         """
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     edges.createOrReplaceTempView("v_rc_edges")
     return spark.sql(
         """
@@ -463,7 +462,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     und = edges.select(F.col("p").alias("src"), F.col("s").alias("dst")).union(
         edges.select(F.col("s").alias("src"), F.col("p").alias("dst"))
@@ -485,7 +484,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels = (
             labels.join(nb, labels["node"] == nb["src"])
             .select("node", F.least(F.col("lbl"), F.col("nb_min")).alias("lbl"))
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
     return labels.select("node", F.col("lbl").alias("label")).orderBy("node")
 
@@ -548,7 +547,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     ed = edges.select(F.col("p").alias("src"), F.col("s").alias("dst")).union(
         edges.select(F.col("s").alias("src"), F.col("p").alias("dst"))
@@ -564,7 +563,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             ed.join(alive, "src")
             .join(alive.withColumnRenamed("src", "dst"), "dst")
             .select("src", "dst")
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
     return (
         ed.groupBy("src")
@@ -628,11 +627,19 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     hub = edges.select("p").distinct().select("p", F.lit(1.0).alias("h"))
-    auth = None
-    for _ in range(HITS_ITERS):
+    for r in range(HITS_ITERS):
+        if r:
+            # the hub update of round r-1; the last round's hub is unread
+            h_raw = edges.join(auth, "s").groupBy("p").agg(F.sum("a").alias("h_raw"))
+            h_tot = h_raw.agg(F.sum("h_raw").alias("ht"))
+            hub = (
+                h_raw.crossJoin(F.broadcast(h_tot))
+                .select("p", (F.col("h_raw") / F.col("ht")).alias("h"))
+                .transform(pin)
+            )
         a_raw = (
             edges.join(hub, "p").groupBy("s").agg(F.sum("h").alias("a_raw"))
         )
@@ -640,16 +647,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         auth = (
             a_raw.crossJoin(F.broadcast(a_tot))
             .select("s", (F.col("a_raw") / F.col("at")).alias("a"))
-            .localCheckpoint(eager=False)
-        )
-        h_raw = (
-            edges.join(auth, "s").groupBy("p").agg(F.sum("a").alias("h_raw"))
-        )
-        h_tot = h_raw.agg(F.sum("h_raw").alias("ht"))
-        hub = (
-            h_raw.crossJoin(F.broadcast(h_tot))
-            .select("p", (F.col("h_raw") / F.col("ht")).alias("h"))
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
     return (
         auth.select(
@@ -716,7 +714,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("b"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     und = edges.union(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -884,10 +882,10 @@ def graph_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
         .groupBy("user_id", "event_type")
         .agg(F.count(F.lit(1)).alias("w"))
-        # r12 (guide §2.4): w feeds the norms AND both self-join sides —
-        # unpinned, the events scan + grid collapse ran 3x. (user, type)
-        # grain: pin it; the fact is scanned ONCE.
-        .localCheckpoint(eager=False)
+        # w feeds the norms AND both self-join sides — unpinned, the
+        # events scan + grid collapse ran 3x. (user, type) grain: pin
+        # it; the fact is scanned ONCE.
+        .transform(pin)
     )
     norms = w.groupBy("event_type").agg(
         F.sum(F.expr("w * w")).alias("n2"),
@@ -966,7 +964,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     determinism discipline): each round is one frontier⋈edges join on
     the edge key plus an anti-join against the visited set — the
     visited set stays partitioned on the node key, no collected
-    frontiers, localCheckpoint per round caps the plan. Counts
+    frontiers, a pin per round caps the plan. Counts
     collapse to the ≤5-row hop grid. NULL rule: lines missing either
     key form no edge (both engines).
     """
@@ -979,7 +977,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     und = edges.select(F.col("p").alias("src"), F.col("s").alias("dst")).unionAll(
         edges.select(F.col("s").alias("src"), F.col("p").alias("dst"))
@@ -994,7 +992,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).alias("hop"),
         )
     )
-    dist = seeds.localCheckpoint(eager=False)
+    dist = pin(seeds)
     frontier = dist
     for h in range(1, BFS_HOPS + 1):
         nbr = (
@@ -1006,7 +1004,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             nbr.join(dist.select("node").withColumnRenamed("node", "_v"),
                      nbr.node == F.col("_v"), "left_anti")
             .select("node", F.lit(h).alias("hop"))
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
         dist = dist.unionAll(new)
         frontier = new
@@ -1118,7 +1116,7 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey").cast("bigint") * 2 + 1).alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # (pre-partitioning und by src was measured and rejected: the extra
     # 2|E|-row exchange costs more than the per-round join shuffles it
@@ -1142,7 +1140,7 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # seed pick), NOT (k-1)/smod from the raw key value: with SPARSE
     # supplier keys that quotient can exceed 63, where Spark's shiftleft
     # masks the shift amount mod 64 (silent seed aliasing) and
-    # bit_get(mask, idx) raises (r9 ADVICE). The stripe row count is
+    # bit_get(mask, idx) raises. The stripe row count is
     # ≤ n/smod + 1 < 64 regardless of key density.
     sw = Window.orderBy("k")
     sidx = (
@@ -1152,7 +1150,7 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("k").cast("bigint") * 2 + 1).alias("seed"),
             (F.row_number().over(sw) - 1).cast("int").alias("idx"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     cum = sidx.select(
         F.col("seed").alias("node"),
@@ -1160,7 +1158,7 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cums = []
     for _h in range(1, HARMONIC_HOPS + 1):
-        # r12 (guide §3.1): the checkpointed cum side carries no stats,
+        # the pinned cum side carries no stats,
         # so the planner falls back to sort-merge — sorting the 2|E|-row
         # edge list every round. SHUFFLE_HASH builds the (strictly
         # smaller, |nodes|-bounded) cum side as a per-partition hash
@@ -1176,7 +1174,7 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             cum.unionAll(expanded)
             .groupBy("node")
             .agg(F.expr("bit_or(mask)").alias("mask"))
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
         cums.append(cum)
     tagged = None
@@ -1303,7 +1301,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, (F.col("l_orderkey") == F.col("_o")) & (F.col("ba") < F.col("bb")))
         .select("ba", "bb")
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     deg = (
         edges.select(F.col("ba").alias("node"))
@@ -1437,7 +1435,7 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("e.a", "e.b")
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     adj = und.select(F.col("a").alias("n"), F.col("b").alias("nb")).unionByName(
         und.select(F.col("b").alias("n"), F.col("a").alias("nb"))
@@ -1543,14 +1541,12 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     ed = edges.select(F.col("p").alias("src"), F.col("s").alias("dst")).union(
         edges.select(F.col("s").alias("src"), F.col("p").alias("dst"))
     )
-    spine = ed.select(F.col("src").alias("node")).distinct().localCheckpoint(
-        eager=False
-    )
+    spine = ed.select(F.col("src").alias("node")).distinct().transform(pin)
     x = spine.selectExpr("node", "cast(1000000 as bigint) AS u")
     a = KATZ_ALPHA_DIV
     for _ in range(KATZ_ITERS):
@@ -1565,7 +1561,7 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             .selectExpr(
                 "node", "1000000 + cast(coalesce(su, 0) as bigint) AS u"
             )
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
     return (
         x.selectExpr(

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from navigator_data_ingest_spark.functions.exact import dk_units, sp_units
 from navigator_data_ingest_spark.functions.prefix import below_sums
-from navigator_data_ingest_spark.sources.tables import load_table, scatter
+from navigator_data_ingest_spark.sources.tables import load_table, pin, scatter
 
 MODALITIES = ["image", "audio", "video"]
 FORMATS = {"image": ["png", "jpeg", "webp"], "audio": ["wav", "flac"], "video": ["mp4", "webm"]}
@@ -279,9 +279,7 @@ def phash_neardup_pairs(raw_docs: DataFrame) -> DataFrame:
     )
     sigs = docs.select("doc_id", F.expr(_phash_bands_expr()).alias("bands"))
     gw = Window.partitionBy("bands")
-    members = sigs.withColumn("gid", F.min("doc_id").over(gw)).localCheckpoint(
-        eager=False
-    )
+    members = sigs.withColumn("gid", F.min("doc_id").over(gw)).transform(pin)
     reps = members.where(F.col("doc_id") == F.col("gid")).select("gid", "bands")
     banded = reps.select(
         "gid", "bands", F.posexplode("bands").alias("band_idx", "band_val")
@@ -792,7 +790,7 @@ def mm_aspect_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"cast(greatest(-{ASPECT_BUCKET_CLAMP}, least({ASPECT_BUCKET_CLAMP}, "
         f"round(ln(w / h) / ln(2.0) * {ASPECT_LOG_SCALE}, 0))) as int) "
         "AS bucket",
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     # doc_id is distinct, so the count of the bucket's images with a
     # smaller doc_id is an image's 0-based rank within its bucket
     rn = below_sums(b, "doc_id", by=["bucket"], rank=F.lit(1))
@@ -891,11 +889,11 @@ def mm_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     run = Window.partitionBy("doc_id").orderBy("i").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    # r12 (guide §2.4): seg and runs built the IDENTICAL island
-    # windows twice — the whole explode+per-frame-md5 subtree ran 2x
-    # (3 scans with the base join). One (doc, seg) rollup yields all
-    # three audit numbers exactly: n_voiced = Σ seg_len, n_segments =
-    # max seg_id, longest = max seg_len — one frame pass, one join.
+    # seg and runs built the IDENTICAL island windows twice — the
+    # whole explode+per-frame-md5 subtree ran 2x (3 scans with the
+    # base join). One (doc, seg) rollup yields all three audit
+    # numbers exactly: n_voiced = Σ seg_len, n_segments = max seg_id,
+    # longest = max seg_len — one frame pass, one join.
     segrun = (
         voiced.withColumn(
             "newseg",
@@ -1249,11 +1247,11 @@ def mm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length("media").alias("n_bytes"),
         )
         .withColumn("block", F.expr(f"doc_id div {SHARD_BLOCK}"))
-        # r12 (guide §2.4 duplicated subtrees + §2.3): assets feeds the
-        # intra window AND the block totals — unpinned, the binary media
-        # scan ran twice just to re-take length(). Pin the 4-integer
-        # asset-grain table; the payload bytes are read ONCE.
-        .localCheckpoint(eager=False)
+        # assets feeds the intra window AND the block totals — unpinned,
+        # the binary media scan ran twice just to re-take length(). Pin
+        # the 4-integer asset-grain table; the payload bytes are read
+        # ONCE.
+        .transform(pin)
     )
     intra = assets.withColumn(
         "intra_cum",
@@ -1264,12 +1262,12 @@ def mm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # (modality, block) grain — |corpus|/SHARD_BLOCK rows; feeds both
-    # the super cumsum and the super offsets, so pin it too (§2.4).
+    # the super cumsum and the super offsets, so pin it too.
     blocks = (
         assets.groupBy("modality", "block")
         .agg(F.sum("n_bytes").alias("block_total"))
         .withColumn("super", F.expr(f"block div {SHARD_BLOCK}"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     intra_super = blocks.withColumn(
         "intra_super_cum",

@@ -24,7 +24,7 @@ from navigator_data_ingest_spark.functions.exact import (
     dk_rat6,
     sp_rat6,
 )
-from navigator_data_ingest_spark.sources.tables import load_table, scatter
+from navigator_data_ingest_spark.sources.tables import load_table, pin, scatter
 
 EMB_DIM = 64
 TOP_K = 5
@@ -129,10 +129,10 @@ def sim_search_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings table (query set ~QUERY_TARGET rows at any scale)."""
     raw = load_table(spark, sf_dir, "embeddings")
     e = scatter(spark, raw)
-    # r12 (guide §2.4): the query side is BROADCAST, so routing it
-    # through the scatter repartition only inserted an Exchange inside
-    # the broadcast build (the collect gathers every partition anyway).
-    # Stripe the raw relation instead — same rows, one less exchange.
+    # the query side is BROADCAST, so routing it through the scatter
+    # repartition only inserted an Exchange inside the broadcast build
+    # (the collect gathers every partition anyway). Stripe the raw
+    # relation instead — same rows, one less exchange.
     q = query_stripe(raw, raw).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
@@ -246,17 +246,17 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     raw = load_table(spark, sf_dir, "embeddings")
     e = scatter(spark, raw)
-    # r12 (guide §2.4): the centroid side is BROADCAST — stripe the raw
-    # relation so the broadcast build carries no scatter Exchange; PIN
-    # the ≤K_CENTROIDS-row stripe because BOTH the cell assignment and
-    # the probe ranking broadcast it (unpinned, each copy was its own
+    # the centroid side is BROADCAST — stripe the raw relation so the
+    # broadcast build carries no scatter Exchange; PIN the
+    # ≤K_CENTROIDS-row stripe because BOTH the cell assignment and the
+    # probe ranking broadcast it (unpinned, each copy was its own
     # full-corpus stripe pass).
     cents = (
         centroid_stripe(raw, raw)
         .select(
             F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     ccos = _cos("embedding", "cvec")
     assign = (
@@ -371,8 +371,8 @@ def sim_search_bruteforce_np_scored(spark: SparkSession, sf_dir: str) -> DataFra
     # ~QUERY_TARGET rows at any corpus size (the broadcast below is the
     # production pattern — queries to every task, corpus never moves)
     q_rows = (
-        # r12 (guide §2.4): this side is COLLECTED — striping the raw
-        # relation drops the scatter Exchange from the collect job.
+        # this side is COLLECTED — striping the raw relation drops
+        # the scatter Exchange from the collect job.
         query_stripe(raw, raw)
         .select("vec_id", "embedding")
         .collect()
@@ -467,6 +467,23 @@ def sim_search_bruteforce_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def label_centroids(
+    df: DataFrame, dim: int, label_col: str = "label", vec_col: str = "embedding"
+) -> DataFrame:
+    """Per-label centroid of a vector column WITHOUT row explosion:
+    (label_col, centroid array<double>). ``dim`` is the vector length,
+    passed explicitly so no driver-side peek at the data is needed.
+
+    One shuffle on ~|labels| groups; each dimension is its own JVM-side
+    partial aggregate (the posexplode alternative shuffles dim× the
+    corpus).
+    """
+    per_dim = [F.avg(F.col(vec_col).getItem(i)).alias(f"d{i}") for i in range(dim)]
+    return df.groupBy(label_col).agg(*per_dim).select(
+        label_col, F.array(*[F.col(f"d{i}") for i in range(dim)]).alias("centroid")
+    )
+
+
 def emb_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid of the embedding column, WITHOUT row explosion.
 
@@ -477,13 +494,9 @@ def emb_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-row result is posexploded for presentation.
     """
     emb = load_table(spark, sf_dir, "embeddings").select("label", "embedding")
-    per_dim = [
-        F.avg(F.col("embedding").getItem(i)).alias(f"d{i}") for i in range(EMB_DIM)
-    ]
-    agg = emb.groupBy("label").agg(*per_dim)
-    centroid = F.array(*[F.col(f"d{i}") for i in range(EMB_DIM)])
     return (
-        agg.select("label", F.posexplode(centroid).alias("pos", "c"))
+        label_centroids(emb, EMB_DIM)
+        .select("label", F.posexplode("centroid").alias("pos", "c"))
         .select("label", F.col("pos").cast("int").alias("pos"), F.round("c", 6).alias("c"))
         .orderBy("label", "pos")
     )
@@ -544,10 +557,10 @@ def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("vec_id", "e", F.col("m.cid").alias("cid"), F.col("m.dist2").alias("dist2"))
             # each round's assignment feeds BOTH the centroid update and
-            # (on the last round) the final rollup — localCheckpoint so
+            # (on the last round) the final rollup — pinned so
             # the shared subtree computes once and the plan stays flat
             # across iterations (same pattern as dedup connected comps)
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
         centroids = (
             assigned.groupBy("cid")
@@ -614,10 +627,9 @@ def emb_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     w = Window.orderBy("vec_id")
-    # r12 (guide §2.4): the 16-row codebook is a bounded limit — build
-    # it from the RAW relation (same cast) so the broadcast side
-    # carries no scatter Exchange; identical rows (vec_id order, same
-    # projection).
+    # the 16-row codebook is a bounded limit — build it from the RAW
+    # relation (same cast) so the broadcast side carries no scatter
+    # Exchange; identical rows (vec_id order, same projection).
     codebook = (
         raw.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
         .orderBy("vec_id")
@@ -703,9 +715,8 @@ def sim_search_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     w = Window.orderBy("vec_id")
-    # r12 (guide §2.4): bounded codebook limit reads the RAW relation
-    # (same cast) — no scatter Exchange under the broadcast build;
-    # identical 16 rows.
+    # bounded codebook limit reads the RAW relation (same cast) — no
+    # scatter Exchange under the broadcast build; identical 16 rows.
     codebook = (
         raw.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
         .orderBy("vec_id")
@@ -737,8 +748,8 @@ def sim_search_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.concat(*[F.col(f"m{s}.s") for s in range(PQ_M)]).alias("recon"),
     )
-    # r12 (guide §2.4): broadcast side — stripe raw (same cast) so the
-    # broadcast build carries no scatter Exchange.
+    # broadcast side — stripe raw (same cast) so the broadcast build
+    # carries no scatter Exchange.
     q = query_stripe(
         raw.select("vec_id", F.col("embedding").cast("array<double>").alias("e")),
         raw,
@@ -832,13 +843,13 @@ def sim_search_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = scatter(spark, raw).withColumn(
         "bucket", F.expr(_bucket_expr("embedding"))
     )
-    # r12 (guide §2.4 duplicated subtrees): the query stripe fed the
-    # exact baseline, the candidate count AND the composed LSH ranking —
-    # each copy a full corpus pass to find ~QUERY_TARGET rows (9
-    # embeddings scans in the plan). Pin the bounded stripe once and
-    # pass it into the shared _lsh_topk body instead of re-deriving
-    # everything through sim_search_lsh: corpus passes drop 6+ -> 3
-    # (baseline scoring, candidate screen, LSH ranking).
+    # the query stripe fed the exact baseline, the candidate count AND
+    # the composed LSH ranking — each copy a full corpus pass to find
+    # ~QUERY_TARGET rows (9 embeddings scans in the plan). Pin the
+    # bounded stripe once and pass it into the shared _lsh_topk body
+    # instead of re-deriving everything through sim_search_lsh: corpus
+    # passes drop 6+ -> 3 (baseline scoring, candidate screen, LSH
+    # ranking).
     q = (
         query_stripe(e, raw)
         .select(
@@ -846,7 +857,7 @@ def sim_search_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("qvec"),
             F.col("bucket").alias("qbucket"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     bf = cosine_topk(e.select("vec_id", "embedding"),
                      q.select("query_id", "qvec"), TOP_K, dim=EMB_DIM)
@@ -925,36 +936,31 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = load_table(spark, sf_dir, "embeddings")
     # exact-payload groups: one shuffle on the embedding, gid = lowest
     # member id; reps are the gid rows (they carry the payload once).
-    # r12: the partition key is (xxhash64(embedding), embedding) — the
+    # the partition key is (xxhash64(embedding), embedding) — the
     # hash is a pure function of the array, so the groups are identical,
-    # but the window's sort comparator now decides on the 8-byte hash
-    # first and touches the 64-double array comparison only for
-    # hash-equal rows (guide §1.2 per-task work).
-    # r13 (guide §2.4 remove shuffles outright): the window's hash
-    # exchange immediately reshuffles whatever partitioning the scan
-    # arrives with, and there is no compute-heavy map work between scan
-    # and exchange — the former scatter() round-robin exchange here
-    # moved the full vector payload an extra time for nothing.
+    # but the window's sort comparator decides on the 8-byte hash first
+    # and touches the 64-double array comparison only for hash-equal
+    # rows. No scatter() before the window: its hash exchange
+    # reshuffles whatever partitioning the scan arrives with, and there
+    # is no compute-heavy map work between scan and exchange.
     gw = Window.partitionBy(F.xxhash64("embedding"), "embedding")
     members = (
         raw.select("vec_id", "embedding")
         .withColumn("gid", F.min("vec_id").over(gw))
         # reused by the rep pipeline, both sides of the count join and
         # the final audit join — pin the grouped pass
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
-    # r13 (guide §2.5 idle capacity): the pin inherits AQE's coalesced
-    # partitioning — at toy scale that is ONE partition, which would
-    # serialize the reps x K scoring fold on a single core. scatter()
-    # only repartitions UPWARD, so on a well-partitioned pin (any real
-    # corpus) it is a no-op; locally it spreads the codegen'd fold.
+    # the pin inherits AQE's coalesced partitioning — at toy scale that
+    # is ONE partition, which would serialize the reps x K scoring fold
+    # on a single core; scatter() spreads the codegen'd fold over the
+    # default parallelism.
     reps = scatter(
         spark,
         members.where(F.col("vec_id") == F.col("gid")).select("gid", "embedding"),
     )
-    # r12 (guide §2.4): broadcast side — stripe the raw relation so
-    # the broadcast build (and the checkpointed assign plan) carries no
-    # scatter Exchange.
+    # broadcast side — stripe the raw relation so the broadcast build
+    # (and the checkpointed assign plan) carries no scatter Exchange.
     cents = centroid_stripe(raw, raw).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
     )
@@ -994,7 +1000,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the near-rel self-join reads it twice and the audit join once;
         # pin the (1-row-per-rep) result so the reps x K scoring pass
         # runs once, not three times
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     ga = assign.select(
         F.col("gid").alias("gid_a"),
@@ -1127,14 +1133,13 @@ def emb_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     raw = load_table(spark, sf_dir, "embeddings")
     e = scatter(spark, raw)
-    # r12 (guide §2.4): broadcast side — stripe raw, no scatter Exchange
-    # inside the broadcast build.
-    # r12 (guide §2.4): the stripe feeds BOTH scoring passes — unpinned,
+    # broadcast side — stripe raw, no scatter Exchange inside the
+    # broadcast build. The stripe feeds BOTH scoring passes — unpinned,
     # each was its own full-corpus stripe scan. Bounded (~QUERY_TARGET
     # rows): pin it.
     q = query_stripe(raw, raw).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     full = cosine_topk(e, q, TOP_K, dim=EMB_DIM).select(
         "query_id", F.col("vec_id").alias("full_vec")
     )
@@ -1332,10 +1337,10 @@ def emb_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rank") <= PURITY_K)
         .groupBy("query_id", "q_label")
         .agg(F.sum("same").alias("n_same"))
-        # r12 (guide §2.4): votes feeds the per-label AND overall
-        # aggregates — unpinned, the corpus kNN join + window ran twice.
-        # Bounded at |stripe| rows: pin it.
-        .localCheckpoint(eager=False)
+        # votes feeds the per-label AND overall aggregates — unpinned,
+        # the corpus kNN join + window ran twice. Bounded at |stripe|
+        # rows: pin it.
+        .transform(pin)
     )
     per_label = votes.groupBy(F.col("q_label").cast("string").alias("label")).agg(
         F.count(F.lit(1)).alias("n_queries"),
@@ -1426,13 +1431,11 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate is ||u|| of the final round (v entering it is unit).
     """
     raw = load_table(spark, sf_dir, "embeddings")
-    # persist() the scattered projection ONCE before the loop: each
-    # power iteration consumes `e`, and without the cache every lazy-
-    # checkpoint materialization re-ran the parquet scan AND scatter()'s
-    # full corpus repartition per iteration (VERDICT r7 perf-weak item —
-    # ITERS-1 avoidable full-corpus shuffles at 100 TB). persist (not
-    # localCheckpoint) keeps lineage so lost blocks recompute on a real
-    # cluster; iteration 1 fills the cache, later iterations read it.
+    # persist the scattered projection once before the loop: every
+    # power iteration reads `e`, and without the cache each iteration
+    # re-ran the parquet scan and scatter()'s full-corpus repartition.
+    # persist, not pin, keeps lineage, so lost blocks are recomputed;
+    # iteration 1 fills the cache, later iterations read it.
     e = (
         scatter(spark, raw)
         .select(F.col("embedding").cast("array<double>").alias("e"))
@@ -1442,9 +1445,8 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     vdf = spark.range(1).select(F.expr(v0).alias("v"))
     # every per-dimension expression is assembled as ONE selectExpr
     # string, not EMB_DIM Column objects: the Column form cost ~190 py4j
-    # round-trips per iteration (~1.3 s of DRIVER time each — the other
-    # half of the VERDICT r7 perf-weak item, alongside the per-iteration
-    # rescan persist() fixes above). Same expressions, same plan.
+    # round-trips per iteration (~1.3 s of driver time each). Same
+    # expressions, same plan.
     nrm_expr = (
         "sqrt(" + " + ".join(f"u{j} * u{j}" for j in range(EMB_DIM)) + ")"
     )
@@ -1465,8 +1467,8 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             # without it projection collapse inlines the 64-term norm
             # into every array slot and the next round's fold multiplies
             # the expression tree again — the optimizer OOMs before any
-            # job runs. Lazy, so building the DataFrame stays job-free.
-            .localCheckpoint(eager=False)
+            # job runs.
+            .transform(pin)
         )
     return (
         vdf.select(F.posexplode("v").alias("pos", "loading"), "nrm")
@@ -1579,9 +1581,7 @@ def emb_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j in range(EMB_DIM)
         ]
     )
-    musd = F.broadcast(
-        stats.select(mu.alias("mu"), sd.alias("sd")).localCheckpoint(eager=False)
-    )
+    musd = F.broadcast(stats.select(mu.alias("mu"), sd.alias("sd")))
     term = (
         "((element_at(e, {i}) - element_at(mu, {i})) / element_at(sd, {i}))"
         " * ((element_at(e, {i}) - element_at(mu, {i})) / element_at(sd, {i}))"
@@ -1908,11 +1908,11 @@ def emb_distance_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the histogram is a 20-bin floor bucketing of ROUNDED similarity.
     """
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # r12 (guide §2.4): the three stride equijoins each scanned the
-    # corpus twice (6 scans, 3 joins). One exploded shifted-probe side
-    # (3 rows per vector, stride-tagged) turns them into ONE equijoin on
-    # vec_id — 2 scans, one join; the per-pair cosine expression and the
-    # (stride, pair) multiset are unchanged.
+    # the three stride equijoins each scanned the corpus twice (6 scans,
+    # 3 joins). One exploded shifted-probe side (3 rows per vector,
+    # stride-tagged) turns them into ONE equijoin on vec_id — 2 scans,
+    # one join; the per-pair cosine expression and the (stride, pair)
+    # multiset are unchanged.
     shifted = ", ".join(
         f"struct(vec_id - {k} AS vec_id, {k} AS stride)"
         for k in DIST_HIST_STRIDES
@@ -1985,16 +1985,16 @@ def emb_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
     output rows, one bounded re-agg to the histogram, the stripe size
     on a 1-row broadcast. Integers end-to-end.
     """
-    # r12 (guide §2.4 duplicated subtrees): bf feeds BOTH the occurrence
-    # aggregation and the n_queries count; without a pin the ENTIRE
-    # bruteforce composition (corpus scan, broadcast scoring, top-k
-    # window) executed twice — the plan held two copies of the subtree.
-    # bf is bounded at K x |stripe| (~40) rows at ANY corpus size, so
-    # the lazy checkpoint is a constant-size artifact.
+    # bf feeds BOTH the occurrence aggregation and the n_queries count;
+    # without a pin the ENTIRE bruteforce composition (corpus scan,
+    # broadcast scoring, top-k window) executed twice — the plan held
+    # two copies of the subtree. bf is bounded at K x |stripe| (~40)
+    # rows at ANY corpus size, so the lazy checkpoint is a constant-size
+    # artifact.
     bf = (
         sim_search_bruteforce(spark, sf_dir)
         .select("query_id", "vec_id")
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     nq = F.broadcast(
         bf.agg(F.countDistinct("query_id").alias("n_queries"))
@@ -2123,8 +2123,8 @@ def emb_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     raw = load_table(spark, sf_dir, "embeddings")
     e = scatter(spark, raw).where(F.col("label").isNotNull())
-    # r12 (guide §2.4): broadcast side — stripe the raw (filtered)
-    # relation, no scatter Exchange inside the broadcast build.
+    # broadcast side — stripe the raw (filtered) relation, no
+    # scatter Exchange inside the broadcast build.
     q = query_stripe(
         raw.where(F.col("label").isNotNull()), raw
     ).select(
@@ -2549,15 +2549,14 @@ def emb_confusion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("cand").alias("best"))
         .select("label", F.col("best.cl").alias("pred"))
     )
-    # r12 (guide §2.4 duplicated subtrees): conf feeds t, p, tp and the
-    # two global aggregates — unpinned, the corpus scoring crossJoin ran
-    # 5x in one plan (12 embeddings scans). The L x L confusion grid is
-    # bounded at any corpus size: pin it; the corpus is scanned twice
-    # (centroids + scoring) total.
+    # conf feeds t, p, tp and the two global aggregates — unpinned, the
+    # corpus scoring crossJoin ran 5x in one plan (12 embeddings scans).
+    # The L x L confusion grid is bounded at any corpus size: pin it;
+    # the corpus is scanned twice (centroids + scoring) total.
     conf = (
         pred.groupBy("label", "pred")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     t = conf.groupBy("label").agg(F.sum("n").alias("t_k"))
     p = conf.groupBy(F.col("pred").alias("_p")).agg(F.sum("n").alias("p_k"))
@@ -2861,8 +2860,8 @@ def emb_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     raw = load_table(spark, sf_dir, "embeddings")
     e = scatter(spark, raw).select("vec_id", "embedding")
-    # r12 (guide §2.4): broadcast side — stripe raw, no scatter Exchange
-    # inside the broadcast build.
+    # broadcast side — stripe raw, no scatter Exchange inside the
+    # broadcast build.
     q = query_stripe(raw, raw).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
@@ -2878,10 +2877,10 @@ def emb_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r2 = min distance strictly above r1 (ties at r1 mean r2 = r1,
     # which the ratio turns into ln(1) = 0 — drop those too).
-    # r12 (guide §2.4): the old nn-then-join shape scored the corpus
-    # TWICE (scored fed both the min pass and the strictly-above pass).
-    # dense_rank <= 2 keeps exactly the rows carrying the two smallest
-    # DISTINCT distances per query in ONE pass (WindowGroupLimit prunes
+    # the old nn-then-join shape scored the corpus TWICE (scored fed
+    # both the min pass and the strictly-above pass). dense_rank <= 2
+    # keeps exactly the rows carrying the two smallest DISTINCT
+    # distances per query in ONE pass (WindowGroupLimit prunes
     # map-side); r1/r2 fall out as conditional mins, and the surviving
     # query set (has a second distinct distance, r1 > 0) is unchanged.
     dw = Window.partitionBy("query_id").orderBy("d")
@@ -3062,19 +3061,19 @@ def emb_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         F.expr(_bucket_expr_n("embedding", LSH_TUNE_MAX)).alias("code"),
     )
-    # r12 (guide §2.4): q feeds the scored pass AND the n_queries count
-    # — unpinned, each was its own full-corpus stripe scan. Bounded
-    # (~QUERY_TARGET rows): pin it.
+    # q feeds the scored pass AND the n_queries count — unpinned, each
+    # was its own full-corpus stripe scan. Bounded (~QUERY_TARGET
+    # rows): pin it.
     q = query_stripe(e, raw).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
         F.col("code").alias("qcode"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     cos6 = F.round(_cos("qvec", "embedding", EMB_DIM), 6)
     scored = (
         e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", "code", "qcode", cos6.alias("c6"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     exact = (
         scored.withColumn(
@@ -3279,8 +3278,8 @@ def emb_ivf_cell_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     raw = load_table(spark, sf_dir, "embeddings")
     e = scatter(spark, raw)
-    # r12 (guide §2.4): broadcast side — stripe raw, no scatter Exchange
-    # inside the broadcast build.
+    # broadcast side — stripe raw, no scatter Exchange inside the
+    # broadcast build.
     cents = centroid_stripe(raw, raw).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
     )
@@ -3299,13 +3298,13 @@ def emb_ivf_cell_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_id", F.col("m.cid").alias("cell"))
     )
-    # r12 (guide §2.4): cells feeds the totals AND the final share rows
-    # — unpinned, the corpus cell-assignment scoring ran twice. Bounded
-    # at K_CENTROIDS rows: pin it.
+    # cells feeds the totals AND the final share rows — unpinned, the
+    # corpus cell-assignment scoring ran twice. Bounded at K_CENTROIDS
+    # rows: pin it.
     cells = (
         assign.groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = F.broadcast(
         cells.agg(
@@ -3481,12 +3480,11 @@ def emb_cka_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.expr("cast(x as double)")).alias("mn"),
             F.max(F.expr("cast(x as double)")).alias("mx"),
         )
-        # r12 (guide §2.4 duplicated subtrees): means feeds the spread
-        # flags AND two broadcast joins — unpinned, the corpus scan +
-        # posexplode ran 3x for this EMB_DIM-row table. Pin it (64 rows
-        # at any scale); the corpus is scanned once here and once in the
-        # cells grid.
-        .localCheckpoint(eager=False)
+        # means feeds the spread flags AND two broadcast joins —
+        # unpinned, the corpus scan + posexplode ran 3x for this
+        # EMB_DIM-row table. Pin it (64 rows at any scale); the corpus
+        # is scanned once here and once in the cells grid.
+        .transform(pin)
     )
     # EXACT block-variation discriminant (round-11 all-ties axis, which
     # also collapses the embedding arrays): with an all-identical

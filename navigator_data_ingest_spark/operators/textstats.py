@@ -21,7 +21,7 @@ from navigator_data_ingest_spark.functions.exact import (
     sp_rat6,
     sp_units,
 )
-from navigator_data_ingest_spark.sources.tables import load_table, scatter
+from navigator_data_ingest_spark.sources.tables import load_table, pin, scatter
 
 # tiny per-language stopword lists for the n-gram/stopword heuristic
 STOPWORDS = {
@@ -244,16 +244,16 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id", F.explode(F.expr(X.sp_tokens("text"))).alias("token")
     )
-    # r12 (guide §2.4): tf feeds the document-frequency rollup AND the
-    # scoring join — unpinned, the tokenize+explode subtree ran twice
-    # (3 documents scans with the N count). Pin the (doc, token) tf
-    # table; the corpus is tokenized ONCE and both consumers read the
-    # pin. (N stays its own count-only scan: zero-token documents are
-    # in N but not in tf, so N cannot be derived from the pin.)
+    # tf feeds the document-frequency rollup AND the scoring join —
+    # unpinned, the tokenize+explode subtree ran twice (3 documents
+    # scans with the N count). Pin the (doc, token) tf table; the
+    # corpus is tokenized ONCE and both consumers read the pin. (N
+    # stays its own count-only scan: zero-token documents are in N but
+    # not in tf, so N cannot be derived from the pin.)
     tf = (
         tok.groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     df_tbl = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     scored = (
@@ -1037,11 +1037,11 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     +0.5-smoothed log, identical literal in both engines.
     """
     terms = _arr_lit(BM25_TERMS)
-    # r12 (guide §2.4): the corpus stats and the query-term hits each
-    # re-tokenized the corpus, and tf's fan-out doubled the latter — 3
-    # tokenize passes. ONE doc-grain pass emits the doc length AND the
-    # (small, pre-filtered) query-term hit array; pin it — every doc
-    # row survives (zero-hit docs keep an empty array), so n_docs and
+    # the corpus stats and the query-term hits each re-tokenized the
+    # corpus, and tf's fan-out doubled the latter — 3 tokenize passes.
+    # ONE doc-grain pass emits the doc length AND the (small,
+    # pre-filtered) query-term hit array; pin it — every doc row
+    # survives (zero-hit docs keep an empty array), so n_docs and
     # avgdl off the pin are identical, and the corpus is tokenized
     # ONCE.
     base = (
@@ -1054,7 +1054,7 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "hits_t"
             ),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     stats = F.broadcast(
         base.agg(
@@ -1244,14 +1244,11 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(nw))
         .withColumn("grp", F.col("pos") - F.col("rn"))
     )
-    # r12 (guide §2.4): words feeds the phrase build, the word stats and
-    # the scoring join; phrases feeds the stats join and the final
-    # re-join — unpinned, the tokenize + posexplode + island window ran
-    # 4x. Pin both (token grain / phrase grain); the corpus tokenizes
-    # ONCE.
-    words = ph.select("doc_id", "grp", "pos", "token").localCheckpoint(
-        eager=False
-    )
+    # words feeds the phrase build, the word stats and the scoring join;
+    # phrases feeds the stats join and the final re-join — unpinned, the
+    # tokenize + posexplode + island window ran 4x. Pin both (token
+    # grain / phrase grain); the corpus tokenizes ONCE.
+    words = ph.select("doc_id", "grp", "pos", "token").transform(pin)
     # phrase instances: ordered tokens per (doc, grp)
     phrases = (
         words.groupBy("doc_id", "grp")
@@ -1264,7 +1261,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("phrase"),
             F.count(F.lit(1)).alias("plen"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # word stats over phrase members: freq + degree (Σ phrase length)
     wstat = (
@@ -1341,13 +1338,13 @@ def text_jsd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = scatter(spark, load_table(spark, sf_dir, "documents")).select(
         "source", F.explode(F.expr(X.sp_tokens("text"))).alias("token")
     )
-    # r12 (guide §2.4): st feeds the corpus totals, the source totals
-    # AND the divergence join — unpinned, the tokenize + explode ran 3x.
-    # (source, token) grain: pin it; the corpus tokenizes ONCE.
+    # st feeds the corpus totals, the source totals AND the divergence
+    # join — unpinned, the tokenize + explode ran 3x. (source, token)
+    # grain: pin it; the corpus tokenizes ONCE.
     st = (
         tok.groupBy("source", "token")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     ct = st.groupBy("token").agg(F.sum("c").alias("cc"))
     stot = st.groupBy("source").agg(F.sum("c").alias("sn"))
@@ -1759,9 +1756,8 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL source is its own group (both engines).
     """
     docs = scatter(spark, load_table(spark, sf_dir, "documents"))
-    # r12 (guide §2.3/§2.4 — aggregate before you shuffle, don't
-    # tokenize twice): per-doc token counts come from size() AT DOC
-    # GRAIN (no explode, no token-grain groupBy shuffle — rows with ≥1
+    # aggregate before the shuffle and tokenize once: per-doc token
+    # counts come from size() AT DOC GRAIN (no explode, no token-grain groupBy shuffle — rows with ≥1
     # token are exactly the rows explode+count kept), and the
     # first-occurrence rank joins r AFTER the (source, token) → min
     # doc_id aggregation: rank r is monotone in doc_id within a source,
@@ -1773,17 +1769,17 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.expr(f"size({X.sp_tokens('text')})").cast("bigint").alias("n_tok"),
     ).where(F.col("n_tok") > 0)
-    # r12 (guide §2.4): r feeds doc_g AND the first-occurrence join —
-    # unpinned, the documents scan + size(tokens) + rank window ran
-    # twice. Pin the 5-column doc-grain table; the count-tokenize runs
-    # ONCE (the explode pass below remains the only other text read).
+    # r feeds doc_g AND the first-occurrence join — unpinned, the
+    # documents scan + size(tokens) + rank window ran twice. Pin the
+    # 5-column doc-grain table; the count-tokenize runs ONCE (the
+    # explode pass below remains the only other text read).
     r = per_doc.withColumn(
         "r",
         F.row_number().over(Window.partitionBy("source").orderBy("doc_id")),
     ).withColumn(
         "g",
         F.expr("CASE WHEN r <= 1 THEN 0 ELSE length(bin(r - 1)) END").cast("int"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     doc_g = r.groupBy("source", "g").agg(
         F.count(F.lit(1)).alias("docs_g"), F.sum("n_tok").alias("toks_g")
     )
@@ -1951,14 +1947,14 @@ def text_conditional_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("source", "p.w1", "p.w2")
     )
-    # r12 (guide §2.4): big fans out to heads, the entropy join and the
-    # continuation rollup — unpinned, the tokenize+bigram subtree ran
-    # 3x. The distinct-bigram grain is vocabulary-bounded, so pin; the
-    # corpus is tokenized ONCE.
+    # big fans out to heads, the entropy join and the continuation
+    # rollup — unpinned, the tokenize+bigram subtree ran 3x. The
+    # distinct-bigram grain is vocabulary-bounded, so pin; the corpus
+    # is tokenized ONCE.
     big = (
         pairs.groupBy("source", "w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     heads = (
         big.groupBy("source", "w1")
@@ -2205,11 +2201,11 @@ def text_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("source", "token")
         .agg(F.count(F.lit(1)).alias("c"))
-        # r12 (guide §2.4): cnt feeds the source totals AND both sides
-        # of the shared-token self-join — unpinned, the tokenize +
-        # explode ran 3x. (source, token) grain: pin it; the corpus
-        # tokenizes ONCE.
-        .localCheckpoint(eager=False)
+        # cnt feeds the source totals AND both sides of the
+        # shared-token self-join — unpinned, the tokenize + explode
+        # ran 3x. (source, token) grain: pin it; the corpus tokenizes
+        # ONCE.
+        .transform(pin)
     )
     tot = cnt.groupBy("source").agg(F.sum("c").alias("n"))
     a = cnt.select(
@@ -2773,8 +2769,7 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("bg.a").alias("a"), F.col("bg.b").alias("b"))
     )
-    # r12 (guide §2.4 duplicated subtrees + §2.3 aggregate before you
-    # shuffle): pair feeds the unigram slot counts, the N total AND the
+    # pair feeds the unigram slot counts, the N total AND the
     # scoring join — pin the distinct-bigram table so the tokenize +
     # explode runs ONCE. Unigram counts are derived FROM pair (slot
     # count of tok = Σ c_ab over bigrams with tok in that slot — the
@@ -2783,7 +2778,7 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair = (
         big.groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("c_ab"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     uni = pair.select(F.col("a").alias("tok"), "c_ab").unionAll(
         pair.select(F.col("b").alias("tok"), "c_ab")

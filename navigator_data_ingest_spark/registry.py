@@ -105,6 +105,12 @@ _CHANGED: dict[str, int] = {
         "ingest_frontier_schedule", "mm_aspect_buckets", "q_orders_pareto_8020",
         "stats_gini_exact",
     ), 15),
+    # a deleted pin (one consumer or none), and emb_centroids' shared
+    # label_centroids body, which plans an inferred filter
+    **dict.fromkeys((
+        "dedup_band_config_sweep", "emb_centroids", "emb_outlier_zscore",
+        "graph_hits",
+    ), 15),
 }
 
 

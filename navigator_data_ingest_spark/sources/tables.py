@@ -134,6 +134,27 @@ def scatter(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` once, on first use, and read it back from the
+    executors' block stores on every later use.
+
+    The pinned DataFrame plans as a bare ``Scan ExistingRDD``, so it is
+    also a plan barrier: the optimizer sees neither its lineage nor its
+    expressions, which keeps an iterative plan from growing per round
+    and stops projection collapse from inlining an expensive column
+    into each consumer. Every action reading it reuses the same rows,
+    nondeterministic columns included.
+
+    The pin is lazy: no job runs for the data until the first action.
+    It is not free while the query is built, though: under AQE the
+    RDD behind it is built from the finalized adaptive plan, which runs
+    every upstream shuffle. The blocks live only on executors and keep
+    no lineage, so a lost executor fails the query instead of
+    recomputing them.
+    """
+    return df.localCheckpoint(eager=False)
+
+
 def raw_relation(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The UNCONVERTED parquet relation for one table (stored schema,
     no events-ts adaptation), resolved once per session via the

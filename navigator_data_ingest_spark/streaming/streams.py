@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
+from navigator_data_ingest_spark.sources.tables import load_table, pin, raw_relation
+
 
 def read_stream_events(
     spark: SparkSession,
@@ -64,8 +66,6 @@ def read_stream_events(
         # per-application relation cache (0.3-0.5 s of driver-side
         # resolution per drain otherwise); non-default globs (tests'
         # multi-file feeds) keep the direct read.
-        from navigator_data_ingest_spark.sources.tables import raw_relation
-
         schema = raw_relation(spark, sf_dir, "events").schema
     else:
         schema = (
@@ -441,7 +441,7 @@ def _scatter_time_ordered_feed(spark: SparkSession, sf_dir: str, n_files: int) -
 
     # level 1: range-partition by the global order; each partition holds
     # a contiguous (ts, event_id) span in partition-index order.
-    # localCheckpoint PINS the partition assignment: spark_partition_id
+    # the pin fixes the partition assignment: spark_partition_id
     # is only meaningful if the counts job and the write job see the
     # SAME exchange output (range boundaries are sample-based and may
     # differ across independent executions of the plan).
@@ -449,7 +449,7 @@ def _scatter_time_ordered_feed(spark: SparkSession, sf_dir: str, n_files: int) -
     ranged = (
         ev.repartitionByRange(p, "ts", "event_id")
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
+        .transform(pin)
     )
     # per-partition counts are p metadata rows — the only driver collect
     counts = {r._pid: r.c for r in ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect()}
@@ -899,8 +899,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     only); the segment tag is the dim-derived column downstream
     aggregations would key on.
     """
-    from navigator_data_ingest_spark.sources.tables import load_table
-
     ev = read_stream_events(spark, sf_dir)
     cust = (
         load_table(spark, sf_dir, "customer")

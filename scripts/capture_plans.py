@@ -11,7 +11,10 @@ registry at sf0.1 (``SPARK_GRAFT_SF_DIR`` overrides).
 Next to each plan, <out_dir>/<query>_<suffix>.pins.txt holds the
 formatted plan of every DataFrame that reaches ``localCheckpoint``
 (``=== pin i ===``) or a ``DataFrameWriter`` save method
-(``=== write i ===``) while the query is built, in call order. A pin
+(``=== write i ===``) while the query is built, in call order. Every
+``sources.tables.pin`` is recorded, since ``pin`` calls
+``localCheckpoint``; so are the few raw sites its lint allows
+(``tests/test_pin_lint.py``) except the two ``persist`` calls. A pin
 shows as a bare ``Scan ExistingRDD`` in the query's own plan, and a
 round-trip key's plan shows only the scan that reads its output back,
 so a change to the code behind a pin or a write is visible only in

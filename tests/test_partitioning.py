@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import re
 import tempfile
+import time
 import uuid
 
 from pyspark.sql import functions as F
@@ -17,7 +18,7 @@ from pyspark.sql import functions as F
 from navigator_data_ingest_spark.operators.ingest import ingest_parser_input
 from navigator_data_ingest_spark.plans.audit import formatted_plan, plan_audit
 from navigator_data_ingest_spark.sources.sinks import write_parser_input
-from navigator_data_ingest_spark.sources.tables import scatter
+from navigator_data_ingest_spark.sources.tables import pin, scatter
 from tests.conftest import SF_SMOKE
 
 
@@ -50,6 +51,42 @@ def test_scatter_runs_nothing_and_round_robins(spark):
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     exchanges = re.findall(r"RoundRobinPartitioning\((\d+)\)", formatted_plan(spread))
     assert exchanges == [str(sc.defaultParallelism)]
+
+
+def test_pin_without_exchange_runs_nothing(spark):
+    """``pin`` over a plan with no exchange starts no job while it is
+    built: the pin is lazy, and with no shuffle upstream AQE has no
+    stage to run when the RDD behind it is built."""
+    sc = spark.sparkContext
+    narrow = spark.range(0, 1000).select((F.col("id") * 3).alias("x"))
+    group = f"pin_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pin build")
+    try:
+        pinned = pin(narrow)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert "Scan ExistingRDD" in formatted_plan(pinned)
+
+
+def test_pin_is_reused_not_recomputed(spark):
+    """Two actions over a pinned nondeterministic column read the same
+    rows: the second action reuses the pinned blocks. The column is the
+    query's start time, which every recomputation reads anew (the
+    unpinned control shows it); a seeded ``rand()`` recomputes the same
+    values per partition and would pass without the pin."""
+
+    def two_reads(df):
+        # each orderBy is a new query, so an unpinned plan reruns
+        first = df.orderBy("id").collect()
+        time.sleep(0.01)
+        return first, df.orderBy("id").collect()
+
+    stamped = spark.range(0, 200, numPartitions=2).withColumn("t", F.current_timestamp())
+    first, second = two_reads(pin(stamped))
+    assert first == second
+    first, second = two_reads(stamped)
+    assert first != second
 
 
 def test_bucketed_join_has_no_shuffle(spark):

@@ -93,10 +93,9 @@ _DELIBERATE_NESTED_LOOP = {
     # per-source signature-and-size pair grid
     "corpus_overlap",
     # a pinned 1-row scalar: the seed-stripe modulus, the block-range
-    # min/max, the mu/sd stats
+    # min/max
     "graph_harmonic_centrality",
     "q_orders_skyline",
-    "emb_outlier_zscore",
     # the range join's non-equi interval probe against a pinned table
     "q_events_range_join",
     # generated spines: date spine x types, types x 8 literal segments
