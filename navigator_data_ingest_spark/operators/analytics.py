@@ -1156,13 +1156,10 @@ def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline can re-run a stage and sample the SAME rows. The predicate
     is scan-adjacent (no shuffle) and skew-free by construction.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 100
-    )
+    from navigator_data_ingest_spark.api import hash_sample
+
     return (
-        orders.where(bucket < 5)
+        hash_sample(load_table(spark, sf_dir, "orders"), "o_orderkey", 5)
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_sampled"),

@@ -776,7 +776,7 @@ def dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale this is one hash-shuffle on the canonical key.
     """
     from navigator_data_ingest_spark.operators.ingest import (
-        any_url_col,
+        fetch_url_col,
         synthetic_new_documents,
     )
 
@@ -787,7 +787,7 @@ def dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("canonical_url")
     return (
-        nd.withColumn("fetch_url", any_url_col())
+        nd.withColumn("fetch_url", fetch_url_col())
         .where(F.col("fetch_url").isNotNull())
         .withColumn("canonical_url", canon)
         .withColumn("canonical_id", F.min("doc_id").over(w))

@@ -263,13 +263,6 @@ def fetch_url_col() -> Column:
     )
 
 
-def any_url_col() -> Column:
-    """download_url, else source_url. Unlike ``fetch_url_col`` an empty
-    string counts as set; the watermark, report, e2e and URL-dedup
-    oracles encode this looser rule as it is."""
-    return F.coalesce(F.col("download_url"), F.col("source_url"))
-
-
 def upload_prefix_col() -> Column:
     """Upload prefix ``{geography}/{publication year}`` (new_document_actions.py:31)."""
     return F.concat(
@@ -297,7 +290,7 @@ def _new_doc_error() -> Column:
     return F.coalesce(
         F.expr(URL_ERROR_SQL),
         F.when(
-            any_url_col().isNotNull() & ~ct.isin(*SUPPORTED_CONTENT_TYPES),
+            fetch_url_col().isNotNull() & ~ct.isin(*SUPPORTED_CONTENT_TYPES),
             F.lit("UnsupportedContentTypeError"),
         ),
     )
@@ -458,7 +451,7 @@ def ingest_watermark_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     takes the document's publication_ts as the stamp date.
     """
     nd = synthetic_new_documents(spark, sf_dir)
-    chosen = any_url_col()
+    chosen = fetch_url_col()
     return (
         nd.where(chosen.isNotNull())
         .select(
@@ -671,7 +664,7 @@ def ingest_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercised piecewise by the per-operator oracles).
     """
     nd = synthetic_new_documents(spark, sf_dir)
-    unfetched = any_url_col().isNull()
+    unfetched = fetch_url_col().isNull()
     new_side = nd.select(
         F.col("import_id").alias("document_id"),
         F.lit("new").alias("ingest_type"),

@@ -1541,7 +1541,10 @@ def emb_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     2 map-side partial aggregates collapse to ONE stats row (the
     emb_centroids explosion-free pattern), the mu/sd arrays broadcast
     back, and the per-vector score is an unrolled left-associated
-    64-term chain inside codegen — one corpus read, one 1-row shuffle.
+    64-term chain inside codegen. The plan reads the corpus twice, each
+    read behind its own round-robin exchange: once for the stats row
+    and once for the scores. The two reads project different columns,
+    so AQE cannot reuse one exchange for both.
     """
     raw = load_table(spark, sf_dir, "embeddings")
     e = scatter(spark, raw).select(
@@ -1556,11 +1559,11 @@ def emb_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     mu = F.array(*[F.col(f"sx{j}") / F.col("n") for j in range(EMB_DIM)])
-    # a dimension's std is undefined with n < 2 or zero deviation
-    # (round-10 single-row probe): NULL element, which NULL-propagates
-    # through the z² chain to a NULL score in BOTH engines — never an
-    # ANSI crash. At n = 1 the discriminant is exactly 0 (single term,
-    # no summation-order dependence).
+    # a dimension's std is undefined with n < 2 or zero deviation: NULL
+    # element, which NULL-propagates through the z² chain to a NULL
+    # score in BOTH engines — never an ANSI crash. At n = 1 the
+    # discriminant is exactly 0 (single term, no summation-order
+    # dependence).
     sd = F.array(
         *[
             F.when(

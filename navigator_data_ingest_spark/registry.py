@@ -51,7 +51,7 @@ _CHANGED: dict[str, int] = {
         "corpus_lm_holdout_ppl", "corpus_overlap", "corpus_token_budget",
         "corpus_upsample_apply", "dedup_bloom", "dedup_incremental",
         "dedup_minhash_lsh", "dedup_recall_report", "dedup_survivorship",
-        "dedup_threshold_sweep", "dedup_url", "emb_confusion_metrics",
+        "dedup_threshold_sweep", "emb_confusion_metrics",
         "emb_distance_histogram", "emb_hubness", "emb_intrinsic_dim",
         "emb_ivf_cell_census", "emb_label_purity", "emb_lsh_tuning",
         "emb_matryoshka", "emb_pq", "emb_triplet_mining",
@@ -111,6 +111,10 @@ _CHANGED: dict[str, int] = {
         "dedup_band_config_sweep", "emb_centroids", "emb_outlier_zscore",
         "graph_hits",
     ), 15),
+    # an empty download_url or source_url counts as unset (the reference
+    # fetch-URL rule); ingest_pipeline_e2e and ingest_results_report
+    # took it too and are listed above at the same round
+    **dict.fromkeys(("dedup_url", "ingest_watermark_text"), 15),
 }
 
 
@@ -474,7 +478,8 @@ register(
     ingest.ingest_watermark_text,
     _ND + """
     SELECT import_id,
-           'Original publicly accessible source: ' || coalesce(download_url, source_url)
+           'Original publicly accessible source: '
+           || coalesce(nullif(download_url, ''), nullif(source_url, ''))
            || '.
 
 This PDF was created by Climate Policy Radar (climatepolicyradar.org) on '
@@ -484,7 +489,7 @@ This PDF was created by Climate Policy Radar (climatepolicyradar.org) on '
 For non-commercial use only. Reach out to us at support@climatepolicyradar.org if you have any enquiries.'
            AS watermark
     FROM new_docs
-    WHERE coalesce(download_url, source_url) IS NOT NULL
+    WHERE coalesce(nullif(download_url, ''), nullif(source_url, '')) IS NOT NULL
     ORDER BY import_id
     """,
 )
@@ -648,7 +653,7 @@ _E2E_SQL = _ORDERED_ACTIONS_CTES + f""",
                geography || '/' || year(publication_ts)::varchar AS prefix,
                {_SLUG_SQL} AS slug,
                md5(text) AS h,
-               coalesce(download_url, source_url) AS fetch_url,
+               coalesce(nullif(download_url, ''), nullif(source_url, '')) AS fetch_url,
                {_CT_SQL} AS content_type,
                {_URL_OK_SQL} AS url_ok
         FROM new_docs
@@ -1778,9 +1783,10 @@ register(
     dedup.dedup_url,
     _ND + r"""
     , fl AS (
-        SELECT doc_id, coalesce(download_url, source_url) AS fetch_url
+        SELECT doc_id,
+               coalesce(nullif(download_url, ''), nullif(source_url, '')) AS fetch_url
         FROM new_docs
-        WHERE coalesce(download_url, source_url) IS NOT NULL
+        WHERE coalesce(nullif(download_url, ''), nullif(source_url, '')) IS NOT NULL
     ), c AS (
         SELECT doc_id,
                regexp_replace(regexp_replace(regexp_replace(lower(fetch_url),

@@ -24,26 +24,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from navigator_data_ingest_spark.sources.sinks import sink_path
-from navigator_data_ingest_spark.sources.tables import load_table
+from navigator_data_ingest_spark.sources.tables import load_table, path_stamp
 
 BUSY_DAYS = 5
 
 
-def _cache_key(sf_dir: str) -> str:
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(src)
-        return f"{sf_dir}|{st.st_size}|{int(st.st_mtime)}"
-    except OSError:
-        return sf_dir
-
-
 def _ensure_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write (once per testdata generation) the day-partitioned fact and
-    the busy-days dim; both keyed on the source's (size, mtime)."""
+    the busy-days dim; both keyed on the source's stamp."""
     import shutil
 
-    key = _cache_key(sf_dir)
+    key = f"{sf_dir}|{path_stamp(os.path.join(sf_dir, 'events.parquet'))}"
     fact_dir = sink_path("dppfact", key)
     dim_dir = sink_path("dppdim", key)
     done = os.path.join(fact_dir, "_DONE")
@@ -73,10 +64,10 @@ def dpp_busy_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact_dir, dim_dir = _ensure_layout(spark, sf_dir)
     # explicit schemas: a zero-row events table writes no fact partition
     # dirs / dim data files, and inference over the bare directories
-    # raises UNABLE_TO_INFER_SCHEMA (round-9 empty-input axis). The fact
-    # schema is DERIVED from the same lazy plan the writer used (ts may
-    # be NTZ or LTZ depending on the testdata generation), never a
-    # hardcoded DDL; building the frame runs no job.
+    # raises UNABLE_TO_INFER_SCHEMA. The fact schema is DERIVED from the
+    # same lazy plan the writer used (ts may be NTZ or LTZ depending on
+    # the testdata generation), never a hardcoded DDL; building the
+    # frame runs no job.
     fact_schema = (
         load_table(spark, sf_dir, "events")
         .withColumn("d", F.col("ts").cast("date"))

@@ -26,7 +26,7 @@ from pyspark.sql.types import (
 )
 
 from navigator_data_ingest_spark.sources.sinks import sink_path
-from navigator_data_ingest_spark.sources.tables import load_table
+from navigator_data_ingest_spark.sources.tables import load_table, path_stamp
 from navigator_data_ingest_spark.streaming.streams import scoped_conf
 
 ORDERS_CSV_SCHEMA = StructType(
@@ -184,20 +184,15 @@ def src_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from navigator_data_ingest_spark.operators.multimodal import multimodal_table
 
-    # cache key includes the source table's (size, mtime) — regenerated
+    # cache key includes the source table's stamp — regenerated
     # testdata at the same path gets a FRESH export dir instead of being
     # served stale payloads that happen to match on file count
     src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        cache_key = f"{sf_dir}|{st.st_size}|{int(st.st_mtime)}"
-    except OSError:
-        cache_key = sf_dir
-    out = sink_path("binfiles", cache_key)
+    out = sink_path("binfiles", f"{sf_dir}|{path_stamp(src)}")
     # only non-empty payloads export: Spark's binaryFile reader SKIPS
     # 0-byte files at split planning, so a NULL/empty media doc can
     # never round-trip — the operator's contract is "one object per
-    # non-empty asset" (r5 NULL-injection find, pinned in the oracle)
+    # non-empty asset", pinned in the oracle
     media = (
         multimodal_table(spark, sf_dir)
         .select("doc_id", "media")
@@ -372,15 +367,9 @@ def src_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "price_cents"
         ),
     )
-    key = sf_dir
-    try:
-        st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-        key = f"{sf_dir}|{st.st_size}|{int(st.st_mtime)}"
-    except OSError:
-        pass
     parts = []
     for codec in CODECS:
-        out = sink_path(f"codec_{codec}", key)
+        out = sink_path(f"codec_{codec}", sf_dir)
         li.write.mode("overwrite").option("compression", codec).parquet(out)
         back = spark.read.parquet(out)
         parts.append(
@@ -504,11 +493,10 @@ def src_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("_metadata.file_size").alias("fsize"),
         F.col("_metadata.row_index").alias("ri"),
     )
-    # empty-corpus convention (r11 SWEEP_EMPTY allowlist retirement):
-    # the ok-counters and the row-index SUM coalesce to the 0 the
-    # oracle's closed forms yield over zero rows; min/max row-index
-    # stay NULL (undefined) and the oracle mirrors that with CASE
-    # guards on count(*).
+    # empty-corpus convention: the ok-counters and the row-index SUM
+    # coalesce to the 0 the oracle's closed forms yield over zero rows;
+    # min/max row-index stay NULL (undefined) and the oracle mirrors
+    # that with CASE guards on count(*).
     return df.agg(
         F.countDistinct("fname").cast("bigint").alias("n_files"),
         F.count(F.lit(1)).alias("n_rows"),
@@ -588,7 +576,7 @@ def q_analyze_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     # catalog stats surface 'NULL' strings for min/max of an empty (or
     # all-NULL) column — emit real NULLs, matching the oracle's
-    # min()/max() over the same rows (round-9 empty-input axis)
+    # min()/max() over the same rows
     def _fnum(v: str | None) -> float | None:
         return None if v in (None, "NULL") else float(v)
 
@@ -637,7 +625,7 @@ def src_parquet_footer_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas keeps it Arrow-batched. Output is the (file, row_group)
     grid — bounded by physical layout, not row count. The registered
     ``src_parquet_footer_stats`` reduces this grid to what the driver's
-    view-only DuckDB oracle can recompute (VERDICT r8 #2).
+    view-only DuckDB oracle can recompute.
     """
     import pandas as pd
 
@@ -710,10 +698,9 @@ def src_parquet_footer_grid_sql(sf_dir: str = "/root/testdata/sf0.01") -> str:
 
 
 def src_parquet_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-certifiable surface of the footer census (VERDICT r8 #2):
+    """Driver-certifiable surface of the footer census:
     a FILE-level footer pass (pyarrow metadata: num_rows, leaf column
-    count — present even for a zero-row-group file, the round-9
-    empty-input axis) joined against the per-row-group grid
+    count — present even for a zero-row-group file) joined against the per-row-group grid
     (``src_parquet_footer_grid``), emitting what a VIEW-only DuckDB
     oracle can recompute — total rows (== count(*) on the view),
     leaf-column count (== view width on these flat tables) — plus
@@ -946,7 +933,7 @@ def src_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = sink_path("documents_txt", sf_dir)
     # \r is escaped too: spark.read.text's default lineSep splits on
     # \r and \r\n as well as \n, so an unescaped carriage return would
-    # split one record into two on read-back (r7 ADVICE).
+    # split one record into two on read-back.
     esc = (
         "concat(cast(doc_id as string), '\\t',"
         " replace(replace(replace(replace(coalesce(text, ''),"
@@ -964,8 +951,8 @@ def src_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DECIMAL(38,0) accumulator (a BIGINT sum of 2^32-range hashes
     # overflows past ~2^31 rows — the checksum-manifest discipline),
     # emitted as STRING: neither engine's wide-integer surface maps to
-    # the other's (Spark decimal(38,0) vs DuckDB HUGEINT — r7 driver
-    # hash flip), so both emit identical decimal-string bytes.
+    # the other's (Spark decimal(38,0) vs DuckDB HUGEINT), so both emit
+    # identical decimal-string bytes.
     return lines.selectExpr(
         "count(*) AS n_lines",
         "count(DISTINCT split(value, '\\t', 2)[0]) AS n_doc_ids",

@@ -17,27 +17,16 @@ in place under readers.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from navigator_data_ingest_spark.sources.sinks import scratch_dir
 from navigator_data_ingest_spark.sources.tables import load_table
 
 _POINTER = "_LATEST"
-
-
-def _publish_root(sf_dir: str, op: str = "publish") -> str:
-    """Scratch root keyed on (sf_dir, OPERATOR): the three publish-family
-    registry queries each rmtree + republish their root, and threaded
-    sweeps (scripts/sweep.py SWEEP_THREADS>1) run them concurrently — a
-    shared root would let one operator delete v=1 or swap _LATEST while
-    a sibling is mid-read."""
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), f"nav_publish_{tag}_{op}")
 
 
 def _write_version(df: DataFrame, root: str, version: int) -> str:
@@ -63,10 +52,10 @@ def read_published(spark: SparkSession, root: str) -> DataFrame:
 
 def _republish(spark: SparkSession, sf_dir: str, op: str) -> str:
     """Rebuild the v1 -> v2 publication state under ``op``'s own root
-    and return the root (pointer left at v2)."""
-    root = _publish_root(sf_dir, op)
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
+    and return the root (pointer left at v2). Each of the three publish
+    keys has its own root, so a threaded sweep running them together
+    never deletes or swaps a sibling's version mid-read."""
+    root = scratch_dir(f"publish_{op}", sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     v1 = (
         orders.where(F.year("o_orderdate") < 1995)

@@ -20,9 +20,12 @@ restartable ingest needs).
 from __future__ import annotations
 
 import hashlib
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from navigator_data_ingest_spark.sources.sinks import scratch_dir
 
 try:  # pyspark >= 4
     from pyspark.sql.datasource import (
@@ -191,18 +194,10 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     if not (_HAS_PYSOURCE and _HAS_PYSTREAM):  # pragma: no cover
         raise NotImplementedError("streaming python datasource requires Spark 4")
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     _register(spark, SyntheticCrawlStreamSource)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = _os.path.join(
-        _tempfile.gettempdir(), f"nav_pystream_{tag}_{_os.getpid()}"
-    )
-    _shutil.rmtree(root, ignore_errors=True)
-    out_dir = _os.path.join(root, "out")
-    ckpt = _os.path.join(root, "ckpt")
+    root = scratch_dir("pystream", sf_dir)
+    out_dir = os.path.join(root, "out")
+    ckpt = os.path.join(root, "ckpt")
     for _ in range(STREAM_STEPS):
         q = (
             spark.readStream.format("synthetic_crawl_stream")
@@ -267,8 +262,6 @@ except ImportError:  # pragma: no cover - older pyspark
 
 import dataclasses
 import json
-import os
-import tempfile
 
 
 @dataclasses.dataclass
@@ -345,7 +338,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python sink, then audit the COMMITTED output — file count equals
     the task count, and the manifest totals equal what a reader finds
     in the parts, which the DuckDB oracle recomputes from the source
-    table. Scratch is per-operator and per-pid (repo scratch rule).
+    table. The sink writes into ``sinks.scratch_dir``.
 
     The write runs executor-side (one Python worker per partition);
     only the commit messages reach the driver — the same contract a
@@ -355,33 +348,9 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not _HAS_PYSINK:  # pragma: no cover
         raise NotImplementedError("pyspark.sql.datasource requires Spark 4")
     _register(spark, AuditSinkDataSource)
-    import hashlib as _hl
-    import shutil as _sh
-
     from navigator_data_ingest_spark.sources.tables import load_table
 
-    import uuid as _uuid
-
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    # per-invocation dir (uuid): two concurrent runs of this op in one
-    # process must not share a commit root; stale same-pid dirs from
-    # earlier invocations are swept here
-    base = os.path.join(tempfile.gettempdir(), "nav_pysink")
-    prefix = f"{tag}_{os.getpid()}_"
-    if os.path.isdir(base):
-        import time as _time
-
-        for d in os.listdir(base):
-            p = os.path.join(base, d)
-            try:
-                stale = _time.time() - os.path.getmtime(p) > 600
-            except OSError:
-                continue
-            # only reap STALE dirs: a concurrent invocation in this
-            # process owns any fresh one
-            if d.startswith(prefix) and stale:
-                _sh.rmtree(p, ignore_errors=True)
-    out = os.path.join(base, prefix + _uuid.uuid4().hex[:8])
+    out = scratch_dir("pysink", sf_dir)
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")
@@ -403,8 +372,8 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         man = json.load(fh)
     # explicit schema + empty-manifest guard: with a zero-row source the
     # committed parts are empty JSON files (inference finds no columns
-    # and the agg below would fail UNRESOLVED_COLUMN — round-9
-    # empty-input axis); non-empty reads are unchanged
+    # and the agg below would fail UNRESOLVED_COLUMN); non-empty reads
+    # are unchanged
     rb_schema = "doc_id bigint, n_chars bigint"
     if man["files"]:
         parts = spark.read.schema(rb_schema).json(man["files"])
@@ -429,7 +398,7 @@ def sink_python_datasource_sql() -> str:
     # manifest_chars is a DEFINITE total the Python committer sums (0 on
     # an empty source), so the oracle coalesces its SQL sum; rb_chars is
     # the readback's SQL aggregate and stays NULL-on-empty on both
-    # engines (r11 SWEEP_EMPTY allowlist retirement).
+    # engines.
     return f"""
     SELECT {SINK_PARTITIONS}::BIGINT AS n_files,
            count(*)::BIGINT AS manifest_rows,

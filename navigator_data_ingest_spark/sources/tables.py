@@ -62,7 +62,10 @@ def _session_relations(spark: SparkSession) -> dict[tuple, DataFrame]:
     return d
 
 
-def _path_stamp(path: str) -> tuple:
+def path_stamp(path: str) -> tuple:
+    """``(mtime_ns, size)`` of ``path``, or ``(0, 0)`` when it is missing:
+    the source identity that keys every cache built from a file, so a
+    file rewritten in place invalidates what was derived from it."""
     try:
         st = os.stat(path)
     except OSError:
@@ -73,7 +76,7 @@ def _path_stamp(path: str) -> tuple:
 def _cached(spark: SparkSession, path: str, tag: str, build) -> DataFrame:
     """The session's DataFrame for ``tag`` + ``path``, built on a miss."""
     cache = _session_relations(spark)
-    key = (tag + os.path.abspath(path), _path_stamp(path))
+    key = (tag + os.path.abspath(path), path_stamp(path))
     cached = cache.get(key)
     if cached is not None:
         return cached

@@ -33,7 +33,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
-from navigator_data_ingest_spark.sources.tables import load_table, pin, raw_relation
+from navigator_data_ingest_spark.sources.sinks import scratch_dir
+from navigator_data_ingest_spark.sources.tables import (
+    load_table,
+    path_stamp,
+    pin,
+    raw_relation,
+)
 
 
 def read_stream_events(
@@ -62,10 +68,10 @@ def read_stream_events(
     except Exception:
         pass
     if glob == "events.parquet":
-        # r12: the stored-schema footer read goes through the
-        # per-application relation cache (0.3-0.5 s of driver-side
-        # resolution per drain otherwise); non-default globs (tests'
-        # multi-file feeds) keep the direct read.
+        # the stored-schema footer read goes through the per-session
+        # relation cache (0.3-0.5 s of driver-side resolution per drain
+        # otherwise); non-default globs (tests' multi-file feeds) keep
+        # the direct read.
         schema = raw_relation(spark, sf_dir, "events").schema
     else:
         schema = (
@@ -149,26 +155,6 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
 _STREAM_CONFS = {"spark.sql.shuffle.partitions": str(STREAM_SHUFFLE_PARTITIONS)}
 
 
-def _checkpoint_dir(name: str) -> str:
-    """Deterministic checkpoint dir per query name, recycled per run.
-
-    A fresh mkdtemp per drain leaks a directory every registry/bench
-    invocation; a REUSED checkpoint is worse (committed source offsets
-    suppress re-emission into the new memory sink). Deterministic path +
-    rmtree gives clean re-runs with zero accumulation.
-
-    The path is PER-PROCESS (pid suffix): two concurrent JVMs running
-    the same query (pytest alongside a sweep, the judge's second
-    session) would otherwise rmtree each other's LIVE checkpoint
-    mid-drain — the round-3 stream_timeout_finalize flake under host
-    contention. Within one process the recycling behavior is unchanged.
-    """
-    d = os.path.join(tempfile.gettempdir(), "nav_ckpt", f"{name}_{os.getpid()}")
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
 def _run_to_memory(stream_df: DataFrame, name: str, output_mode: str) -> DataFrame:
     """Drain a stream into a memory sink with availableNow; return table."""
     spark = stream_df.sparkSession
@@ -177,7 +163,7 @@ def _run_to_memory(stream_df: DataFrame, name: str, output_mode: str) -> DataFra
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option("checkpointLocation", _checkpoint_dir(name))
+            .option("checkpointLocation", scratch_dir("ckpt", name))
             .trigger(availableNow=True)
             .start()
         )
@@ -413,16 +399,12 @@ def _scatter_time_ordered_feed(spark: SparkSession, sf_dir: str, n_files: int) -
     driver only renames k files and stamps mtimes (metadata ops).
     """
     # deterministic feed path keyed by (source identity, file count): a
-    # fully-built feed is reused across registry/bench runs instead of
-    # re-written (and never accumulates). The source file's (size,
-    # mtime) is part of the key so a REGENERATED testdata set — same
-    # path, different bytes — invalidates the cached feed.
+    # fully-built feed is reused across runs and processes instead of
+    # re-written (and never accumulates). The source file's stamp is
+    # part of the key so a regenerated testdata set — same path,
+    # different bytes — invalidates the cached feed.
     src = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(src)
-        src_key = f"{sf_dir}|{st.st_size}|{int(st.st_mtime)}"
-    except OSError:
-        src_key = sf_dir
+    src_key = f"{sf_dir}|{path_stamp(src)}"
     d = os.path.join(
         tempfile.gettempdir(),
         "nav_sessfeed",
@@ -469,7 +451,7 @@ def _scatter_time_ordered_feed(spark: SparkSession, sf_dir: str, n_files: int) -
     # build fully in per-process staging, then PUBLISH with one atomic
     # rename: assembling in place let a concurrent process observe a
     # partial feed, rmtree it, and pull files out from under a live
-    # FileStreamSource (the same cross-JVM race as the checkpoint dirs)
+    # FileStreamSource (the cross-process race per-process scratch avoids)
     pid = os.getpid()
     tmp = f"{d}_stage{pid}"
     fin = f"{d}_fin{pid}"
@@ -477,7 +459,7 @@ def _scatter_time_ordered_feed(spark: SparkSession, sf_dir: str, n_files: int) -
     shutil.rmtree(fin, ignore_errors=True)
     os.makedirs(fin)
     if n == 0:
-        # filter-to-zero robustness (round-9 empty-input axis): a
+        # filter-to-zero robustness (the empty-input axis): a
         # dynamic-partition write of zero rows creates NO chunk dirs, so
         # stamp schema-only chunk files directly from the source footer —
         # the stream then runs its micro-batches over empty files instead
@@ -505,10 +487,10 @@ def _scatter_time_ordered_feed(spark: SparkSession, sf_dir: str, n_files: int) -
         .write.partitionBy("_chunk")
         .parquet(tmp)
     )
-    # a chunk with ZERO rows (n < n_files — round-9 degenerate-input
-    # axis) gets no dynamic-partition directory: stamp those chunks as
-    # schema-only files cloned from a populated chunk's part schema, so
-    # the feed keeps exactly n_files micro-batches at any row count
+    # a chunk with ZERO rows (n < n_files) gets no dynamic-partition
+    # directory: stamp those chunks as schema-only files cloned from a
+    # populated chunk's part schema, so the feed keeps exactly n_files
+    # micro-batches at any row count
     missing = []
     donor = None
     for i in range(n_files):
@@ -607,7 +589,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     drained = _run_to_memory(agg, _qname("stream_topk", sf_dir), "update")
     # asc_nulls_last pins the NULL event_type group's rank position:
-    # Spark ASC is NULLS FIRST, DuckDB ASC is NULLS LAST (r5 injection)
+    # Spark ASC is NULLS FIRST, DuckDB ASC is NULLS LAST
     w = Window.partitionBy("window_start").orderBy(
         F.desc("n_events"), F.asc_nulls_last("event_type")
     )
@@ -636,15 +618,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver only sequences batch ids.
     """
     feed = _scatter_time_ordered_feed(spark, sf_dir, 3)
-    state_root = os.path.join(
-        tempfile.gettempdir(),
-        "nav_fbupsert",
-        # pid-scoped: per-run scratch, never shared across JVMs (two
-        # concurrent processes would rmtree each other mid-drain)
-        f"{hashlib.md5(feed.encode()).hexdigest()[:8]}_{os.getpid()}",
-    )
-    shutil.rmtree(state_root, ignore_errors=True)
-    os.makedirs(state_root, exist_ok=True)
+    state_root = scratch_dir("fbupsert", feed)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -668,7 +642,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scoped_conf(spark, _STREAM_CONFS):
         query = (
             ev.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", _checkpoint_dir("fbupsert"))
+            .option("checkpointLocation", scratch_dir("ckpt", "fbupsert"))
             .trigger(availableNow=True)
             .start()
         )
@@ -723,18 +697,11 @@ def stream_incremental_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     feed = _scatter_time_ordered_feed(spark, sf_dir, 3)
     chunks = sorted(os.listdir(feed))
-    work = os.path.join(
-        tempfile.gettempdir(),
-        "nav_increm",
-        # pid-scoped: per-run scratch, never shared across JVMs (two
-        # concurrent processes would rmtree each other mid-drain)
-        f"{hashlib.md5(feed.encode()).hexdigest()[:8]}_{os.getpid()}",
-    )
+    work = scratch_dir("increm", feed)
     ckpt = os.path.join(work, "_checkpoint")
     data = os.path.join(work, "data")
     sink = os.path.join(work, "sink")
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(data, exist_ok=True)
+    os.makedirs(data)
     for c in chunks[:2]:
         shutil.copy2(os.path.join(feed, c), os.path.join(data, c))
 
@@ -1079,15 +1046,7 @@ def stream_multiplex_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is the oracle.
     """
     feed = _scatter_time_ordered_feed(spark, sf_dir, 3)
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "nav_router",
-        # pid-scoped: per-run scratch, never shared across JVMs (two
-        # concurrent processes would rmtree each other mid-drain)
-        f"{hashlib.md5(feed.encode()).hexdigest()[:8]}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
+    root = scratch_dir("router", feed)
 
     def _route(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.select("event_id", "user_id", "event_type", "value").persist()
@@ -1116,7 +1075,7 @@ def stream_multiplex_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scoped_conf(spark, _STREAM_CONFS):
         query = (
             ev.writeStream.foreachBatch(_route)
-            .option("checkpointLocation", _checkpoint_dir("router"))
+            .option("checkpointLocation", scratch_dir("ckpt", "router"))
             .trigger(availableNow=True)
             .start()
         )
@@ -1409,7 +1368,7 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = _qname("stream_statereader", sf_dir)
-    ck = _checkpoint_dir(name)
+    ck = scratch_dir("ckpt", name)
     with scoped_conf(spark, _STREAM_CONFS):
         query = (
             agg.writeStream.format("memory")
@@ -1570,7 +1529,7 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("append")
-            .option("checkpointLocation", _checkpoint_dir("progress"))
+            .option("checkpointLocation", scratch_dir("ckpt", "progress"))
             .trigger(availableNow=True)
             .start()
         )
@@ -1582,7 +1541,6 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # file (the n=1 feed stamps schema-only chunks) still consumes a
     # batch, and the oracle's rank expression numbers by CHUNK —
     # renumbering after the filter mislabels the surviving batches
-    # (round-10 single-row probe)
     for k, p in enumerate(progress):
         if p["numInputRows"] <= 0:
             continue
@@ -1696,7 +1654,7 @@ def stream_unique_users_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch oracle still counts — if a future change splits the drain
     into triggers or shuffles the source, widen the watermark to cover
     the fixture's full time span (or feed batches in event-time order)
-    to keep the equality (r6 ADVICE).
+    to keep the equality.
     """
     ev = read_stream_events(spark, sf_dir)
     dedup = (
@@ -1742,13 +1700,7 @@ def stream_foreachbatch_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bounded type grid); the driver only sequences batch ids.
     """
     feed = _scatter_time_ordered_feed(spark, sf_dir, 3)
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "nav_fbretry",
-        f"{hashlib.md5(feed.encode()).hexdigest()[:8]}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
+    root = scratch_dir("fbretry", feed)
     seen_batches: list[int] = []
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -1778,7 +1730,7 @@ def stream_foreachbatch_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scoped_conf(spark, _STREAM_CONFS):
         query = (
             ev.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", _checkpoint_dir("fbretry"))
+            .option("checkpointLocation", scratch_dir("ckpt", "fbretry"))
             .trigger(availableNow=True)
             .start()
         )

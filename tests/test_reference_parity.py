@@ -25,6 +25,7 @@ from navigator_data_ingest_spark.functions.content import (
     upload_file_name,
 )
 from navigator_data_ingest_spark.functions.text import slugify_col
+from navigator_data_ingest_spark.operators.ingest import fetch_url_col
 
 # --- reference test_utils.py::test_determine_content_type cases ---------
 
@@ -108,6 +109,40 @@ def test_upload_file_name_matches_reference_cases(spark):
     for i, (_, _, _, want) in enumerate(FILENAME_CASES):
         assert got[i] == want, f"case {i}"
         assert len(got[i].encode()) <= 1024
+
+
+# --- fetch URL (new_document_actions.py:35-48) --------------------------
+
+# (download_url, source_url, the URL fetched): an empty string is unset
+FETCH_URL_CASES = [
+    ("", "https://example.com/s1", "https://example.com/s1"),
+    ("https://example.com/d2", "https://example.com/s2", "https://example.com/d2"),
+    ("https://example.com/d3", "", "https://example.com/d3"),
+    (None, "https://example.com/s4", "https://example.com/s4"),
+    ("", "", None),
+    ("", None, None),
+    (None, None, None),
+]
+
+
+def test_fetch_url_treats_empty_download_url_as_unset(spark):
+    """An empty download_url falls through to source_url, in the Spark
+    rule and in the DuckDB form the watermark, report, e2e and URL-dedup
+    oracles use."""
+    import duckdb
+
+    rows = [(i, d, s) for i, (d, s, _) in enumerate(FETCH_URL_CASES)]
+    want = {i: u for i, (_, _, u) in enumerate(FETCH_URL_CASES)}
+    df = spark.createDataFrame(rows, "i int, download_url string, source_url string")
+    got = {r.i: r.u for r in df.select("i", fetch_url_col().alias("u")).collect()}
+    assert got == want
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INT, download_url VARCHAR, source_url VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    oracle = con.execute(
+        "SELECT i, coalesce(nullif(download_url, ''), nullif(source_url, '')) FROM t"
+    ).fetchall()
+    assert dict(oracle) == want
 
 
 # --- property corpus vs verbatim Python model (api_client.py:120) -------

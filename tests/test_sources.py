@@ -5,7 +5,11 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import tempfile
+from urllib.parse import urlparse
+
+import pytest
 
 from navigator_data_ingest_spark.operators.ingest import synthetic_new_documents
 from navigator_data_ingest_spark.sources.json_cache import read_json_cache
@@ -14,6 +18,7 @@ from navigator_data_ingest_spark.sources.pipeline_updates import (
     read_pipeline_batch,
     read_pipeline_updates,
 )
+from navigator_data_ingest_spark.sources.sinks import scratch_dir, sink_path
 from tests.conftest import SF_SMOKE
 
 
@@ -277,3 +282,50 @@ def test_relation_cache_is_session_scoped(spark):
     assert raw_relation(other, SF_SMOKE, "events") is raw_relation(
         other, SF_SMOKE, "events"
     )
+
+
+def test_scratch_dir_is_per_process_and_starts_empty():
+    """scratch_dir returns the process's sink_path for the key, emptied:
+    files and subdirectories an earlier run left there are gone."""
+    d = scratch_dir("t_scratch", "key")
+    try:
+        assert d == sink_path("t_scratch", "key")
+        assert os.path.basename(d).endswith(f"_{os.getpid()}")
+        os.makedirs(os.path.join(d, "sub"))
+        for f in (os.path.join(d, "f"), os.path.join(d, "sub", "g")):
+            with open(f, "w") as fh:
+                fh.write("left over")
+        assert scratch_dir("t_scratch", "key") == d
+        assert os.listdir(d) == []
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "sink_atomic_publish",
+        "sink_vacuum_orphans",
+        "src_time_travel",
+        "sink_python_datasource",
+        "src_python_datasource_stream",
+        "stream_foreachbatch_retry",
+        "stream_foreachbatch_upsert",
+        "stream_incremental_files",
+        "stream_multiplex_router",
+    ],
+)
+def test_round_trip_keys_read_back_from_per_process_roots(spark, key):
+    """Each key reads its result back from a temp root named for this
+    process, so a second process running the same key on the same sf
+    dir cannot delete or overwrite it mid-read."""
+    from navigator_data_ingest_spark.registry import queries
+
+    files = queries()[key](spark, SF_SMOKE).inputFiles()
+    assert files
+    tmp = os.path.realpath(tempfile.gettempdir())
+    for f in files:
+        rel = os.path.relpath(os.path.realpath(urlparse(f).path), tmp)
+        root = rel.split(os.sep)[0]
+        assert not rel.startswith(".."), f
+        assert root.endswith(f"_{os.getpid()}"), f

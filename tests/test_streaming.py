@@ -329,7 +329,7 @@ def test_state_reader_exposes_only_unemitted_windows(spark):
     """After an append-mode drain, the statestore read returns exactly
     the windows the watermark has NOT yet closed."""
     from pyspark.sql import functions as F
-    from navigator_data_ingest_spark.streaming.streams import _checkpoint_dir
+    from navigator_data_ingest_spark.sources.sinks import scratch_dir
 
     d = tempfile.mkdtemp(prefix="nav_stream_statrd_")
     a = os.path.join(d, "a.parquet")
@@ -343,7 +343,7 @@ def test_state_reader_exposes_only_unemitted_windows(spark):
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    ck = _checkpoint_dir("t_statereader")
+    ck = scratch_dir("ckpt", "t_statereader")
     q = (
         agg.writeStream.format("memory")
         .queryName("t_statereader")
