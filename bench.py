@@ -159,14 +159,14 @@ def main() -> None:
         import shutil as _sh
         import tempfile as _tf
 
+        from navigator_data_ingest_spark.streaming.streams import drain
+
         _d = _tf.mkdtemp(prefix="bench_warm_stream_")
-        _prev = spark.conf.get("spark.sql.shuffle.partitions")
         try:
             spark.range(0, 100).selectExpr(
                 "id", "timestamp_micros(id * 1000000) AS ts"
             ).write.mode("overwrite").parquet(_d + "/in")
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            _q = (
+            drain(
                 spark.readStream.schema("id bigint, ts timestamp")
                 .parquet(_d + "/in")
                 .withWatermark("ts", "1 hour")
@@ -175,14 +175,10 @@ def main() -> None:
                 .count()
                 .writeStream.format("memory")
                 .queryName("bench_warm_stream")
-                .outputMode("update")
-                .option("checkpointLocation", _d + "/ckpt")
-                .trigger(availableNow=True)
-                .start()
+                .outputMode("update"),
+                _d + "/ckpt",
             )
-            _q.awaitTermination()
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", _prev)
             _sh.rmtree(_d, ignore_errors=True)
     except Exception as e:
         print(f"bench: warmup failed ({e}); continuing", file=sys.stderr)

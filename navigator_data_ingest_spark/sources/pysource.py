@@ -19,28 +19,25 @@ restartable ingest needs).
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
+import json
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceWriter,
+    InputPartition,
+    SimpleDataSourceStreamReader,
+    WriterCommitMessage,
+)
 
 from navigator_data_ingest_spark.sources.sinks import scratch_dir
-
-try:  # pyspark >= 4
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
-    )
-
-    _HAS_PYSOURCE = True
-except ImportError:  # pragma: no cover - older pyspark
-    _HAS_PYSOURCE = False
-    DataSource = object  # type: ignore[assignment,misc]
-    DataSourceReader = object  # type: ignore[assignment,misc]
-
-import threading
+from navigator_data_ingest_spark.streaming.streams import drain
 
 _REG_LOCK = threading.Lock()
 
@@ -97,8 +94,6 @@ def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: register the source (idempotent per session),
     read it, and project a fetch-plan summary the ingest stage would
     hand to the downloader."""
-    if not _HAS_PYSOURCE:  # pragma: no cover
-        raise NotImplementedError("pyspark.sql.datasource requires Spark 4")
     _register(spark, SyntheticCrawlDataSource)
     df = spark.read.format("synthetic_crawl").load()
     return df.where("status = 200").orderBy("page_id")
@@ -127,14 +122,6 @@ def src_python_datasource_sql() -> str:
 # --------------------------------------------------------------------------
 # streaming Python DataSource (offset-tracked, restart-resumable)
 # --------------------------------------------------------------------------
-
-try:  # pyspark >= 4
-    from pyspark.sql.datasource import SimpleDataSourceStreamReader
-
-    _HAS_PYSTREAM = True
-except ImportError:  # pragma: no cover - older pyspark
-    _HAS_PYSTREAM = False
-    SimpleDataSourceStreamReader = object  # type: ignore[assignment,misc]
 
 STREAM_STEPS = 3            # finite frontier: 3 offset steps
 STREAM_ROWS_PER_STEP = 250  # rows admitted per step
@@ -192,24 +179,20 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagination, a queue, an S3 listing diff) and the restart loop is
     the scheduler's retry — nothing downstream changes.
     """
-    if not (_HAS_PYSOURCE and _HAS_PYSTREAM):  # pragma: no cover
-        raise NotImplementedError("streaming python datasource requires Spark 4")
     _register(spark, SyntheticCrawlStreamSource)
     root = scratch_dir("pystream", sf_dir)
     out_dir = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")
     for _ in range(STREAM_STEPS):
-        q = (
+        # a Python stream source runs one batch per start
+        drain(
             spark.readStream.format("synthetic_crawl_stream")
             .load()
             .writeStream.format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)  # python source => one batch per start
-            .start()
+            .outputMode("append"),
+            ckpt,
         )
-        q.awaitTermination()
     got = spark.read.schema(_SCHEMA).parquet(out_dir)
     return (
         got.groupBy(
@@ -250,18 +233,6 @@ def src_python_datasource_stream_sql() -> str:
 # --------------------------------------------------------------------------
 # Python DataSource WRITER (the Spark 4 custom-sink surface)
 # --------------------------------------------------------------------------
-
-try:  # pyspark >= 4
-    from pyspark.sql.datasource import DataSourceWriter, WriterCommitMessage
-
-    _HAS_PYSINK = True
-except ImportError:  # pragma: no cover - older pyspark
-    _HAS_PYSINK = False
-    DataSourceWriter = object  # type: ignore[assignment,misc]
-    WriterCommitMessage = object  # type: ignore[assignment,misc]
-
-import dataclasses
-import json
 
 
 @dataclasses.dataclass
@@ -321,8 +292,6 @@ class AuditSinkDataSource(DataSource):
         return "audit_sink"
 
     def writer(self, schema, overwrite):
-        if not _HAS_PYSINK:  # pragma: no cover
-            raise NotImplementedError("DataSourceWriter requires Spark 4")
         return _AuditSinkWriter(self.options)
 
 
@@ -345,8 +314,6 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM FileFormat sink has, which is what makes the API viable for
     real 100 TB sinks.
     """
-    if not _HAS_PYSINK:  # pragma: no cover
-        raise NotImplementedError("pyspark.sql.datasource requires Spark 4")
     _register(spark, AuditSinkDataSource)
     from navigator_data_ingest_spark.sources.tables import load_table
 

@@ -9,6 +9,9 @@ PUT per row); the report stays a single small aggregate.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import glob
 import hashlib
 import os
 import shutil
@@ -28,13 +31,27 @@ def sink_path(kind: str, key: str) -> str:
     running the same key (pytest alongside a sweep, a second driver
     session) would otherwise race one process's overwrite or delete
     against the other's read-back. Caches kept here across calls (the
-    binfiles and dpp layouts) are therefore per-process too: a cheap
-    rebuild per JVM instead of a cross-process mtime race.
+    binfiles, dpp and time-ordered feed layouts) are therefore
+    per-process too: a cheap rebuild per JVM instead of a cross-process
+    mtime race. Every root of the process is removed when it exits.
     """
     h = hashlib.md5(key.encode()).hexdigest()[:8]
-    return os.path.join(
-        tempfile.gettempdir(), f"nav_spark_{kind}_{h}_{os.getpid()}"
-    )
+    tmp = tempfile.gettempdir()
+    _remove_roots_at_exit(tmp)
+    return os.path.join(tmp, f"nav_spark_{kind}_{h}_{os.getpid()}")
+
+
+@functools.cache
+def _remove_roots_at_exit(tmp: str) -> None:
+    atexit.register(_remove_own_roots, tmp)
+
+
+def _remove_own_roots(tmp: str) -> None:
+    """Remove the ``sink_path`` roots of the exiting process, found by
+    its pid (a forked child that exits removes its own, not the
+    parent's); no other process reads them."""
+    for d in glob.glob(os.path.join(tmp, f"nav_spark_*_{os.getpid()}")):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def scratch_dir(kind: str, key: str) -> str:

@@ -27,13 +27,13 @@ import contextlib
 import hashlib
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import LongType, TimestampNTZType
 
-from navigator_data_ingest_spark.sources.sinks import scratch_dir
+from navigator_data_ingest_spark.sources.sinks import scratch_dir, sink_path
 from navigator_data_ingest_spark.sources.tables import (
     load_table,
     path_stamp,
@@ -155,20 +155,31 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
 _STREAM_CONFS = {"spark.sql.shuffle.partitions": str(STREAM_SHUFFLE_PARTITIONS)}
 
 
-def _run_to_memory(stream_df: DataFrame, name: str, output_mode: str) -> DataFrame:
-    """Drain a stream into a memory sink with availableNow; return table."""
-    spark = stream_df.sparkSession
-    with scoped_conf(spark, _STREAM_CONFS):
+def drain(writer: DataStreamWriter, checkpoint: str) -> StreamingQuery:
+    """Run ``writer``'s query over all input available now, under the
+    stream conf clamp, and return the finished query.
+
+    The package's one way to run a stream: ``checkpoint`` is the
+    query's checkpoint location, and ``trigger(availableNow)`` ends the
+    query once the input present at its start is processed.
+    """
+    with scoped_conf(writer._spark, _STREAM_CONFS):
         query = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", scratch_dir("ckpt", name))
+            writer.option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()
         )
         query.awaitTermination()
-    return spark.table(name)
+    return query
+
+
+def _run_to_memory(stream_df: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Drain a stream into a memory sink; return its table."""
+    drain(
+        stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        scratch_dir("ckpt", name),
+    )
+    return stream_df.sparkSession.table(name)
 
 
 def _qname(kind: str, sf_dir: str) -> str:
@@ -382,10 +393,14 @@ def stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("user_id", "event_type")
 
 
-def _scatter_time_ordered_feed(spark: SparkSession, sf_dir: str, n_files: int) -> str:
-    """Write events as ``n_files`` time-ordered parquet files with strictly
-    increasing mtimes, so FileStreamSource (which orders by modification
-    time) delivers one micro-batch per file in event-time order.
+FEED_FILES = 3
+
+
+def _scatter_time_ordered_feed(spark: SparkSession, sf_dir: str) -> str:
+    """Write events as ``FEED_FILES`` time-ordered parquet files with
+    strictly increasing mtimes, so FileStreamSource (which orders by
+    modification time) delivers one micro-batch per file in event-time
+    order.
 
     Feed preparation is test scaffolding standing in for an
     arriving-files directory — in deployment the files land over time
@@ -397,21 +412,24 @@ def _scatter_time_ordered_feed(spark: SparkSession, sf_dir: str, n_files: int) -
     replays), and the chunk files are written by a range-partitioned
     Spark write — event payloads never pass through the driver; the
     driver only renames k files and stamps mtimes (metadata ops).
+
+    The feed is a per-process cache keyed by the source file's stamp, so
+    a regenerated testdata set (same path, different bytes) gets a new
+    feed. It is assembled in a staging root and renamed into place once
+    complete: a build that fails midway leaves no partial feed for the
+    next call to reuse.
     """
-    # deterministic feed path keyed by (source identity, file count): a
-    # fully-built feed is reused across runs and processes instead of
-    # re-written (and never accumulates). The source file's stamp is
-    # part of the key so a regenerated testdata set — same path,
-    # different bytes — invalidates the cached feed.
     src = os.path.join(sf_dir, "events.parquet")
-    src_key = f"{sf_dir}|{path_stamp(src)}"
-    d = os.path.join(
-        tempfile.gettempdir(),
-        "nav_sessfeed",
-        f"{hashlib.md5(src_key.encode()).hexdigest()[:8]}_{n_files}",
-    )
-    if os.path.isdir(d) and len(os.listdir(d)) == n_files:
+    key = f"{sf_dir}|{path_stamp(src)}"
+    d = sink_path("feed", key)
+    if os.path.isdir(d):
         return d
+    stage = scratch_dir("feedstage", key)
+    fin = os.path.join(stage, "feed")
+    os.makedirs(fin)
+
+    def chunk_file(i: int) -> str:
+        return os.path.join(fin, f"chunk{i}.parquet")
 
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -420,110 +438,68 @@ def _scatter_time_ordered_feed(spark: SparkSession, sf_dir: str, n_files: int) -
     ev = spark.read.parquet(src)
     data_cols = ev.columns
     n = ev.count()
-
-    # level 1: range-partition by the global order; each partition holds
-    # a contiguous (ts, event_id) span in partition-index order.
-    # the pin fixes the partition assignment: spark_partition_id
-    # is only meaningful if the counts job and the write job see the
-    # SAME exchange output (range boundaries are sample-based and may
-    # differ across independent executions of the plan).
-    p = max(n_files, spark.sparkContext.defaultParallelism)
-    ranged = (
-        ev.repartitionByRange(p, "ts", "event_id")
-        .withColumn("_pid", F.spark_partition_id())
-        .transform(pin)
-    )
-    # per-partition counts are p metadata rows — the only driver collect
-    counts = {r._pid: r.c for r in ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect()}
-    offsets, acc = {}, 0
-    for pid in range(p):
-        offsets[pid] = acc
-        acc += counts.get(pid, 0)
-    off_map = F.create_map(
-        *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
-    )
-    local_w = Window.partitionBy("_pid").orderBy("ts", "event_id")
-    bounds = [n * i // n_files for i in range(1, n_files)]
-    rn = off_map[F.col("_pid")] + F.row_number().over(local_w)
-    chunk = sum(
-        (rn > F.lit(b)).cast("int") for b in bounds
-    ) if bounds else F.lit(0)
-    # build fully in per-process staging, then PUBLISH with one atomic
-    # rename: assembling in place let a concurrent process observe a
-    # partial feed, rmtree it, and pull files out from under a live
-    # FileStreamSource (the cross-process race per-process scratch avoids)
-    pid = os.getpid()
-    tmp = f"{d}_stage{pid}"
-    fin = f"{d}_fin{pid}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(fin, ignore_errors=True)
-    os.makedirs(fin)
-    if n == 0:
-        # filter-to-zero robustness (the empty-input axis): a
-        # dynamic-partition write of zero rows creates NO chunk dirs, so
-        # stamp schema-only chunk files directly from the source footer —
-        # the stream then runs its micro-batches over empty files instead
-        # of crashing the feed builder
-        import pyarrow.parquet as pq
-
-        empty = pq.read_table(src)
-        for i in range(n_files):
-            path = os.path.join(fin, f"chunk{i}.parquet")
-            pq.write_table(empty, path)
-            os.utime(path, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-        if os.path.isdir(d) and len(os.listdir(d)) != n_files:
-            shutil.rmtree(d, ignore_errors=True)
-        try:
-            os.rename(fin, d)  # atomic publish (same protocol as below)
-        except OSError:
-            shutil.rmtree(fin, ignore_errors=True)
-        return d
-    (
-        ranged.withColumn("_chunk", chunk)
-        # range-partition on _chunk co-locates each chunk in ONE task ⇒
-        # exactly one data file per chunk directory
-        .repartitionByRange(n_files, "_chunk")
-        .select(*data_cols, "_chunk")
-        .write.partitionBy("_chunk")
-        .parquet(tmp)
-    )
-    # a chunk with ZERO rows (n < n_files) gets no dynamic-partition
-    # directory: stamp those chunks as schema-only files cloned from a
-    # populated chunk's part schema, so the feed keeps exactly n_files
-    # micro-batches at any row count
-    missing = []
-    donor = None
-    for i in range(n_files):
-        cdir = os.path.join(tmp, f"_chunk={i}")
-        if not os.path.isdir(cdir):
-            missing.append(i)
-            continue
-        parts = [f for f in os.listdir(cdir) if f.endswith(".parquet")]
-        if len(parts) != 1:
-            raise RuntimeError(f"chunk {i}: expected 1 file, got {parts}")
-        path = os.path.join(fin, f"chunk{i}.parquet")
-        shutil.move(os.path.join(cdir, parts[0]), path)
-        os.utime(path, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-        donor = path
+    if n > 0:
+        # level 1: range-partition by the global order; each partition
+        # holds a contiguous (ts, event_id) span in partition-index order.
+        # the pin fixes the partition assignment: spark_partition_id
+        # is only meaningful if the counts job and the write job see the
+        # SAME exchange output (range boundaries are sample-based and may
+        # differ across independent executions of the plan).
+        p = max(FEED_FILES, spark.sparkContext.defaultParallelism)
+        ranged = (
+            ev.repartitionByRange(p, "ts", "event_id")
+            .withColumn("_pid", F.spark_partition_id())
+            .transform(pin)
+        )
+        # per-partition counts are p metadata rows — the only driver collect
+        counts = {r._pid: r.c for r in ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect()}
+        offsets, acc = {}, 0
+        for pid in range(p):
+            offsets[pid] = acc
+            acc += counts.get(pid, 0)
+        off_map = F.create_map(
+            *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
+        )
+        local_w = Window.partitionBy("_pid").orderBy("ts", "event_id")
+        bounds = [n * i // FEED_FILES for i in range(1, FEED_FILES)]
+        rn = off_map[F.col("_pid")] + F.row_number().over(local_w)
+        chunk = sum((rn > F.lit(b)).cast("int") for b in bounds)
+        parts = os.path.join(stage, "parts")
+        (
+            ranged.withColumn("_chunk", chunk)
+            # range-partition on _chunk co-locates each chunk in ONE task ⇒
+            # exactly one data file per chunk directory
+            .repartitionByRange(FEED_FILES, "_chunk")
+            .select(*data_cols, "_chunk")
+            .write.partitionBy("_chunk")
+            .parquet(parts)
+        )
+        for i in range(FEED_FILES):
+            cdir = os.path.join(parts, f"_chunk={i}")
+            if not os.path.isdir(cdir):
+                continue
+            files = [f for f in os.listdir(cdir) if f.endswith(".parquet")]
+            if len(files) != 1:
+                raise RuntimeError(f"chunk {i}: expected 1 file, got {files}")
+            shutil.move(os.path.join(cdir, files[0]), chunk_file(i))
+    # a chunk with ZERO rows gets no dynamic-partition directory (with
+    # n == 0 nothing is written at all): stamp it as a schema-only file
+    # cloned from a populated chunk's schema, or the source footer's, so
+    # the feed keeps exactly FEED_FILES micro-batches at any row count
+    # and the stream runs over empty files instead of failing
+    missing = [i for i in range(FEED_FILES) if not os.path.exists(chunk_file(i))]
     if missing:
         import pyarrow.parquet as pq
 
-        if donor is None:  # unreachable: n == 0 took the branch above
-            raise RuntimeError("no populated chunk to clone a schema from")
-        sch = pq.read_schema(donor)
+        donors = [chunk_file(i) for i in range(FEED_FILES) if i not in missing]
+        empty = pq.read_schema(donors[0] if donors else src).empty_table()
         for i in missing:
-            path = os.path.join(fin, f"chunk{i}.parquet")
-            pq.write_table(sch.empty_table(), path)
-            os.utime(path, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-    shutil.rmtree(tmp, ignore_errors=True)
-    if os.path.isdir(d) and len(os.listdir(d)) != n_files:
-        shutil.rmtree(d, ignore_errors=True)  # pre-protocol partial leftover
-    try:
-        os.rename(fin, d)  # atomic publish; mtimes survive the rename
-    except OSError:
-        # a concurrent builder published first — its feed is complete
-        # and byte-identical (deterministic build); use it
-        shutil.rmtree(fin, ignore_errors=True)
+            pq.write_table(empty, chunk_file(i))
+    for i in range(FEED_FILES):
+        t = 1_000_000 + i * 1000
+        os.utime(chunk_file(i), (t, t))
+    os.rename(fin, d)  # mtimes survive the rename
+    shutil.rmtree(stage)
     return d
 
 
@@ -538,7 +514,7 @@ def stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``session_end <= max(ts) - watermark_delay`` — the batch-SQL oracle;
     the still-open tail beyond the watermark is withheld by design.
     """
-    d = _scatter_time_ordered_feed(spark, sf_dir, 3)
+    d = _scatter_time_ordered_feed(spark, sf_dir)
     ev = read_stream_events(spark, d, glob="*.parquet", max_files_per_trigger=1)
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -617,7 +593,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle. Each merge is fully distributed (union + one key shuffle);
     the driver only sequences batch ids.
     """
-    feed = _scatter_time_ordered_feed(spark, sf_dir, 3)
+    feed = _scatter_time_ordered_feed(spark, sf_dir)
     state_root = scratch_dir("fbupsert", feed)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -639,14 +615,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     ev = read_stream_events(spark, feed, glob="*.parquet", max_files_per_trigger=1)
-    with scoped_conf(spark, _STREAM_CONFS):
-        query = (
-            ev.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", scratch_dir("ckpt", "fbupsert"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    drain(ev.writeStream.foreachBatch(_merge), scratch_dir("ckpt", "fbupsert"))
 
     versions = sorted(
         int(d[1:]) for d in os.listdir(state_root) if d.startswith("v")
@@ -695,7 +664,7 @@ def stream_incremental_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     third of the (ts, event_id)-ordered events table (the same boundary
     arithmetic the feed builder uses).
     """
-    feed = _scatter_time_ordered_feed(spark, sf_dir, 3)
+    feed = _scatter_time_ordered_feed(spark, sf_dir)
     chunks = sorted(os.listdir(feed))
     work = scratch_dir("increm", feed)
     ckpt = os.path.join(work, "_checkpoint")
@@ -705,7 +674,6 @@ def stream_incremental_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     for c in chunks[:2]:
         shutil.copy2(os.path.join(feed, c), os.path.join(data, c))
 
-
     def _drain() -> None:
         # a DURABLE sink (parquet), not memory: resuming from a
         # checkpoint is exactly the capability under test, and the
@@ -713,37 +681,25 @@ def stream_incremental_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = read_stream_events(spark, data, glob="*.parquet").select(
             "event_id", "ts", "user_id", "event_type", "value"
         )
-        q = (
-            ev.writeStream.format("parquet")
-            .option("path", sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)  # persists across drains
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            ev.writeStream.format("parquet").option("path", sink).outputMode("append"),
+            ckpt,
         )
-        q.awaitTermination()
 
     def _sink_files() -> set[str]:
         return {
             f for f in os.listdir(sink) if f.endswith(".parquet")
         } if os.path.isdir(sink) else set()
 
-    with scoped_conf(spark, _STREAM_CONFS):
-        _drain()
-        before = _sink_files()
-        shutil.copy2(os.path.join(feed, chunks[2]), os.path.join(data, chunks[2]))
-        _drain()
-        fresh = sorted(_sink_files() - before)
-    if not fresh:
-        # second drain emitted nothing new (e.g. a partial prior run's
-        # checkpoint already covered the late chunk): surface an empty
-        # result with the expected schema instead of an unreadable
-        # zero-path read error
-        return (
-            spark.read.parquet(sink)
-            .select("event_id", "ts", "user_id", "event_type", "value")
-            .limit(0)
-        )
+    _drain()
+    before = _sink_files()
+    shutil.copy2(os.path.join(feed, chunks[2]), os.path.join(data, chunks[2]))
+    _drain()  # the same checkpoint: resumes after the first two chunks
+    # never empty: the checkpoint starts fresh on every run, so the
+    # late chunk is always new to it, and a micro-batch with zero rows
+    # (every chunk of an empty corpus, the first two of a one-row one)
+    # still commits one schema-only part file
+    fresh = sorted(_sink_files() - before)
     out = spark.read.parquet(*[os.path.join(sink, f) for f in fresh])
     return out.orderBy("event_id")
 
@@ -786,7 +742,7 @@ def stream_outer_join_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases older than wm are evicted), so state size tracks the
     interval x arrival rate, not stream length.
     """
-    d = _scatter_time_ordered_feed(spark, sf_dir, 3)
+    d = _scatter_time_ordered_feed(spark, sf_dir)
     ev = read_stream_events(spark, d, glob="*.parquet", max_files_per_trigger=1)
     purchases = (
         ev.where(F.col("event_type") == "purchase")
@@ -1045,7 +1001,7 @@ def stream_multiplex_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     router is PARTITION-COMPLETE (no event lost or double-routed),
     which is the oracle.
     """
-    feed = _scatter_time_ordered_feed(spark, sf_dir, 3)
+    feed = _scatter_time_ordered_feed(spark, sf_dir)
     root = scratch_dir("router", feed)
 
     def _route(batch_df: DataFrame, batch_id: int) -> None:
@@ -1072,14 +1028,7 @@ def stream_multiplex_router(spark: SparkSession, sf_dir: str) -> DataFrame:
             b.unpersist()
 
     ev = read_stream_events(spark, feed, glob="*.parquet", max_files_per_trigger=1)
-    with scoped_conf(spark, _STREAM_CONFS):
-        query = (
-            ev.writeStream.foreachBatch(_route)
-            .option("checkpointLocation", scratch_dir("ckpt", "router"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    drain(ev.writeStream.foreachBatch(_route), scratch_dir("ckpt", "router"))
 
     parts = []
     for d in sorted(os.listdir(root)):
@@ -1184,7 +1133,7 @@ def stream_timeout_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    feed = _scatter_time_ordered_feed(spark, sf_dir, 3)
+    feed = _scatter_time_ordered_feed(spark, sf_dir)
     ev = (
         read_stream_events(spark, feed, glob="*.parquet", max_files_per_trigger=1)
         .withWatermark("ts", TIMEOUT_WM_DELAY)
@@ -1245,7 +1194,7 @@ def stream_bus_adapter(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, proving the adapter loses nothing across the wire shape,
     the JSON round trip, and the multi-micro-batch drain.
     """
-    feed = _scatter_time_ordered_feed(spark, sf_dir, 3)
+    feed = _scatter_time_ordered_feed(spark, sf_dir)
     bus = read_stream_bus(spark, sf_dir, feed)
     parsed = bus.select(
         "topic",
@@ -1369,16 +1318,7 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = _qname("stream_statereader", sf_dir)
     ck = scratch_dir("ckpt", name)
-    with scoped_conf(spark, _STREAM_CONFS):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    drain(agg.writeStream.format("memory").queryName(name).outputMode("append"), ck)
     state = spark.read.format("statestore").load(ck)
     # the state rows expose the RAW aggregation buffers (count / sum),
     # not the query's output aliases — the round is applied at read time
@@ -1460,7 +1400,7 @@ def stream_quota_enforcer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    feed = _scatter_time_ordered_feed(spark, sf_dir, 3)
+    feed = _scatter_time_ordered_feed(spark, sf_dir)
     ev = (
         read_stream_events(spark, feed, glob="*.parquet", max_files_per_trigger=1)
         .select("user_id", "ts", "event_id")
@@ -1519,22 +1459,18 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     SECOND precision (progress strings carry milliseconds; parquet
     micros would false-diverge).
     """
-    feed = _scatter_time_ordered_feed(spark, sf_dir, 3)
+    feed = _scatter_time_ordered_feed(spark, sf_dir)
     ev = read_stream_events(spark, feed, glob="*.parquet", max_files_per_trigger=1)
     name = _qname("stream_progress", feed)
-    with scoped_conf(spark, _STREAM_CONFS):
-        query = (
-            ev.withWatermark("ts", "1 hour")
-            .select("event_id", "ts")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", scratch_dir("ckpt", "progress"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        progress = list(query.recentProgress)
+    query = drain(
+        ev.withWatermark("ts", "1 hour")
+        .select("event_id", "ts")
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append"),
+        scratch_dir("ckpt", "progress"),
+    )
+    progress = list(query.recentProgress)
     rows = []
     # batch_id is the MICRO-BATCH index, not the position among
     # non-empty batches: with maxFilesPerTrigger=1 a zero-row chunk
@@ -1699,7 +1635,7 @@ def stream_foreachbatch_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each per-batch aggregate is fully distributed (map-side partials to
     a bounded type grid); the driver only sequences batch ids.
     """
-    feed = _scatter_time_ordered_feed(spark, sf_dir, 3)
+    feed = _scatter_time_ordered_feed(spark, sf_dir)
     root = scratch_dir("fbretry", feed)
     seen_batches: list[int] = []
 
@@ -1727,17 +1663,12 @@ def stream_foreachbatch_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
         seen_batches.append(batch_id)
 
     ev = read_stream_events(spark, feed, glob="*.parquet", max_files_per_trigger=1)
+    drain(ev.writeStream.foreachBatch(_apply), scratch_dir("ckpt", "fbretry"))
+    # simulate the at-least-once re-delivery: re-run the MIDDLE batch
+    # through the same apply with the same batch id, under the clamp the
+    # drained batches ran with
+    replay_id = sorted(seen_batches)[len(seen_batches) // 2]
     with scoped_conf(spark, _STREAM_CONFS):
-        query = (
-            ev.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", scratch_dir("ckpt", "fbretry"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        # simulate the at-least-once re-delivery: re-run the MIDDLE
-        # batch through the same apply with the same batch id
-        replay_id = sorted(seen_batches)[len(seen_batches) // 2]
         # eager checkpoint: the replayed frame must not lazily read the
         # very capture directory _apply is about to overwrite
         replay_df = spark.read.parquet(

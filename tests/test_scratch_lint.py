@@ -6,7 +6,8 @@ fresh run. A ``tempfile.gettempdir``, ``mkdtemp`` or
 ``TemporaryDirectory`` call anywhere else fails here unless the site
 needs a different policy, listed below with what it needs. Stale
 entries (allowlisted but no longer calling) also fail, so the list
-stays in sync with the code.
+stays in sync with the code. ``census`` takes the call names, so the
+stream-drain lint (``tests/test_drain_lint.py``) runs the same census.
 """
 
 from __future__ import annotations
@@ -20,16 +21,12 @@ RAW = ("gettempdir", "mkdtemp", "TemporaryDirectory")
 
 ALLOWED: dict[tuple[str, str], str] = {
     ("sources/sinks.py", "sink_path"): "the primitive itself",
-    ("streaming/streams.py", "_scatter_time_ordered_feed"): (
-        "a cache shared across processes: the time-ordered feed is built "
-        "in per-process staging and published with one atomic rename, so "
-        "its final path carries no process id"
-    ),
 }
 
 
-def _raw_calls(source: str) -> list[tuple[str, int]]:
-    """(enclosing top-level function, line) of each temp-root call."""
+def raw_calls(source: str, names: tuple[str, ...]) -> list[tuple[str, int]]:
+    """(enclosing top-level function, line) of each call in ``source``
+    to a function or method named in ``names``."""
     found = []
     for top in ast.parse(source).body:
         name = getattr(top, "name", "<module>")
@@ -38,40 +35,41 @@ def _raw_calls(source: str) -> list[tuple[str, int]]:
                 continue
             f = node.func
             called = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-            if called in RAW:
+            if called in names:
                 found.append((name, node.lineno))
     return found
 
 
-def _census() -> dict[tuple[str, str], list[int]]:
-    """(module, top-level function) -> lines of its temp-root calls."""
+def census(names: tuple[str, ...]) -> dict[tuple[str, str], list[int]]:
+    """(module, top-level function) -> lines of its calls to ``names``
+    across the package."""
     found: dict[tuple[str, str], list[int]] = collections.defaultdict(list)
     for path in sorted(PKG.rglob("*.py")):
         mod = path.relative_to(PKG).as_posix()
-        for fn, line in _raw_calls(path.read_text()):
+        for fn, line in raw_calls(path.read_text(), names):
             found[(mod, fn)].append(line)
     return found
 
 
 def test_no_temp_root_outside_sinks():
-    census = _census()
-    new = sorted(set(census) - set(ALLOWED))
+    found = census(RAW)
+    new = sorted(set(found) - set(ALLOWED))
     assert not new, (
         "hand-built temp root(s): "
-        + ", ".join(f"{m}:{census[(m, fn)]} in {fn}" for m, fn in new)
+        + ", ".join(f"{m}:{found[(m, fn)]} in {fn}" for m, fn in new)
         + " — use sources.sinks.scratch_dir (fresh per run) or sink_path "
         "(a per-process cache), or allowlist the site with its policy."
     )
 
 
 def test_each_allowed_site_is_one_call():
-    census = _census()
-    more = {k: v for k, v in census.items() if k in ALLOWED and len(v) > 1}
+    found = census(RAW)
+    more = {k: v for k, v in found.items() if k in ALLOWED and len(v) > 1}
     assert not more, f"allowlisted functions with more than one call: {more}"
 
 
 def test_no_stale_entries():
-    stale = sorted(set(ALLOWED) - set(_census()))
+    stale = sorted(set(ALLOWED) - set(census(RAW)))
     assert not stale, "stale ALLOWED entries: " + ", ".join(
         f"{m}:{fn}" for m, fn in stale
     )
@@ -86,7 +84,7 @@ def test_detector_catches_the_temp_root_shapes():
         "def f():\n    with tempfile.TemporaryDirectory() as d:\n        return d",
         "def f():\n    def g():\n        return mkdtemp()\n    return g",
     ):
-        assert [fn for fn, _ in _raw_calls(snippet)] == ["f"], snippet
+        assert [fn for fn, _ in raw_calls(snippet, RAW)] == ["f"], snippet
     for snippet in (
         "def f(key):\n    return scratch_dir('k', key)",
         "def f(key):\n    return sink_path('k', key)",
@@ -94,4 +92,4 @@ def test_detector_catches_the_temp_root_shapes():
         "def f():\n    '''a mkdtemp() per drain would leak'''\n    return 1",
         "def f():\n    return tempfile.gettempdir",
     ):
-        assert _raw_calls(snippet) == [], snippet
+        assert raw_calls(snippet, RAW) == [], snippet

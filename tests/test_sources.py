@@ -6,7 +6,10 @@ import glob
 import json
 import os
 import shutil
+import subprocess
+import sys
 import tempfile
+from pathlib import Path
 from urllib.parse import urlparse
 
 import pytest
@@ -100,9 +103,9 @@ def test_pipeline_updates_polymorphic_values(spark, tmp_path):
             assert (json.loads(value) if isinstance(u[side], dict) else value) == u[side]
 
 
-def test_json_cache_translated_flag(spark):
+def test_json_cache_translated_flag(spark, tmp_path):
     """translated=true recovered from the _translated_en file name."""
-    d = tempfile.mkdtemp(prefix="nav_spark_cache_test_")
+    d = str(tmp_path)
     rec = {"document_id": "TEST.executive.1.1", "document_name": "n"}
     with open(os.path.join(d, "TEST.executive.1.1.json"), "w") as f:
         json.dump(rec, f)
@@ -159,7 +162,7 @@ def test_parquet_footer_stats_pinned(spark):
     assert dk == expected
 
 
-def test_text_lines_cr_escaping_roundtrip(spark):
+def test_text_lines_cr_escaping_roundtrip(spark, tmp_path):
     """src_text_lines must survive carriage returns: spark.read.text's
     default lineSep splits on \\r and \\r\\n as well as \\n, so an
     unescaped CR in any document would split one record into two on
@@ -185,7 +188,7 @@ def test_text_lines_cr_escaping_roundtrip(spark):
         "",
         None,
     ]
-    tmp = tempfile.mkdtemp(prefix="nav_spark_crfix_")
+    tmp = str(tmp_path)
     pd.DataFrame(
         {
             "doc_id": range(1, len(texts) + 1),
@@ -299,6 +302,32 @@ def test_scratch_dir_is_per_process_and_starts_empty():
         assert os.listdir(d) == []
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_process_roots_are_removed_at_exit(tmp_path):
+    """A process's ``sink_path`` roots are removed when it exits; a root
+    of another pid in the same temp dir is left alone."""
+    other = tmp_path / "nav_spark_t_exit_00000000_1"
+    other.mkdir()
+    code = (
+        "import os\n"
+        "from navigator_data_ingest_spark.sources.sinks import scratch_dir\n"
+        "d = scratch_dir('t_exit', 'key')\n"
+        "open(os.path.join(d, 'f'), 'w').write('x')\n"
+        "print(d)\n"
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parents[1],
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    d = run.stdout.strip()
+    assert os.path.dirname(d) == str(tmp_path), run.stdout
+    assert not os.path.exists(d)
+    assert other.is_dir()
 
 
 @pytest.mark.parametrize(

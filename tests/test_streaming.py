@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -17,10 +18,13 @@ import pytest
 
 from navigator_data_ingest_spark.streaming.streams import (
     _run_to_memory,
+    _scatter_time_ordered_feed,
+    drain,
     read_stream_events,
     scoped_conf,
     windowed_dedup_agg,
 )
+from tests.conftest import SF_SMOKE
 
 BASE_NS = 1_767_225_600_000_000_000  # 2026-01-01T00:00:00Z in ns
 HOUR_NS = 3_600_000_000_000
@@ -344,15 +348,10 @@ def test_state_reader_exposes_only_unemitted_windows(spark):
         .agg(F.count(F.lit(1)).alias("n"))
     )
     ck = scratch_dir("ckpt", "t_statereader")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("t_statereader")
-        .outputMode("append")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        agg.writeStream.format("memory").queryName("t_statereader").outputMode("append"),
+        ck,
     )
-    q.awaitTermination()
     emitted = {str(r["window"]["start"]) for r in spark.table("t_statereader").collect()}
     state = spark.read.format("statestore").load(ck)
     pending = {str(r["key"]["window"]["start"]) for r in state.collect()}
@@ -408,3 +407,20 @@ def test_scoped_conf_restores_or_unsets(spark):
             raise RuntimeError("drain failed")
     assert spark.conf.get(had) == before
     assert spark.conf.get(lacked, None) is None
+
+
+def test_time_ordered_feed_is_a_per_process_cache(spark):
+    """The feed lives in a root of this process, holds one file per
+    micro-batch, and a second call returns it without running a job."""
+    d = _scatter_time_ordered_feed(spark, SF_SMOKE)
+    assert os.path.basename(d).endswith(f"_{os.getpid()}")
+    assert sorted(os.listdir(d)) == [f"chunk{i}.parquet" for i in range(3)]
+    sc = spark.sparkContext
+    group = f"feed_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "feed reuse")
+    try:
+        again = _scatter_time_ordered_feed(spark, SF_SMOKE)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert again == d
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
